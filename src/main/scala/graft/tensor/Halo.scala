@@ -1,39 +1,17 @@
 package graft.tensor
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
 
-/** Distributed halo (ghost-cell) exchange — the engine's replacement for
-  * the reference's `map_overlap` pattern (every ndfilters/ndmorph op:
-  * dask_image/ndfilters/_utils.py::_get_depth_boundary ≈ L15–60).
-  *
-  * Plan shape (one shuffle):
-  *   1. every block `flatMap`s up to 3^d slab rows keyed by the neighbor
-  *      block index that needs them (plus its own center piece);
-  *   2. `groupByKey(imageId, targetIdx)` reassembles each block + halo;
-  *   3. the per-block kernel runs on the padded array and emits the
-  *      cropped output block.
-  *
-  * At 100 TB the shuffle moves only the slab fraction (≈ 2·d·depth/chunk
-  * of the data) — the same traffic dask schedules as inter-worker task
-  * dependencies. Boundary modes are resolved at array edges inside the
-  * assembly step, so kernels never see the boundary.
+/** The float64 halo API — the F64 view of the byte-domain [[THalo]],
+  * which owns the one slab geometry and both exchange forms. Each
+  * [[Block]] is encoded as an F64 [[TBlock]] (raw bits, so every value
+  * passes through unchanged), THalo emits, shuffles and reassembles it,
+  * and the kernel sees the padded block decoded at the kernel edge
+  * ([[THalo.TPadded.f64]]). The plan is THalo's: one shuffle per op for
+  * the groupByKey form, slab-only shuffles for the co-partitioned form.
   */
 object Halo {
-
-  /** One piece of a future padded block. `side` is the face of the target
-    * the piece attaches to (sender.idx − target.idx componentwise, in
-    * {−1,0,+1}; all-zero = the center piece, which carries the target's
-    * own metadata). */
-  case class Piece(
-      imageId: String,
-      targetIdx: Seq[Int],
-      side: Seq[Int],
-      shape: Seq[Int],
-      data: Array[Double],
-      origin: Seq[Int],
-      blockShape: Seq[Int],
-      chunk: Seq[Int],
-      arrayShape: Seq[Int])
 
   /** A block together with its assembled halo: `padded` has shape
     * `block.shape + 2*depth`; element (c) corresponds to global
@@ -51,9 +29,7 @@ object Halo {
       kernel: Padded => Array[Double]): Dataset[Block] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    exchange(ds, depth, mode).map { p =>
-      p.block.copy(data = kernel(p))
-    }
+    exchange(ds, depth, mode).map(p => p.block.copy(data = kernel(p)))
   }
 
   /** Uniform-depth variant: depth d on every axis, rank taken from each
@@ -62,206 +38,32 @@ object Halo {
       kernel: Padded => Array[Double]): Dataset[Block] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    exchangeBy(ds, ndim => Seq.fill(ndim)(depth), mode).map { p =>
-      p.block.copy(data = kernel(p))
-    }
+    THalo.exchangeBy(TBlock.fromBlocks(ds, DType.F64), Seq.fill(_)(depth), mode)
+      .map(t => run(t, kernel))
   }
 
   /** Assemble every block + halo (shared by all stencil operators). */
-  def exchange(ds: Dataset[Block], depth: Seq[Int], mode: Boundary): Dataset[Padded] =
-    exchangeBy(ds, _ => depth, mode)
-
-  // ------------------------------------------------- co-partitioned form
-  // The groupByKey exchange above must co-locate every block's own
-  // payload with its halo pieces, so the CENTER piece — the whole image —
-  // crosses the shuffle on every stencil op. When the blocks already sit
-  // in a known hash layout, only the face slabs need to move: the payload
-  // side of the reassembly is zipPartitions-NARROW. A chain of N stencil
-  // ops then costs ONE payload placement + N slab-sized shuffles instead
-  // of N full-payload shuffles (r22, guide §2.3 "shuffle keys and
-  // metadata instead of payloads" / §2.4; the durable-block-store layout
-  // generalizes r21's faceEdges slab-pair geometry to every stencil op).
-  //
-  // Partition invariant: an RDD[Block] produced by [[partitionBlocks]] —
-  // or by [[mapOverlapP]] over such an RDD, since kernels never change a
-  // block's idx — holds each block in partition
-  // `HashPartitioner(parts).getPartition((imageId, idx))`.
-
-  /** Place blocks into the co-partitioned layout: the ONE payload
-    * shuffle a chain pays. Downstream consumers (slab emission + every
-    * zip) re-read this exchange's shuffle files, not the lineage. */
-  def partitionBlocks(ds: Dataset[Block], parts: Int): org.apache.spark.rdd.RDD[Block] =
-    ds.rdd.map(b => ((b.imageId, b.idx), b))
-      .partitionBy(new org.apache.spark.HashPartitioner(parts)).values
-
-  /** Slab-only halo exchange over co-partitioned blocks: neighbors'
-    * boundary slabs shuffle to the partition owning the target key; the
-    * center payload never moves. Identical [[Padded]] reassembly (same
-    * emit geometry, same boundary resolution) — pieces arrive grouped by
-    * the layout instead of by a groupByKey. */
-  private[tensor] def exchangeP(blocks: org.apache.spark.rdd.RDD[Block], parts: Int,
-      depth: Seq[Int], mode: Boundary): org.apache.spark.rdd.RDD[Padded] = {
-    val wrap = mode == Boundary.Wrap
-    val part = new org.apache.spark.HashPartitioner(parts)
-    val slabs = blocks
-      .flatMap(b => emit(b, depth, wrap).tail) // neighbors only; center stays put
-      .map(p => ((p.imageId, p.targetIdx), p))
-      .partitionBy(part)
-    blocks.zipPartitions(slabs, preservesPartitioning = true) { (bit, sit) =>
-      val byKey = scala.collection.mutable.HashMap
-        .empty[(String, Seq[Int]), scala.collection.mutable.ArrayBuffer[Piece]]
-      sit.foreach { case (k, p) =>
-        byKey.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer.empty[Piece]) += p
-      }
-      bit.map { b =>
-        val center = Piece(b.imageId, b.idx, Seq.fill(b.ndim)(0), b.shape, b.data,
-          b.origin, b.shape, b.chunk, b.arrayShape)
-        val ps = center +: byKey.getOrElse((b.imageId, b.idx),
-          scala.collection.mutable.ArrayBuffer.empty[Piece]).toSeq
-        assemble(ps, depth, mode)
-      }
-    }
-  }
-
-  /** map_overlap over co-partitioned blocks; the result keeps the
-    * partition invariant (kernels replace data, never idx). Callers that
-    * chain a further overlap over the result should persist it — it is
-    * consumed twice (slab emission + the zip). */
-  def mapOverlapP(blocks: org.apache.spark.rdd.RDD[Block], parts: Int,
-      depth: Seq[Int], mode: Boundary)(
-      kernel: Padded => Array[Double]): org.apache.spark.rdd.RDD[Block] =
-    exchangeP(blocks, parts, depth, mode).map(p => p.block.copy(data = kernel(p)))
-
-  private def exchangeBy(ds: Dataset[Block], depthOf: Int => Seq[Int],
-      mode: Boundary): Dataset[Padded] = {
+  def exchange(ds: Dataset[Block], depth: Seq[Int], mode: Boundary): Dataset[Padded] = {
     val spark = ds.sparkSession
     import spark.implicits._
-    val wrap = mode == Boundary.Wrap
-    val pieces = ds.flatMap(b => emit(b, depthOf(b.ndim), wrap))
-    pieces
-      .groupByKey(p => (p.imageId, p.targetIdx))
-      .mapGroups { (_: (String, Seq[Int]), it: Iterator[Piece]) =>
-        val ps = it.toSeq
-        assemble(ps, depthOf(ps.head.arrayShape.length), mode)
-      }
+    THalo.exchange(TBlock.fromBlocks(ds, DType.F64), depth, mode).map(_.f64)
   }
 
-  /** Slab emission for one block. */
-  private[tensor] def emit(b: Block, depth: Seq[Int], wrap: Boolean): Seq[Piece] = {
-    val d = b.ndim
-    require(depth.length == d, s"depth rank ${depth.length} != ndim $d")
-    depth.indices.foreach { k =>
-      require(depth(k) <= b.chunk(k),
-        s"halo depth ${depth(k)} exceeds chunk ${b.chunk(k)} on axis $k (rechunk first)")
-    }
-    val grid = b.gridDims
-    val center = Piece(b.imageId, b.idx, Seq.fill(d)(0), b.shape, b.data,
-      b.origin, b.shape, b.chunk, b.arrayShape)
-    val dirs = Grid.cartesian(Seq.fill(d)(3)).map(_.map(_ - 1)).filter(_.exists(_ != 0))
-    val neighbors = dirs.flatMap { o =>
-      // only emit along axes that actually have a halo
-      if (o.indices.exists(k => o(k) != 0 && depth(k) == 0)) None
-      else {
-        val rawTarget = b.idx.indices.map(k => b.idx(k) + o(k))
-        val target =
-          if (wrap) rawTarget.indices.map(k => math.floorMod(rawTarget(k), grid(k)))
-          else rawTarget
-        val inGrid = target.indices.forall(k => target(k) >= 0 && target(k) < grid(k))
-        if (!inGrid) None
-        else {
-          // slab of this block adjacent to the face in direction o
-          val lo = new Array[Int](d); val slabShape = new Array[Int](d)
-          var k = 0
-          while (k < d) {
-            o(k) match {
-              case 1 => // target above: give my high end
-                val s = math.min(depth(k), b.shape(k)); lo(k) = b.shape(k) - s; slabShape(k) = s
-              case -1 =>
-                val s = math.min(depth(k), b.shape(k)); lo(k) = 0; slabShape(k) = s
-              case _ => lo(k) = 0; slabShape(k) = b.shape(k)
-            }
-            k += 1
-          }
-          val src = Nd.of(b.shape.toArray, b.data)
-          val slab = Nd.zeros(slabShape)
-          slab.foreachCoord { c =>
-            val sc = new Array[Int](d)
-            var j = 0
-            while (j < d) { sc(j) = lo(j) + c(j); j += 1 }
-            slab(c) = src(sc)
-          }
-          // piece attaches to the receiver on side (sender − target) = −o
-          Some(Piece(b.imageId, target, o.map(-_), slabShape.toSeq, slab.data,
-            b.origin, b.shape, b.chunk, b.arrayShape))
-        }
-      }
-    }
-    center +: neighbors
-  }
+  /** Place blocks into THalo's co-partitioned layout (the ONE payload
+    * shuffle a chain pays; see [[THalo.partitionBlocks]]). */
+  def partitionBlocks(ds: Dataset[Block], parts: Int): RDD[Block] =
+    THalo.place(ds.rdd, parts)(b => (b.imageId, b.idx))
 
-  /** Reassemble a padded block from its pieces and resolve array-edge
-    * margins via the boundary mode. */
-  private[tensor] def assemble(pieces: Seq[Piece], depth: Seq[Int], mode: Boundary): Padded = {
-    val center = pieces.find(_.side.forall(_ == 0))
-      .getOrElse(throw new IllegalStateException("halo group without center piece"))
-    val d = center.shape.length
-    val shape = center.blockShape
-    val padShape = shape.indices.map(k => shape(k) + 2 * depth(k)).toArray
-    val out = Nd.zeros(padShape)
-    val filled = new Array[Boolean](out.size)
+  /** map_overlap over co-partitioned blocks (slab-only exchange, payload
+    * narrow); the result keeps the partition invariant, so it zips with
+    * its input. Persist it before chaining — it is consumed twice. */
+  def mapOverlapP(blocks: RDD[Block], parts: Int, depth: Seq[Int], mode: Boundary)(
+      kernel: Padded => Array[Double]): RDD[Block] =
+    THalo.exchangeP(blocks.map(TBlock.fromBlock(_, DType.F64)), parts, depth, mode)
+      .map(t => run(t, kernel))
 
-    def place(p: Piece): Unit = {
-      val pn = Nd.of(p.shape.toArray, p.data)
-      val dstLo = new Array[Int](d)
-      var k = 0
-      while (k < d) {
-        dstLo(k) = p.side(k) match {
-          case 0 => depth(k)
-          case -1 => depth(k) - p.shape(k) // slab ends at the center's low face
-          case _ => depth(k) + shape(k)
-        }
-        k += 1
-      }
-      pn.foreachCoord { c =>
-        val dc = new Array[Int](d)
-        var j = 0
-        while (j < d) { dc(j) = dstLo(j) + c(j); j += 1 }
-        val off = out.offset(dc)
-        out.data(off) = pn(c)
-        filled(off) = true
-      }
-    }
-    pieces.foreach(place)
-
-    // resolve unfilled margin cells (beyond the array edge, or beyond a
-    // short edge-block neighbor) via the boundary mode on global coords
-    val origin = center.origin
-    val arrayShape = center.arrayShape
-    mode match {
-      case Boundary.Constant(cval) =>
-        var i = 0
-        while (i < out.size) { if (!filled(i)) out.data(i) = cval; i += 1 }
-      case m =>
-        out.foreachCoord { c =>
-          val off = out.offset(c)
-          if (!filled(off)) {
-            val src = new Array[Int](d)
-            var k = 0
-            while (k < d) {
-              val g = origin(k) - depth(k) + c(k)
-              val gr = Boundary.resolve(m, g, arrayShape(k))
-              src(k) = gr - (origin(k) - depth(k))
-              k += 1
-            }
-            // resolved coordinate must land on a filled cell
-            out.data(off) = out(src)
-          }
-        }
-    }
-    val block = Block(center.imageId, center.targetIdx, center.origin,
-      center.blockShape, center.chunk, center.arrayShape,
-      java.util.Arrays.copyOf(center.data, center.data.length))
-    Padded(block, depth, out.data)
+  private def run(t: THalo.TPadded, kernel: Padded => Array[Double]): Block = {
+    val p = t.f64
+    p.block.copy(data = kernel(p))
   }
 }

@@ -427,7 +427,7 @@ object Measure {
       buf.toArray
     }
     // SLAB-PAIR exchange (r21, guide §2.3 — shuffle the proxy, not the
-    // payload): the old Halo.exchange-based edge emit shuffled every
+    // payload): an edge emit over the stencil halo exchange shuffles every
     // block's FULL label payload (the padded-block reassembly needs the
     // center piece co-located with its halo, so the exchange moves the
     // whole dataset — right for stencils that compute over the padded
@@ -536,7 +536,7 @@ object Measure {
     * (see the call site in [[label]] step 2). Every block emits, toward
     * each in-grid neighbor direction o ∈ {−1,0,1}^d \ {0}, its depth-1
     * boundary slab on that face (full extent on axes where o = 0; the
-    * same slab geometry Halo.emit uses), keyed by the UNORDERED block
+    * same face slabs THalo.emit ships), keyed by the UNORDERED block
     * pair — so a group holds at most two slabs, one per side, and
     * all-background slabs are never shipped. The scan walks the
     * lexicographically-smaller block's slab in GLOBAL coordinates under

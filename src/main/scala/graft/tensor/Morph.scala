@@ -81,31 +81,18 @@ object Morph {
     Halo.mapOverlap(ds, depth, Boundary.Constant(borderValue))(kernel)
   }
 
-  /** One morphology pass over CO-PARTITIONED blocks (r22): slab-only
-    * halo exchange, payload narrow — see [[Halo.mapOverlapP]]. */
-  private[tensor] def runP(blocks: org.apache.spark.rdd.RDD[Block], parts: Int,
-      structure: Option[Nd], iterations: Int, borderValue: Double, rank: Int,
-      erode: Boolean): org.apache.spark.rdd.RDD[Block] = {
-    val (depth, kernel) = kernelFor(structure, iterations, rank, erode)
-    Halo.mapOverlapP(blocks, parts, depth, Boundary.Constant(borderValue))(kernel)
-  }
-
-  /** Two-pass chain (opening/closing) over ONE payload placement: the
-    * input pays a single partitionBy shuffle (or none, when the caller
-    * already holds the co-partitioned RDD); both passes then ship only
-    * face slabs. The intermediate is persisted — it feeds both the
-    * second pass's slab emission and its zip. */
+  /** Opening/closing: two passes over ONE payload placement (r22) — the
+    * F64 form of [[THalo.chainP]], which both passes share with
+    * [[TMorph]]: both ship face slabs only, instead of two full-payload
+    * halo shuffles. */
   private def chainP(ds: Dataset[Block], structure: Option[Nd], iterations: Int,
       rank: Int, firstErode: Boolean): Dataset[Block] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val rdd0 = ds.rdd
-    val parts = math.max(1, rdd0.getNumPartitions)
-    val placed = Halo.partitionBlocks(ds, parts)
-    val mid = runP(placed, parts, structure, iterations, 0.0, rank, erode = firstErode)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = runP(mid, parts, structure, iterations, 0.0, rank, erode = !firstErode)
-    spark.createDataset(out)
+    def pass(erode: Boolean) = {
+      val (depth, kernel) = kernelFor(structure, iterations, rank, erode)
+      (depth, (p: THalo.TPadded) => DType.F64.encode(kernel(p.f64)))
+    }
+    TBlock.toBlocks(THalo.chainP(TBlock.fromBlocks(ds, DType.F64), Boundary.Constant(0.0),
+      pass(firstErode), pass(!firstErode)))
   }
 
   /** binary_erosion (ndmorph/__init__.py::binary_erosion; scipy default
@@ -204,27 +191,12 @@ object TMorph {
       cur.data
   }
 
-  /** One typed morphology pass over CO-PARTITIONED blocks (r22). */
-  private[tensor] def runP(blocks: org.apache.spark.rdd.RDD[TBlock], parts: Int,
-      structure: Option[Nd], iterations: Int, rank: Int,
-      erode: Boolean): org.apache.spark.rdd.RDD[TBlock] = {
-    val (depth, kernel) = kernelFor(structure, iterations, rank, erode)
-    THalo.mapOverlapP(blocks, parts, depth, Boundary.Constant(0.0))(kernel)
-  }
-
-  /** Two-pass typed chain over ONE payload placement — the byte twin of
-    * [[Morph.binaryOpening]]'s co-partitioned form. */
+  /** Two-pass typed chain over ONE payload placement ([[THalo.chainP]]). */
   private def chainP(ds: Dataset[TBlock], structure: Option[Nd], iterations: Int,
-      rank: Int, firstErode: Boolean): Dataset[TBlock] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val parts = math.max(1, ds.rdd.getNumPartitions)
-    val placed = THalo.partitionBlocks(ds, parts)
-    val mid = runP(placed, parts, structure, iterations, rank, erode = firstErode)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = runP(mid, parts, structure, iterations, rank, erode = !firstErode)
-    spark.createDataset(out)
-  }
+      rank: Int, firstErode: Boolean): Dataset[TBlock] =
+    THalo.chainP(ds, Boundary.Constant(0.0),
+      kernelFor(structure, iterations, rank, firstErode),
+      kernelFor(structure, iterations, rank, !firstErode))
 
   def binaryErosion(ds: Dataset[TBlock], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1, borderValue: Double = 0.0): Dataset[TBlock] =

@@ -1,6 +1,12 @@
 package graft.tensor
 
+import scala.collection.mutable
+import scala.reflect.ClassTag
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.Dataset
+import org.apache.spark.storage.StorageLevel
 
 /** Element dtypes for typed block payloads (SURVEY §1.1/§1.2: the
   * reference's chunks carry native NumPy dtypes — bool/u/int8–64,
@@ -196,8 +202,10 @@ object DType {
       while (k >= 0) { bits = (bits << 8) | (d(8 * i + k) & 0xffL); k -= 1 }
       java.lang.Double.longBitsToDouble(bits)
     }
+    // raw bits: encode→decode is the identity on every bit pattern, NaN
+    // payloads included — F64 is the float64 [[Halo]]'s wire format
     def write(d: Array[Byte], i: Int, v: Double): Unit = {
-      var bits = java.lang.Double.doubleToLongBits(v)
+      var bits = java.lang.Double.doubleToRawLongBits(v)
       var k = 0
       while (k < 8) { d(8 * i + k) = (bits & 0xff).toByte; bits >>>= 8; k += 1 }
     }
@@ -347,17 +355,35 @@ object BNd {
   }
 }
 
-/** Byte-domain halo exchange — the same one-shuffle plan as [[Halo]]
-  * (slab emission → groupByKey(target) → assemble + boundary resolve),
-  * but every shuffled payload is the NATIVE dtype byte array. On a uint8
-  * image the halo shuffle moves exactly 1/8 of what the float64 path
-  * moves; TensorSpec pins the byte widths. */
+/** Distributed halo (ghost-cell) exchange — the engine's replacement for
+  * the reference's `map_overlap` pattern (every ndfilters/ndmorph op:
+  * dask_image/ndfilters/_utils.py::_get_depth_boundary ≈ L15–60), and
+  * the ONLY slab geometry in the engine: payloads are packed bytes plus
+  * an element width, so a uint8 image's halo shuffle moves exactly 1/8
+  * of what a float64 one moves (TensorSpec pins the byte widths), and
+  * the float64 [[Halo]] API is this exchange over F64 payloads.
+  *
+  * Plan shape (one shuffle):
+  *   1. every block `flatMap`s its own center piece plus one slab per
+  *      neighbor whose padded window overlaps it, keyed by that neighbor;
+  *   2. `groupByKey(imageId, targetIdx)` reassembles each block + halo;
+  *   3. the per-block kernel runs on the padded array and emits the
+  *      cropped output block.
+  *
+  * The shuffle moves only the slab fraction (≈ 2·d·depth/chunk of the
+  * data) — the same traffic dask schedules as inter-worker task
+  * dependencies. Boundary modes are resolved at array edges inside the
+  * assembly step, so kernels never see the boundary. */
 object THalo {
 
+  /** One piece of a future padded block: `shape` cells that land at `at`
+    * (low corner) in the target's padded window. The center piece — the
+    * target's own payload, at `at == depth` — carries the target's
+    * metadata. */
   case class TPiece(
       imageId: String,
       targetIdx: Seq[Int],
-      side: Seq[Int],
+      at: Seq[Int],
       shape: Seq[Int],
       data: Array[Byte],
       origin: Seq[Int],
@@ -367,11 +393,15 @@ object THalo {
       dtype: String)
 
   /** Block + assembled halo; `padded` is packed per the block dtype with
-    * shape `block.shape + 2*depth`. */
+    * shape `block.shape + 2*depth`; element (c) corresponds to global
+    * coordinate `block.origin − depth + c`. */
   case class TPadded(block: TBlock, depth: Seq[Int], padded: Array[Byte]) {
     def paddedShape: Array[Int] =
       block.shape.indices.map(k => block.shape(k) + 2 * depth(k)).toArray
     def bnd: BNd = BNd.of(paddedShape, block.dt.bytes, padded)
+    /** The float64 view, decoded at the kernel edge (inside the task,
+      * never on the wire) — what every float kernel sees. */
+    def f64: Halo.Padded = Halo.Padded(block.toBlock, depth, block.dt.decode(padded))
   }
 
   /** map_overlap in the byte domain: `kernel` sees the typed padded
@@ -383,61 +413,126 @@ object THalo {
     exchange(ds, depth, mode).map(p => p.block.copy(data = kernel(p)))
   }
 
-  def exchange(ds: Dataset[TBlock], depth: Seq[Int],
+  /** Assemble every block + halo (shared by all stencil operators). */
+  def exchange(ds: Dataset[TBlock], depth: Seq[Int], mode: Boundary): Dataset[TPadded] =
+    exchangeBy(ds, _ => depth, mode)
+
+  /** [[exchange]] with the depth taken from each block's rank (uniform-
+    * depth stencils that avoid an eager ndim probe on the Dataset). */
+  private[tensor] def exchangeBy(ds: Dataset[TBlock], depthOf: Int => Seq[Int],
       mode: Boundary): Dataset[TPadded] = {
     val spark = ds.sparkSession
     import spark.implicits._
     val wrap = mode == Boundary.Wrap
-    ds.flatMap(b => emit(b, depth, wrap))
+    ds.flatMap(b => emit(b, depthOf(b.ndim), wrap))
       .groupByKey(p => (p.imageId, p.targetIdx))
       .mapGroups { (_: (String, Seq[Int]), it: Iterator[TPiece]) =>
-        assemble(it.toSeq, depth, mode)
+        val ps = it.toSeq
+        assemble(ps, depthOf(ps.head.arrayShape.length), mode)
       }
   }
 
   // ------------------------------------------------- co-partitioned form
-  // Typed twin of [[Halo.partitionBlocks]]/[[Halo.mapOverlapP]] (r22):
-  // over a known hash layout the center payload never crosses a shuffle —
-  // only face slabs do — and a chain of ops pays ONE payload placement.
-  // Same partition invariant: block b sits in partition
-  // HashPartitioner(parts).getPartition((imageId, idx)).
+  // The groupByKey exchange above must co-locate every block's own
+  // payload with its halo pieces, so the CENTER piece — the whole image —
+  // crosses the shuffle on every stencil op. When the blocks already sit
+  // in a known hash layout, only the face slabs need to move: the payload
+  // side of the reassembly is zipPartitions-NARROW. A chain of N stencil
+  // ops then costs ONE payload placement + N slab-sized shuffles instead
+  // of N full-payload shuffles (r22, guide §2.3 "shuffle keys and
+  // metadata instead of payloads" / §2.4).
+  //
+  // Partition invariant: an RDD produced by [[partitionBlocks]] — or by
+  // [[mapOverlapP]] over such an RDD, since kernels never change a
+  // block's idx — holds each block in partition
+  // `HashPartitioner(parts).getPartition((imageId, idx))`.
 
-  def partitionBlocks(ds: Dataset[TBlock], parts: Int): org.apache.spark.rdd.RDD[TBlock] =
-    ds.rdd.map(b => ((b.imageId, b.idx), b))
-      .partitionBy(new org.apache.spark.HashPartitioner(parts)).values
+  /** Place blocks into the co-partitioned layout: the ONE payload
+    * shuffle a chain pays. Downstream consumers (slab emission + every
+    * zip) re-read this exchange's shuffle files, not the lineage. */
+  def partitionBlocks(ds: Dataset[TBlock], parts: Int): RDD[TBlock] =
+    place(ds.rdd, parts)(b => (b.imageId, b.idx))
 
-  private[tensor] def exchangeP(blocks: org.apache.spark.rdd.RDD[TBlock], parts: Int,
-      depth: Seq[Int], mode: Boundary): org.apache.spark.rdd.RDD[TPadded] = {
+  private[tensor] def place[B: ClassTag](rdd: RDD[B], parts: Int)(
+      key: B => (String, Seq[Int])): RDD[B] =
+    rdd.map(b => (key(b), b)).partitionBy(new HashPartitioner(parts)).values
+
+  /** Slab-only halo exchange over co-partitioned blocks: neighbors'
+    * boundary slabs shuffle to the partition owning the target key; the
+    * center payload never moves. Identical [[TPadded]] reassembly — the
+    * pieces arrive grouped by the layout instead of by a groupByKey. */
+  private[tensor] def exchangeP(blocks: RDD[TBlock], parts: Int,
+      depth: Seq[Int], mode: Boundary): RDD[TPadded] = {
     val wrap = mode == Boundary.Wrap
-    val part = new org.apache.spark.HashPartitioner(parts)
     val slabs = blocks
       .flatMap(b => emit(b, depth, wrap).tail) // neighbors only; center stays put
       .map(p => ((p.imageId, p.targetIdx), p))
-      .partitionBy(part)
+      .partitionBy(new HashPartitioner(parts))
     blocks.zipPartitions(slabs, preservesPartitioning = true) { (bit, sit) =>
-      val byKey = scala.collection.mutable.HashMap
-        .empty[(String, Seq[Int]), scala.collection.mutable.ArrayBuffer[TPiece]]
+      val byKey = mutable.HashMap.empty[(String, Seq[Int]), mutable.ArrayBuffer[TPiece]]
       sit.foreach { case (k, p) =>
-        byKey.getOrElseUpdate(k,
-          scala.collection.mutable.ArrayBuffer.empty[TPiece]) += p
+        byKey.getOrElseUpdate(k, mutable.ArrayBuffer.empty[TPiece]) += p
       }
       bit.map { b =>
-        val center = TPiece(b.imageId, b.idx, Seq.fill(b.ndim)(0), b.shape, b.data,
-          b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
-        val ps = center +: byKey.getOrElse((b.imageId, b.idx),
-          scala.collection.mutable.ArrayBuffer.empty[TPiece]).toSeq
+        val ps = centerOf(b, depth) +: byKey.getOrElse((b.imageId, b.idx),
+          mutable.ArrayBuffer.empty[TPiece]).toSeq
         assemble(ps, depth, mode)
       }
     }
   }
 
-  /** Typed map_overlap over co-partitioned blocks (result keeps the
-    * partition invariant; persist before chaining — consumed twice). */
-  def mapOverlapP(blocks: org.apache.spark.rdd.RDD[TBlock], parts: Int,
+  /** Typed map_overlap over co-partitioned blocks; the result keeps the
+    * partition invariant (kernels replace data, never idx). Callers that
+    * chain a further overlap over the result should persist it — it is
+    * consumed twice (slab emission + the zip). */
+  def mapOverlapP(blocks: RDD[TBlock], parts: Int,
       depth: Seq[Int], mode: Boundary)(
-      kernel: TPadded => Array[Byte]): org.apache.spark.rdd.RDD[TBlock] =
+      kernel: TPadded => Array[Byte]): RDD[TBlock] =
     exchangeP(blocks, parts, depth, mode).map(p => p.block.copy(data = kernel(p)))
 
+  /** Two stencil passes (depth, kernel) over ONE payload placement — the
+    * opening/closing form: the input pays a single partitionBy shuffle,
+    * both passes then ship only face slabs. The intermediate is persisted
+    * — it feeds both the second pass's slab emission and its zip. */
+  private[tensor] def chainP(ds: Dataset[TBlock], mode: Boundary,
+      first: (Seq[Int], TPadded => Array[Byte]),
+      second: (Seq[Int], TPadded => Array[Byte])): Dataset[TBlock] = {
+    val spark = ds.sparkSession
+    import spark.implicits._
+    val parts = math.max(1, ds.rdd.getNumPartitions)
+    val mid = mapOverlapP(partitionBlocks(ds, parts), parts, first._1, mode)(first._2)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    spark.createDataset(mapOverlapP(mid, parts, second._1, mode)(second._2))
+  }
+
+  /** A block's own payload as the center piece of its padded window. */
+  private def centerOf(b: TBlock, depth: Seq[Int]): TPiece =
+    TPiece(b.imageId, b.idx, depth, b.shape, b.data,
+      b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
+
+  /** One axis of the slab geometry for block `i` (`size` cells at
+    * `i·c`): every (target, srcLo, len, dstLo) such that this block's
+    * cells [srcLo, srcLo + len) land at [dstLo, dstLo + len) of the
+    * target's padded window [t·c − h, end_t + h). Under wrap the array
+    * repeats with period n, so the block also feeds windows through its
+    * copies at ±n — including windows two blocks away, when the short
+    * edge block between them is thinner than the depth. */
+  private def axisPieces(i: Int, size: Int, c: Int, n: Int, h: Int,
+      wrap: Boolean): Seq[(Int, Int, Int, Int)] = {
+    val grid = (n + c - 1) / c
+    for {
+      shift <- if (wrap) Seq(-n, 0, n) else Seq(0)
+      a = i * c + shift
+      t <- math.max(0, math.floorDiv(a - h, c) - 1) to
+        math.min(grid - 1, math.floorDiv(a + size - 1 + h, c) + 1)
+      lo = math.max(a, t * c - h)
+      hi = math.min(a + size, math.min(t * c + c, n) + h)
+      if lo < hi
+    } yield (t, lo - a, hi - lo, lo - (t * c - h))
+  }
+
+  /** Slab emission for one block: its center piece first, then one slab
+    * per (target, copy) whose padded window overlaps the block. */
   private[tensor] def emit(b: TBlock, depth: Seq[Int], wrap: Boolean): Seq[TPiece] = {
     val d = b.ndim
     require(depth.length == d, s"halo depth rank ${depth.length} != ndim $d")
@@ -445,47 +540,29 @@ object THalo {
       require(depth(k) <= b.chunk(k),
         s"halo depth ${depth(k)} exceeds chunk ${b.chunk(k)} on axis $k (rechunk first)")
     }
-    val grid = b.gridDims
     val w = b.dt.bytes
-    val center = TPiece(b.imageId, b.idx, Seq.fill(d)(0), b.shape, b.data,
-      b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
     val src = BNd.of(b.shape.toArray, w, b.data)
-    val dirs = Grid.cartesian(Seq.fill(d)(3)).map(_.map(_ - 1)).filter(_.exists(_ != 0))
-    val neighbors = dirs.flatMap { o =>
-      if (o.indices.exists(k => o(k) != 0 && depth(k) == 0)) None
-      else {
-        val rawTarget = b.idx.indices.map(k => b.idx(k) + o(k))
-        val target =
-          if (wrap) rawTarget.indices.map(k => math.floorMod(rawTarget(k), grid(k)))
-          else rawTarget
-        val inGrid = target.indices.forall(k => target(k) >= 0 && target(k) < grid(k))
-        if (!inGrid) None
-        else {
-          val lo = new Array[Int](d); val slabShape = new Array[Int](d)
-          var k = 0
-          while (k < d) {
-            o(k) match {
-              case 1 =>
-                val s = math.min(depth(k), b.shape(k)); lo(k) = b.shape(k) - s; slabShape(k) = s
-              case -1 =>
-                val s = math.min(depth(k), b.shape(k)); lo(k) = 0; slabShape(k) = s
-              case _ => lo(k) = 0; slabShape(k) = b.shape(k)
-            }
-            k += 1
-          }
-          val slab = BNd.zeros(slabShape, w)
-          slab.copyRegion(src, lo, slabShape, new Array[Int](d))
-          Some(TPiece(b.imageId, target, o.map(-_), slabShape.toSeq, slab.data,
-            b.origin, b.shape, b.chunk, b.arrayShape, b.dtype))
-        }
-      }
+    val axes = (0 until d).map(k =>
+      axisPieces(b.idx(k), b.shape(k), b.chunk(k), b.arrayShape(k), depth(k), wrap))
+    val combos = axes.foldLeft(Seq(Seq.empty[(Int, Int, Int, Int)])) { (acc, ps) =>
+      acc.flatMap(prefix => ps.map(prefix :+ _))
     }
-    center +: neighbors
+    // only the block's own unshifted payload lands at `depth` on every axis
+    val neighbors = combos.filterNot(_.map(_._4) == depth).map { ps =>
+      val slabShape = ps.map(_._3).toArray
+      val slab = BNd.zeros(slabShape, w)
+      slab.copyRegion(src, ps.map(_._2).toArray, slabShape, new Array[Int](d))
+      TPiece(b.imageId, ps.map(_._1), ps.map(_._4), slabShape.toSeq, slab.data,
+        b.origin, b.shape, b.chunk, b.arrayShape, b.dtype)
+    }
+    centerOf(b, depth) +: neighbors
   }
 
+  /** Reassemble a padded block from its pieces and resolve the margin
+    * cells beyond the array edge via the boundary mode. */
   private[tensor] def assemble(pieces: Seq[TPiece], depth: Seq[Int],
       mode: Boundary): TPadded = {
-    val center = pieces.find(_.side.forall(_ == 0))
+    val center = pieces.find(_.at == depth)
       .getOrElse(throw new IllegalStateException("halo group without center piece"))
     // a mixed-depth glob (8-bit and 16-bit files under one imageId) would
     // otherwise splice slabs of different element widths into one payload
@@ -498,73 +575,44 @@ object THalo {
     val shape = center.blockShape
     val padShape = shape.indices.map(k => shape(k) + 2 * depth(k)).toArray
     val out = BNd.zeros(padShape, w)
-    val filled = new Array[Boolean](out.size)
+    for (p <- pieces)
+      out.copyRegion(BNd.of(p.shape.toArray, w, p.data), new Array[Int](d),
+        p.shape.toArray, p.at.toArray)
 
-    for (p <- pieces) {
-      val pn = BNd.of(p.shape.toArray, w, p.data)
-      val dstLo = new Array[Int](d)
+    // The pieces cover every cell of the window inside the array — or,
+    // under wrap, inside its copies at ±n. A cell beyond takes cval, or
+    // the value at its coordinate resolved (per such axis) by the mode.
+    val lo = Array.tabulate(d)(k => center.origin(k) - depth(k)) // global coord of cell 0
+    val n = center.arrayShape.toArray
+    val reach = if (mode == Boundary.Wrap) 1 else 0
+    val cval = mode match {
+      case Boundary.Constant(v) => dt.encode(Array(v))
+      case _ => null
+    }
+    val c = new Array[Int](d)
+    val src = new Array[Int](d)
+    var done = out.size == 0
+    while (!done) {
+      var arrived = true
       var k = 0
       while (k < d) {
-        dstLo(k) = p.side(k) match {
-          case 0 => depth(k)
-          case -1 => depth(k) - p.shape(k)
-          case _ => depth(k) + shape(k)
-        }
+        val g = lo(k) + c(k)
+        if (g >= -reach * n(k) && g < (1 + reach) * n(k)) src(k) = c(k)
+        else { arrived = false; src(k) = Boundary.resolve(mode, g, n(k)) - lo(k) }
         k += 1
       }
-      out.copyRegion(pn, new Array[Int](d), p.shape.toArray, dstLo)
-      // mark filled cells
-      val c = new Array[Int](d)
-      var done = p.shape.exists(_ == 0)
-      while (!done) {
-        val dc = new Array[Int](d)
-        var j = 0
-        while (j < d) { dc(j) = dstLo(j) + c(j); j += 1 }
-        filled(out.offset(dc)) = true
-        var j2 = d - 1
-        var carry = true
-        while (carry && j2 >= 0) {
-          c(j2) += 1
-          if (c(j2) < p.shape(j2)) carry = false else { c(j2) = 0; j2 -= 1 }
-        }
-        done = carry
+      if (!arrived) {
+        val off = out.offset(c)
+        if (cval != null) System.arraycopy(cval, 0, out.data, off * w, w)
+        else out.copyElem(out, out.offset(src), off)
       }
-    }
-
-    val origin = center.origin
-    val arrayShape = center.arrayShape
-    mode match {
-      case Boundary.Constant(cval) =>
-        val cbytes = dt.encode(Array(cval))
-        var i = 0
-        while (i < out.size) {
-          if (!filled(i)) System.arraycopy(cbytes, 0, out.data, i * w, w)
-          i += 1
-        }
-      case m =>
-        val c = new Array[Int](d)
-        var done = out.size == 0
-        while (!done) {
-          val off = out.offset(c)
-          if (!filled(off)) {
-            val src = new Array[Int](d)
-            var k = 0
-            while (k < d) {
-              val g = origin(k) - depth(k) + c(k)
-              val gr = Boundary.resolve(m, g, arrayShape(k))
-              src(k) = gr - (origin(k) - depth(k))
-              k += 1
-            }
-            out.copyElem(out, out.offset(src), off)
-          }
-          var j = d - 1
-          var carry = true
-          while (carry && j >= 0) {
-            c(j) += 1
-            if (c(j) < padShape(j)) carry = false else { c(j) = 0; j -= 1 }
-          }
-          done = carry
-        }
+      var j = d - 1
+      var carry = true
+      while (carry && j >= 0) {
+        c(j) += 1
+        if (c(j) < padShape(j)) carry = false else { c(j) = 0; j -= 1 }
+      }
+      done = carry
     }
     val block = TBlock(center.imageId, center.targetIdx, center.origin,
       center.blockShape, center.chunk, center.arrayShape, center.dtype,
@@ -667,8 +715,7 @@ object TFilters {
     val spark = ds.sparkSession
     import spark.implicits._
     THalo.exchange(ds, depth, mode).map { p =>
-      val asF64 = Halo.Padded(p.block.toBlock, p.depth, p.block.dt.decode(p.padded))
-      p.block.copy(dtype = outDtype.name, data = outDtype.encode(kernel(asF64)))
+      p.block.copy(dtype = outDtype.name, data = outDtype.encode(kernel(p.f64)))
     }
   }
 

@@ -519,4 +519,31 @@ class PlanShapeSpec extends SparkSpec {
     assert(hashExchanges(p) == 1,
       s"window must reuse the aggregate's o_custkey partitioning (1 hash shuffle total):\n$p")
   }
+
+  test("halo paths: one Exchange per single stencil op; an opening is one placement plus two slab shuffles") {
+    import graft.tensor._
+    val img = Nd.zeros(Array(20, 27))
+    for (i <- img.data.indices) img.data(i) = if ((i * 7919 + 13) % 256 > 150) 1.0 else 0.0
+    val blocks = Grid.blockify(spark, "halo", img, Seq(7, 9))
+    // the float64 view's encode and decode ride the map stages around
+    // the groupByKey: the op's only shuffle is the halo exchange itself
+    val p = Filters.gaussianFilter(blocks, Seq(1.0, 1.0)).queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(p).size == 1, s"gaussian must shuffle exactly once:\n$p")
+    def shuffleIds(rdd: org.apache.spark.rdd.RDD[_]): Set[Int] = {
+      val seen = scala.collection.mutable.Set.empty[Int]
+      def walk(r: org.apache.spark.rdd.RDD[_]): Set[Int] =
+        if (!seen.add(r.id)) Set.empty
+        else r.dependencies.flatMap {
+          case s: org.apache.spark.ShuffleDependency[_, _, _] => walk(s.rdd) + s.shuffleId
+          case n => walk(n.rdd)
+        }.toSet
+      walk(rdd)
+    }
+    for ((name, rdd) <- Seq(
+        "Morph" -> Morph.binaryOpening(blocks, 2).rdd,
+        "TMorph" -> TMorph.binaryOpening(TBlock.fromBlocks(blocks, DType.U8), 2).rdd)) {
+      val n = shuffleIds(rdd).size
+      assert(n == 3, s"$name.binaryOpening: $n shuffles, want placement + two slab passes")
+    }
+  }
 }

@@ -36,34 +36,79 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("typed halo exchange equals the float64 exchange, random geometry/depth/boundary") {
-    // The byte-domain THalo re-implements slab emission + assembly on
-    // packed payloads; this pins it cell-for-cell against the float64
-    // Halo over random shapes, chunkings, per-axis depths, and all five
-    // boundary modes — the failure modes (stride slips, side-sign flips,
-    // boundary resolve off-by-ones) are exactly the ones tiny fixed
-    // fixtures miss.
+  test("halo exchange equals an np.pad oracle: both forms, widths 1/2/8, random shapes") {
+    // Independent reference: padded cell c of a block holds the WHOLE
+    // array's value at global coordinate origin − depth + c, resolved per
+    // axis by Boundary.resolve, or cval under Constant (np.pad
+    // semantics). Checked over the groupByKey exchange and the
+    // co-partitioned one (partitionBlocks + mapOverlapP with a kernel
+    // that returns the padded payload itself), at element widths 1 and 2
+    // (THalo over uint8/uint16) and 8 (the float64 Halo view), over
+    // random shapes, chunkings, per-axis depths and all five modes — the
+    // failure modes (stride slips, misplaced slabs, boundary resolve
+    // off-by-ones, short edge blocks) are the ones tiny fixtures miss.
     val rnd = new scala.util.Random(7)
     val modes = Seq(Boundary.Reflect, Boundary.Nearest, Boundary.Mirror,
       Boundary.Wrap, Boundary.Constant(3.0))
-    for (trial <- 0 until 8) {
+    def oracle(img: Nd, origin: Seq[Int], padShape: Array[Int], depth: Seq[Int],
+        mode: Boundary): Seq[Double] = {
+      val out = Nd.zeros(padShape)
+      out.foreachCoord { c =>
+        val g = c.indices.map(k => origin(k) - depth(k) + c(k))
+        val r = g.indices.map(k => Boundary.resolve(mode, g(k), img.shape(k)))
+        out(c) = mode match {
+          case Boundary.Constant(cval) if r.contains(-1) => cval
+          case _ => img(r.toArray)
+        }
+      }
+      out.data.toSeq
+    }
+    // (shape, chunks, depth, mode): eight random 2-d trials, one random
+    // 3-d trial, and a wrap whose depth exceeds the short edge block on
+    // one axis and the whole array on the other
+    val trials = (0 until 8).map { t =>
       val shape = Array(4 + rnd.nextInt(14), 4 + rnd.nextInt(17))
-      val img = Nd.zeros(shape)
-      for (i <- img.data.indices) img.data(i) = ((i * 31 + trial * 97) % 256).toDouble
       val chunks = Seq(2 + rnd.nextInt(shape(0) - 1), 2 + rnd.nextInt(shape(1) - 1))
       val depth = Seq(rnd.nextInt(math.min(3, chunks(0)) + 1),
         rnd.nextInt(math.min(3, chunks(1)) + 1))
-      val mode = modes(trial % modes.length)
-      val blocks = Grid.blockify(spark, s"ph$trial", img, chunks)
-      val f64 = Halo.exchange(blocks, depth, mode).collect()
-        .map(p => p.block.idx -> p.padded.toSeq).toMap
-      val u8 = THalo.exchange(TBlock.fromBlocks(blocks, DType.U8), depth, mode)
-        .collect()
-        .map(p => p.block.idx -> DType.U8.decode(p.padded).toSeq).toMap
-      assert(u8.keySet == f64.keySet, s"trial $trial: block sets differ")
-      for ((idx, pad) <- f64)
-        assert(u8(idx) == pad,
-          s"trial $trial (chunks=$chunks depth=$depth mode=$mode) idx=$idx diverges")
+      (shape, chunks, depth, modes(t % modes.length))
+    } ++ {
+      val shape = Array(5 + rnd.nextInt(6), 4 + rnd.nextInt(7), 3 + rnd.nextInt(6))
+      val chunks = shape.toSeq.map(n => 2 + rnd.nextInt(n - 1))
+      Seq((shape, chunks, chunks.map(c => 1 + rnd.nextInt(math.min(2, c))),
+        modes(rnd.nextInt(modes.length))))
+    } :+ ((Array(3, 10), Seq(5, 4), Seq(4, 3), Boundary.Wrap))
+    for (((shape, chunks, depth, mode), trial) <- trials.zipWithIndex) {
+      val img = Nd.zeros(shape)
+      for (i <- img.data.indices) img.data(i) = ((i * 31 + trial * 97) % 256).toDouble
+      val parts = 1 + trial % 3
+      val what = s"trial $trial (shape=${shape.toSeq} chunks=$chunks depth=$depth mode=$mode)"
+      def check(form: String, src: Nd, got: Seq[(Seq[Int], Seq[Int], Seq[Double])]): Unit = {
+        assert(got.size == Grid.cartesian(shape.toSeq.zip(chunks)
+          .map { case (n, c) => (n + c - 1) / c }).size, s"$form $what: block count")
+        for ((idx, origin, pad) <- got) {
+          val padShape = idx.indices.map { k =>
+            math.min(chunks(k), shape(k) - origin(k)) + 2 * depth(k)
+          }.toArray
+          assert(pad == oracle(src, origin, padShape, depth, mode),
+            s"$form $what: block $idx diverges from the oracle")
+        }
+      }
+      for ((dt, src) <- Seq(DType.U8 -> img, DType.U16 -> Nd.of(shape, img.data.map(_ * 251)))) {
+        val typed = TBlock.fromBlocks(Grid.blockify(spark, s"ph$trial", src, chunks), dt)
+        check(s"${dt.name} exchange", src, THalo.exchange(typed, depth, mode).collect().toSeq
+          .map(p => (p.block.idx, p.block.origin, dt.decode(p.padded).toSeq)))
+        check(s"${dt.name} exchangeP", src, THalo.mapOverlapP(THalo.partitionBlocks(typed, parts),
+            parts, depth, mode)(_.padded).collect().toSeq
+          .map(b => (b.idx, b.origin, dt.decode(b.data).toSeq)))
+      }
+      val src = Nd.of(shape, img.data.map(_ + 0.25))
+      val blocks = Grid.blockify(spark, s"ph$trial", src, chunks)
+      check("float64 exchange", src, Halo.exchange(blocks, depth, mode).collect().toSeq
+        .map(p => (p.block.idx, p.block.origin, p.padded.toSeq)))
+      check("float64 exchangeP", src, Halo.mapOverlapP(Halo.partitionBlocks(blocks, parts),
+          parts, depth, mode)(_.padded).collect().toSeq
+        .map(b => (b.idx, b.origin, b.data.toSeq)))
     }
   }
 

@@ -149,10 +149,15 @@ class TensorSpec extends SparkSpec {
         case DType.F16 => vals.map(v => // half is a PROJECTION: settle once
           DType.F16.decode(DType.F16.encode(Array(v)))(0))
         case DType.F32 | DType.C64 => vals.map(_.toFloat.toDouble)
-        case DType.F64 | DType.C128 => vals
+        // float64 is the float Halo's wire format: a NaN with a
+        // non-canonical payload and the sign of zero must survive
+        case DType.F64 | DType.C128 => vals ++
+          Array(java.lang.Double.longBitsToDouble(0x7ff8000000000abcL),
+            java.lang.Double.longBitsToDouble(0xfff8000000000001L), -0.0)
       }
       val rt = dt.decode(dt.encode(in))
-      assert(rt.sameElements(in), s"${dt.name} round-trip: ${rt.toSeq} vs ${in.toSeq}")
+      def bits(a: Array[Double]) = a.toSeq.map(java.lang.Double.doubleToRawLongBits)
+      assert(bits(rt) == bits(in), s"${dt.name} round-trip: ${rt.toSeq} vs ${in.toSeq}")
       assert(dt.encode(in).length == in.length * dt.bytes)
     }
     // float16 known values: exactly-representable halves are identity,

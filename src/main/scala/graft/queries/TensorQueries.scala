@@ -408,11 +408,11 @@ object TensorQueries {
       .crossJoin(cnt(Morph.binaryClosing(bin, 2), "n_closed"))
   }
 
-  /** Byte-domain twin of [[tensorMorphCounts]]: the thresholded mask is
+  /** Byte-domain form of [[tensorMorphCounts]]: the thresholded mask is
     * encoded as a native uint8 TBlock image and every morphology pass —
     * halo exchange included — stays 1 byte/pixel (TMorph); only the final
-    * count widens. Same oracle as the float path: the two
-    * implementations must agree bit-for-bit. */
+    * count widens. The float key runs the same TMorph kernel over BOOL
+    * payloads, so both keys check against the same oracle. */
   val tensorUint8Morph: Q = (s, dir) => {
     val bin = TBlock.fromBlocks(Filters.mapBlocks(Images.eventsRaster(s, dir)) { b =>
       b.data.map(v => if (v > 150.0) 1.0 else 0.0)
@@ -745,9 +745,10 @@ object TensorQueries {
        |ORDER BY g.i, g.j""".stripMargin
 
   /** The SAME subpixel shift over the NATIVE uint8 raster through the
-    * typed gather path (r10): the needs join ships 1 byte/pixel — 8×
-    * less shuffle than the float path — with samples decoded at the
-    * kernel edge; f64 output keeps the 4-tap blend oracle exact. */
+    * typed gather (r10): the needs join ships 1 byte/pixel — 8× less
+    * shuffle than the float key's F64 view of the same gather — with
+    * blocks decoded at the kernel edge; f64 output keeps the 4-tap
+    * blend oracle exact. */
   val tensorAffineU8: Q = (s, dir) => {
     val out = Interp.affineTransformTyped(u8Raster(s, dir), 2,
       Array(Array(1.0, 0.0), Array(0.0, 1.0)), Array(0.5, 0.25),

@@ -358,18 +358,8 @@ object Filters {
   def uniformFilterTyped(ds: Dataset[TBlock], size: Seq[Int],
       outDtype: DType = DType.F64, mode: String = "reflect",
       cval: Double = 0.0): Dataset[TBlock] = {
-    require(size.forall(_ % 2 == 1), "uniform_filter: even sizes not supported (use odd)")
-    TFilters.mapOverlapDecode(ds, size.map(_ / 2), Boundary.of(mode, cval),
-      outDtype) { p =>
-      var cur = p.nd
-      var k = 0
-      while (k < size.length) {
-        cur = pass1dBoxMean(cur, k, size(k))
-        k += 1
-      }
-      require(cur.shape.toSeq == p.block.shape)
-      cur.data
-    }
+    val (radii, kernel) = uniformStage(size)
+    TFilters.mapOverlapDecode(ds, radii, Boundary.of(mode, cval), outDtype)(kernel)
   }
 
   // ------------------------------------------------------------ order stats

@@ -10,7 +10,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * the needed input blocks are join-shipped to it (one shuffle keyed by
   * output block), and the resampling kernel runs per output block. Only
   * the touched input region moves — the distributed analog of the
-  * reference's per-chunk `input[bbox]` slicing.
+  * reference's per-chunk `input[bbox]` slicing. The float64 and typed
+  * forms run the same gather; float64 is its F64-payload view.
   *
   * Orders 0 (nearest) and 1 (linear) are exact; boundary mode is
   * `constant` (cval), the reference's own restriction. `spline_filter`
@@ -30,7 +31,10 @@ object Interp {
 
   /** affine_transform(input, matrix, offset, output_shape, order, cval):
     * output(o) = input(M·(o) + offset), order ∈ {0, …, 5}. Matrix is
-    * row-major d×d. Output grid reuses the input chunking. */
+    * row-major d×d. Output grid reuses the input chunking. The float64
+    * view of the typed gather: blocks encode to F64 payloads (raw bits,
+    * so the result is bit-identical to sampling the doubles directly),
+    * [[gather]] runs with an F64 output, and the result decodes. */
   def affineTransform(
       ds: Dataset[Block],
       ndim: Int,
@@ -41,35 +45,74 @@ object Interp {
       cval: Double = 0.0): Dataset[Block] = {
     require(order >= 0 && order <= 5,
       "affine_transform: spline orders 0..5 supported")
+    // order ≥ 2 samples B-spline COEFFICIENTS: prefilter first (scipy's
+    // prefilter=True), then the gather blends with the matching basis
+    val src = if (order >= 2) splineFilter(ds, ndim, order) else ds
+    TBlock.toBlocks(gather(TBlock.fromBlocks(src, DType.F64), ndim, matrix, offset,
+      outputShape, order, cval, DType.F64))
+  }
+
+  /** affine_transform over TYPED payloads, orders 0–1: the gather join
+    * ships NATIVE bytes (1 B/px on uint8 — 8× less shuffle than the
+    * float64 view), and the result encodes to `outDtype` (f32/f64 for
+    * interpolated output, the input dtype for order-0 nearest). Spline
+    * orders need the float prefilter — promote with `TBlock.toBlocks`
+    * and call [[affineTransform]]. */
+  def affineTransformTyped(
+      ds: Dataset[TBlock],
+      ndim: Int,
+      matrix: Array[Array[Double]],
+      offset: Array[Double],
+      outputShape: Option[Seq[Int]] = None,
+      order: Int = 1,
+      cval: Double = 0.0,
+      outDtype: DType = DType.F32): Dataset[TBlock] = {
+    require(order == 0 || order == 1,
+      "typed affine: orders 0/1 only (promote to float Blocks for spline orders)")
+    gather(ds, ndim, matrix, offset, outputShape, order, cval, outDtype)
+  }
+
+  /** The one resampling kernel behind both affine forms: the needs table
+    * joins each output block to the input blocks it touches, and the
+    * kernel runs per output block. Each gathered block decodes ONCE at
+    * group scope (the same edge decode [[TFilters.mapOverlapDecode]]
+    * uses), so the sampling loop indexes doubles. Orders ≥ 2 expect
+    * prefiltered B-spline coefficients. */
+  private def gather(
+      ds: Dataset[TBlock],
+      ndim: Int,
+      matrix: Array[Array[Double]],
+      offset: Array[Double],
+      outputShape: Option[Seq[Int]],
+      order: Int,
+      cval: Double,
+      outDtype: DType): Dataset[TBlock] = {
     val spark = ds.sparkSession
     import spark.implicits._
-
-    // order ≥ 2 samples B-spline COEFFICIENTS: prefilter first (scipy's
-    // prefilter=True), then blend with the matching basis below
-    val src = if (order >= 2) splineFilter(ds, ndim, order) else ds
-
     // geometry comes from any input block (metadata-only single-row action)
-    val proto = src.head()
+    val proto = ds.head()
     val inShape = proto.arrayShape
     val chunk = proto.chunk
     val outShape = outputShape.getOrElse(inShape)
     val margin = if (order >= 2) order / 2 + 1 else 1
-
     // DISTRIBUTED needs-table build: the grid can be ~5·10⁷ blocks at
     // 100 TB, so the enumeration runs as spark.range over the cell count
     // (driver stays O(1)), not a driver-side Seq + createDataset.
     val needsDs = needsDataset(spark, ndim, matrix, offset,
       chunk, inShape, outShape, margin)
-
     val bcM = spark.sparkContext.broadcast((matrix, offset))
     val imageId = proto.imageId
+    val inDtype = proto.dtype
+    val outName = outDtype.name
 
-    needsDs.joinWith(src, needsDs("inIdx") === src("idx"), "left_outer")
+    needsDs.joinWith(ds, needsDs("inIdx") === ds("idx"), "left_outer")
       .groupByKey(_._1.outIdx)
-      .mapGroups { (oIdx: Seq[Int], it: Iterator[(Need, Block)]) =>
+      .mapGroups { (oIdx: Seq[Int], it: Iterator[(Need, TBlock)]) =>
         val rows = it.toSeq
         val n = rows.head._1
         val (m, off) = bcM.value
+        val dt = DType.of(inDtype)
+        val odt = DType.of(outName)
         // Allocation-free inner loop (r10 — the bench showed ~4 µs/px
         // dominated by per-corner Seq keys, Map lookups and Nd wrappers):
         // blocks key on a FLATTENED grid index, per-block strides are
@@ -85,11 +128,13 @@ object Interp {
         while (kk < ndim) {
           inGrid(kk) = (inShapeA(kk) + chunkA(kk) - 1) / chunkA(kk); kk += 1
         }
-        // flattened block index → (origin, rowStrides, data)
+        // flattened block index → (origin, rowStrides, decoded data)
         val byLin = new java.util.HashMap[java.lang.Long, (Array[Int], Array[Int], Array[Double])]()
         rows.foreach { r =>
           val b = r._2
           if (b != null) {
+            require(b.dtype == inDtype,
+              s"typed affine: mixed dtypes (${b.dtype} vs $inDtype) — promote first")
             var lin = 0L
             var k = 0
             while (k < ndim) { lin = lin * inGrid(k) + b.idx(k); k += 1 }
@@ -98,7 +143,7 @@ object Interp {
             var acc = 1
             var j = ndim - 1
             while (j >= 0) { strides(j) = acc; acc *= shapeA(j); j -= 1 }
-            byLin.put(lin, (b.origin.toArray, strides, b.data))
+            byLin.put(lin, (b.origin.toArray, strides, dt.decode(b.data)))
           }
         }
         def sample(g: Array[Int]): Double = {
@@ -132,8 +177,15 @@ object Interp {
           else Grid.cartesian(Seq.fill(ndim)(support)).map(_.toArray).toArray
         val cornerShift = if (order == 3) -1 else 0
         val wAxis = Array.ofDim[Double](ndim, support)
-        val out = Nd.zeros(n.outShape.toArray)
-        out.foreachCoord { c =>
+        val outSh = n.outShape.toArray
+        val outData = new Array[Byte](outSh.product * odt.bytes)
+        // zero-allocation coordinate walker (an Nd.zeros walker would
+        // waste 8 B/px of dead doubles): plain odometer, last axis fastest
+        // — the same order Nd.foreachCoord produces
+        val c = new Array[Int](ndim)
+        var elem = 0
+        val totalElems = outSh.product
+        while (elem < totalElems) {
           var r = 0
           while (r < ndim) {
             var acc = off(r)
@@ -142,7 +194,7 @@ object Interp {
             srcPos(r) = acc
             r += 1
           }
-          out(c) =
+          val v =
             if (order == 0) {
               // scipy order-0: nearest via floor(x + 0.5)
               var k = 0
@@ -199,145 +251,6 @@ object Interp {
                   w *= wAxis(k)(offs(k))
                   g(k) = base(k) + offs(k) + cornerShift
                   k += 1
-                }
-                if (w != 0.0) acc += w * sample(g)
-                ci += 1
-              }
-              acc
-            }
-        }
-        Block(imageId, oIdx, n.outOrigin, n.outShape, chunk, outShape, out.data)
-      }
-  }
-
-  /** affine_transform over TYPED payloads, orders 0–1: the gather join
-    * ships NATIVE bytes (1 B/px on uint8 — 8× less shuffle than the
-    * float64 Block path), samples decode at the kernel edge, and the
-    * result encodes to `outDtype` (f32/f64 for interpolated output, the
-    * input dtype for order-0 nearest). Spline orders need the float
-    * prefilter — promote with `TBlock.toBlocks` first. Same distributed
-    * needs-table build and allocation-free kernel as the float path. */
-  def affineTransformTyped(
-      ds: Dataset[TBlock],
-      ndim: Int,
-      matrix: Array[Array[Double]],
-      offset: Array[Double],
-      outputShape: Option[Seq[Int]] = None,
-      order: Int = 1,
-      cval: Double = 0.0,
-      outDtype: DType = DType.F32): Dataset[TBlock] = {
-    require(order == 0 || order == 1,
-      "typed affine: orders 0/1 only (promote to float Blocks for spline orders)")
-    val spark = ds.sparkSession
-    import spark.implicits._
-    val proto = ds.head()
-    val inShape = proto.arrayShape
-    val chunk = proto.chunk
-    val outShape = outputShape.getOrElse(inShape)
-    val needsDs = needsDataset(spark, ndim, matrix, offset,
-      chunk, inShape, outShape, margin = 1)
-    val bcM = spark.sparkContext.broadcast((matrix, offset))
-    val imageId = proto.imageId
-    val inDtype = proto.dtype
-    val outName = outDtype.name
-
-    needsDs.joinWith(ds, needsDs("inIdx") === ds("idx"), "left_outer")
-      .groupByKey(_._1.outIdx)
-      .mapGroups { (oIdx: Seq[Int], it: Iterator[(Need, TBlock)]) =>
-        val rows = it.toSeq
-        val n = rows.head._1
-        val (m, off) = bcM.value
-        val dt = DType.of(inDtype)
-        val odt = DType.of(outName)
-        val chunkA = chunk.toArray
-        val inShapeA = inShape.toArray
-        val inGrid = new Array[Int](ndim)
-        var kk = 0
-        while (kk < ndim) {
-          inGrid(kk) = (inShapeA(kk) + chunkA(kk) - 1) / chunkA(kk); kk += 1
-        }
-        val byLin = new java.util.HashMap[java.lang.Long, (Array[Int], Array[Int], Array[Byte])]()
-        rows.foreach { r =>
-          val b = r._2
-          if (b != null) {
-            require(b.dtype == inDtype,
-              s"typed affine: mixed dtypes (${b.dtype} vs $inDtype) — promote first")
-            var lin = 0L
-            var k = 0
-            while (k < ndim) { lin = lin * inGrid(k) + b.idx(k); k += 1 }
-            val shapeA = b.shape.toArray
-            val strides = new Array[Int](ndim)
-            var acc = 1
-            var j = ndim - 1
-            while (j >= 0) { strides(j) = acc; acc *= shapeA(j); j -= 1 }
-            byLin.put(lin, (b.origin.toArray, strides, b.data))
-          }
-        }
-        def sample(g: Array[Int]): Double = {
-          var k = 0
-          while (k < ndim) {
-            if (g(k) < 0 || g(k) >= inShapeA(k)) return cval
-            k += 1
-          }
-          var lin = 0L
-          k = 0
-          while (k < ndim) { lin = lin * inGrid(k) + g(k) / chunkA(k); k += 1 }
-          val e = byLin.get(lin)
-          if (e == null) return cval
-          val (origin, strides, data) = e
-          var o = 0
-          k = 0
-          while (k < ndim) { o += (g(k) - origin(k)) * strides(k); k += 1 }
-          dt.read(data, o)
-        }
-        val srcPos = new Array[Double](ndim)
-        val g = new Array[Int](ndim)
-        val base = new Array[Int](ndim)
-        val corners: Array[Array[Int]] =
-          if (order == 0) Array.empty
-          else Grid.cartesian(Seq.fill(ndim)(2)).map(_.toArray).toArray
-        val wAxis = Array.ofDim[Double](ndim, 2)
-        val outSh = n.outShape.toArray
-        val outData = new Array[Byte](outSh.product * odt.bytes)
-        // zero-allocation coordinate walker (an Nd.zeros walker would
-        // waste 8 B/px of dead doubles): plain odometer, last axis fastest
-        // — the same order Nd.foreachCoord produces
-        val c = new Array[Int](ndim)
-        var elem = 0
-        val totalElems = outSh.product
-        while (elem < totalElems) {
-          var r = 0
-          while (r < ndim) {
-            var acc = off(r)
-            var cc = 0
-            while (cc < ndim) { acc += m(r)(cc) * (n.outOrigin(cc) + c(cc)); cc += 1 }
-            srcPos(r) = acc
-            r += 1
-          }
-          val v =
-            if (order == 0) {
-              var k = 0
-              while (k < ndim) { g(k) = math.floor(srcPos(k) + 0.5).toInt; k += 1 }
-              sample(g)
-            } else {
-              var k = 0
-              while (k < ndim) {
-                base(k) = math.floor(srcPos(k)).toInt
-                val frac = srcPos(k) - base(k)
-                wAxis(k)(0) = 1.0 - frac
-                wAxis(k)(1) = frac
-                k += 1
-              }
-              var acc = 0.0
-              var ci = 0
-              while (ci < corners.length) {
-                val offs = corners(ci)
-                var w = 1.0
-                var k2 = 0
-                while (k2 < ndim) {
-                  w *= wAxis(k2)(offs(k2))
-                  g(k2) = base(k2) + offs(k2)
-                  k2 += 1
                 }
                 if (w != 0.0) acc += w * sample(g)
                 ci += 1

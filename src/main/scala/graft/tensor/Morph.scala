@@ -2,8 +2,10 @@ package graft.tensor
 
 import org.apache.spark.sql.Dataset
 
-/** Binary morphology (dask_image.ndmorph, 4 ops — SURVEY.md §2A.6).
-  * Boolean images ride the Double payload as 0.0 / 1.0.
+/** Binary morphology (dask_image.ndmorph, 4 ops — SURVEY.md §2A.6)
+  * over float64 blocks: the bool view of [[TMorph]], whose byte kernel
+  * is the only erosion/dilation loop (a float image's halo moves 1 byte
+  * per pixel). Outputs are 0.0 / 1.0.
   *
   * Each op is `map_overlap` of the scipy binary op with
   * depth = structure radius × iterations
@@ -31,102 +33,46 @@ object Morph {
   private[tensor] def radii(st: Nd, center: Seq[Int]): Seq[Int] =
     st.shape.indices.map(k => math.max(center(k), st.shape(k) - 1 - center(k)))
 
-  /** (depth, kernel) of one binary-morphology pass — shared by the
-    * Dataset form and the co-partitioned chain form. */
-  private def kernelFor(structure: Option[Nd], iterations: Int, rank: Int,
-      erode: Boolean): (Seq[Int], Halo.Padded => Array[Double]) = {
-    val st = structure.getOrElse(binaryStructure(rank, 1))
-    val center = st.shape.map(_ / 2)
-    val r = radii(st, center)
-    val depth = r.map(_ * iterations)
-    val offs = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[Array[Int]]
-      st.foreachCoord(c => if (st(c) != 0.0) buf += c.indices.map(k => c(k) - center(k)).toArray)
-      buf.toArray
-    }
-    val kernel = (p: Halo.Padded) => {
-      val d = p.block.ndim
-      var cur = p.nd
-      var it = 0
-      while (it < iterations) {
-        // valid output region shrinks by the per-axis radius per iteration
-        val outShape = cur.shape.indices.map(k => cur.shape(k) - 2 * r(k)).toArray
-        val out = Nd.zeros(outShape)
-        out.foreachCoord { oc =>
-          var ok = erode // erode: assume all-1 until a 0; dilate: assume no-1
-          var t = 0
-          while (t < offs.length && (ok == erode)) {
-            var off = 0
-            var k = 0
-            while (k < d) { off += (oc(k) + r(k) + offs(t)(k)) * cur.strides(k); k += 1 }
-            val v = cur.data(off) != 0.0
-            if (erode) { if (!v) ok = false } else { if (v) ok = true }
-            t += 1
-          }
-          out(oc) = if (ok) 1.0 else 0.0
-        }
-        cur = out
-        it += 1
-      }
-      require(cur.shape.toSeq == p.block.shape)
-      cur.data
-    }
-    (depth, kernel)
-  }
-
-  private def run(ds: Dataset[Block], structure: Option[Nd], iterations: Int,
-      borderValue: Double, rank: Int, erode: Boolean): Dataset[Block] = {
-    val (depth, kernel) = kernelFor(structure, iterations, rank, erode)
-    // scipy: erosion's border_value defaults treat outside as `borderValue`
-    Halo.mapOverlap(ds, depth, Boundary.Constant(borderValue))(kernel)
-  }
-
-  /** Opening/closing: two passes over ONE payload placement (r22) — the
-    * F64 form of [[THalo.chainP]], which both passes share with
-    * [[TMorph]]: both ship face slabs only, instead of two full-payload
-    * halo shuffles. */
-  private def chainP(ds: Dataset[Block], structure: Option[Nd], iterations: Int,
-      rank: Int, firstErode: Boolean): Dataset[Block] = {
-    def pass(erode: Boolean) = {
-      val (depth, kernel) = kernelFor(structure, iterations, rank, erode)
-      (depth, (p: THalo.TPadded) => DType.F64.encode(kernel(p.f64)))
-    }
-    TBlock.toBlocks(THalo.chainP(TBlock.fromBlocks(ds, DType.F64), Boundary.Constant(0.0),
-      pass(firstErode), pass(!firstErode)))
-  }
+  /** The float64 API as the bool view of [[TMorph]]: blocks encode to
+    * BOOL (nonzero → true, NaN included; a constant border encodes
+    * through the same codec), TMorph's byte kernel runs, and the result
+    * decodes to 0.0 / 1.0. */
+  private def viaBool(ds: Dataset[Block])(
+      op: Dataset[TBlock] => Dataset[TBlock]): Dataset[Block] =
+    TBlock.toBlocks(op(TBlock.fromBlocks(ds, DType.BOOL)))
 
   /** binary_erosion (ndmorph/__init__.py::binary_erosion; scipy default
     * border_value=0 — the border erodes). */
   def binaryErosion(ds: Dataset[Block], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1, borderValue: Double = 0.0): Dataset[Block] =
-    run(ds, structure, iterations, borderValue, rank, erode = true)
+    viaBool(ds)(TMorph.binaryErosion(_, rank, structure, iterations, borderValue))
 
   /** binary_dilation (border treated as 0, scipy default). */
   def binaryDilation(ds: Dataset[Block], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1, borderValue: Double = 0.0): Dataset[Block] =
-    run(ds, structure, iterations, borderValue, rank, erode = false)
+    viaBool(ds)(TMorph.binaryDilation(_, rank, structure, iterations, borderValue))
 
   /** binary_opening = erosion then dilation — over ONE payload placement
     * (r22): both passes ship face slabs only, instead of two full-payload
     * halo shuffles. */
   def binaryOpening(ds: Dataset[Block], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1): Dataset[Block] =
-    chainP(ds, structure, iterations, rank, firstErode = true)
+    viaBool(ds)(TMorph.binaryOpening(_, rank, structure, iterations))
 
   /** binary_closing = dilation then erosion (one payload placement, as
     * [[binaryOpening]]). */
   def binaryClosing(ds: Dataset[Block], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1): Dataset[Block] =
-    chainP(ds, structure, iterations, rank, firstErode = false)
+    viaBool(ds)(TMorph.binaryClosing(_, rank, structure, iterations))
 }
 
-/** Byte-domain binary morphology: the same scipy semantics over 1-byte
-  * (bool/uint8) typed payloads. Morphology is a boolean-domain family —
-  * the float64 path pays 8 bytes/pixel of halo shuffle for 1 bit of
-  * information; here the mask halo-exchanges, erodes, and dilates
-  * entirely in the byte domain (TensorSpec pins the widths and the
-  * float-path equivalence). Iterations still run inside ONE padded
-  * kernel, so an N-iteration op costs a single halo shuffle. */
+/** Byte-domain binary morphology: the scipy semantics over 1-byte
+  * (bool/uint8) typed payloads, and the engine's one erosion/dilation
+  * kernel — [[Morph]] runs it over BOOL-encoded float blocks. The mask
+  * halo-exchanges, erodes, and dilates entirely in the byte domain
+  * (TensorSpec pins the widths and both forms against a naive oracle).
+  * Iterations still run inside ONE padded kernel, so an N-iteration op
+  * costs a single halo shuffle. */
 object TMorph {
 
   /** (depth, kernel) of one typed morphology pass — shared by the
@@ -207,7 +153,8 @@ object TMorph {
     run(ds, structure, iterations, borderValue, rank, erode = false)
 
   /** binary_opening / binary_closing — over ONE payload placement (r22):
-    * both passes ship face slabs only; see [[Morph.binaryOpening]]. */
+    * both passes ship face slabs only, instead of two full-payload halo
+    * shuffles. */
   def binaryOpening(ds: Dataset[TBlock], rank: Int, structure: Option[Nd] = None,
       iterations: Int = 1): Dataset[TBlock] =
     chainP(ds, structure, iterations, rank, firstErode = true)

@@ -290,20 +290,32 @@ class InterpFourierSpec extends SparkSpec {
       q.data(i) = (((math.round(img.data(i) * 50) % 256) + 256) % 256).toDouble
     val ds = Grid.blockify(spark, "ta", q, Seq(7, 9))
     val typed = TBlock.fromBlocks(ds, DType.U8)
+    val decoded = Grid.unblockify(TBlock.toBlocks(typed))
     val m = Array(Array(0.8, 0.1), Array(-0.1, 1.1))
     val off = Array(0.5, -0.25)
-    // order 1: identical double math after the u8 decode → bit-exact
-    val want = Grid.unblockify(Interp.affineTransform(ds, 2, m, off, order = 1, cval = 3.0))
-    val got = Grid.unblockify(TBlock.toBlocks(Interp.affineTransformTyped(
-      typed, 2, m, off, order = 1, cval = 3.0, outDtype = DType.F64)))
-    assert(got.data.sameElements(want.data), "typed affine diverges from float path")
+    // both forms against the naive reference on the decoded u8 image:
+    // exact at order 0, within 1e-12 at order 1 (summation order differs)
+    for (order <- Seq(0, 1)) {
+      val want = naiveAffine(decoded, m, off, decoded.shape, order, 3.0)
+      val viaFloat = Grid.unblockify(
+        Interp.affineTransform(ds, 2, m, off, order = order, cval = 3.0))
+      val viaTyped = Grid.unblockify(TBlock.toBlocks(Interp.affineTransformTyped(
+        typed, 2, m, off, order = order, cval = 3.0, outDtype = DType.F64)))
+      for ((name, got) <- Seq("float" -> viaFloat, "typed" -> viaTyped)) {
+        val ok = if (order == 0) got.data.sameElements(want.data)
+          else maxAbsDiff(got, want) < 1e-12
+        assert(ok, s"$name affine order=$order diverges from naive by ${maxAbsDiff(got, want)}")
+      }
+      assert(viaTyped.data.sameElements(viaFloat.data),
+        s"typed affine order=$order diverges from the float path")
+    }
     // order 0: nearest gather can stay in the input dtype end to end
     val near = Interp.affineTransformTyped(typed, 2, m, off, order = 0,
       cval = 0.0, outDtype = DType.U8)
     assert(near.collect().forall(_.dtype == "uint8"), "order-0 output dtype")
-    val want0 = Grid.unblockify(Interp.affineTransform(ds, 2, m, off, order = 0, cval = 0.0))
     val got0 = Grid.unblockify(TBlock.toBlocks(near))
-    assert(got0.data.sameElements(want0.data), "order-0 typed affine diverges")
+    assert(got0.data.sameElements(naiveAffine(decoded, m, off, decoded.shape, 0, 0.0).data),
+      "order-0 u8 typed affine diverges from naive")
     // rotate delegates through the same geometry: typed == float, and a
     // 90° rotation of u8 input at order 0 is an exact uint8 permutation
     val rotF = Grid.unblockify(Interp.rotate(ds, 2, 90.0, reshape = true, order = 0))

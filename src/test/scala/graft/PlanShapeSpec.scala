@@ -546,4 +546,21 @@ class PlanShapeSpec extends SparkSpec {
       assert(n == 3, s"$name.binaryOpening: $n shuffles, want placement + two slab passes")
     }
   }
+
+  test("affine: the float64 view shuffles exactly as the typed gather it wraps") {
+    import graft.tensor._
+    val img = Nd.zeros(Array(20, 27))
+    for (i <- img.data.indices) img.data(i) = (i * 7919 % 256).toDouble
+    val blocks = Grid.blockify(spark, "affine", img, Seq(7, 9))
+    val m = Array(Array(0.8, 0.1), Array(-0.1, 1.1))
+    val off = Array(0.5, -0.25)
+    def exchanges(ds: org.apache.spark.sql.Dataset[_]): Int =
+      "Exchange".r.findAllIn(ds.queryExecution.executedPlan.toString).size
+    val float = exchanges(Interp.affineTransform(blocks, 2, m, off, order = 1))
+    val typed = exchanges(Interp.affineTransformTyped(
+      TBlock.fromBlocks(blocks, DType.U8), 2, m, off, order = 1))
+    // the F64 encode and decode are map stages: no shuffle of their own
+    assert(float > 0 && float == typed,
+      s"float affine plans $float Exchange nodes, the typed gather $typed")
+  }
 }

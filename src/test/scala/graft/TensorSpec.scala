@@ -240,32 +240,81 @@ class TensorSpec extends SparkSpec {
     assert(maxAbsDiff(viaBytes, viaF64) == 0.0)
   }
 
+  /** Naive full-array binary erosion/dilation with the cross structure
+    * and a constant border: nonzero (NaN included) is true, each
+    * iteration re-applies the border, and the output is 0.0/1.0. */
+  private def naiveMorph(in: Nd, erode: Boolean, iterations: Int,
+      border: Boolean = false): Nd = {
+    val Array(h, w) = in.shape
+    var cur = in.data.map(_ != 0.0)
+    for (_ <- 0 until iterations) {
+      val prev = cur
+      cur = Array.tabulate(h * w) { k =>
+        val (i, j) = (k / w, k % w)
+        val hits = Seq((0, 0), (-1, 0), (1, 0), (0, -1), (0, 1)).map { case (di, dj) =>
+          val (a, b) = (i + di, j + dj)
+          if (a < 0 || a >= h || b < 0 || b >= w) border else prev(a * w + b)
+        }
+        if (erode) hits.forall(identity) else hits.exists(identity)
+      }
+    }
+    val out = Nd.zeros(in.shape)
+    for (k <- cur.indices) out.data(k) = if (cur(k)) 1.0 else 0.0
+    out
+  }
+
   test("byte-domain morphology equals the float64 path, 1 byte/pixel throughout") {
     val q = Nd.zeros(Array(20, 27))
     for (i <- q.data.indices) q.data(i) = if ((i * 7919 + 13) % 256 > 150) 1.0 else 0.0
+    // the float API takes any values and treats nonzero as true: the same
+    // mask written with 0.5, −2.0 and NaN foreground cells
+    val odd = Nd.zeros(q.shape)
+    for (i <- q.data.indices)
+      odd.data(i) = if (q.data(i) == 0.0) 0.0 else Seq(1.0, 0.5, -2.0, Double.NaN)(i % 4)
     for (chunks <- Seq(Seq(20, 27), Seq(7, 9)); iters <- Seq(1, 2)) {
       val blocks = Grid.blockify(spark, "m", q, chunks)
+      val oddBlocks = Grid.blockify(spark, "odd", odd, chunks)
       val typed = TBlock.fromBlocks(blocks, DType.U8)
-      def check(name: String,
+      def ero(x: Nd, border: Boolean = false) = naiveMorph(x, erode = true, iters, border)
+      def dil(x: Nd, border: Boolean = false) = naiveMorph(x, erode = false, iters, border)
+      def same(name: String, got: Nd, want: Nd): Unit =
+        assert(got.shape.sameElements(want.shape) && got.data.sameElements(want.data),
+          s"$name diverges from the naive oracle (chunks=$chunks iters=$iters)")
+      def check(name: String, want: Nd,
           t: org.apache.spark.sql.Dataset[graft.tensor.TBlock],
-          f: org.apache.spark.sql.Dataset[Block]): Unit = {
+          f: org.apache.spark.sql.Dataset[Block],
+          fOdd: org.apache.spark.sql.Dataset[Block]): Unit = {
         t.collect().foreach { b =>
           assert(b.dtype == "uint8" && b.data.length == b.shape.product,
             s"$name: payload widened beyond 1 byte/px")
         }
         val viaBytes = Grid.unblockify(TBlock.toBlocks(t))
         val viaF64 = Grid.unblockify(f)
+        same(s"$name (uint8)", viaBytes, want)
+        same(s"$name (float64)", viaF64, want)
+        same(s"$name (float64, non-binary input)", Grid.unblockify(fOdd), want)
         assert(maxAbsDiff(viaBytes, viaF64) == 0.0,
-          s"$name diverges (chunks=$chunks iters=$iters)")
+          s"$name: byte and float forms differ (chunks=$chunks iters=$iters)")
       }
-      check("erosion", TMorph.binaryErosion(typed, 2, iterations = iters),
-        Morph.binaryErosion(blocks, 2, iterations = iters))
-      check("dilation", TMorph.binaryDilation(typed, 2, iterations = iters),
-        Morph.binaryDilation(blocks, 2, iterations = iters))
-      check("opening", TMorph.binaryOpening(typed, 2, iterations = iters),
-        Morph.binaryOpening(blocks, 2, iterations = iters))
-      check("closing", TMorph.binaryClosing(typed, 2, iterations = iters),
-        Morph.binaryClosing(blocks, 2, iterations = iters))
+      check("erosion", ero(q), TMorph.binaryErosion(typed, 2, iterations = iters),
+        Morph.binaryErosion(blocks, 2, iterations = iters),
+        Morph.binaryErosion(oddBlocks, 2, iterations = iters))
+      check("dilation", dil(q), TMorph.binaryDilation(typed, 2, iterations = iters),
+        Morph.binaryDilation(blocks, 2, iterations = iters),
+        Morph.binaryDilation(oddBlocks, 2, iterations = iters))
+      check("opening", dil(ero(q)), TMorph.binaryOpening(typed, 2, iterations = iters),
+        Morph.binaryOpening(blocks, 2, iterations = iters),
+        Morph.binaryOpening(oddBlocks, 2, iterations = iters))
+      check("closing", ero(dil(q)), TMorph.binaryClosing(typed, 2, iterations = iters),
+        Morph.binaryClosing(blocks, 2, iterations = iters),
+        Morph.binaryClosing(oddBlocks, 2, iterations = iters))
+      // a non-binary border value is true, as any nonzero cell is
+      same("erosion, borderValue 0.5", Grid.unblockify(
+        Morph.binaryErosion(blocks, 2, iterations = iters, borderValue = 0.5)),
+        ero(q, border = true))
+      same("dilation, borderValue 0.5", Grid.unblockify(
+        Morph.binaryDilation(blocks, 2, iterations = iters, borderValue = 0.5)),
+        dil(q, border = true))
     }
   }
 

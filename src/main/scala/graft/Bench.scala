@@ -742,13 +742,13 @@ object Bench {
           val agg = queries.TextOps.gopherOver(
             queries.TextOps.augmentSymbols(stream))
           val t0 = System.nanoTime()
-          val q = agg.writeStream.format("memory")
-            .queryName("graft_bench_stream_gate")
-            .option("checkpointLocation", ckpt)
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          try q.awaitTermination() finally q.stop()
+          val q = graft.streaming.StreamOps.runStream(agg) {
+            _.format("memory")
+              .queryName("graft_bench_stream_gate")
+              .option("checkpointLocation", ckpt)
+              .outputMode("complete")
+              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          }
           // restore full width BEFORE the batch twin measurement
           spark.conf.set("spark.sql.shuffle.partitions", prevShufflePart)
           val wall = (System.nanoTime() - t0) / 1e9
@@ -857,14 +857,15 @@ object Bench {
           val t0 = System.nanoTime()
           var stateQ: org.apache.spark.sql.streaming.StreamingQuery = null
           val wall = try {
-            val q0 = verdicts.writeStream.format("noop")
-              .option("checkpointLocation", ckpt)
-              .outputMode("append")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            qid = q0.id
-            try q0.awaitTermination() finally q0.stop()
-            stateQ = q0
+            stateQ = graft.streaming.StreamOps.runStream(verdicts, (q0, limitMs) => {
+              qid = q0.id
+              graft.streaming.StreamOps.awaitEnd(q0, limitMs)
+            }) {
+              _.format("noop")
+                .option("checkpointLocation", ckpt)
+                .outputMode("append")
+                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+            }
             (System.nanoTime() - t0) / 1e9
           } finally {
             // listener events are async — wait for the counter to reach

@@ -5,10 +5,12 @@ import java.util.concurrent.atomic.AtomicLong
 /** Per-query structural profiler (measurement tool, guide §1): runs named
   * query keys and reports wall seconds plus the DISPATCH/SHUFFLE shape —
   * Spark job count, stage count, task count, shuffle bytes written — via a
-  * task/job listener. At toy scale wall ≈ jobs × dispatch floor, so job
-  * count is the actionable number; at 100 TB the same counts are corpus
-  * passes and exchanges. Mirrors Bench's session profile (latency mode)
-  * so the shapes match what the driver's bench executes. */
+  * task/job listener, and the codegen compile count. At toy scale wall ≈
+  * jobs × dispatch floor, so job count is the actionable number; at
+  * 100 TB the same counts are corpus passes and exchanges. A warm key
+  * with compiles > 0 recompiles on every call. Mirrors Bench's session
+  * profile (latency mode) so the shapes match what the driver's bench
+  * executes. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -76,6 +78,10 @@ object Profile {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       df.count()
     }
+    // one histogram sample per generated-class compile, driver and
+    // executors alike (local mode): a warm key that still compiles is
+    // missing the codegen cache on every call
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val qs = SparkEntry.queries
     val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "2").toInt
     for (name <- args) {
@@ -89,12 +95,14 @@ object Profile {
       val w0 = once() // counters bracket ONE run (the second timed);
       drain()         // walls are the median of 3 (bench protocol)
       jobs.set(0); stages.set(0); tasks.set(0); shuffleB.set(0)
+      val c0 = compiles.getCount
       val w1 = once()
       drain()
       val (j, st, tk, sb) = (jobs.get(), stages.get(), tasks.get(), shuffleB.get())
+      val c = compiles.getCount - c0
       val w = Seq(w0, w1, once()).sorted.apply(1)
       println(f"PROFILE $name%-28s wall=$w%7.3f s jobs=$j%3d " +
-        f"stages=$st%3d tasks=$tk%5d shuffleMB=${sb / 1e6}%9.3f")
+        f"stages=$st%3d tasks=$tk%5d shuffleMB=${sb / 1e6}%9.3f compiles=$c%3d")
     }
     spark.stop()
   }

@@ -2349,10 +2349,16 @@ object TextOps {
     *
     * Scale: map-only per-doc flags folded into one tiny per-source
     * aggregate — the canonical 100 TB quality-filter plan; doc text
-    * never shuffles, only 20 counter rows move. */
+    * never shuffles, only 20 counter rows move. The rows are ordered by
+    * source here, after [[gopherOver]]. */
   val qualityGopher: Q = (s, dir) =>
-    gopherOver(augmentSymbols(t(s, dir, "documents")))
+    gopherOver(augmentSymbols(t(s, dir, "documents"))).orderBy(col("source"))
 
+  /** The Gopher per-source counters of [[qualityGopher]], UNSORTED: a
+    * caller that needs an order sorts the result. The streaming gate
+    * (`StreamOps.streamQualityGate`) runs this inside every micro-batch
+    * and sorts once after its drain, so no micro-batch pays a range
+    * exchange, its sampling job and a sort. */
   private[graft] def gopherOver(docs: DataFrame): DataFrame = {
     graft.functions.GraftExtensions.install(docs.sparkSession)
     docs
@@ -2378,7 +2384,6 @@ object TextOps {
         sum(when(!col("r_stop"), 1).otherwise(0)).cast("long").as("fail_stopword"),
         sum(when(col("r_wc") && col("r_mwl") && col("r_sym") && col("r_alpha") && col("r_stop"),
           1).otherwise(0)).cast("long").as("n_pass"))
-      .orderBy(col("source"))
   }
 
   val qualityGopherSql: String =

@@ -1,9 +1,10 @@
 package graft.streaming
 
 import java.util.UUID
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSessionAccess, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface (SURVEY.md §2B streaming rows + M5).
   *
@@ -34,16 +35,11 @@ object StreamOps {
   }
 
   /** Drain a streaming frame into a memory sink and return the settled
-    * result (detached from the temp view; the query is stopped).
-    *
-    * Bounded: an AvailableNow query that has not settled within
-    * `spark.graft.drain.timeoutMs` (default 10 min — the whole suite's
-    * drains finish in seconds) fails LOUDLY instead of spinning the
-    * suite forever. The known way to trip this is a stateful operator
-    * with ProcessingTimeTimeout: Spark's shouldRunAnotherBatch is
-    * unconditionally true for that timeout, so AvailableNow re-runs
-    * empty micro-batches forever — drive such a query through
-    * `drainProcessingTime` instead. */
+    * result (detached from the temp view; the query is stopped). The
+    * query starts, settles and stops through [[runStream]], so it is
+    * bounded by `spark.graft.drain.timeoutMs` and its tasks reuse the
+    * executor's default class loader (codegen cache hits from the
+    * second call on). */
   // Deliberately NOT lifting spark.sql.shuffle.partitions for the
   // drains (r22, measured): raising the state width to
   // defaultParallelism (32) at sf0.1 made every small-state key SLOWER
@@ -55,27 +51,73 @@ object StreamOps {
 
   def drain(df: DataFrame, mode: OutputMode): DataFrame = {
     val spark = df.sparkSession
-    val limitMs = confLong(spark, "spark.graft.drain.timeoutMs", 600000L)
     val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
     withEphemeralCkpt(spark, name) { ckpt =>
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try {
-        if (!q.awaitTermination(limitMs))
-          throw new IllegalStateException(
-            s"graft drain: AvailableNow query '$name' did not settle within " +
-              s"$limitMs ms (spark.graft.drain.timeoutMs). If the plan holds " +
-              "ProcessingTimeTimeout state, AvailableNow can NEVER terminate " +
-              "— use drainProcessingTime for that query.")
-      } finally q.stop()
+      runStream(df) {
+        _.format("memory")
+          .queryName(name)
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow())
+      }
       collectSettled(spark, name)
     }
   }
+
+  /** The one start path of every streaming query here: builds the
+    * writer on `df`, starts it, waits with `settle` and always stops it.
+    * `settle` gets the `spark.graft.drain.timeoutMs` bound (default
+    * 10 min; the suite's queries finish in seconds); the default,
+    * [[awaitEnd]], waits for an AvailableNow query to terminate and
+    * fails LOUDLY past the bound instead of spinning forever.
+    *
+    * Loader reuse: `start()` clones the caller's session, and under
+    * Spark's default artifact isolation every clone's tasks run in a new
+    * executor class loader. The codegen cache is keyed by (loader,
+    * source), so each call recompiled byte-identical classes and pushed
+    * dead entries into the shared cache. The clone is therefore started
+    * with `spark.sql.artifact.isolation.enabled=false`: the key is set
+    * on the caller's conf only while `start()` copies it, under one
+    * lock, and restored in `finally`. The flip is skipped when the
+    * caller holds session artifacts or forces their loader
+    * (`alwaysApplyClassloader`): their classes load only through the
+    * isolated loader. */
+  private[graft] def runStream(df: DataFrame,
+      settle: (StreamingQuery, Long) => Unit = awaitEnd)(
+      writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val spark = df.sparkSession
+    val limitMs = confLong(spark, "spark.graft.drain.timeoutMs", 600000L)
+    val w = writer(df.writeStream)
+    val q =
+      if (GraftSessionAccess.sessionArtifactAdded(spark) ||
+        spark.conf.getOption(alwaysApplyLoaderKey).exists(_.trim.toBoolean)) w.start()
+      else startLock.synchronized {
+        val prev = spark.conf.getAll.get(isolationKey)
+        spark.conf.set(isolationKey, "false")
+        try w.start()
+        finally prev.fold(spark.conf.unset(isolationKey))(spark.conf.set(isolationKey, _))
+      }
+    try settle(q, limitMs) finally q.stop()
+    q
+  }
+
+  private val isolationKey = "spark.sql.artifact.isolation.enabled"
+  private val alwaysApplyLoaderKey = "spark.sql.artifact.isolation.alwaysApplyClassloader"
+  private val startLock = new Object
+
+  /** Default [[runStream]] settle: AvailableNow termination within the
+    * bound (a failed query rethrows here). The known way to miss it is
+    * a stateful operator with ProcessingTimeTimeout: Spark's
+    * shouldRunAnotherBatch is unconditionally true for that timeout, so
+    * AvailableNow re-runs empty micro-batches forever — drive such a
+    * query through `drainProcessingTime` instead. */
+  private[graft] def awaitEnd(q: StreamingQuery, limitMs: Long): Unit =
+    if (!q.awaitTermination(limitMs))
+      throw new IllegalStateException(
+        s"graft stream: AvailableNow query '${Option(q.name).getOrElse(q.id)}' " +
+          s"did not settle within $limitMs ms (spark.graft.drain.timeoutMs). " +
+          "If the plan holds ProcessingTimeTimeout state, AvailableNow can " +
+          "NEVER terminate — use drainProcessingTime for that query.")
 
   /** Ephemeral checkpoint root for the memory-sink drains (r22, verdict
     * #7 — streaming startup amortization): a drain's checkpoint is
@@ -130,33 +172,32 @@ object StreamOps {
   private[graft] def drainProcessingTime(df: DataFrame, mode: OutputMode,
       expectedInputRows: Long, intervalMs: Long = 100L): DataFrame = {
     val spark = df.sparkSession
-    val limitMs = confLong(spark, "spark.graft.drain.timeoutMs", 600000L)
     val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
+    // accumulate by batchId: recentProgress is a bounded ring, so a long
+    // poll loop must not double-count or drop early batches
+    def settle(q: StreamingQuery, limitMs: Long): Unit = {
+      val seen = scala.collection.mutable.Map.empty[Long, Long]
+      val deadline = System.nanoTime() + limitMs * 1000000L
+      var done = false
+      while (!done) {
+        q.recentProgress.foreach(p => seen(p.batchId) = p.numInputRows)
+        if (seen.valuesIterator.sum >= expectedInputRows) done = true
+        else if (System.nanoTime() > deadline)
+          throw new IllegalStateException(
+            s"graft drainProcessingTime: query '$name' processed " +
+              s"${seen.valuesIterator.sum} of $expectedInputRows source rows " +
+              s"within $limitMs ms (spark.graft.drain.timeoutMs)")
+        else Thread.sleep(intervalMs / 2 + 1)
+      }
+    }
     withEphemeralCkpt(spark, name) { ckpt =>
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.ProcessingTime(intervalMs))
-        .start()
-      try {
-        // accumulate by batchId: recentProgress is a bounded ring, so a
-        // long poll loop must not double-count or drop early batches
-        val seen = scala.collection.mutable.Map.empty[Long, Long]
-        val deadline = System.nanoTime() + limitMs * 1000000L
-        var done = false
-        while (!done) {
-          q.recentProgress.foreach(p => seen(p.batchId) = p.numInputRows)
-          if (seen.valuesIterator.sum >= expectedInputRows) done = true
-          else if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"graft drainProcessingTime: query '$name' processed " +
-                s"${seen.valuesIterator.sum} of $expectedInputRows source rows " +
-                s"within $limitMs ms (spark.graft.drain.timeoutMs)")
-          else Thread.sleep(intervalMs / 2 + 1)
-        }
-      } finally q.stop()
+      runStream(df, settle) {
+        _.format("memory")
+          .queryName(name)
+          .outputMode(mode)
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.ProcessingTime(intervalMs))
+      }
       collectSettled(spark, name)
     }
   }
@@ -275,14 +316,13 @@ object StreamOps {
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
       .select(unix_timestamp(col("window.start")).as("bucket"),
         col("n_events"), col("sum_value"))
-    val q = agg.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    runStream(agg) {
+      _.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+    }
     s.read.parquet(outDir).orderBy(col("bucket"))
   }
 
@@ -309,15 +349,14 @@ object StreamOps {
     val rows = eventsStream(s, dir)
       .select(col("user_id"), col("value"), col("ts"),
         to_date(col("ts")).as("event_date"))
-    val q = rows.writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", ckpt)
-      .partitionBy("event_date")
-      .outputMode(OutputMode.Append())
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
+    runStream(rows) {
+      _.format("parquet")
+        .option("path", outDir)
+        .option("checkpointLocation", ckpt)
+        .partitionBy("event_date")
+        .outputMode(OutputMode.Append())
+        .trigger(Trigger.AvailableNow())
+    }
     partitionedSinkDayRead(s, outDir)
   }
 
@@ -363,22 +402,21 @@ object StreamOps {
     val agg = eventsStream(s, dir)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 4).as("sum_value"))
-    val q = agg.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val sess = batch.sparkSession
-        val prev =
-          if (latest >= 0) sess.read.parquet(s"$outDir/v=$latest")
-          else batch.limit(0)
-        prev.join(batch, Seq("user_id"), "left_anti")
-          .unionByName(batch)
-          .write.mode("overwrite").parquet(s"$outDir/v=$id")
-        latest = id
-      }
-      .start()
-    try q.awaitTermination() finally q.stop()
+    runStream(agg) {
+      _.outputMode(OutputMode.Update())
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
+          val sess = batch.sparkSession
+          val prev =
+            if (latest >= 0) sess.read.parquet(s"$outDir/v=$latest")
+            else batch.limit(0)
+          prev.join(batch, Seq("user_id"), "left_anti")
+            .unionByName(batch)
+            .write.mode("overwrite").parquet(s"$outDir/v=$id")
+          latest = id
+        }
+    }
     require(latest >= 0, "foreachBatch sink: no batch was processed")
     s.read.parquet(s"$outDir/v=$latest").orderBy(col("user_id"))
   }
@@ -1445,10 +1483,12 @@ object StreamOps {
     * work, so the only streaming state is the per-source counter agg,
     * 20 rows in Complete mode). Rules and augmentation are the batch
     * [[graft.queries.TextOps.qualityGopher]] verbatim, so the batch
-    * DuckDB oracle gates the streamed result row-for-row. */
+    * DuckDB oracle gates the streamed result row-for-row. Each
+    * micro-batch emits the unsorted counters (`gopherOver`); the 20
+    * drained rows are sorted once, here. The source schema comes from
+    * the session-cached `Tables.t` frame, not a fresh footer read. */
   val streamQualityGate: Q = (s, dir) => {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val docs = s.readStream.schema(schema)
+    val docs = s.readStream.schema(graft.Tables.t(s, dir, "documents").schema)
       .option("pathGlobFilter", "documents.parquet")
       .parquet(dir)
     val agg = graft.queries.TextOps.gopherOver(

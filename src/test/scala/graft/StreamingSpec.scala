@@ -186,6 +186,59 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty && streamed.sameElements(batch))
   }
 
+  test("a repeated stream drain compiles nothing: its tasks reuse the executor loader") {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    def gate() = graft.streaming.StreamOps.streamQualityGate(spark, sf0001)
+      .collect().map(_.toSeq)
+    val first = gate()
+    val c0 = compiles.getCount
+    val second = gate()
+    val recompiled = compiles.getCount - c0
+    assert(recompiled == 0, s"second identical drain compiled $recompiled classes")
+    assert(second.nonEmpty && second.sameElements(first))
+  }
+
+  test("stream start: the clone drops loader isolation; the caller's conf and session artifacts are respected") {
+    import graft.streaming.StreamOps
+    import org.apache.spark.sql.{Dataset, Row, SparkSession}
+    val key = "spark.sql.artifact.isolation.enabled"
+    val tmp = java.nio.file.Files.createTempDirectory("graft_stream_start")
+    queries.TmpCleanup.register(tmp)
+    // the isolation key as the stream's own session (the clone every
+    // micro-batch runs in) reads it
+    def streamIsolation(s: SparkSession, tag: String): String = {
+      @volatile var seen: String = null
+      StreamOps.runStream(StreamOps.eventsStream(s, sf0001).select("user_id")) {
+        _.option("checkpointLocation", tmp.resolve(tag).toString)
+          .trigger(Trigger.AvailableNow())
+          .foreachBatch { (b: Dataset[Row], _: Long) =>
+            seen = b.sparkSession.conf.get(key) }
+      }
+      assert(seen != null, s"$tag: no micro-batch ran")
+      seen
+    }
+    val caller = spark.newSession()
+    assert(streamIsolation(caller, "plain") == "false")
+    assert(caller.conf.getAll.get(key).isEmpty, "an unset caller key must stay unset")
+    caller.conf.set(key, "true")
+    // a memory sink with no queryName fails inside start()
+    intercept[org.apache.spark.sql.AnalysisException](StreamOps.runStream(
+      StreamOps.eventsStream(caller, sf0001))(_.format("memory")))
+    assert(caller.conf.getAll.get(key).contains("true"),
+      "a throwing start() must restore the caller's key")
+
+    val withJar = spark.newSession()
+    val jar = tmp.resolve("graft_tiny.jar")
+    val out = new java.util.jar.JarOutputStream(java.nio.file.Files.newOutputStream(jar))
+    out.putNextEntry(new java.util.jar.JarEntry("graft/tiny.txt"))
+    out.write("tiny".getBytes("UTF-8"))
+    out.close()
+    withJar.addArtifact(jar.toString)
+    assert(org.apache.spark.sql.GraftSessionAccess.sessionArtifactAdded(withJar))
+    assert(streamIsolation(withJar, "jar") == "true",
+      "a session holding artifacts must keep its isolated loader")
+  }
+
   test("streaming near-dedup is trigger-invariant and actually drops near-dups") {
     // one-file-per-trigger (4 micro-batches, state crossing every batch
     // boundary) must equal the all-files-in-one-batch run — the

@@ -105,19 +105,6 @@ object Bench {
     ds.map(_.data.length.toLong).reduce(_ + _); ()
   }
 
-  /** Drain the async listener event bus before reading a task-metrics
-    * counter (r17, per ADVICE: on a loaded bus, task-end events landing
-    * after a fixed sleep were missed or bled into the next measurement).
-    * `LiveListenerBus.waitUntilEmpty` is `private[spark]`, hence the
-    * reflective call; falls back to the old settle-sleep if the internal
-    * API ever moves. */
-  private def drainListenerBus(spark: SparkSession): Unit =
-    try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(500) }
-
   /** SPARK_GRAFT_COLD_GROUPS=1 (one-pass mode): sync + drop the OS page
     * cache before each group, so every group measures from the same
     * cold-disk state a standalone run sees. The default pass leaves each
@@ -337,7 +324,7 @@ object Bench {
     * 256×512 blocks, streaming from the Range-leaf synth. Returns the
     * per-kernel JSON object, the section wall, the side, and the block
     * count; restores the caller's shuffle width. */
-  private def tensorSmoke(spark: SparkSession, cpus: String,
+  private def tensorSmoke(spark: SparkSession, cpus: Int,
       failed: scala.collection.mutable.Set[String]): (String, Double, Int, Long) = {
     import graft.tensor._
     val side = sys.env.getOrElse("SPARK_GRAFT_TENSOR_SMOKE", "8192") match {
@@ -347,7 +334,7 @@ object Bench {
     val chunk = Seq(256, 512)
     val nBlocks = ((side + 255) / 256).toLong * ((side + 511) / 512)
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus)
+    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
     try {
       def smokeOnce(key: String)(f: => Unit): Double = {
         val t0 = System.nanoTime()
@@ -382,88 +369,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Scale-aware shuffle width: target ~10 MiB of input per shuffle
-    // partition (floor division), clamped to [1, cpus]. At sf0.1 (17 MiB
-    // total) that is 1 — a 32-wide shuffle of kilobyte partitions is pure
-    // task-dispatch latency; at sf1 (173 MiB) it is 17, in the band that
-    // measured fastest (16-way beat both 6-way and 32-way: under 6 the
-    // big joins starve, past ~16 dispatch overtakes the extra
-    // parallelism); at 100 TB the same rule caps at the cluster's cores
-    // and AQE coalescing takes over.
-    val inputBytes = {
-      val d = new java.io.File(sfDir)
-      if (d.isDirectory) d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).sum
-      else 0L
-    }
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1L, math.min(cpus.toLong, inputBytes / (10L << 20))).toString)
-    // Scale profile (SPARK_GRAFT_SCALE_PROFILE=1, default auto: input
-    // > 4 GiB). The default session profile below is tuned for the
-    // MB-scale latency benches: AQE off (per-stage replanning is pure
-    // latency when shuffles carry kilobytes) and shuffle/spill codecs
-    // off (codec + checksum time exceeds the bytes moved in-process).
-    // The r15 sf100 run (17 GiB) demonstrated exactly where that
-    // profile stops being right: 4-wide shuffles sort-spilled the big
-    // joins/aggs UNCOMPRESSED to one local disk, and the spill-bound
-    // keys went 20-100x instead of 10x (BASELINE.md sf100 section).
-    // At real scale the cluster posture is the opposite — compression
-    // on, AQE on (coalesce + skew split), wide initial shuffles — so
-    // that is what the scale profile sets, and the rest of the library
-    // never assumes either profile.
-    val scaleProfile = sys.env.get("SPARK_GRAFT_SCALE_PROFILE") match {
-      case Some(v) => v == "1"
-      case None => inputBytes > (4L << 30)
-    }
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.warehouse.dir", {
-        // per-run temp warehouse (concurrent Bench/Verify must not race
-        // on one path), deleted by the exit hook — at sf100 a stranded
-        // warehouse holds a full bucketed fact copy (tens of GB) on the
-        // box where ~60 GB free disk is the binding constraint
-        val wh = java.nio.file.Files.createTempDirectory("graft_wh")
-        queries.TmpCleanup.register(wh)
-        wh.toString
-      })
-      .config("spark.ui.enabled", "false")
-    val builder =
-      if (scaleProfile) builder0
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-          (cpus.toInt * 4).toString)
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        // 64 MiB splits (default 128 MiB): a single-file table scans
-        // ceil(bytes/split) ways — at sf100 the 2.5 GB documents file
-        // gave 10 scan tasks on 32 cores, so every text-decode-bound
-        // stage idled 2/3 of the machine (the streaming trigger-sizing
-        // lesson, r17, applied to batch scans). On a real lake row
-        // groups + many files make this moot; on the one-file-per-table
-        // fixture the split size IS scan parallelism.
-        .config("spark.sql.files.maxPartitionBytes", (64L << 20).toString)
-        .config("spark.shuffle.compress", "true")
-        .config("spark.shuffle.spill.compress", "true")
-        // zstd over the lz4 default at scale: row-oriented shuffle of a
-        // wide fact runs 2-4x the parquet bytes, and on a single spill
-        // disk the transient footprint is the binding constraint (the
-        // sf100 bucketed-layout build overflowed 60 GB of free disk on
-        // lz4; zstd halves it). Same posture as a production cluster,
-        // where shuffle bytes cross a network.
-        .config("spark.io.compression.codec", "zstd")
-      else builder0
-        .config("spark.sql.adaptive.enabled", "false")
-        .config("spark.shuffle.compress", "false")
-        .config("spark.shuffle.spill.compress", "false")
-    val spark = builder.getOrCreate()
-    System.err.println(s"[bench] profile=${if (scaleProfile) "scale" else "latency"} " +
-      s"cpus=$cpus shuffle=$shuffleParts inputMB=${inputBytes >> 20}")
-    spark.sparkContext.setLogLevel("WARN")
+    val gs = GraftSession.bench(GraftSession.inputBytes(sfDir))
+    val (spark, cpus) = (gs.spark, gs.cpus)
+    System.err.println(s"[bench] profile=${gs.profile} " +
+      s"cpus=$cpus shuffle=${gs.shuffle} inputMB=${gs.inputBytes >> 20}")
     // One-command layout lifecycle (r18 verdict #7): SPARK_GRAFT_ENSURE=1
     // builds/validates every durable fingerprinted layout and exits —
     // the deterministic path from a fresh environment to the benched
@@ -480,25 +389,7 @@ object Bench {
       spark.stop()
       return
     }
-    // Materialize each table once before timing (BASELINE.md measures warm
-    // medians and allows cached reads): CacheManager then substitutes the
-    // InMemoryRelation into every matching query plan fragment. lineitem
-    // is cacheable again now that inMemoryColumnarStorage.compressed=false
-    // (the round-1 4x TIMESTAMP_NTZ decode penalty was the codec).
-    val cacheList = sys.env.getOrElse("SPARK_GRAFT_CACHE",
-      "region,nation,customer,supplier,part,orders,lineitem,events,documents,embeddings")
-      .split(",").filter(_.nonEmpty).toSeq
-    // Cached-table scan width: floor of min(cpus, 8) (the sf0.1-tuned
-    // value), growing with the same ~10 MiB/partition rule once the data
-    // is big enough to feed more scan tasks.
-    Tables.benchParts = sys.env.getOrElse("SPARK_GRAFT_TABLE_PARTS",
-      math.max(math.min(cpus.toInt, 8),
-        math.min(cpus.toLong, inputBytes / (10L << 20)).toInt).toString).toInt
-    for (name <- cacheList) {
-      val df = Tables.t(spark, sfDir, name)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      df.count()
-    }
+    val cacheList = gs.warmTables(sfDir)
     val qs = SparkEntry.queries
     // DuckDB baseline = median of warm runs; mirror it. Three warm-ups get
     // the generated code through C2 (one is not enough — run 2 is still
@@ -736,7 +627,7 @@ object Bench {
           // Production rule at 100 TB: state partitions track state
           // cardinality; scan/map parallelism still follows file splits.
           spark.conf.set("spark.sql.shuffle.partitions",
-            math.min(8, cpus.toInt).toString)
+            math.min(8, cpus).toString)
           val stream = spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "8").parquet(inDir)
           val agg = queries.TextOps.gopherOver(
@@ -827,7 +718,7 @@ object Bench {
           spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
             ".state.RocksDBStateStoreProvider")
           val width = sys.env.getOrElse("SPARK_GRAFT_STATE_WIDTH",
-            cpus).toInt
+            cpus.toString).toInt
           spark.conf.set("spark.sql.shuffle.partitions", width.toString)
           val verdicts = graft.streaming.StreamOps.nearDedupVerdictStream(
             spark, inDir, filesPerTrigger = 8, maxSigsPerBucket = 1 << 14,
@@ -1157,7 +1048,7 @@ object Bench {
         System.err.println(f"[bench] disk probe (post, ${postProbe._3}): " +
           f"${postProbe._1}%.1f MB/s")
       val diskJson = diskJsonFor((preProbe._1, preProbe._2),
-        (postProbe._1, postProbe._2), preProbe._3) + cpuProbeJson(cpus.toInt)
+        (postProbe._1, postProbe._2), preProbe._3) + cpuProbeJson(cpus)
       emit(
         s"""{"metric":"onepass","value":$wall,"unit":"sec","queries":$qj,""" +
           s""""failed":$fj$llmOnepass$extraOnepass$curOnepass$bucketedOnepass$partitionedOnepass$sigIndexOnepass$pqIndexOnepass$streamingOnepass$statefulOnepass$tensorOnepass$diskJson,"peak_heap_mb":$peakMb,"sf":"$sfDir"}""",
@@ -1429,9 +1320,9 @@ object Bench {
         }
         spark.sparkContext.addSparkListener(listener)
         def shuffled(f: => Unit): Long = {
-          drainListenerBus(spark); shuffleBytes.set(0)
+          GraftSession.drainListenerBus(spark); shuffleBytes.set(0)
           f
-          drainListenerBus(spark); shuffleBytes.get()
+          GraftSession.drainListenerBus(spark); shuffleBytes.get()
         }
         try {
           val mgS = med3 { mgDf.count(): Unit }
@@ -1492,9 +1383,9 @@ object Bench {
         def med3(f: => Unit): Double =
           Seq(timed(f), timed(f), timed(f)).sorted.apply(1)
         def shuffled(f: => Unit): Long = {
-          drainListenerBus(spark); shuffleBytes.set(0)
+          GraftSession.drainListenerBus(spark); shuffleBytes.set(0)
           f
-          drainListenerBus(spark); shuffleBytes.get()
+          GraftSession.drainListenerBus(spark); shuffleBytes.get()
         }
         // durable layout (r18, verdict #3): build_s is the real write on
         // the first-ever run and DDL replay (≈0) with reused=true after
@@ -1744,7 +1635,7 @@ object Bench {
       }
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(cpus.toInt, 8).toString)
+        math.min(cpus, 8).toString)
       try {
         val persistLvl = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
         def binarize(ds: org.apache.spark.sql.Dataset[Block]) = binarizeB(ds)
@@ -1893,7 +1784,7 @@ object Bench {
       System.err.println(f"[bench] disk probe (post, o_direct): " +
         f"${postDiskProbe._1}%.1f MB/s")
     val diskJson = diskJsonFor(preDiskProbe, postDiskProbe, "o_direct") +
-      cpuProbeJson(cpus.toInt)
+      cpuProbeJson(cpus)
     emit(
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,""" +
         s""""failed":$failedJson,"floor_per_query":$floorMed,"floor_iqr":$floorIqr,""" +

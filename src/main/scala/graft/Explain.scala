@@ -1,15 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Dump formatted physical plans for named queries (plan-quality tool). */
+/** Dump formatted physical plans for named queries (plan-quality tool),
+  * planned in Bench's session (`GraftSession.bench`) so the dump is the
+  * plan Bench executes. Tables are not warmed, so scans show their
+  * pushed filters rather than the cache substitution. */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.01"
+    val spark = GraftSession.bench(GraftSession.inputBytes(dir)).spark
+    spark.sparkContext.setLogLevel("ERROR")
     for (name <- args) {
       println(s"===== $name =====")
       // Checkpoint-truncated sub-plans never appear in a declared query's

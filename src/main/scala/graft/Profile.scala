@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.AtomicLong
 
 /** Per-query structural profiler (measurement tool, guide §1): runs named
@@ -8,34 +7,14 @@ import java.util.concurrent.atomic.AtomicLong
   * task/job listener, and the codegen compile count. At toy scale wall ≈
   * jobs × dispatch floor, so job count is the actionable number; at
   * 100 TB the same counts are corpus passes and exchanges. A warm key
-  * with compiles > 0 recompiles on every call. Mirrors Bench's session
-  * profile (latency mode) so the shapes match what the driver's bench
-  * executes. */
+  * with compiles > 0 recompiles on every call. Runs in Bench's session
+  * (`GraftSession.bench`) over Bench's warmed tables, so the shapes match
+  * what Bench executes. */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val inputBytes = {
-      val d = new java.io.File(sfDir)
-      if (d.isDirectory) d.listFiles().filter(_.getName.endsWith(".parquet"))
-        .map(_.length()).sum
-      else 0L
-    }
-    val shuffleParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.max(1L, math.min(cpus.toLong, inputBytes / (10L << 20))).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.locality.wait", "0")
-      .config("spark.sql.shuffle.partitions", shuffleParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.shuffle.compress", "false")
-      .config("spark.shuffle.spill.compress", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val gs = GraftSession.bench(GraftSession.inputBytes(sfDir))
+    val spark = gs.spark
     val jobs = new AtomicLong; val stages = new AtomicLong
     val tasks = new AtomicLong; val shuffleB = new AtomicLong
     val jobDetail = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
@@ -60,24 +39,8 @@ object Profile {
         if (m != null) shuffleB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
       }
     })
-    def drain(): Unit =
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(500) }
     // warm the tables like Bench does so scans hit the cache substitution
-    val cacheList = sys.env.getOrElse("SPARK_GRAFT_CACHE",
-      "region,nation,customer,supplier,part,orders,lineitem,events,documents,embeddings")
-      .split(",").filter(_.nonEmpty).toSeq
-    Tables.benchParts = sys.env.getOrElse("SPARK_GRAFT_TABLE_PARTS",
-      math.max(math.min(cpus.toInt, 8),
-        math.min(cpus.toLong, inputBytes / (10L << 20)).toInt).toString).toInt
-    for (name <- cacheList) {
-      val df = Tables.t(spark, sfDir, name)
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      df.count()
-    }
+    gs.warmTables(sfDir)
     // one histogram sample per generated-class compile, driver and
     // executors alike (local mode): a warm key that still compiles is
     // missing the codegen cache on every call
@@ -92,12 +55,14 @@ object Profile {
         fn(spark, sfDir).count()
         (System.nanoTime() - t0) / 1e9
       }
-      val w0 = once() // counters bracket ONE run (the second timed);
-      drain()         // walls are the median of 3 (bench protocol)
+      // counters bracket ONE run (the second timed); walls are the
+      // median of 3 (bench protocol)
+      val w0 = once()
+      GraftSession.drainListenerBus(spark)
       jobs.set(0); stages.set(0); tasks.set(0); shuffleB.set(0)
       val c0 = compiles.getCount
       val w1 = once()
-      drain()
+      GraftSession.drainListenerBus(spark)
       val (j, st, tk, sb) = (jobs.get(), stages.get(), tasks.get(), shuffleB.get())
       val c = compiles.getCount - c0
       val w = Seq(w0, w1, once()).sorted.apply(1)

@@ -3,8 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs — mirrors the driver config
-  * (UTC, nanosAsLong, small shuffle partitioning). */
+/** Shared local SparkSession for all specs: Verify's session
+  * (`GraftSession.verify`) pinned at local[4] and 4 shuffle partitions,
+  * the shape PlanShapeSpec and the streaming specs assume. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val sf0001 = "/root/testdata/sf0.001"
@@ -12,20 +13,5 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.warehouse.dir", {
-        val wh = java.nio.file.Files.createTempDirectory("graft_wh")
-        queries.TmpCleanup.register(wh)
-        wh.toString
-      })
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config(Tables.nanosAsLongConf._1, Tables.nanosAsLongConf._2)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession.verify(4)
 }

@@ -1,13 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — prints ONE JSON line for the driver.
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, count, explode, expr, length, lit, sum}
+import graft.Timed._
+import graft.tensor.{Block, TBlock}
+
+/** Benchmark main — prints the artifact's JSON lines.
   *
-  * Methodology mirrors BASELINE.md exactly: per query, one untimed warm-up
+  * Methodology mirrors BASELINE.md exactly: per query, untimed warm-ups
   * then the median of 3 timed runs (the DuckDB baseline is also the median
   * of 3 consecutive warm runs). The headline list is the 16 BASELINE.md
   * keys; the full query surface is exercised by Verify, not here, so the
   * bench total stays comparable run-over-run as operators are added.
+  *
+  * Each mode is a table of rows (groups of keys and single-purpose legs)
+  * run in order over the shared protocol in [[Timed]]:
+  *  - default: warm-ups + median of 3 per key, floor-guarded groups;
+  *  - SPARK_GRAFT_ONEPASS: each key once, at scale (+ KEYS, COLD_GROUPS,
+  *    TENSOR_SMOKE);
+  *  - SPARK_GRAFT_ENSURE=1: build/validate the durable layouts and exit.
   */
 object Bench {
 
@@ -62,13 +73,118 @@ object Bench {
     // the same floor; its wall is the serving-path number (no training)
     "ivf_pq_probe" -> 0.7)
 
+  /** Untimed warm-ups before each median of 3. Three get the generated
+    * code through C2 (one is not enough — run 2 is still ~30% slower
+    * than steady state on the join-heavy queries). */
+  val warmups = 3
+
+  /** The one-pass llm group's scaled-K SemDeDup row (r12): the production
+    * K rule (kmeansK ≈ ⌈N/5000⌉) instead of the gated key's oracle K=10 —
+    * at sf10 this is the row proving the cluster-bounded quadratic stays
+    * in band when K tracks the corpus. */
+  val scaledKey = "semantic_dedup_scaledK"
+
+  /** One row of a mode's table: `tag` names it (and labels its
+    * cold-groups cache drop); `toggle` is the env variable that skips it
+    * when set to anything but "1" (None: always on); `keys` are the names
+    * SPARK_GRAFT_KEYS may select. A group row runs over its selected keys,
+    * even none; a row with `leg` set runs only when a key is selected.
+    * `body` gets the selected keys and returns the row's JSON fields. */
+  private final case class Row(tag: String, toggle: Option[String], keys: Seq[String],
+      leg: Boolean)(val body: Seq[String] => Obj)
+
+  /** The tensor group's kernels, each run over both layouts. */
+  val tensorKernels: Seq[String] =
+    Seq("gaussian5", "uniform3_u8", "label_stats", "affine_shift", "affine_u8")
+
+  /** Top-level fields the compact line carries (both modes). */
+  val compactKeys: Set[String] = Set("metric", "value", "unit", "queries",
+    "failed", "floor_per_query", "adjusted_total", "contended", "llm_total",
+    "curation_total", "ann_total", "disk_probe_mb_per_s", "disk_contended",
+    "cpu_probe_ms", "cpu_contended", "peak_heap_mb", "sf")
+
+  /** The artifact: the FULL line, then a COMPACT line printed LAST. A
+    * reader that keeps only the final ~2000 chars of stdout lost the ~3 KB
+    * full line's head (rounds 1–17 all parsed as null); the compact line
+    * (`compactKeys` at 4 decimals) stays well under that window. The full
+    * line stays first for the committed artifacts (take stdout line 1). */
+  private[graft] def lines(o: Obj): (String, String) =
+    (o.render(compact = false),
+      Obj(o.fields.filter(f => compactKeys(f._1)): _*).render(compact = true))
+
+  private def head(metric: String, value: Double, queries: Seq[(String, Double)],
+      failed: Iterable[String]): Obj =
+    Obj("metric" -> metric, "value" -> value, "unit" -> "sec",
+      "queries" -> Obj(queries: _*), "failed" -> failed.toSeq)
+
+  /** The default line: the guarded headline pass `main`, then its rows'
+    * and probes' fields. The floor accounting (SURVEY §6): adjusted_total
+    * = total − floor_total estimates pure operator work, the quantity
+    * comparable to DuckDB's in-process total at toy scale. The raw total
+    * remains the headline "value" for continuity. */
+  private[graft] def defaultLine(main: Guarded[Double], failed: Iterable[String], rows: Obj,
+      probes: Obj, sfDir: String): Obj = {
+    val total = main.results.map(_._2).sum
+    val floorTotal = main.floor * main.results.size
+    head("total", total, main.results, failed) ++ Obj("floor_per_query" -> main.floor,
+      "floor_iqr" -> main.floorIqr, "floor_total" -> floorTotal,
+      "adjusted_total" -> math.max(0.0, total - floorTotal),
+      "contended" -> main.contended, "attempts" -> main.attempts) ++
+      rows ++ probes ++ Obj("sf" -> sfDir)
+  }
+
+  /** The one-pass line: the headline keys' single calls and their wall,
+    * then the rows' and probes' fields and the pass's peak heap. */
+  private[graft] def onePassLine(res: Seq[(String, Double)], wall: Double, failed: Iterable[String],
+      rows: Obj, probes: Obj, peakHeapMb: Long, sfDir: String): Obj =
+    head("onepass", wall, res, failed) ++ rows ++ probes ++
+      Obj("peak_heap_mb" -> peakHeapMb, "sf" -> sfDir)
+
+  private[graft] def guardedFields(tag: String, g: Guarded[Double]): Obj =
+    Obj(tag -> Obj(g.results: _*), s"${tag}_total" -> g.results.map(_._2).sum,
+      s"${tag}_floor" -> g.floor, s"${tag}_floor_iqr" -> g.floorIqr,
+      s"${tag}_contended" -> g.contended, s"${tag}_attempts" -> g.attempts)
+
+  private[graft] def onceFields(tag: String, res: Seq[(String, Double)], wall: Double): Obj =
+    Obj(tag -> Obj(res: _*), s"${tag}_wall" -> wall)
+
+  private[graft] def annFields(ann: Seq[(String, Double)], recalls: Seq[(String, Option[Double])]): Obj =
+    Obj("ann" -> Obj(ann: _*), "ann_total" -> ann.map(_._2).sum,
+      "ann_recall" -> Obj(recalls: _*))
+
+  private[graft] def tensorFields(g: Guarded[(Option[Double], Option[Double])]): Obj = {
+    val ratios = g.results.map { case (k, (m, s)) =>
+      k -> (for (mv <- m; sv <- s) yield mv / math.max(sv, 1e-9))
+    }
+    Obj("tensor" -> Obj(g.results.map { case (k, (m, _)) => k -> m }: _*),
+      "tensor_single" -> Obj(g.results.map { case (k, (_, s)) => k -> s }: _*),
+      "tensor_ratio" -> Obj(ratios: _*), "tensor_floor" -> g.floor,
+      "tensor_contended" -> g.contended, "tensor_attempts" -> g.attempts)
+  }
+
+  /** Probe-pair fields: `disk_probe_mb_per_s` + `disk_contended`. The
+    * 256 MB / 400 MB/s band is evaluated PER END (r21: min(pre, post)
+    * bytes let one declined end suppress the flag even when the surviving
+    * end measured a collapsed window); a declined end is `null`. Empty
+    * when neither probe ran, so artifacts stay comparable by field
+    * presence. */
+  private[graft] def diskFields(pre: (Double, Long), post: (Double, Long), kind: String): Obj = {
+    if (pre._1 < 0 && post._1 < 0) return Obj()
+    val ends = Seq(pre, post)
+    val contended = ends.exists(e => e._1 >= 0 && e._2 >= 256L * 1024 * 1024 && e._1 < 400.0)
+    def js(e: (Double, Long)) = Option(e._1).filter(_ >= 0)
+    Obj("disk_probe_mb_per_s" -> Obj("pre" -> js(pre), "post" -> js(post),
+      "probe_mb" -> ends.map(e => if (e._1 < 0) 0L else e._2).max / 1048576,
+      "kind" -> kind), "disk_contended" -> contended)
+  }
+
   /** Deterministic synthetic grid for the tensor benches: pixel (gi, gj)
     * = ((gi·1315423911 + gj·2654435761) >>> 7) mod 256, blockified at
     * `chunk` — built from a `spark.range` leaf over the CELL count, so
     * the block table is distributed at any grid size (the same property
     * the r10 needs-table fix pinned for affine). */
   private def synthBlocks(spark: SparkSession, H: Int, W: Int,
-      chunk: Seq[Int], id: String): org.apache.spark.sql.Dataset[graft.tensor.Block] = {
+      chunk: Seq[Int], id: String): Dataset[Block] = {
     import spark.implicits._
     val gh = (H + chunk(0) - 1) / chunk(0)
     val gw = (W + chunk(1) - 1) / chunk(1)
@@ -89,33 +205,24 @@ object Bench {
         }
         i += 1
       }
-      graft.tensor.Block(id, Seq(bi, bj), Seq(oi, oj), Seq(h, w), chunk, Seq(H, W), data)
+      Block(id, Seq(bi, bj), Seq(oi, oj), Seq(h, w), chunk, Seq(H, W), data)
     }
   }
 
-  private def forceB(ds: org.apache.spark.sql.Dataset[graft.tensor.Block]): Unit = {
+  private def forceB(ds: Dataset[Block]): Unit = {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.map(_.data.length.toLong).reduce(_ + _); ()
   }
 
-  private def forceTB(ds: org.apache.spark.sql.Dataset[graft.tensor.TBlock]): Unit = {
+  private def forceTB(ds: Dataset[TBlock]): Unit = {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.map(_.data.length.toLong).reduce(_ + _); ()
   }
 
-  /** SPARK_GRAFT_COLD_GROUPS=1 (one-pass mode): sync + drop the OS page
-    * cache before each group, so every group measures from the same
-    * cold-disk state a standalone run sees. The default pass leaves each
-    * group reading the previous group's cache/writeback aftermath — the
-    * recurring "in-pass context tax" that made minhash read 208 s
-    * in-pass vs 71 s standalone (r17) and window_rank 93 s vs 37 s
-    * (r16), and that costs a forensics re-run every round. Root-only
-    * (/proc/sys/vm/drop_caches); silently a no-op when not writable, so
-    * artifacts are comparable by the env flag, not the platform. */
-  private def coldGroupsOn: Boolean =
-    sys.env.getOrElse("SPARK_GRAFT_COLD_GROUPS", "0") == "1"
+  private def binarizeB(ds: Dataset[Block]) =
+    graft.tensor.Filters.mapBlocks(ds)(b => b.data.map(v => if (v > 200.0) 1.0 else 0.0))
 
   private def dropCaches(): Boolean =
     try {
@@ -123,1677 +230,887 @@ object Bench {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get("/proc/sys/vm/drop_caches"), "3")
       true
-    } catch { case _: Throwable => false }
+    } catch { case scala.util.control.NonFatal(_) => false }
 
-  private def coldGroup(tag: String): Unit =
-    if (coldGroupsOn && dropCaches())
-      System.err.println(s"[bench] cold-groups: caches dropped before $tag")
+  /** The scale's largest table file, the disk probes' target. */
+  private def probeTarget(sfDir: String): Option[java.io.File] =
+    Seq("lineitem.parquet", "documents.parquet", "orders.parquet")
+      .map(new java.io.File(sfDir, _)).filter(_.exists()).sortBy(-_.length()).headOption
 
   /** Cold sequential-read throughput of the host disk, MB/s — measured
     * IN the artifact (r19 verdict #2): cold sf100 walls inherit the
     * host's cold-read throughput wholesale, and that throughput swings
     * ~5–12× between windows (159 vs 846 MB/s minutes apart on the same
-    * file, a window collapsing 501→70.6 MB/s mid-pass). A cold wall
-    * quoted without its probe is uninterpretable, so cold-groups passes
-    * now self-adjudicate: caches dropped → read up to 4 GB of the
-    * scale's largest table sequentially → drop again (the measured
-    * group still starts cold). Returns (mb_per_s, bytes_read);
-    * (-1, 0) when the probe can't run (no drop_caches privilege —
-    * a warm-cache "probe" would read GB/s fiction). */
+    * file). Caches dropped → read up to 4 GB of the scale's largest table
+    * sequentially → drop again (the measured group still starts cold).
+    * Returns (mb_per_s, bytes_read); (-1, 0) when the probe can't run (no
+    * drop_caches privilege — a warm-cache "probe" would read GB/s
+    * fiction). */
   private def diskProbe(sfDir: String): (Double, Long) = {
-    val f = new java.io.File(sfDir, "lineitem.parquet")
-    val target = Seq(f, new java.io.File(sfDir, "documents.parquet"),
-      new java.io.File(sfDir, "orders.parquet")).filter(_.exists())
-      .sortBy(-_.length()).headOption.orNull
-    if (target == null || !dropCaches()) return (-1.0, 0L)
-    val cap = 4L * 1024 * 1024 * 1024
+    val target = probeTarget(sfDir)
+    if (target.isEmpty || !dropCaches()) return (-1.0, 0L)
     val buf = new Array[Byte](1 << 20)
     var read = 0L
-    val t0 = System.nanoTime()
-    val in = new java.io.FileInputStream(target)
-    try {
+    val in = new java.io.FileInputStream(target.get)
+    val s = try once {
       var n = in.read(buf)
-      while (n >= 0 && read < cap) { read += n; n = in.read(buf) }
+      while (n >= 0 && read < (4L << 30)) { read += n; n = in.read(buf) }
     } finally in.close()
-    val s = (System.nanoTime() - t0) / 1e9
     dropCaches()
     (read / 1e6 / math.max(s, 1e-9), read)
   }
 
   /** Direct-I/O sequential-read throughput, MB/s — the WARM-pass twin
-    * of [[diskProbe]] (r20): warm artifacts (default 16-key mode and
-    * non-cold one-pass) inherit the host's disk window too, through
-    * writes, spills, shuffle files, and streaming-source listings — the
-    * r20 sf10 warm pass flagged stream_throughput purely because the
-    * device had collapsed to 79 MB/s cold-read — but dropping caches to
-    * measure would evict the very warmth those passes rely on. O_DIRECT
-    * bypasses the page cache in BOTH directions: it reads the raw
-    * device without evicting cached table pages. Capped at 1 GB (a
-    * collapsed window must cost seconds, not a minute) and at whole
-    * aligned 1 MiB chunks (O_DIRECT rejects unaligned lengths).
-    * Returns (mb_per_s, bytes_read); (-1, 0) when the platform refuses
-    * O_DIRECT or no table file is probe-sized. */
+    * of [[diskProbe]] (r20): warm artifacts inherit the host's disk window
+    * too, through writes, spills, shuffle files, and streaming-source
+    * listings, but dropping caches to measure would evict the very warmth
+    * those passes rely on. O_DIRECT bypasses the page cache in BOTH
+    * directions. Capped at 1 GB (a collapsed window must cost seconds,
+    * not a minute) and at whole aligned 1 MiB chunks (O_DIRECT rejects
+    * unaligned lengths). Returns (mb_per_s, bytes_read); (-1, 0) when the
+    * platform refuses O_DIRECT or no table file is probe-sized. */
   private[graft] def diskProbeDirect(sfDir: String): (Double, Long) = {
-    val target = Seq("lineitem.parquet", "documents.parquet", "orders.parquet")
-      .map(new java.io.File(sfDir, _)).filter(_.exists())
-      .sortBy(-_.length()).headOption.orNull
-    if (target == null) return (-1.0, 0L)
     val chunk = 1 << 20
-    val len = math.min(target.length - target.length % chunk,
-      1024L * 1024 * 1024)
+    val target = probeTarget(sfDir)
+    val len = target.fold(0L)(t => math.min(t.length - t.length % chunk, 1L << 30))
     if (len <= 0) return (-1.0, 0L)
     try {
-      val ch = java.nio.channels.FileChannel.open(target.toPath,
+      val ch = java.nio.channels.FileChannel.open(target.get.toPath,
         java.nio.file.StandardOpenOption.READ,
         com.sun.nio.file.ExtendedOpenOption.DIRECT)
       try {
-        val buf = java.nio.ByteBuffer.allocateDirect(chunk + 4096)
-          .alignedSlice(4096)
+        val buf = java.nio.ByteBuffer.allocateDirect(chunk + 4096).alignedSlice(4096)
         var read = 0L
         var eof = false
-        val t0 = System.nanoTime()
-        while (read < len && !eof) {
-          buf.clear()
-          buf.limit(chunk)
-          val n = ch.read(buf)
-          if (n <= 0) eof = true else read += n
+        val s = once {
+          while (read < len && !eof) {
+            buf.clear()
+            buf.limit(chunk)
+            val n = ch.read(buf)
+            if (n <= 0) eof = true else read += n
+          }
         }
-        val s = (System.nanoTime() - t0) / 1e9
         (read / 1e6 / math.max(s, 1e-9), read)
       } finally ch.close()
-    // NonFatal only (r21, per ADVICE): a fatal error (OOM, interrupt)
-    // must propagate, not masquerade as a clean probe decline
+    // a fatal error (OOM, interrupt) must propagate, not masquerade as a
+    // clean probe decline
     } catch { case scala.util.control.NonFatal(_) => (-1.0, 0L) }
-  }
-
-  /** The mode-appropriate probe WITH its kind (r21, per ADVICE: the kind
-    * was previously re-derived from the cold-groups env flag at JSON
-    * time, so a COLD_GROUPS=1 flag without ONEPASS mislabeled the
-    * default path's O_DIRECT measurement as drop_caches): cold-groups
-    * passes measure the cold-read window (drop → read → drop); warm
-    * passes measure the same device through O_DIRECT without touching
-    * the cache. */
-  private def diskProbeAuto(sfDir: String): (Double, Long, String) =
-    if (coldGroupsOn) { val (m, b) = diskProbe(sfDir); (m, b, "drop_caches") }
-    else { val (m, b) = diskProbeDirect(sfDir); (m, b, "o_direct") }
-
-  /** Shared probe-pair JSON: `disk_probe_mb_per_s` + `disk_contended`.
-    * The 256 MB / 400 MB/s band is evaluated PER END (r21, per ADVICE:
-    * min(pre, post) bytes let one declined end suppress the flag even
-    * when the surviving end measured a collapsed window); a declined end
-    * emits `null` instead of the old undocumented -1 sentinel. Empty
-    * when neither probe ran, so artifacts stay comparable by field
-    * presence. */
-  private def diskJsonFor(pre: (Double, Long), post: (Double, Long),
-      kind: String): String = {
-    if (pre._1 < 0 && post._1 < 0) return ""
-    def bandValid(e: (Double, Long)): Boolean =
-      e._1 >= 0 && e._2 >= 256L * 1024 * 1024
-    val contended = Seq(pre, post).exists(e => bandValid(e) && e._1 < 400.0)
-    def js(e: (Double, Long)): String = if (e._1 < 0) "null" else r4(e._1)
-    val probeMb = math.max(if (pre._1 < 0) 0L else pre._2,
-      if (post._1 < 0) 0L else post._2) / 1048576
-    s""","disk_probe_mb_per_s":{"pre":${js(pre)},""" +
-      s""""post":${js(post)},"probe_mb":$probeMb,""" +
-      s""""kind":"$kind"},"disk_contended":$contended"""
   }
 
   // sink for the CPU probe's fold results — a field store the JIT cannot
   // prove dead, so the spin loop never folds away
   @volatile private var cpuProbeSink: Double = 0.0
 
-  /** Deterministic CPU spin probe (r21, verdict #2): the disk probes
-    * cannot see CPU contention, and CPU-bound keys (PQ/Lloyd training)
-    * swung far more than the dispatch floor in r20's polluted window.
-    * Fixed work — `iters` passes of a 4096-wide multiply-add fold over a
-    * constant array (the argmax_dot kernel's shape) — timed once on the
-    * calling thread (`single_ms`) and once on `threads` concurrent
-    * threads each running the identical work (`multi_ms` = slowest
-    * thread, i.e. the all-cores wall). Healthy idle readings on this
-    * host (measured r21): single ≈ 23 ms, multi ≈ 48 ms at 32 threads;
-    * `cpu_contended` flags when either exceeds its reference band
-    * (env-overridable), the CPU twin of the 400 MB/s disk band. */
-  private def cpuSpin(iters: Int): Double = {
+  /** Deterministic CPU spin probe (r21): the disk probes cannot see CPU
+    * contention, and CPU-bound keys (PQ/Lloyd training) swung far more
+    * than the dispatch floor in r20's polluted window. Fixed work —
+    * `cpuIters` passes of a 4096-wide multiply-add fold over a constant
+    * array (the argmax_dot kernel's shape) — in milliseconds. */
+  private def cpuSpin(): Double = {
     val a = Array.tabulate(4096)(i => (((i * 1315423911L) >>> 7) % 256L).toDouble / 256.0)
     var acc = 0.0
-    val t0 = System.nanoTime()
-    var it = 0
-    while (it < iters) {
-      var s = 0.0
-      var i = 0
-      while (i < 4096) { s += a(i) * a((i + it) & 4095); i += 1 }
-      acc += s
-      it += 1
+    val secs = once {
+      var it = 0
+      while (it < cpuIters) {
+        var s = 0.0
+        var i = 0
+        while (i < 4096) { s += a(i) * a((i + it) & 4095); i += 1 }
+        acc += s
+        it += 1
+      }
     }
-    val ms = (System.nanoTime() - t0) / 1e6
     cpuProbeSink = acc
-    ms
+    secs * 1000
   }
 
-  private def cpuProbeJson(threads: Int): String = {
+  /** Healthy idle readings on this host (r21, 32 threads): single ≈
+    * 23 ms, multi ≈ 48 ms — the bands sit ~2.5× above, the same
+    * wait-for-a-better-window posture as the 400 MB/s disk band. */
+  private val cpuIters = 8192
+  private val cpuSingleRefMs = 60.0
+  private val cpuMultiRefMs = 2 * cpuSingleRefMs
+
+  /** CPU probe fields; `cpu_contended` flags either reading past its
+    * band. */
+  private[graft] def cpuFields(single: Double, multi: Double, threads: Int): Obj =
+    Obj("cpu_probe_ms" -> Obj("single" -> single, "multi" -> multi,
+      "threads" -> threads, "iters" -> cpuIters),
+      "cpu_contended" -> (single > cpuSingleRefMs || multi > cpuMultiRefMs))
+
+  /** The spin timed once on the calling thread (`single`) and on
+    * `threads` concurrent threads each running the identical work
+    * (`multi` = slowest thread, the all-cores wall). */
+  private def cpuProbe(threads: Int): Obj =
     try {
-      val iters = sys.env.getOrElse("SPARK_GRAFT_CPU_ITERS", "8192").toInt
-      cpuSpin(iters); cpuSpin(iters) // JIT warm-up (C2), untimed
-      val single = cpuSpin(iters)
+      cpuSpin(); cpuSpin() // JIT warm-up (C2), untimed
+      val single = cpuSpin()
       val wallUs = new java.util.concurrent.atomic.AtomicLong(0L)
       val ts = (1 to math.max(1, threads)).map { _ =>
         new Thread(() => {
-          val us = (cpuSpin(iters) * 1000).toLong
+          val us = (cpuSpin() * 1000).toLong
           wallUs.getAndUpdate(w => math.max(w, us))
         })
       }
       ts.foreach(_.start()); ts.foreach(_.join())
-      val multi = wallUs.get() / 1000.0
-      // measured healthy idle on this host (r21, 32 threads): single
-      // ≈ 23 ms, multi ≈ 48 ms — the bands sit ~2.5× above, the same
-      // wait-for-a-better-window posture as the 400 MB/s disk band
-      val singleRef = sys.env.getOrElse("SPARK_GRAFT_CPU_REF_MS", "60").toDouble
-      val multiRef = sys.env.getOrElse("SPARK_GRAFT_CPU_MULTI_REF_MS",
-        (singleRef * 2).toString).toDouble
-      val contended = single > singleRef || multi > multiRef
-      s""","cpu_probe_ms":{"single":${r4(single)},"multi":${r4(multi)},""" +
-        s""""threads":$threads,"iters":$iters},"cpu_contended":$contended"""
-    } catch { case scala.util.control.NonFatal(_) => "" }
-  }
-
-  private def binarizeB(ds: org.apache.spark.sql.Dataset[graft.tensor.Block]) =
-    graft.tensor.Filters.mapBlocks(ds)(b => b.data.map(v => if (v > 200.0) 1.0 else 0.0))
-
-  /** Locale-stable fixed-precision double for the compact driver line —
-    * 4 decimals (0.1 ms) is below every band this artifact carries. */
-  private def r4(v: Double): String =
-    "%.4f".formatLocal(java.util.Locale.ROOT, v)
-
-  /** Print the artifact: the FULL JSON line first, then a COMPACT
-    * driver-contract line LAST. The driver keeps only the final ~2000
-    * chars of stdout and sbt appends its own `[success]` line after us,
-    * so rounds 1–17 all shipped `parsed: null`: the full line is ~3 KB
-    * and its head fell out of the capture window. The compact line
-    * (headline keys at 4 decimals, failures, group totals) stays well
-    * under the window, so the driver's tail scan finds one complete
-    * parseable JSON line; the full line stays first for the committed
-    * artifacts (take stdout line 1). */
-  private def emit(full: String, compact: String): Unit = {
-    println(full)
-    println(compact)
-  }
-
-  /** Shared body of the big-grid tensor smoke (standalone
-    * SPARK_GRAFT_TENSOR_SMOKE mode AND the merged one-pass artifact):
-    * gaussian5 + label_stats + affine_u8 ONCE over a side² grid in
-    * 256×512 blocks, streaming from the Range-leaf synth. Returns the
-    * per-kernel JSON object, the section wall, the side, and the block
-    * count; restores the caller's shuffle width. */
-  private def tensorSmoke(spark: SparkSession, cpus: Int,
-      failed: scala.collection.mutable.Set[String]): (String, Double, Int, Long) = {
-    import graft.tensor._
-    val side = sys.env.getOrElse("SPARK_GRAFT_TENSOR_SMOKE", "8192") match {
-      case "" | "1" => 8192
-      case v => v.toInt
-    }
-    val chunk = Seq(256, 512)
-    val nBlocks = ((side + 255) / 256).toLong * ((side + 511) / 512)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", cpus.toString)
-    try {
-      def smokeOnce(key: String)(f: => Unit): Double = {
-        val t0 = System.nanoTime()
-        try f catch {
-          case e: Throwable =>
-            failed += key
-            System.err.println(s"[bench] $key FAILED: ${e.getMessage}")
-        }
-        (System.nanoTime() - t0) / 1e9
-      }
-      val base = synthBlocks(spark, side, side, chunk, "smoke")
-      val t0 = System.nanoTime()
-      val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-      val off = Array(0.5, -0.25)
-      val res = Seq(
-        "gaussian5" -> smokeOnce("tensor_smoke_gaussian5")(
-          forceB(Filters.gaussianFilter(base, Seq(0.5, 0.5)))),
-        "label_stats" -> smokeOnce("tensor_smoke_label_stats") {
-          val bin = binarizeB(base)
-          val (lab, _) = Measure.label(bin, 2)
-          Measure.area(bin, lab, 2).count(); ()
-        },
-        "affine_u8" -> smokeOnce("tensor_smoke_affine_u8")(
-          forceTB(Interp.affineTransformTyped(
-            TBlock.fromBlocks(base, DType.U8), 2, m, off,
-            order = 1, outDtype = DType.F32))))
-      val wall = (System.nanoTime() - t0) / 1e9
-      val qj = res.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      (qj, wall, side, nBlocks)
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-  }
+      cpuFields(single, wallUs.get() / 1000.0, threads)
+    } catch { case scala.util.control.NonFatal(_) => Obj() }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val onePass = sys.env.contains("SPARK_GRAFT_ONEPASS")
+    require(onePass || !sys.env.contains("SPARK_GRAFT_TENSOR_SMOKE"),
+      "SPARK_GRAFT_TENSOR_SMOKE runs inside the one-pass artifact: set " +
+        "SPARK_GRAFT_ONEPASS=1 SPARK_GRAFT_TENSOR_SMOKE=<side>")
     val gs = GraftSession.bench(GraftSession.inputBytes(sfDir))
-    val (spark, cpus) = (gs.spark, gs.cpus)
     System.err.println(s"[bench] profile=${gs.profile} " +
-      s"cpus=$cpus shuffle=${gs.shuffle} inputMB=${gs.inputBytes >> 20}")
+      s"cpus=${gs.cpus} shuffle=${gs.shuffle} inputMB=${gs.inputBytes >> 20}")
     // One-command layout lifecycle (r18 verdict #7): SPARK_GRAFT_ENSURE=1
     // builds/validates every durable fingerprinted layout and exits —
     // the deterministic path from a fresh environment to the benched
     // state. Runs before the cache warm (layout builds stream the
     // source; MEMORY_ONLY-caching 17 GiB first would wedge sf100).
     if (sys.env.get("SPARK_GRAFT_ENSURE").contains("1")) {
-      val rows = graft.sources.Lake.ensureAll(spark, sfDir)
+      val rows = graft.sources.Lake.ensureAll(gs.spark, sfDir)
       rows.foreach { case (tag, reused, b) =>
         System.err.println(f"[bench] layout $tag reused=$reused build_s=$b%.2f") }
-      val j = rows.map { case (tag, reused, b) =>
-        s""""$tag":{"reused":$reused,"build_s":$b}""" }.mkString("{", ",", "}")
-      println(s"""{"metric":"ensure_layouts","value":${rows.map(_._3).sum},""" +
-        s""""unit":"sec","layouts":$j,"sf":"$sfDir"}""")
-      spark.stop()
-      return
+      println(Obj("metric" -> "ensure_layouts", "value" -> rows.map(_._3).sum,
+        "unit" -> "sec", "layouts" -> Obj(rows.map { case (tag, reused, b) =>
+          tag -> Obj("reused" -> reused, "build_s" -> b) }: _*),
+        "sf" -> sfDir).render(compact = false))
+    } else {
+      val run = new Run(gs, sfDir, onePass, gs.warmTables(sfDir))
+      val (full, compact) = lines(if (onePass) run.onePass() else run.default())
+      println(full)
+      println(compact)
     }
-    val cacheList = gs.warmTables(sfDir)
-    val qs = SparkEntry.queries
-    // DuckDB baseline = median of warm runs; mirror it. Three warm-ups get
-    // the generated code through C2 (one is not enough — run 2 is still
-    // ~30% slower than steady state on the join-heavy queries).
-    val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "3").toInt
-    val failed = scala.collection.mutable.LinkedHashSet.empty[String]
+    gs.spark.stop()
+  }
+
+  /** One Bench run over `gs`'s warmed tables (`cached`). */
+  private final class Run(gs: GraftSession, sfDir: String, onePass: Boolean,
+      cached: Seq[String]) {
+    private val (spark, cpus) = (gs.spark, gs.cpus)
+    private val qs = SparkEntry.queries
+    private val shufflePartitions = "spark.sql.shuffle.partitions"
+    private val rocksDb = "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
     // Scheduler-floor probe: the cheapest possible gated query shape (one
     // cached 5-row scan → agg → exchange → final agg → count). The part of
     // each query's latency that is Spark job/stage dispatch, not operator
     // work — DuckDB-in-process has no equivalent cost.
-    def floorOnce(): Double = {
-      val t0 = System.nanoTime()
-      Tables.t(spark, sfDir, "region").groupBy("r_regionkey").count().count()
-      (System.nanoTime() - t0) / 1e9
+    private val runner = new Runner(() =>
+      once(Tables.t(spark, sfDir, "region").groupBy("r_regionkey").count().count()))
+    import runner.{failed, leg}
+
+    /** SPARK_GRAFT_COLD_GROUPS=1 (one-pass mode): sync + drop the OS page
+      * cache before each row, so every group measures from the same
+      * cold-disk state a standalone run sees. The warm pass leaves each
+      * group reading the previous group's cache/writeback aftermath — the
+      * "in-pass context tax" that made minhash read 208 s in-pass vs 71 s
+      * standalone (r17). Root-only; silently a no-op when not writable,
+      * so artifacts are comparable by the env flag, not the platform. */
+    private val cold = onePass && sys.env.getOrElse("SPARK_GRAFT_COLD_GROUPS", "0") == "1"
+
+    private def coldGroup(tag: String): Unit =
+      if (cold && dropCaches())
+        System.err.println(s"[bench] cold-groups: caches dropped before $tag")
+
+    /** The mode's disk probe with its kind: cold-groups passes measure the
+      * cold-read window (drop → read → drop); warm passes measure the
+      * same device through O_DIRECT without touching the cache. */
+    private def diskProbeAuto(when: String): ((Double, Long), String) = {
+      val (p, kind) =
+        if (cold) (diskProbe(sfDir), "drop_caches") else (diskProbeDirect(sfDir), "o_direct")
+      if (p._1 >= 0)
+        System.err.println(f"[bench] disk probe ($when, $kind): " +
+          f"${p._1}%.1f MB/s over ${p._2 / 1e6}%.0f MB")
+      (p, kind)
     }
+
+    private def df(name: String): DataFrame = qs(name)(spark, sfDir)
+
+    /** One call of a key; a crashing query must not silently bench as
+      * ~0 s, so it lands in `failed`. */
+    private def query(name: String): Unit = leg(name)(df(name).count())
 
     // In the uncached one-pass, several keys localCheckpoint
     // intermediates (collapse reps, candidate sets, distinct-text
-    // aggregates); left persisted they accumulate across the 37-key
-    // pass and the tail keys run against a storage-full heap (r15
-    // sf100: 91 GB peak, tail keys 5-10x their standalone walls).
-    // Keys are independent, so drop everything persisted after each —
-    // only when NO tables were cached (normal mode must keep them).
-    val dropPersistedPerKey =
-      sys.env.contains("SPARK_GRAFT_ONEPASS") && cacheList.isEmpty
-    def queryOnce(name: String): Double = {
-      val fn = qs(name)
-      val t0 = System.nanoTime()
-      // a crashing query must not silently bench as ~0s: record it and
-      // surface the failure in the JSON line, not just stderr
-      try fn(spark, sfDir).count() catch {
-        case e: Throwable =>
-          failed += name
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-      }
-      val t = (System.nanoTime() - t0) / 1e9
-      // INVARIANT (r16, per ADVICE): this drops EVERY persistent RDD,
-      // including eagerly localCheckpointed ones whose lineage is gone —
-      // safe only because each queryOnce rebuilds its plan from scratch.
-      // A future key that reuses a checkpointed frame across the
-      // median-3 repeats would die with missing checkpoint blocks; such
-      // a key must opt out of dropPersistedPerKey or re-checkpoint.
+    // aggregates); left persisted they accumulate across the pass and
+    // the tail keys run against a storage-full heap (r15 sf100: 91 GB
+    // peak, tail keys 5-10x their standalone walls). Keys are
+    // independent, so drop everything persisted after each — only when
+    // NO tables were cached (normal mode must keep them).
+    // INVARIANT (r16): this drops EVERY persistent RDD, including eagerly
+    // localCheckpointed ones whose lineage is gone — safe only because
+    // each call rebuilds its plan from scratch.
+    private val dropPersistedPerKey = onePass && cached.isEmpty
+
+    /** One-pass protocol: one timed call. */
+    private def queryOnce(name: String): Double = {
+      val t = once(query(name))
       if (dropPersistedPerKey)
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
       t
     }
-    def queryMedian3(name: String): Double =
-      Seq(queryOnce(name), queryOnce(name), queryOnce(name)).sorted.apply(1)
 
-    // One-pass scale smoke (SURVEY §6, round 10 — the sf10 artifact):
-    // each headline key runs ONCE, reporting wall clock and peak driver
-    // heap. No warm-ups or medians — at GB scale a single pass is signal
-    // and 6 extra runs per key would stretch the smoke to tens of
-    // minutes. Run with SPARK_GRAFT_CACHE= (empty) so peak heap tracks
-    // driver-side METADATA (needs tables, relabel maps, plan state), not
-    // cached table storage: the row exists to catch metadata that grows
-    // with the data instead of the grid — flat heap sf1 → sf10 is the
-    // pass condition.
-    if (sys.env.contains("SPARK_GRAFT_ONEPASS")) {
+    private def on(toggle: Option[String]): Boolean =
+      toggle.forall(v => sys.env.getOrElse(v, "1") == "1")
+
+    private def runRows(rows: Seq[Row], keep: String => Boolean): Obj =
+      rows.filter(r => on(r.toggle)).foldLeft(Obj()) { (acc, r) =>
+        val kept = r.keys.filter(keep)
+        if (r.leg && kept.isEmpty) acc else { coldGroup(r.tag); acc ++ r.body(kept) }
+      }
+
+    /** A leg row; a failure lands in `failed` under its `key`. */
+    private def legRow(tag: String, toggle: String, key: String)(body: => Obj): Row =
+      Row(tag, Some(toggle), Seq(key), leg = true)(_ => leg(key)(body).getOrElse(Obj()))
+
+    private def heapPools = {
       import scala.jdk.CollectionConverters._
-      val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-        .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
-      // Reset per-pool peaks so the figure measures the PASS, not JVM
-      // startup / table-cache warm-up highs. Summing per-pool peaks that
-      // occur at different instants is still an upper bound on the true
-      // simultaneous peak — fine for the flat-sf1-vs-sf10 regression flag.
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .filter(_.getType == java.lang.management.MemoryType.HEAP)
+    }
+
+    /** Summed per-pool peaks since the last reset: an upper bound on the
+      * true simultaneous peak — fine for a flat-heap regression flag. */
+    private def peakHeapMb(): Long = heapPools.map(_.getPeakUsage.getUsed).sum >> 20
+
+    // ------------------------------------------------------------ default
+
+    def default(): Obj = {
+      // Disk self-adjudication for the default mode too
+      // (r20): the CPU floor probe can't see a collapsed disk window, and
+      // warm walls still pay it through shuffle/spill writes.
+      val (pre, kind) = diskProbeAuto("pre")
+      (1 to warmups).foreach(_ => runner.floor())
+      // spike re-probes take a fresh median of 3 without warm-ups
+      def group(tag: String, keys: Seq[String], iqr: Boolean) =
+        runner.guarded(tag, keys.filter(qs.contains), Gate.spikes(iqr))(
+          n => med3(query(n), warmups), n => med3(query(n)))
+      val main = group("headline", headline, iqr = true)
+      // Each group interleaves its OWN floor probes (r15 verdict #8: the
+      // main pass's verdict cannot cover groups that run minutes later).
+      // Its test is the floor MEDIAN only: group probes sit right after
+      // multi-second GC-churning keys (minhash, substring dedup), so one
+      // probe spiking on a collection pause is the NORMAL quiet state and
+      // the IQR would flag forever. The IQR ships in the JSON, unjudged.
+      val rows = Seq(
+        Row("llm", Some("SPARK_GRAFT_LLM"), llmHeadline, leg = false)(ks =>
+          guardedFields("llm", group("llm", ks, iqr = false))),
+        Row("curation", Some("SPARK_GRAFT_CURATION"), curationHeadline, leg = false)(ks =>
+          guardedFields("curation", group("curation", ks, iqr = false))),
+        legRow("hh_highcard", "SPARK_GRAFT_CURATION", "hh_highcard")(heavyHitters()),
+        legRow("bucketed", "SPARK_GRAFT_BUCKETED", "q3_bucketed_bench")(
+          bucketed(warmMed3, full = true)),
+        legRow("partitioned", "SPARK_GRAFT_PARTITIONED", "partitioned_bench")(
+          partitioned(warmMed3, full = true)),
+        Row("ann", Some("SPARK_GRAFT_ANN"), annHeadline.map(_._1), leg = false)(_ => ann()),
+        legRow("ingest", "SPARK_GRAFT_INGEST", "wet_ingest_bench")(ingest()),
+        Row("tensor", Some("SPARK_GRAFT_TENSOR"), Seq.empty, leg = false)(_ => tensor()))
+      val fields = runRows(rows, _ => true)
+      val (post, _) = diskProbeAuto("post")
+      defaultLine(main, failed, fields, diskFields(pre, post, kind) ++ cpuProbe(cpus), sfDir)
+    }
+
+    /** Default-mode leg timer: one warm-up, then the median of 3 over one
+      * planned DataFrame. */
+    private def warmMed3(name: String): Double = {
+      val d = df(name)
+      med3(d.count(), warmups = 1)
+    }
+
+    /** Heavy hitters at HIGH cardinality (r12 verdict #5): the MG
+      * candidates+verify claim ("the naive plan's full-cardinality term
+      * shuffle is what dies at web scale") needs a stream the sf fixture
+      * (~50 terms) cannot give. A deterministic zipf-ish stream is
+      * generated INSIDE the query (spark.range + md5; identical generator
+      * SQL in the DuckDB twin): 50% of rows spread over 16 hot tokens
+      * (~3.1% each, all above the 2% threshold), 50% unique md5 tokens.
+      * Both plans must return the SAME 16 terms. Default 32M rows: at 8M
+      * the naive GROUP BY's wall is bistable (the whole shuffle
+      * intermittently stays in memory); at 32M the bounded-vs-full-shuffle
+      * gap is robust in any JVM state. */
+    private def heavyHitters(): Obj = {
+      graft.functions.GraftExtensions.install(spark)
+      val n = sys.env.getOrElse("SPARK_GRAFT_HH_ROWS", "32000000").toLong
+      def tokens = spark.range(n).selectExpr(
+        // (id div 4) % 16 is uniform over the id % 4 < 2 subset (the
+        // naive id % 16 only reaches 8 residues there)
+        "IF(id % 4 < 2, concat('hot_', (id div 4) % 16), " +
+          "concat('r_', md5(cast(id AS string)))) AS tok")
+      def mgDf = {
+        val tok = tokens
+        val mg = tok.agg(expr("misra_gries(tok)").as("s"))
+          .select(col("s.n").as("n"), explode(col("s.terms")).as("tok"))
+        tok.join(broadcast(mg), "tok").groupBy("tok", "n").agg(count(lit(1)).as("cnt"))
+          .filter(col("cnt").cast("double") >= col("n").cast("double") * 0.02)
+          .select("tok")
+      }
+      def naiveDf = tokens.groupBy("tok").agg(count(lit(1)).as("cnt"))
+        .filter(col("cnt") >= n * 0.02).select("tok")
+      // equal answers, once (untimed)
+      val mgTerms = mgDf.collect().map(_.getString(0)).toSet
+      val nvTerms = naiveDf.collect().map(_.getString(0)).toSet
+      require(mgTerms == nvTerms && mgTerms.size == 16,
+        s"hh_highcard answers diverged: mg=${mgTerms.size} naive=${nvTerms.size}")
+      TaskCounter.using(spark) { c =>
+        val mgS = med3(mgDf.count())
+        val nvS = med3(naiveDf.count())
+        val mgBytes = c.around(spark)(mgDf.count()).shuffleBytes.get
+        val nvBytes = c.around(spark)(naiveDf.count()).shuffleBytes.get
+        // record-and-flag, not require (r14): the listener is async
+        // best-effort, so a metrics hiccup must not abort the artifact
+        val mgBounded = mgBytes * 10 < nvBytes
+        if (!mgBounded) System.err.println(
+          s"[bench] hh_highcard FLAG: MG shuffled $mgBytes B — not an " +
+            s"order of magnitude under the naive plan's $nvBytes B")
+        // generation-only baseline: both plans embed the md5 stream
+        // generator, so the OPERATOR cost is (plan − gen). MG reads the
+        // stream twice (summary + verify), naive once — so MG's operator
+        // cost ≈ mg_s − 2·gen_s, naive's ≈ naive_s − gen_s.
+        val genS = med3(tokens.agg(count(col("tok"))).collect(): Unit)
+        Obj("hh_highcard" -> Obj("rows" -> n, "distinct_approx" -> n / 2,
+          "gen_s" -> genS, "mg_s" -> mgS, "naive_groupby_s" -> nvS,
+          "mg_shuffle_mb" -> mgBytes / 1e6, "naive_shuffle_mb" -> nvBytes / 1e6,
+          "mg_bounded_buffer_ok" -> mgBounded))
+      }
+    }
+
+    /** Bucketed-lake leg (r15 verdict #2): q3's sf100 wall was pure
+      * shuffle-spill disk I/O on an optimal plan — the fix is STORAGE.
+      * The layout is durable across runs (r18): build_s is the real write
+      * on the first-ever run and DDL replay (≈0) with reused=true after,
+      * and its probe is the honest layout number. `full` (default mode)
+      * adds the flat twin, SHUFFLE BYTES for both, and the structural
+      * check on the executed plan (bytes can both read 0 at toy sf where
+      * every join broadcasts): a bucket-aligned q3 needs NO hash exchange
+      * anywhere. */
+    private def bucketed(time: String => Double, full: Boolean): Obj = {
+      val reused = queries.Relational.bucketedLayoutExists(sfDir)
+      val buildS = once(queries.Relational.bucketedFacts(spark, sfDir))
+      val probe = Obj("build_s" -> buildS, "reused" -> reused,
+        "q3_bucketed_s" -> time("q3_bucketed"))
+      val extra = if (!full) Obj() else TaskCounter.using(spark) { c =>
+        val flatS = time("q3_top_orders")
+        val (b, f) = (df("q3_bucketed"), df("q3_top_orders"))
+        val bMb = c.around(spark)(b.count()).shuffleBytes.get / 1e6
+        val fMb = c.around(spark)(f.count()).shuffleBytes.get / 1e6
+        val noExchange = !b.queryExecution.executedPlan.toString
+          .contains("Exchange hashpartitioning")
+        if (!noExchange) System.err.println(
+          "[bench] q3_bucketed FLAG: hash exchange survived the bucketed layout")
+        Obj("q3_flat_s" -> flatS, "q3_bucketed_shuffle_mb" -> bMb,
+          "q3_flat_shuffle_mb" -> fMb, "no_exchange_ok" -> noExchange)
+      }
+      Obj("bucketed" -> (probe ++ extra))
+    }
+
+    /** Time-partitioned lake leg (r17 verdict #1), the time-axis analog of
+      * the bucketed leg: the month layout serves date_trunc's grouping key
+      * from directory metadata and turns q1's shipdate cut into directory
+      * pruning; the events day layout rides the same leg. Layouts are
+      * content-fingerprinted and durable: a same-JVM build-then-probe
+      * measures the build's page-cache eviction instead (r17 sf100). The
+      * flat twins are in the headline group of the same artifact. `full`
+      * adds the check that the partitioned date_trunc scan never decodes
+      * the timestamp column. */
+    private def partitioned(time: String => Double, full: Boolean): Obj = {
+      import queries.Relational._
+      val reused = monthLayoutExists(sfDir)
+      val buildS = once(monthLineitem(spark, sfDir))
+      val probes = Seq("date_trunc_agg_partitioned", "q1_partitioned",
+        "time_slice_quarter", "time_slice_day").map(k => s"${k}_s" -> time(k))
+      val eReused = dayEventsLayoutExists(sfDir)
+      val eBuildS = once(dayEvents(spark, sfDir))
+      val sgS = time("session_gap_day")
+      val noTs = if (!full) Obj() else {
+        val ok = !df("date_trunc_agg_partitioned").queryExecution.executedPlan
+          .toString.contains("l_shipdate")
+        if (!ok) System.err.println("[bench] date_trunc_agg_partitioned FLAG: " +
+          "timestamp column survived in the scan")
+        Obj("no_ts_scan_ok" -> ok)
+      }
+      Obj("partitioned" -> (Obj("build_s" -> buildS, "reused" -> reused) ++
+        Obj(probes: _*) ++ Obj("events_build_s" -> eBuildS, "events_reused" -> eReused,
+          "session_gap_day_s" -> sgS) ++ noTs))
+    }
+
+    /** Wall + recall for the approximate top-k paths. Recall = overlap of
+      * the ANN top-10 vec_ids with the exact brute-force top-10 (the
+      * cosine_topk headline result) — 10 driver rows per key. NO floor
+      * guard or spike re-probe: its walls are bimodal BY DESIGN (ivf's
+      * centroid pass is ~15× hyperplane's probe), so the group-median 5×
+      * test would fire on every healthy run; the BASELINE.md ann band and
+      * the recall floors guard it instead. */
+    private def ann(): Obj = {
+      if (!annHeadline.forall { case (n, _) => qs.contains(n) }) return Obj()
+      def topIds(name: String): Option[Set[Long]] =
+        leg(name)(df(name).select("vec_id").collect().map(_.getLong(0)).toSet)
+      val truth = topIds("cosine_topk")
+      val walls = annHeadline.map { case (name, _) => name -> med3(query(name), warmups) }
+      val recalls = annHeadline.map { case (name, floor) =>
+        val r = for (t <- truth; ids <- topIds(name))
+          yield ids.intersect(t).size / math.max(t.size, 1).toDouble
+        r.filter(_ < floor).foreach { rv =>
+          failed += s"${name}_recall"
+          System.err.println(f"[bench] $name recall $rv%.2f below floor $floor%.2f")
+        }
+        name -> r
+      }
+      annFields(walls, recalls)
+    }
+
+    /** WET decode throughput, ingest's stage zero: the sf documents
+      * re-encoded ONCE (untimed fixture prep) as Common-Crawl-layout
+      * per-record-gzip shards, then the streamed WARC parse decodes every
+      * record — count + length-sum forces the full payload path. Two
+      * record shapes: the sf documents as-is (~300 B records — stresses
+      * per-member gzip setup, the Common Crawl worst case), and the same
+      * text tiled to ~5 KB records (the REAL crawl's median
+      * conversion-record size), separating per-member overhead from parse
+      * cost. At 100 TB this stage bounds the pipeline's admission rate. */
+    private def ingest(): Obj = {
+      val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "source", "text")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      val nShards = 8
+      def wetLeg(tag: String, text: (Long, String) => String): Obj = {
+        val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
+          s"graft_bench_wet_${tag}_${math.abs(sfDir.hashCode)}")
+        if (java.nio.file.Files.exists(dir)) {
+          import scala.jdk.CollectionConverters._
+          java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
+            .foreach(java.nio.file.Files.delete)
+        }
+        java.nio.file.Files.createDirectories(dir)
+        var rawBytes = 0L
+        for (sh <- 0 until nShards) {
+          val rs = docs.filter(_._1 % nShards == sh).sortBy(_._1).map {
+            case (id, src, t) => (s"https://example.com/$src/$id", text(id, t))
+          }.toIndexedSeq
+          rawBytes += rs.map(_._2.getBytes("UTF-8").length.toLong).sum
+          java.nio.file.Files.write(dir.resolve(f"wet_$sh%02d.warc.wet.gz"),
+            graft.sources.WarcSource.encodeWetGz(rs))
+        }
+        val med = med3(graft.sources.WarcSource.readWet(spark, s"$dir/*.warc.wet.gz")
+          .filter(col("rec_type") === "conversion")
+          .agg(count(lit(1)), sum(length(col("text")))).collect(): Unit, warmups = 1)
+        val mb = rawBytes / 1e6
+        val prefix = if (tag == "sfdocs") "wet" else s"wet_$tag"
+        Obj(s"${prefix}_decode_s" -> med, s"${prefix}_raw_mb" -> mb,
+          s"${prefix}_mb_per_s" -> mb / math.max(med, 1e-9))
+      }
+      Obj("ingest" -> (wetLeg("sfdocs", (_, t) => t) ++ wetLeg("5k", (id, t) => {
+        val b = new StringBuilder(5400)
+        var i = 0
+        while (b.length < 5000) { b.append(t).append(f"\nseg $id%d.$i%d\n"); i += 1 }
+        b.toString
+      })))
+    }
+
+    /** Tensor headline group (BASELINE.md "Tensor kernels"): five kernels
+      * over a deterministic 1024×1024 synthetic in 8 chunks (256×512) vs
+      * the SAME kernel over the single-block layout. No DuckDB twin exists
+      * for the tensor path, so the baseline is the no-halo single-block
+      * run: the multi/single ratio bounds the halo-exchange + merge tax
+      * (a ratio < 1 means the 8-way parallelism pays for the halo). Each
+      * kernel is one warm-up + median of 3 under the floor guard, and a
+      * ratio breach re-probes both layouts (the round-10 artifact recorded
+      * gaussian5 at ratio 3.35 with no way to tell contention from
+      * regression). Shuffle width is lifted to the block count — the
+      * relational width (1 at sf0.1) would serialize the 8-task exchange. */
+    private def tensor(): Obj = withConf(spark.conf,
+        shufflePartitions -> math.min(cpus, 8).toString) {
+      import graft.tensor._
+      val persistLvl = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
+      // Both layouts' inputs stay persisted for the whole group (≈25 MiB)
+      // so a ratio-breach re-probe can re-run either side without
+      // rebuilding state.
+      val inputs = Seq("multi" -> Seq(256, 512), "single" -> Seq(1024, 1024))
+        .map { case (vname, chunk) =>
+          val base = synthBlocks(spark, 1024, 1024, chunk, s"bench_$vname").persist(persistLvl)
+          forceB(base)
+          val u8 = TBlock.fromBlocks(base, DType.U8).persist(persistLvl)
+          forceTB(u8)
+          val bin = binarizeB(base).persist(persistLvl)
+          forceB(bin)
+          vname -> ((base, u8, bin))
+        }.toMap
+      val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+      val off = Array(0.5, -0.25)
+      def runKernel(kname: String, vname: String): Unit = {
+        val (base, u8, bin) = inputs(vname)
+        kname match {
+          // σ=0.5, truncate=4 → radius 2: the 5×5 gaussian
+          case "gaussian5" => forceB(Filters.gaussianFilter(base, Seq(0.5, 0.5)))
+          case "uniform3_u8" => forceTB(Filters.uniformFilterTyped(u8, Seq(3, 3), DType.F32))
+          case "label_stats" =>
+            val (lab, _) = Measure.label(bin, 2)
+            Measure.area(bin, lab, 2).count(); ()
+          case "affine_shift" => forceB(Interp.affineTransform(base, 2, m, off, order = 1))
+          // typed twin: the gather join ships 1 B/px uint8 instead of
+          // 8 B/px float64 — the r10 native-byte resampling path
+          case "affine_u8" =>
+            forceTB(Interp.affineTransformTyped(u8, 2, m, off, order = 1, outDtype = DType.F32))
+        }
+      }
+      // a failed run is not kernel performance: the layout reports None
+      def layout(kname: String, vname: String): Option[Double] = {
+        var ok = true
+        val t = med3(if (leg(s"tensor_${kname}_$vname")(runKernel(kname, vname)).isEmpty)
+          ok = false, warmups = 1)
+        Some(t).filter(_ => ok)
+      }
+      def both(k: String) = (layout(k, "multi"), layout(k, "single"))
+      val g = runner.guarded("tensor", tensorKernels, Gate.ratio)(both, both)
+      inputs.values.foreach { case (b, u, n) => b.unpersist(); u.unpersist(); n.unpersist() }
+      tensorFields(g)
+    }
+
+    // ----------------------------------------------------------- one-pass
+
+    /** One-pass scale smoke (SURVEY §6, round 10 — the sf10 artifact):
+      * each key runs ONCE, reporting wall clock and peak driver heap. No
+      * warm-ups or medians — at GB scale a single pass is signal. Run with
+      * SPARK_GRAFT_CACHE= (empty) so peak heap tracks driver-side METADATA
+      * (needs tables, relabel maps, plan state), not cached table storage:
+      * flat heap sf1 → sf10 is the pass condition. */
+    def onePass(): Obj = {
+      // peaks measure the PASS, not JVM startup / table-cache warm-up highs
       heapPools.foreach(_.resetPeakUsage())
-      // SPARK_GRAFT_KEYS=a,b,c restricts every one-pass group to the
-      // named keys — the re-measurement tool for forensics on a single
-      // slow key without paying the full multi-hundred-second pass.
-      val onlyKeys = sys.env.get("SPARK_GRAFT_KEYS")
-        .map(_.split(",").filter(_.nonEmpty).toSet)
-      // fail loudly on a typo'd key (r16, per ADVICE): a filter that
-      // matches nothing would still write a plausible-looking JSON line
-      // with every group empty — the opposite of what a forensics
-      // re-measurement is for
+      // SPARK_GRAFT_KEYS=a,b,c restricts every row to the named keys —
+      // the re-measurement tool for one slow key without paying the
+      // full pass. A key outside every group (e.g. minhash_signatures,
+      // the signature-scan half of minhash_near_dup) runs in its own
+      // "extra" group, never in a group total.
+      val onlyKeys = sys.env.get("SPARK_GRAFT_KEYS").map(_.split(",").filter(_.nonEmpty).toSet)
+      val grouped = (headline ++ llmHeadline ++ curationHeadline).toSet
+      val extra = onlyKeys.fold(Seq.empty[String])(_.filter(k =>
+        qs.contains(k) && !grouped(k)).toSeq.sorted)
+      def items(ks: Seq[String]) = ks.filter(qs.contains).map(n => n -> (() => queryOnce(n)))
+      // The streaming legs run BEFORE the layout legs: their builds
+      // rewrite a full fact table and the probes' micro-batch reads would
+      // otherwise measure that writeback aftermath (in-pass 38 s vs 15 s
+      // standalone, r17).
+      val rows = Seq(
+        Row("llm", Some("SPARK_GRAFT_LLM"), llmHeadline :+ scaledKey, leg = false)(ks =>
+          llm(items(ks), ks.contains(scaledKey))),
+        Row("extra", None, extra, leg = true)(ks => onceGroup("extra", items(ks))),
+        Row("curation", Some("SPARK_GRAFT_CURATION"), curationHeadline, leg = false)(ks =>
+          onceGroup("curation", items(ks))),
+        legRow("streaming", "SPARK_GRAFT_STREAMING", "stream_throughput")(stream()),
+        legRow("streaming_stateful", "SPARK_GRAFT_STREAMING",
+          "stream_stateful_throughput")(statefulStream()),
+        legRow("bucketed", "SPARK_GRAFT_BUCKETED", "q3_bucketed")(
+          bucketed(queryOnce, full = false)),
+        legRow("partitioned", "SPARK_GRAFT_PARTITIONED", "date_trunc_agg_partitioned")(
+          partitioned(queryOnce, full = false)),
+        legRow("sigindex", "SPARK_GRAFT_SIGINDEX", "sigindex_probe")(sigIndex()),
+        legRow("pqindex", "SPARK_GRAFT_PQINDEX", "pqindex_probe")(pqIndex()))
+      // fail loudly on a typo'd key (r16): a filter that matches nothing
+      // would still write a plausible-looking line with every group empty
       onlyKeys.foreach { ks =>
-        val known = qs.keySet + "semantic_dedup_scaledK" + "stream_throughput" +
-          "stream_stateful_throughput" + "sigindex_probe" + "pqindex_probe"
-        val unknown = ks.filterNot(known.contains)
+        val unknown = ks -- qs.keySet -- rows.flatMap(_.keys)
         require(unknown.isEmpty,
           s"SPARK_GRAFT_KEYS names no known query: ${unknown.mkString(",")}")
       }
       def keep(n: String): Boolean = onlyKeys.forall(_.contains(n))
-      // Pre-pass disk probe (r19 verdict #2, widened r20): every
-      // one-pass artifact carries its own disk MB/s so a regression
-      // band can tell a slow disk window from a slow plan without
-      // out-of-band forensics — cold-groups passes via drop-caches
-      // read, warm passes via O_DIRECT (cache-neutral).
-      val preProbe = diskProbeAuto(sfDir)
-      if (preProbe._1 >= 0)
-        System.err.println(f"[bench] disk probe (pre, ${preProbe._3}): " +
-          f"${preProbe._1}%.1f MB/s over ${preProbe._2 / 1e6}%.0f MB")
-      // cache drop BEFORE t0 (r17, per ADVICE): the other groups take
-      // their timestamps after their coldGroup call — billing the sync +
-      // drop into the headline wall made it incomparable under the flag
+      // every one-pass artifact carries its own disk MB/s so a band can
+      // tell a slow disk window from a slow plan (r19 verdict #2)
+      val (pre, kind) = diskProbeAuto("pre")
+      // the cache drop comes BEFORE t0 (r17): billing the sync + drop
+      // into the headline wall made it incomparable under the flag
       coldGroup("headline")
-      val t0 = System.nanoTime()
-      val res = headline.filter(qs.contains).filter(keep)
-        .map(n => n -> queryOnce(n))
-      val wall = (System.nanoTime() - t0) / 1e9
-      // LLM group in the same pass (round 11 — the sf10 dedup artifact:
-      // banding miscalibration shows up as superlinear candidate growth,
-      // and this is the scale where it would): separate wall so the
-      // 16-key row stays comparable to prior rounds.
-      var llmOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_LLM", "1") == "1") {
-        coldGroup("llm")
-        val lt0 = System.nanoTime()
-        val lres = llmHeadline.filter(qs.contains).filter(keep)
-          .map(n => n -> queryOnce(n))
-        // Scaled-K SemDeDup (r12, judge item #2): the production K rule
-        // (kmeansK ≈ ⌈N/5000⌉) instead of the gated key's oracle K=10 —
-        // at sf10 this is the row proving the cluster-bounded quadratic
-        // stays in band when K tracks the corpus.
-        val runScaledK = keep("semantic_dedup_scaledK")
-        val embRows = if (!runScaledK) 0L
-          else try Tables.t(spark, sfDir, "embeddings").count()
-          catch { case _: Throwable => 0L }
-        val scaledK = queries.Similarity.kmeansK(embRows)
-        val skt0 = System.nanoTime()
-        if (runScaledK)
-          try queries.Similarity.semanticDedupWith(
-              Tables.t(spark, sfDir, "embeddings"), scaledK).count()
-          catch {
-            case e: Throwable =>
-              failed += "semantic_dedup_scaledK"
-              System.err.println(s"[bench] semantic_dedup_scaledK FAILED: ${e.getMessage}")
-          }
-        val skT = (System.nanoTime() - skt0) / 1e9
-        val lwall = (System.nanoTime() - lt0) / 1e9
-        val lj = (if (runScaledK) lres :+ ("semantic_dedup_scaledK" -> skT) else lres)
-          .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-        // scaled_k only when the scaledK leg actually ran (r16, per
-        // ADVICE): when SPARK_GRAFT_KEYS filters it out, kmeansK(0)
-        // would be a misleading value in a forensics artifact
-        val skJson = if (runScaledK) s""","scaled_k":$scaledK""" else ""
-        llmOnepass = s""","llm":$lj,"llm_wall":$lwall$skJson"""
+      val (res, wall) = timed(headline.filter(qs.contains).filter(keep)
+        .map(n => n -> queryOnce(n)))
+      val fields = runRows(rows, keep)
+      val peakMb = peakHeapMb()
+      val smoke = if (sys.env.contains("SPARK_GRAFT_TENSOR_SMOKE")) tensorSmoke() else Obj()
+      // the pass is only self-adjudicating if the disk was healthy BOTH
+      // ends (r19 watched a window collapse mid-pass)
+      val (post, _) = diskProbeAuto("post")
+      onePassLine(res, wall, failed, fields ++ smoke,
+        diskFields(pre, post, kind) ++ cpuProbe(cpus), peakMb, sfDir)
+    }
+
+    /** A one-pass group: each item once, plus the group's wall. */
+    private def onceGroup(tag: String, items: Seq[(String, () => Double)]): Obj = {
+      val (res, wall) = timed(items.map { case (n, t) => n -> t() })
+      onceFields(tag, res, wall)
+    }
+
+    /** The one-pass LLM group (round 11 — the sf10 dedup artifact:
+      * banding miscalibration shows up as superlinear candidate growth,
+      * and this is the scale where it would), with the scaled-K row. */
+    private def llm(items: Seq[(String, () => Double)], withScaled: Boolean): Obj = {
+      var k = 0
+      val scaled = if (!withScaled) Seq.empty else Seq(scaledKey -> (() => {
+        val emb = Tables.t(spark, sfDir, "embeddings")
+        k = queries.Similarity.kmeansK(leg(scaledKey)(emb.count()).getOrElse(0L))
+        once(leg(scaledKey)(queries.Similarity.semanticDedupWith(emb, k).count()))
+      }))
+      onceGroup("llm", items ++ scaled) ++
+        // scaled_k only when its row ran: kmeansK(0) would mislead
+        (if (scaled.isEmpty) Obj() else Obj("scaled_k" -> k))
+    }
+
+    /** Scratch input and checkpoint dirs for a streaming leg. */
+    private def streamDirs(prefix: String): (String, String) = {
+      val base = new java.io.File(sys.props("java.io.tmpdir"),
+        s"${prefix}_${graft.sources.Lake.dirSuffix(sfDir)}" +
+          s"_${spark.sparkContext.applicationId}").toString
+      queries.TmpCleanup.register(base + "_in")
+      queries.TmpCleanup.register(base + "_ckpt")
+      (base + "_in", base + "_ckpt")
+    }
+
+    private def stateTotals(p: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
+      val ops = p.reverse.find(_.stateOperators.nonEmpty).toSeq.flatMap(_.stateOperators.toSeq)
+      (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum / 1e6)
+    }
+
+    /** Streaming throughput probe (r17 verdict #8): the quality gate
+      * streamed over the scale corpus — 32 parquet shards, 8 per
+      * micro-batch, through the Gopher filter with the RocksDB state store
+      * (the cluster provider). Each batch's scan holds ≥ cpus splits, so
+      * it feeds the whole machine (with 1 big file per trigger a 12-split
+      * scan left 2/3 of the cores idle — size the TRIGGER to the cluster).
+      * The batch twin runs FIRST over the SAME shard files (a twin on the
+      * original table measured warm page cache against the stream's cold
+      * shard copy and flagged a phantom 66×); its failure fails the leg. */
+    private def stream(): Obj = {
+      val docs = Tables.t(spark, sfDir, "documents")
+      val nDocs = docs.count()
+      val (inDir, ckpt) = streamDirs("graft_bench_stream")
+      docs.repartition(32).write.mode("overwrite").parquet(inDir)
+      val batchS = once(queries.TextOps.gopherOver(queries.TextOps.augmentSymbols(
+        spark.read.parquet(inDir))).count())
+      // State width is sized to the STATE (20 groups), not the batch: each
+      // stateful shuffle partition is one RocksDB instance paying
+      // snapshot+commit EVERY micro-batch (a 32-wide shuffle measured
+      // ~10 s/batch for a 20-row aggregate, sf10 r17).
+      val (q, wall) = withConf(spark.conf, rocksDb,
+          shufflePartitions -> math.min(8, cpus).toString) {
+        val agg = queries.TextOps.gopherOver(queries.TextOps.augmentSymbols(spark.readStream
+          .schema(docs.schema).option("maxFilesPerTrigger", "8").parquet(inDir)))
+        timed(graft.streaming.StreamOps.runStream(agg) {
+          _.format("memory").queryName("graft_bench_stream_gate")
+            .option("checkpointLocation", ckpt).outputMode("complete")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        })
       }
-      // Forensics affordance: a SPARK_GRAFT_KEYS entry naming a gated
-      // query OUTSIDE every one-pass group (e.g. minhash_signatures —
-      // the signature-scan HALF of minhash_near_dup) runs here with the
-      // same protocol and no bespoke main. Its own group + JSON field
-      // (r18, per ADVICE): folding extras into the llm group billed
-      // leg-owned keys (q3_bucketed, time_slice_day, ...) named for a
-      // re-measurement into that artifact's llm wall/llm_total — a leg
-      // key named here still runs in its leg too, but its extra-group
-      // timing is now reported under "extra", never in a group total.
-      var extraOnepass = ""
-      val extraKeys = onlyKeys.map(_.filter(k => qs.contains(k) &&
-        !headline.contains(k) && !llmHeadline.contains(k) &&
-        !curationHeadline.contains(k)).toSeq.sorted).getOrElse(Seq.empty)
-      if (extraKeys.nonEmpty) {
-        coldGroup("extra")
-        val et0 = System.nanoTime()
-        val eres = extraKeys.map(n => n -> queryOnce(n))
-        val ewall = (System.nanoTime() - et0) / 1e9
-        val ej = eres.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        extraOnepass = s""","extra":$ej,"extra_wall":$ewall"""
+      val progress = q.recentProgress.toSeq
+      val batches = progress.count(_.numInputRows > 0)
+      val (stateRows, stateMb) = stateTotals(progress)
+      // flag band: 5× the batch twin's operator work, plus ~1.5 s per
+      // micro-batch (dispatch + state-store commit are a FIXED per-trigger
+      // cost, ~0.9 s/batch at toy sf), plus a 3 s one-time STARTUP
+      // allowance (offset-log/checkpoint init + file-index build). Without
+      // it the band flipped on ±1 s of disk noise at sf100 (r18); the flag
+      // exists for the 106 k-rows/s class of micro-batch/state
+      // regressions, which a 3 s constant cannot mask.
+      val ok = wall <= batchS * 5 + 1.5 * math.max(batches, 1) + 3.0
+      if (!ok) {
+        failed += "stream_throughput"
+        System.err.println(f"[bench] stream_throughput FLAG: streamed $wall%.1f s " +
+          f"vs batch twin $batchS%.1f s — past the 5x + 1.5s/batch band")
       }
-      // Curation group in the same pass (r12 session 3): the quality/
-      // scoring scans are linear by construction, but exact_substring_
-      // dedup's shared-gram set grows with distinct content — sf10 is
-      // where a broadcast-budget miscalibration would show.
-      var curOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_CURATION", "1") == "1") {
-        coldGroup("curation")
-        val ct0 = System.nanoTime()
-        val cres = curationHeadline.filter(qs.contains).filter(keep)
-          .map(n => n -> queryOnce(n))
-        val cwall = (System.nanoTime() - ct0) / 1e9
-        val cj = cres.map { case (k, v) => "\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        curOnepass = s""","curation":$cj,"curation_wall":$cwall"""
-      }
-      // Streaming throughput probe (r17, verdict #8): the quality-gate
-      // — deliberately ORDERED BEFORE the bucketed/partitioned layout
-      // legs: their builds rewrite a full fact table and the probe's
-      // micro-batch reads would otherwise measure that writeback
-      // aftermath (in-pass 38 s vs 15 s standalone, r17), the same
-      // context tax window_rank pays after q3's spill.
-      // stream over the scale corpus — 8 parquet shards drained one per
-      // micro-batch through the Gopher filter with the RocksDB state
-      // store (the cluster provider). Reports rows/s, batch count, and
-      // final state size; flags if the streamed pass costs more than
-      // 5× its batch twin + 1.5 s per micro-batch (state-store or
-      // micro-batch regression, not operator work or trigger floor).
-      var streamingOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_STREAMING", "1") == "1" &&
-          keep("stream_throughput")) {
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = spark.conf.getOption(provKey)
-        val prevShufflePart = spark.conf.get("spark.sql.shuffle.partitions")
-        coldGroup("streaming")
-        try {
-          val docs = Tables.t(spark, sfDir, "documents")
-          val nDocs = docs.count()
-          val base = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_bench_stream_${graft.sources.Lake.dirSuffix(sfDir)}" +
-              s"_${spark.sparkContext.applicationId}").toString
-          val (inDir, ckpt) = (base + "_in", base + "_ckpt")
-          queries.TmpCleanup.register(inDir)
-          queries.TmpCleanup.register(ckpt)
-          // 32 shard files, 8 per trigger: each micro-batch's scan holds
-          // ≥ cpus splits, so the batch feeds the whole machine — with
-          // 1 big file per trigger a 12-split scan left 2/3 of the cores
-          // idle every batch (sf100, r17: 106k rows/s vs the batch
-          // plan's full-width scan). The production rule: size the
-          // TRIGGER to the cluster, not to latency alone.
-          docs.repartition(32).write.mode("overwrite").parquet(inDir)
-          // batch twin FIRST, over the SAME shard files the stream will
-          // read (r17 sf100: a twin on the original table measured warm
-          // page cache against the stream's cold shard copy and flagged
-          // a phantom 66× — same bytes, same layout, same cache state,
-          // so the band isolates micro-batch overhead, the thing it
-          // exists to judge)
-          // the twin's failure PROPAGATES to the probe's outer catch
-          // (r17, per ADVICE): a swallowed twin yielded batchS ≈ 0,
-          // which flagged the stream unconditionally and shipped a bogus
-          // batch_twin_s with no sign the twin never ran
-          val bt0 = System.nanoTime()
-          queries.TextOps.gopherOver(queries.TextOps.augmentSymbols(
-            spark.read.parquet(inDir))).count()
-          val batchS = (System.nanoTime() - bt0) / 1e9
-          spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-            ".state.RocksDBStateStoreProvider")
-          // State width is sized to the STATE (20 groups), not the batch:
-          // a stateful query spins one RocksDB instance per shuffle
-          // partition, and each instance pays snapshot+commit EVERY
-          // micro-batch — at the scale profile's 32-wide shuffle that
-          // fixed cost measured ~10 s/batch for a 20-row aggregate
-          // (sf10, r17), 32 RocksDB maintenance cycles to move 20 rows.
-          // Production rule at 100 TB: state partitions track state
-          // cardinality; scan/map parallelism still follows file splits.
-          spark.conf.set("spark.sql.shuffle.partitions",
-            math.min(8, cpus).toString)
-          val stream = spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", "8").parquet(inDir)
-          val agg = queries.TextOps.gopherOver(
-            queries.TextOps.augmentSymbols(stream))
-          val t0 = System.nanoTime()
-          val q = graft.streaming.StreamOps.runStream(agg) {
-            _.format("memory")
-              .queryName("graft_bench_stream_gate")
-              .option("checkpointLocation", ckpt)
-              .outputMode("complete")
-              .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          }
-          // restore full width BEFORE the batch twin measurement
-          spark.conf.set("spark.sql.shuffle.partitions", prevShufflePart)
-          val wall = (System.nanoTime() - t0) / 1e9
-          val progress = q.recentProgress.toSeq
-          val batches = progress.count(_.numInputRows > 0)
-          val stateOps = progress.reverse
-            .find(_.stateOperators.nonEmpty).toSeq.flatMap(_.stateOperators.toSeq)
-          val stateRows = stateOps.map(_.numRowsTotal).sum
-          val stateMb = stateOps.map(_.memoryUsedBytes).sum / 1e6
-          // flag band: 5× the batch twin's operator work plus ~1.5 s per
-          // micro-batch (job dispatch + state-store commit are a FIXED
-          // per-trigger cost — measured ~0.9 s/batch at toy sf, where
-          // they dominate; at sf10 the operator term carries the band)
-          // plus a 3 s one-time STARTUP allowance (offset-log/checkpoint
-          // init + file-index build — paid once per query regardless of
-          // data). Without it the band flipped on ±1 s of disk noise at
-          // sf100: three same-HEAD runs measured 633/576/542 k rows/s —
-          // all ~5× the r17 fix's target throughput — and the two
-          // slower ones flagged (r18). The flag exists for the
-          // 106 k-rows/s class of micro-batch/state regressions, which
-          // a 3 s constant cannot mask.
-          val ok = wall <= batchS * 5 + 1.5 * math.max(batches, 1) + 3.0
-          if (!ok) {
-            failed += "stream_throughput"
-            System.err.println(f"[bench] stream_throughput FLAG: streamed " +
-              f"$wall%.1f s vs batch twin $batchS%.1f s — past the " +
-              "5x + 1.5s/batch band")
-          }
-          streamingOnepass = s""","streaming":{"rows":$nDocs,""" +
-            s""""batches":$batches,"wall_s":$wall,""" +
-            s""""rows_per_s":${nDocs / math.max(wall, 1e-9)},""" +
-            s""""batch_twin_s":$batchS,"state_rows":$stateRows,""" +
-            s""""state_mem_mb":$stateMb,"overhead_ok":$ok}"""
-        } catch {
-          case e: Throwable =>
-            failed += "stream_throughput"
-            System.err.println(s"[bench] onepass streaming FAILED: ${e.getMessage}")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShufflePart)
-          prevProv match {
-            case Some(v) => spark.conf.set(provKey, v)
-            case None => spark.conf.unset(provKey)
-          }
-        }
-      }
-      // Stateful streaming throughput (r18, verdict #5): the stateless
-      // probe above judges micro-batch overhead; this leg drives the
-      // LIVE-CRAWL posture — the near-dedup flatMapGroupsWithState with
-      // RocksDB state — over the same 32-shard corpus and reports
-      // rows/s plus the state the stream actually carried. State WIDTH
-      // tracks STATE CARDINALITY (the r17 rule): the near-dedup state is
-      // one entry per (band, distinct-signature) bucket — thousands of
-      // groups, not 20 — so the stateful shuffle keeps the cluster width
-      // instead of the 8-way squeeze the tiny-state gate needs.
-      var statefulOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_STREAMING_STATEFUL",
-            sys.env.getOrElse("SPARK_GRAFT_STREAMING", "1")) == "1" &&
-          keep("stream_stateful_throughput")) {
-        val provKey = "spark.sql.streaming.stateStore.providerClass"
-        val prevProv = spark.conf.getOption(provKey)
-        val prevShufflePart = spark.conf.get("spark.sql.shuffle.partitions")
-        coldGroup("streaming_stateful")
-        try {
-          val docs = Tables.t(spark, sfDir, "documents")
-            .select("doc_id", "source", "text")
-          val nDocs = docs.count()
-          val base = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_bench_sstream_${graft.sources.Lake.dirSuffix(sfDir)}" +
-              s"_${spark.sparkContext.applicationId}").toString
-          val (inDir, ckpt) = (base + "_in", base + "_ckpt")
-          queries.TmpCleanup.register(inDir)
-          queries.TmpCleanup.register(ckpt)
-          // distributed shard write (the verdict-path writeDocShards is a
-          // driver collect — test plumbing, not a scale fixture)
-          docs.repartition(32).write.mode("overwrite").json(inDir)
-          spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming" +
-            ".state.RocksDBStateStoreProvider")
-          val width = sys.env.getOrElse("SPARK_GRAFT_STATE_WIDTH",
-            cpus.toString).toInt
-          spark.conf.set("spark.sql.shuffle.partitions", width.toString)
-          val verdicts = graft.streaming.StreamOps.nearDedupVerdictStream(
-            spark, inDir, filesPerTrigger = 8, maxSigsPerBucket = 1 << 14,
-            ttlMs = 0L)
-          // Progress accounting via a listener, not q.recentProgress:
-          // Spark retains only numRecentProgressUpdates (default 100)
-          // entries, so a >100-micro-batch run would undercount ingested
-          // rows and falsely flag the leg (r19 ADVICE). The listener
-          // sees EVERY progress event regardless of retention.
-          val ingestedAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-          val batchesAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-          @volatile var qid: java.util.UUID = null
-          val listener = new org.apache.spark.sql.streaming
-              .StreamingQueryListener {
-            override def onQueryStarted(e: org.apache.spark.sql.streaming
-                .StreamingQueryListener.QueryStartedEvent): Unit = ()
-            override def onQueryProgress(e: org.apache.spark.sql.streaming
-                .StreamingQueryListener.QueryProgressEvent): Unit =
-              if (qid != null && e.progress.id == qid) {
-                ingestedAcc.addAndGet(e.progress.numInputRows)
-                if (e.progress.numInputRows > 0) batchesAcc.incrementAndGet()
-              }
-            override def onQueryTerminated(e: org.apache.spark.sql.streaming
-                .StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-          }
-          spark.streams.addListener(listener)
-          val t0 = System.nanoTime()
-          var stateQ: org.apache.spark.sql.streaming.StreamingQuery = null
-          val wall = try {
-            stateQ = graft.streaming.StreamOps.runStream(verdicts, (q0, limitMs) => {
-              qid = q0.id
-              graft.streaming.StreamOps.awaitEnd(q0, limitMs)
-            }) {
-              _.format("noop")
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Obj("streaming" -> Obj("rows" -> nDocs, "batches" -> batches, "wall_s" -> wall,
+        "rows_per_s" -> nDocs / math.max(wall, 1e-9), "batch_twin_s" -> batchS,
+        "state_rows" -> stateRows, "state_mem_mb" -> stateMb, "overhead_ok" -> ok))
+    }
+
+    /** Stateful streaming throughput (r18 verdict #5): the LIVE-CRAWL
+      * posture — the near-dedup flatMapGroupsWithState with RocksDB state —
+      * over the same 32-shard corpus. State WIDTH tracks STATE CARDINALITY
+      * (the r17 rule): one entry per (band, distinct-signature) bucket —
+      * thousands of groups, not 20 — so the shuffle keeps the cluster
+      * width. Progress is counted by a listener, not q.recentProgress:
+      * Spark retains only numRecentProgressUpdates (default 100) entries,
+      * so a longer run would undercount ingested rows (r19). */
+    private def statefulStream(): Obj = {
+      import org.apache.spark.sql.streaming.StreamingQueryListener
+      import org.apache.spark.sql.streaming.StreamingQueryListener._
+      val docs = Tables.t(spark, sfDir, "documents").select("doc_id", "source", "text")
+      val nDocs = docs.count()
+      val (inDir, ckpt) = streamDirs("graft_bench_sstream")
+      // distributed shard write (the verdict-path writeDocShards is a
+      // driver collect — test plumbing, not a scale fixture)
+      docs.repartition(32).write.mode("overwrite").json(inDir)
+      withConf(spark.conf, rocksDb, shufflePartitions -> cpus.toString) {
+        val verdicts = graft.streaming.StreamOps.nearDedupVerdictStream(
+          spark, inDir, filesPerTrigger = 8, maxSigsPerBucket = 1 << 14, ttlMs = 0L)
+        val ingestedAcc = new java.util.concurrent.atomic.AtomicLong(0L)
+        val batchesAcc = new java.util.concurrent.atomic.AtomicLong(0L)
+        @volatile var qid: java.util.UUID = null
+        val listener = new StreamingQueryListener {
+          override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+          override def onQueryProgress(e: QueryProgressEvent): Unit =
+            if (qid != null && e.progress.id == qid) {
+              ingestedAcc.addAndGet(e.progress.numInputRows)
+              if (e.progress.numInputRows > 0) batchesAcc.incrementAndGet()
             }
-            (System.nanoTime() - t0) / 1e9
-          } finally {
-            // listener events are async — wait for the counter to reach
-            // the expectation (or stabilize) before reading it
-            val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-            var last = -1L
-            var stableSince = System.nanoTime()
-            while (ingestedAcc.get() < nDocs && System.nanoTime() < deadline &&
-                System.nanoTime() - stableSince < 2L * 1000 * 1000 * 1000) {
-              if (ingestedAcc.get() != last) {
-                last = ingestedAcc.get(); stableSince = System.nanoTime()
-              }
-              Thread.sleep(50)
-            }
-            spark.streams.removeListener(listener)
+          override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+        }
+        spark.streams.addListener(listener)
+        val (stateQ, wall) = try timed(graft.streaming.StreamOps.runStream(verdicts,
+            (q0, limitMs) => { qid = q0.id; graft.streaming.StreamOps.awaitEnd(q0, limitMs) }) {
+          _.format("noop").option("checkpointLocation", ckpt).outputMode("append")
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        }) finally {
+          // listener events are async: wait (50 ms steps, 10 s cap) until
+          // the counter reaches the source count or holds still for 2 s
+          var (last, still, waited) = (-1L, 0, 0)
+          while (ingestedAcc.get() < nDocs && waited < 200 && still < 40) {
+            if (ingestedAcc.get() == last) still += 1
+            else { last = ingestedAcc.get(); still = 0 }
+            Thread.sleep(50); waited += 1
           }
-          val batches = batchesAcc.get()
-          // throughput numerator = rows the stream ACTUALLY ingested
-          // (listener-summed per-batch numInputRows), not the source
-          // count — a glob/hidden-file mismatch dropping a shard would
-          // otherwise silently overstate rows/s (r18 ADVICE). nDocs
-          // stays as the expectation; a shortfall is a flagged leg.
-          val ingested = ingestedAcc.get()
-          if (ingested != nDocs) {
-            failed += "stream_stateful_throughput"
-            System.err.println(s"[bench] stateful stream FLAG: ingested " +
-              s"$ingested rows but source has $nDocs")
-          }
-          // the LAST progress entry is always within retention — state
-          // totals read fine from recentProgress
-          val stateOps = stateQ.recentProgress.toSeq.reverse
-            .find(_.stateOperators.nonEmpty).toSeq.flatMap(_.stateOperators.toSeq)
-          val stateRows = stateOps.map(_.numRowsTotal).sum
-          val stateMb = stateOps.map(_.memoryUsedBytes).sum / 1e6
-          statefulOnepass = s""","streaming_stateful":{"rows":$ingested,""" +
-            s""""rows_expected":$nDocs,""" +
-            s""""batches":$batches,"wall_s":$wall,""" +
-            s""""rows_per_s":${ingested / math.max(wall, 1e-9)},""" +
-            s""""state_rows":$stateRows,"state_mem_mb":$stateMb,""" +
-            s""""state_width":$width}"""
-        } catch {
-          case e: Throwable =>
-            failed += "stream_stateful_throughput"
-            System.err.println(
-              s"[bench] onepass stateful streaming FAILED: ${e.getMessage}")
-        } finally {
-          spark.conf.set("spark.sql.shuffle.partitions", prevShufflePart)
-          prevProv match {
-            case Some(v) => spark.conf.set(provKey, v)
-            case None => spark.conf.unset(provKey)
-          }
+          spark.streams.removeListener(listener)
         }
-      }
-      // Bucketed-lake leg in the one-pass artifact (r16, verdict #2):
-      // at sf10/sf100 this is where q3's shuffle-spill wall actually
-      // hurts, so the layout demonstration belongs in the same artifact
-      // — build cost reported separately from the probe, never hidden.
-      var bucketedOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "1") == "1" &&
-          keep("q3_bucketed")) {
-        coldGroup("bucketed")
-        try {
-          // the layout is durable across runs (r18, verdict #3 — same
-          // contract as the partitioned leg): a reuse run registers the
-          // external tables at build_s ≈ 0 with reused=true, and its
-          // probe is the honest layout number
-          val reused = queries.Relational.bucketedLayoutExists(sfDir)
-          val b0 = System.nanoTime()
-          queries.Relational.bucketedFacts(spark, sfDir)
-          val buildS = (System.nanoTime() - b0) / 1e9
-          val qT = queryOnce("q3_bucketed")
-          bucketedOnepass =
-            s""","bucketed":{"build_s":$buildS,"reused":$reused,"q3_bucketed_s":$qT}"""
-        } catch {
-          case e: Throwable =>
-            failed += "q3_bucketed"
-            System.err.println(s"[bench] onepass bucketed FAILED: ${e.getMessage}")
+        // throughput numerator = rows the stream ACTUALLY ingested, not the
+        // source count — a glob/hidden-file mismatch dropping a shard
+        // would otherwise silently overstate rows/s (r18)
+        val ingested = ingestedAcc.get()
+        if (ingested != nDocs) {
+          failed += "stream_stateful_throughput"
+          System.err.println(s"[bench] stateful stream FLAG: ingested " +
+            s"$ingested rows but source has $nDocs")
         }
-      }
-      // Time-partitioned lake leg (r17, verdict #1): the month layout's
-      // build cost and the two pruned-scan twins, reported next to the
-      // flat keys in the same artifact — the time-axis analog of the
-      // bucketed leg above.
-      var partitionedOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_PARTITIONED", "1") == "1" &&
-          keep("date_trunc_agg_partitioned")) {
-        coldGroup("partitioned")
-        try {
-          // the layout is durable across runs (content-fingerprinted):
-          // a reuse run reports build_s ≈ 0 with reused=true, and its
-          // probe walls are the honest layout numbers — a same-JVM
-          // build-then-probe measures the build's page-cache eviction
-          // instead (r17 sf100: twin probes read COLD at ~flat-key walls
-          // right after the 1172 s build)
-          val reused = queries.Relational.monthLayoutExists(sfDir)
-          val b0 = System.nanoTime()
-          queries.Relational.monthLineitem(spark, sfDir)
-          val buildS = (System.nanoTime() - b0) / 1e9
-          val dT = queryOnce("date_trunc_agg_partitioned")
-          val qT = queryOnce("q1_partitioned")
-          val sT = queryOnce("time_slice_quarter")
-          val dayT = queryOnce("time_slice_day")
-          // the events day layout rides the same leg: build cost
-          // reported, then the day-sliced sessionization probe
-          val eReused = queries.Relational.dayEventsLayoutExists(sfDir)
-          val e0 = System.nanoTime()
-          queries.Relational.dayEvents(spark, sfDir)
-          val eBuildS = (System.nanoTime() - e0) / 1e9
-          val sgT = queryOnce("session_gap_day")
-          partitionedOnepass = s""","partitioned":{"build_s":$buildS,""" +
-            s""""reused":$reused,""" +
-            s""""date_trunc_agg_partitioned_s":$dT,"q1_partitioned_s":$qT,""" +
-            s""""time_slice_quarter_s":$sT,"time_slice_day_s":$dayT,""" +
-            s""""events_build_s":$eBuildS,"events_reused":$eReused,""" +
-            s""""session_gap_day_s":$sgT}"""
-        } catch {
-          case e: Throwable =>
-            failed += "date_trunc_agg_partitioned"
-            System.err.println(s"[bench] onepass partitioned FAILED: ${e.getMessage}")
-        }
-      }
-      // Persisted-SigIndex probe leg (r19, verdict #6): the production
-      // batch-arrival shape next to minhash_near_dup's full-corpus
-      // number. The index over the accumulated corpus (doc_id below the
-      // 90th-percentile cut) is DURABLE — same fingerprinted-layout
-      // contract as the bucketed/partitioned legs, so a warm run skips
-      // the corpus signature pass entirely (build_s ≈ 0, reused: true) —
-      // and the timed probe computes the 10% batch's signatures, reads
-      // the index pruned to the batch's own (band, part) partitions
-      // (pruned_scan_ok pins the literal PartitionFilters at scale),
-      // and runs the collide verdict. Corpus TEXT is never read.
-      var sigIndexOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_SIGINDEX", "1") == "1" &&
-          keep("sigindex_probe")) {
-        coldGroup("sigindex")
-        try {
-          import graft.queries.TextOps
-          import graft.sources.SigIndex
-          import org.apache.spark.sql.functions.col
-          val docs = Tables.t(spark, sfDir, "documents")
-          val (root, cut) = SigIndex.benchRoot(spark, sfDir)
-          val (reused, buildS) = SigIndex.ensureBenchIndex(spark, sfDir)
-          val pt0 = System.nanoTime()
-          // batch signatures once (localCheckpoint: banded keys + the
-          // verdict probe both consume them; recomputing the minhash
-          // fold per consumer would double the timed work)
-          val batchSigs = TextOps.nearDupSigs(docs.filter(col("doc_id") >= cut))
-            .localCheckpoint(true)
-          val batchBanded = TextOps.nearDupBand(batchSigs)
-          val keys = SigIndex.probeKeys(batchBanded)
-          val idx = SigIndex.prunedRead(spark, root.toString, keys)
-            .withColumnRenamed("sig", "idx_sig")
-          val nCollided = TextOps.nearDupCollidedIds(
-            batchSigs.select("doc_id", "sig"), idx).count()
-          val probeS = (System.nanoTime() - pt0) / 1e9
-          val nBatch = batchSigs.count()
-          val prunedOk = "PartitionFilters: \\[[^\\]]*band".r
-            .findFirstIn(idx.queryExecution.executedPlan.toString).isDefined
-          if (!prunedOk) {
-            failed += "sigindex_probe"
-            System.err.println(
-              "[bench] sigindex probe FLAG: partition pruning not in scan")
-          }
-          // Band-sparse small-batch probe (r19 verdict #4): the 10%
-          // batch above bands into every (band, part) partition on the
-          // synthetic corpus (512/512 — the pruning mechanism is pinned
-          // but inert), so this twin probes what pruning is FOR: a
-          // micro-batch of 16 arriving docs whose ≤128 banded keys list
-          // a fraction of the 512 partitions. Reported against an
-          // UNPRUNED twin of the same verdict (full index scan, no IN
-          // filter) — listed-vs-total partitions plus both walls, and a
-          // flag if the two verdicts ever disagree (pruning must never
-          // change the answer).
-          val smallDocs = docs
-            .filter(col("doc_id") >= cut && col("doc_id") < cut + 16)
-          val st0 = System.nanoTime()
-          val smallSigs = TextOps.nearDupSigs(smallDocs).localCheckpoint(true)
-          val smallBanded = TextOps.nearDupBand(smallSigs)
-          val sKeys = SigIndex.probeKeys(smallBanded)
-          val sIdx = SigIndex.prunedRead(spark, root.toString, sKeys)
-            .withColumnRenamed("sig", "idx_sig")
-          val sCollided = TextOps.nearDupCollidedIds(
-            smallSigs.select("doc_id", "sig"), sIdx).count()
-          val sPrunedS = (System.nanoTime() - st0) / 1e9
-          val su0 = System.nanoTime()
-          val uIdx = SigIndex.read(spark, root.toString)
-            .withColumnRenamed("sig", "idx_sig")
-          val uCollided = TextOps.nearDupCollidedIds(
-            smallSigs.select("doc_id", "sig"), uIdx).count()
-          val sUnprunedS = (System.nanoTime() - su0) / 1e9
-          if (sCollided != uCollided) {
-            failed += "sigindex_probe"
-            System.err.println(s"[bench] sigindex small-batch FLAG: pruned " +
-              s"verdict $sCollided != unpruned $uCollided")
-          }
-          sigIndexOnepass = s""","sigindex":{"build_s":$buildS,""" +
-            s""""reused":$reused,"probe_s":$probeS,"batch_docs":$nBatch,""" +
-            s""""n_collided":$nCollided,"probe_partitions":${keys.length},""" +
-            s""""pruned_scan_ok":$prunedOk,"small_batch":{"batch_docs":16,""" +
-            s""""probe_partitions":${sKeys.length},"total_partitions":512,""" +
-            s""""pruned_probe_s":$sPrunedS,"unpruned_probe_s":$sUnprunedS,""" +
-            s""""n_collided":$sCollided,"verdict_equal":${sCollided == uCollided}}}"""
-        } catch {
-          case e: Throwable =>
-            failed += "sigindex_probe"
-            System.err.println(s"[bench] onepass sigindex FAILED: ${e.getMessage}")
-        }
-      }
-      // Stored-index IVF-PQ leg (r19): the ANN serving-path number at
-      // scale — the durable index (codes 4 B/vector + cell id) is built
-      // once per corpus fingerprint; the timed probe reads the index
-      // relations, ADCs the probed cells' packed codes, and fetches
-      // only the 200 shortlisted float payloads (pushed vec_id IN).
-      // codes_mb is the measured at-rest index size — the BASELINE.md
-      // memory-table claim as an artifact row.
-      var pqIndexOnepass = ""
-      if (sys.env.getOrElse("SPARK_GRAFT_PQINDEX", "1") == "1" &&
-          keep("pqindex_probe")) {
-        coldGroup("pqindex")
-        try {
-          import graft.queries.Similarity
-          val reused = Similarity.pqIndexExists(sfDir)
-          val bt0 = System.nanoTime()
-          val root = Similarity.ensurePqIndex(spark, sfDir)
-          val buildS = (System.nanoTime() - bt0) / 1e9
-          def dirMb(d: java.io.File): Double =
-            Option(d.listFiles()).getOrElse(Array.empty)
-              .map(f => if (f.isFile) f.length else 0L).sum / 1e6
-          val codesMb = dirMb(new java.io.File(root, "codes"))
-          val pt0 = System.nanoTime()
-          val top = qs("ivf_pq_probe")(spark, sfDir).collect()
-          val probeS = (System.nanoTime() - pt0) / 1e9
-          if (top.length != 10) {
-            failed += "pqindex_probe"
-            System.err.println(s"[bench] pqindex probe FLAG: ${top.length} rows")
-          }
-          // Incremental-append datapoint (r19 verdict #6): the marginal
-          // cost of adding the newest 10% of vectors to the FROZEN
-          // index — encode + cell-assign + parquet write of only the
-          // new codes (zero corpus re-reads, zero index rewrites).
-          // Writes land in a throwaway dir so the durable index stays
-          // exactly its fingerprinted build.
-          val maxId = Tables.t(spark, sfDir, "embeddings")
-            .agg(org.apache.spark.sql.functions.max("vec_id")).head().getLong(0)
-          val aCut = maxId - maxId / 10
-          val newVecs = Similarity.normedForTest(spark, sfDir)
-            .filter(org.apache.spark.sql.functions.col("vec_id") >= aCut)
-          val aDir = new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_bench_pqappend_${spark.sparkContext.applicationId}")
-          queries.TmpCleanup.register(aDir.toString)
-          val at0 = System.nanoTime()
-          Similarity.appendPqCodes(spark, root, newVecs, aDir.toString)
-          val appendS = (System.nanoTime() - at0) / 1e9
-          val nAppended = spark.read.parquet(aDir.toString).count()
-          pqIndexOnepass = s""","pqindex":{"build_s":$buildS,""" +
-            s""""reused":$reused,"probe_s":$probeS,"codes_mb":$codesMb,""" +
-            s""""append_s":$appendS,"append_rows":$nAppended}"""
-        } catch {
-          case e: Throwable =>
-            failed += "pqindex_probe"
-            System.err.println(s"[bench] onepass pqindex FAILED: ${e.getMessage}")
-        }
-      }
-      val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
-      // Tensor smoke in the SAME artifact pass (r12, judge item #6 — one
-      // JSON instead of two driver invocations): peaks are re-reset so
-      // the tensor figure keeps its own-section semantics, comparable to
-      // the standalone-mode artifacts of earlier rounds.
-      var tensorOnepass = ""
-      if (sys.env.contains("SPARK_GRAFT_TENSOR_SMOKE")) {
-        heapPools.foreach(_.resetPeakUsage())
-        val (tj, twall, side, nBlocks) = tensorSmoke(spark, cpus, failed)
-        val tPeakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
-        tensorOnepass = s""","tensor_smoke":$tj,"tensor_smoke_wall":$twall,""" +
-          s""""tensor_side":$side,"tensor_blocks":$nBlocks,"tensor_peak_heap_mb":$tPeakMb"""
-      }
-      val qj = res.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val fj = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      val cqj = res.map { case (k, v) => "\"" + k + "\":" + r4(v) }
-        .mkString("{", ",", "}")
-      // Post-pass probe + contended flag: the pass is only
-      // self-adjudicating if the disk was healthy BOTH ends (r19 watched
-      // a window collapse mid-pass). The 400 MB/s band is the SKILL
-      // protocol's wait-for-a-better-window threshold; a sub-256 MB
-      // probe file (toy sf) can't saturate a real disk so it never
-      // raises the flag.
-      val postProbe = diskProbeAuto(sfDir)
-      if (postProbe._1 >= 0)
-        System.err.println(f"[bench] disk probe (post, ${postProbe._3}): " +
-          f"${postProbe._1}%.1f MB/s")
-      val diskJson = diskJsonFor((preProbe._1, preProbe._2),
-        (postProbe._1, postProbe._2), preProbe._3) + cpuProbeJson(cpus)
-      emit(
-        s"""{"metric":"onepass","value":$wall,"unit":"sec","queries":$qj,""" +
-          s""""failed":$fj$llmOnepass$extraOnepass$curOnepass$bucketedOnepass$partitionedOnepass$sigIndexOnepass$pqIndexOnepass$streamingOnepass$statefulOnepass$tensorOnepass$diskJson,"peak_heap_mb":$peakMb,"sf":"$sfDir"}""",
-        s"""{"metric":"onepass","value":${r4(wall)},"unit":"sec","queries":$cqj,""" +
-          s""""failed":$fj$diskJson,"peak_heap_mb":$peakMb,"sf":"$sfDir"}""")
-      spark.stop()
-      return
-    }
-
-    // Big-grid tensor one-pass smoke (round 11 — the tensor twin of the
-    // sf10 relational row): SPARK_GRAFT_TENSOR_SMOKE=<side> runs
-    // gaussian5 + label_stats + affine_u8 ONCE over a side² grid in
-    // 256×512 blocks (8192² default → 512 blocks, 64× the bench
-    // synthetic) and reports wall + peak heap. Nothing is persisted —
-    // every kernel streams from the Range-leaf synth — so peak heap
-    // tracks per-kernel operator state (halo slabs, CC edge tables,
-    // gather needs rows), the metadata classes that must grow with the
-    // BLOCK, not the grid. Flat heap 1024² → 8192² is the pass bar.
-    if (sys.env.contains("SPARK_GRAFT_TENSOR_SMOKE")) {
-      import scala.jdk.CollectionConverters._
-      val heapPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-        .asScala.filter(_.getType == java.lang.management.MemoryType.HEAP)
-      heapPools.foreach(_.resetPeakUsage())
-      val (qj, wall, side, nBlocks) = tensorSmoke(spark, cpus, failed)
-      val peakMb = heapPools.map(_.getPeakUsage.getUsed).sum / (1024L * 1024L)
-      val fj = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-      println(s"""{"metric":"tensor_onepass","value":$wall,"unit":"sec","queries":$qj,""" +
-        s""""failed":$fj,"peak_heap_mb":$peakMb,"side":$side,"blocks":$nBlocks}""")
-      spark.stop()
-      return
-    }
-
-    /** One full measurement pass. Floor probes are INTERLEAVED between
-      * query groups (before, every 4 queries, after) so a load spike that
-      * inflates the queries inflates the floor samples too — the round-7
-      * artifact (queries timed under contention, floor timed after it had
-      * passed) recorded a 35× phantom regression precisely because the
-      * floor ran once, at the end. */
-    def runPass(): (Seq[(String, Double)], Seq[Double]) = {
-      val floors = scala.collection.mutable.ArrayBuffer(floorOnce())
-      val res = headline.filter(qs.contains).zipWithIndex.map { case (name, i) =>
-        (1 to warmups).foreach(_ => queryOnce(name))
-        val t = queryMedian3(name)
-        if ((i + 1) % 4 == 0) floors += floorOnce()
-        name -> t
-      }
-      floors += floorOnce()
-      (res, floors.toSeq)
-    }
-
-    /** Per-query spike guard: the floor guard catches SUSTAINED
-      * contention, not a transient spike that poisons one query's three
-      * timed runs while the interleaved floor stays clean (observed: one
-      * 4.7 s q3 median against its 0.5–0.9 s band). A query whose median
-      * exceeds 5× the pass's own per-query median gets ONE fresh
-      * median-of-3, and the fresh median is kept UNCONDITIONALLY — a
-      * min(old, new) would be a one-sided filter that can only lower the
-      * reported total, a bias the DuckDB baseline protocol (one warm-up,
-      * median of 3, no re-probe) does not share. A genuine regression
-      * reproduces in the re-run and is reported at its re-run value. */
-    def reprobeSpikes(results: Seq[(String, Double)]): Seq[(String, Double)] = {
-      val passMed = median(results.map(_._2))
-      results.map { case (name, t) =>
-        if (t > 5 * math.max(passMed, 0.05)) {
-          val again = queryMedian3(name)
-          System.err.println(f"[bench] $name spike $t%.3f s -> re-measured $again%.3f s (kept)")
-          name -> again
-        } else name -> t
+        // the LAST progress entry is always within retention
+        val (stateRows, stateMb) = stateTotals(stateQ.recentProgress.toSeq)
+        Obj("streaming_stateful" -> Obj("rows" -> ingested, "rows_expected" -> nDocs,
+          "batches" -> batchesAcc.get(), "wall_s" -> wall,
+          "rows_per_s" -> ingested / math.max(wall, 1e-9), "state_rows" -> stateRows,
+          "state_mem_mb" -> stateMb, "state_width" -> cpus))
       }
     }
 
-    def median(xs: Seq[Double]): Double = {
-      val s = xs.sorted; val n = s.length
-      if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
-    }
-
-    // Contention guard: a healthy idle-machine floor at local[32] has been
-    // 0.05–0.15 s/query across rounds 2–7. If the interleaved floor median
-    // exceeds 3× the reference the pass was contended — retry (something
-    // else is hammering the box; a retry is cheaper than shipping a
-    // garbage artifact) and flag the line if it never clears.
-    val floorRef = sys.env.getOrElse("SPARK_GRAFT_FLOOR_REF", "0.15").toDouble
-    // Floor-IQR trip (r14 judge): the r14 pass sailed under the median
-    // test while a fresh-boot environment inflated the floor UNIFORMLY
-    // 1.6× with 5.6× the spread (iqr 0.0585 vs a healthy 0.0105) — a
-    // noisy pass must flag ITSELF even when its median stays in band.
-    // Healthy idle iqr has been ~0.01 s; 0.04 s of spread across ~9
-    // interleaved probes means the machine changed speed mid-pass.
-    val iqrRef = sys.env.getOrElse("SPARK_GRAFT_FLOOR_IQR_REF", "0.04").toDouble
-    def iqr(xs: Seq[Double]): Double = {
-      val s = xs.sorted; s((s.length * 3) / 4) - s(s.length / 4)
-    }
-    val maxAttempts = sys.env.getOrElse("SPARK_GRAFT_BENCH_ATTEMPTS", "3").toInt
-    // Disk self-adjudication for the default (driver-run) mode too
-    // (r20): the CPU floor probe can't see a collapsed disk window, and
-    // warm walls still pay it through shuffle/spill writes. O_DIRECT —
-    // cache-neutral, so the warm pass stays warm.
-    val preDiskProbe = diskProbeDirect(sfDir)
-    if (preDiskProbe._1 >= 0)
-      System.err.println(f"[bench] disk probe (pre, o_direct): " +
-        f"${preDiskProbe._1}%.1f MB/s over ${preDiskProbe._2 / 1e6}%.0f MB")
-    (1 to warmups).foreach(_ => floorOnce())
-    var attempt = 0
-    var best: (Seq[(String, Double)], Seq[Double]) = null
-    var bestFloor = Double.MaxValue
-    var contended = true
-    while (attempt < maxAttempts && contended) {
-      attempt += 1
-      val pass = runPass()
-      val fm = median(pass._2)
-      if (fm < bestFloor) { bestFloor = fm; best = pass }
-      val fIqr = iqr(best._2)
-      contended = bestFloor > 3 * floorRef || fIqr > iqrRef
-      if (contended)
-        System.err.println(f"[bench] attempt $attempt contended: floor " +
-          f"median $fm%.3f s (limit ${3 * floorRef}%.2f) / best-pass iqr " +
-          f"$fIqr%.3f s (limit $iqrRef%.2f)")
-    }
-    val (rawResults, floorSamples) = best
-    val results = reprobeSpikes(rawResults)
-
-    // -------------------------------- group-level contention guard
-    // r15 verdict #8: the headline artifact recorded machine noise in
-    // the curation group that its own quiet re-pass disproved — the
-    // main pass's floor verdict cannot cover groups that run minutes
-    // later. Each group now interleaves its OWN floor probes and
-    // retries on a contended floor (lowest-floor pass kept), so the
-    // shipped group total IS the quiet number — one unambiguous
-    // continuity figure per round. Contention test is the floor MEDIAN
-    // only, unlike the main pass: group floor probes sit right after
-    // multi-second GC-churning keys (minhash, substring dedup), so a
-    // single probe spiking on a collection pause is the NORMAL quiet
-    // state here and the IQR would flag forever; the median is robust
-    // to those spikes and still moves when the machine is genuinely
-    // busy. The IQR ships in the JSON for forensics, unjudged.
-    def guardedGroup(tag: String, names: Seq[String])
-        : (Seq[(String, Double)], Double, Double, Boolean, Int) = {
-      def pass(): (Seq[(String, Double)], Seq[Double]) = {
-        val floors = scala.collection.mutable.ArrayBuffer(floorOnce())
-        val res = names.zipWithIndex.map { case (name, i) =>
-          (1 to warmups).foreach(_ => queryOnce(name))
-          val t = queryMedian3(name)
-          if ((i + 1) % 4 == 0) floors += floorOnce()
-          name -> t
-        }
-        floors += floorOnce()
-        (res, floors.toSeq)
+    /** Persisted-SigIndex probe leg (r19 verdict #6): the production
+      * batch-arrival shape next to minhash_near_dup's full-corpus number.
+      * The index over the accumulated corpus (doc_id below the
+      * 90th-percentile cut) is DURABLE (a warm run skips the corpus
+      * signature pass: build_s ≈ 0, reused: true); the timed probe
+      * computes the 10% batch's signatures, reads the index pruned to the
+      * batch's own (band, part) partitions (pruned_scan_ok pins the
+      * literal PartitionFilters at scale), and runs the collide verdict.
+      * Corpus TEXT is never read. */
+    private def sigIndex(): Obj = {
+      import graft.queries.TextOps
+      import graft.sources.SigIndex
+      val docs = Tables.t(spark, sfDir, "documents")
+      val (root, cut) = SigIndex.benchRoot(spark, sfDir)
+      val (reused, buildS) = SigIndex.ensureBenchIndex(spark, sfDir)
+      // batch signatures once (localCheckpoint: banded keys + the verdict
+      // both consume them; recomputing the minhash fold per consumer
+      // would double the timed work)
+      def probe(batch: DataFrame) = {
+        val sigs = TextOps.nearDupSigs(batch).localCheckpoint(true)
+        val keys = SigIndex.probeKeys(TextOps.nearDupBand(sigs))
+        val idx = SigIndex.prunedRead(spark, root.toString, keys)
+          .withColumnRenamed("sig", "idx_sig")
+        (sigs, keys, idx, TextOps.nearDupCollidedIds(sigs.select("doc_id", "sig"), idx).count())
       }
-      var a = 0
-      var best: (Seq[(String, Double)], Seq[Double]) = null
-      var bestFloor = Double.MaxValue
-      var cont = true
-      while (a < maxAttempts && cont) {
-        a += 1
-        val p = pass()
-        val fm = median(p._2)
-        if (fm < bestFloor) { bestFloor = fm; best = p }
-        cont = bestFloor > 3 * floorRef
-        if (cont) System.err.println(
-          f"[bench] $tag attempt $a contended: floor median $fm%.3f s " +
-            f"(limit ${3 * floorRef}%.2f)")
+      val ((batchSigs, keys, idx, nCollided), probeS) =
+        timed(probe(docs.filter(col("doc_id") >= cut)))
+      val nBatch = batchSigs.count()
+      val prunedOk = "PartitionFilters: \\[[^\\]]*band".r
+        .findFirstIn(idx.queryExecution.executedPlan.toString).isDefined
+      if (!prunedOk) {
+        failed += "sigindex_probe"
+        System.err.println("[bench] sigindex probe FLAG: partition pruning not in scan")
       }
-      (reprobeSpikes(best._1), bestFloor, iqr(best._2), cont, a)
-    }
-
-    // ------------------------------------------------ LLM-pipeline group
-    // Same per-query protocol as the main pass (warm-ups then median of
-    // 3, spike re-probe), separate total so the 16-key relational
-    // continuity artifact is untouched.
-    val llmOn = sys.env.getOrElse("SPARK_GRAFT_LLM", "1") == "1"
-    var llmJson = ""
-    var compactTotals = ""
-    if (llmOn) {
-      val (llm, lFloor, lIqr, lCont, lAtt) =
-        guardedGroup("llm", llmHeadline.filter(qs.contains))
-      val lj = llm.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      llmJson = s""","llm":$lj,"llm_total":${llm.map(_._2).sum},""" +
-        s""""llm_floor":$lFloor,"llm_floor_iqr":$lIqr,""" +
-        s""""llm_contended":$lCont,"llm_attempts":$lAtt"""
-      compactTotals += s""","llm_total":${r4(llm.map(_._2).sum)}"""
-    }
-
-    // ------------------------------------------------ curation group
-    // The round-12 data-curation additions (exact-substring dedup, URL
-    // canonicalization, Gopher/C4 quality rules, unigram-LM scoring) —
-    // same protocol as the LLM group, own total so neither band moves.
-    val curOn = sys.env.getOrElse("SPARK_GRAFT_CURATION", "1") == "1"
-    var curJson = ""
-    if (curOn) {
-      val (cur, cFloor, cIqr, cCont, cAtt) =
-        guardedGroup("curation", curationHeadline.filter(qs.contains))
-      val cj = cur.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      curJson = s""","curation":$cj,"curation_total":${cur.map(_._2).sum},""" +
-        s""""curation_floor":$cFloor,"curation_floor_iqr":$cIqr,""" +
-        s""""curation_contended":$cCont,"curation_attempts":$cAtt"""
-      compactTotals += s""","curation_total":${r4(cur.map(_._2).sum)}"""
-    }
-
-    // --------------------------- heavy hitters at HIGH cardinality
-    // r12 verdict #5: the MG candidates+verify claim ("the naive plan's
-    // full-cardinality term shuffle is what dies at web scale") was
-    // structural only — the sf fixture has a ~50-term vocabulary, where
-    // naive GROUP BY trivially wins. This leg generates a deterministic
-    // zipf-ish stream INSIDE the query (spark.range + md5; no fixture
-    // file, identical generator SQL in the DuckDB twin): 50% of rows
-    // spread over 16 hot tokens (~3.1% each, all above the 2%
-    // threshold), 50% unique md5 tokens — at the default 32M rows that
-    // is ~16M distinct terms. Both plans must return the SAME 16 terms;
-    // the artifact rows are the medians of 3 after 1 warm-up.
-    var hhJson = ""
-    if (sys.env.get("SPARK_GRAFT_HH").map(_ == "1").getOrElse(curOn)) {
-      try {
-        graft.functions.GraftExtensions.install(spark)
-        // default 32M: at 8M the naive GROUP BY's wall is bistable
-        // (0.5–3 s depending on shuffle-buffer warmth — the whole
-        // shuffle intermittently stays in memory), while at 32M the
-        // bounded-vs-full-shuffle gap is robust in any JVM state
-        val n = sys.env.getOrElse("SPARK_GRAFT_HH_ROWS", "32000000").toLong
-        def tokens = spark.range(n).selectExpr(
-          // (id div 4) % 16 is uniform over the id % 4 < 2 subset (the
-          // naive id % 16 only reaches 8 residues there)
-          "IF(id % 4 < 2, concat('hot_', (id div 4) % 16), " +
-            "concat('r_', md5(cast(id AS string)))) AS tok")
-        def mgDf = {
-          val tok = tokens
-          val mg = tok.agg(org.apache.spark.sql.functions.expr("misra_gries(tok)").as("s"))
-            .select(org.apache.spark.sql.functions.col("s.n").as("n"),
-              org.apache.spark.sql.functions.explode(
-                org.apache.spark.sql.functions.col("s.terms")).as("tok"))
-          tok.join(org.apache.spark.sql.functions.broadcast(mg), "tok")
-            .groupBy("tok", "n")
-            .agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.lit(1)).as("cnt"))
-            .filter(org.apache.spark.sql.functions.col("cnt").cast("double")
-              >= org.apache.spark.sql.functions.col("n").cast("double") * 0.02)
-            .select("tok")
-        }
-        def naiveDf = tokens.groupBy("tok")
-          .agg(org.apache.spark.sql.functions.count(
-            org.apache.spark.sql.functions.lit(1)).as("cnt"))
-          .filter(org.apache.spark.sql.functions.col("cnt") >= n * 0.02)
-          .select("tok")
-        // equal answers, once (untimed)
-        val mgTerms = mgDf.collect().map(_.getString(0)).toSet
-        val nvTerms = naiveDf.collect().map(_.getString(0)).toSet
-        require(mgTerms == nvTerms && mgTerms.size == 16,
-          s"hh_highcard answers diverged: mg=${mgTerms.size} naive=${nvTerms.size}")
-        def time(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def med3(f: => Unit): Double =
-          Seq(time(f), time(f), time(f)).sorted.apply(1)
-        // SHUFFLE BYTES are the deterministic figure (wall-clock can't
-        // carry the claim on one box: with local in-memory shuffle and
-        // compression off, the naive plan's wall is bistable — the OS
-        // absorbs the exchange — while at 100 TB the exchange crosses a
-        // NETWORK; bytes moved per plan is exactly what changes there).
-        // Collected via a task-metrics listener; one settle pause after
-        // each run because the listener bus is async.
-        val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-        spark.sparkContext.addSparkListener(listener)
-        def shuffled(f: => Unit): Long = {
-          GraftSession.drainListenerBus(spark); shuffleBytes.set(0)
-          f
-          GraftSession.drainListenerBus(spark); shuffleBytes.get()
-        }
-        try {
-          val mgS = med3 { mgDf.count(): Unit }
-          val nvS = med3 { naiveDf.count(): Unit }
-          val mgBytes = shuffled { mgDf.count(): Unit }
-          val nvBytes = shuffled { naiveDf.count(): Unit }
-          // record-and-flag, not require (r14 ADVICE): the listener is
-          // async best-effort, so a metrics hiccup must not abort the
-          // whole bench artifact — the claim lands in the JSON where
-          // the judge reads it either way
-          val mgBounded = mgBytes * 10 < nvBytes
-          if (!mgBounded) System.err.println(
-            s"[bench] hh_highcard FLAG: MG shuffled $mgBytes B — not an " +
-              s"order of magnitude under the naive plan's $nvBytes B")
-          // generation-only baseline: both plans embed the md5 stream
-          // generator, so the OPERATOR cost is (plan − gen). MG reads the
-          // stream twice (summary + verify), naive once — so MG's operator
-          // cost ≈ mg_s − 2·gen_s, naive's ≈ naive_s − gen_s.
-          val genS = med3 {
-            tokens.agg(org.apache.spark.sql.functions.count(
-              org.apache.spark.sql.functions.col("tok"))).collect(): Unit
-          }
-          hhJson = s""","hh_highcard":{"rows":$n,"distinct_approx":${n / 2},""" +
-            s""""gen_s":$genS,"mg_s":$mgS,"naive_groupby_s":$nvS,""" +
-            s""""mg_shuffle_mb":${mgBytes / 1e6},""" +
-            s""""naive_shuffle_mb":${nvBytes / 1e6},""" +
-            s""""mg_bounded_buffer_ok":$mgBounded}"""
-        } finally spark.sparkContext.removeSparkListener(listener)
-      } catch {
-        case e: Throwable =>
-          failed += "hh_highcard"
-          System.err.println(s"[bench] hh_highcard FAILED: ${e.getMessage}")
+      // Band-sparse small-batch probe (r19 verdict #4): the 10% batch
+      // above bands into every (band, part) partition on the synthetic
+      // corpus (the pruning mechanism is pinned but inert), so this twin
+      // probes what pruning is FOR: 16 arriving docs whose ≤128 banded
+      // keys list a fraction of the 512 partitions, against an UNPRUNED
+      // twin of the same verdict — pruning must never change the answer.
+      val ((smallSigs, sKeys, _, sCollided), sPrunedS) = timed(probe(docs
+        .filter(col("doc_id") >= cut && col("doc_id") < cut + 16)))
+      val (uCollided, sUnprunedS) = timed(TextOps.nearDupCollidedIds(
+        smallSigs.select("doc_id", "sig"),
+        SigIndex.read(spark, root.toString).withColumnRenamed("sig", "idx_sig")).count())
+      if (sCollided != uCollided) {
+        failed += "sigindex_probe"
+        System.err.println(s"[bench] sigindex small-batch FLAG: pruned " +
+          s"verdict $sCollided != unpruned $uCollided")
       }
+      Obj("sigindex" -> Obj("build_s" -> buildS, "reused" -> reused, "probe_s" -> probeS,
+        "batch_docs" -> nBatch, "n_collided" -> nCollided, "probe_partitions" -> keys.length,
+        "pruned_scan_ok" -> prunedOk, "small_batch" -> Obj("batch_docs" -> 16,
+          "probe_partitions" -> sKeys.length, "total_partitions" -> 512,
+          "pruned_probe_s" -> sPrunedS, "unpruned_probe_s" -> sUnprunedS,
+          "n_collided" -> sCollided, "verdict_equal" -> (sCollided == uCollided))))
     }
 
-    // --------------------------- bucketed-lake layout (q3 twin)
-    // r15 verdict #2: q3's sf100 wall was pure shuffle-spill disk I/O on
-    // an optimal plan — the fix is STORAGE, not the plan. This leg pays
-    // the one-time bucketed+sorted layout (build_s, reported, never
-    // hidden), then times q3 over the bucketed facts next to the flat
-    // run, and records SHUFFLE BYTES for both (same listener rationale
-    // as hh_highcard: on one box the OS absorbs the exchange, at 100 TB
-    // it crosses a network — bytes moved is the portable figure).
-    var bucketedJson = ""
-    if (sys.env.getOrElse("SPARK_GRAFT_BUCKETED", "1") == "1") {
-      try {
-        val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-        val listener = new org.apache.spark.scheduler.SparkListener {
-          override def onTaskEnd(
-              te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-            val m = te.taskMetrics
-            if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def med3(f: => Unit): Double =
-          Seq(timed(f), timed(f), timed(f)).sorted.apply(1)
-        def shuffled(f: => Unit): Long = {
-          GraftSession.drainListenerBus(spark); shuffleBytes.set(0)
-          f
-          GraftSession.drainListenerBus(spark); shuffleBytes.get()
-        }
-        // durable layout (r18, verdict #3): build_s is the real write on
-        // the first-ever run and DDL replay (≈0) with reused=true after
-        val reused = queries.Relational.bucketedLayoutExists(sfDir)
-        val buildS = timed { queries.Relational.bucketedFacts(spark, sfDir); () }
-        val bDf = qs("q3_bucketed")(spark, sfDir)
-        val fDf = qs("q3_top_orders")(spark, sfDir)
-        bDf.count(); fDf.count() // warm
-        spark.sparkContext.addSparkListener(listener)
-        try {
-          val bS = med3 { bDf.count(): Unit }
-          val fS = med3 { fDf.count(): Unit }
-          val bBytes = shuffled { bDf.count(): Unit }
-          val fBytes = shuffled { fDf.count(): Unit }
-          // the structural claim, checked on the executed plan (bytes can
-          // both read 0 at toy sf where every join broadcasts): a
-          // bucket-aligned q3 needs NO hash exchange anywhere — the join
-          // rides the bucketing and the orderkey group-by reuses it
-          val noExchange = !bDf.queryExecution.executedPlan.toString
-            .contains("Exchange hashpartitioning")
-          if (!noExchange) System.err.println(
-            "[bench] q3_bucketed FLAG: hash exchange survived the bucketed layout")
-          bucketedJson = s""","bucketed":{"build_s":$buildS,"reused":$reused,""" +
-            s""""q3_bucketed_s":$bS,""" +
-            s""""q3_flat_s":$fS,"q3_bucketed_shuffle_mb":${bBytes / 1e6},""" +
-            s""""q3_flat_shuffle_mb":${fBytes / 1e6},"no_exchange_ok":$noExchange}"""
-        } finally spark.sparkContext.removeSparkListener(listener)
-      } catch {
-        case e: Throwable =>
-          failed += "q3_bucketed_bench"
-          System.err.println(s"[bench] bucketed leg FAILED: ${e.getMessage}")
+    /** Stored-index IVF-PQ leg (r19): the ANN serving-path number at scale
+      * — the durable index (codes 4 B/vector + cell id) is built once per
+      * corpus fingerprint; the timed probe reads the index relations, ADCs
+      * the probed cells' packed codes, and fetches only the 200
+      * shortlisted float payloads. codes_mb is the measured at-rest index
+      * size — the BASELINE.md memory-table claim as an artifact row. */
+    private def pqIndex(): Obj = {
+      import graft.queries.Similarity
+      val reused = Similarity.pqIndexExists(sfDir)
+      val (root, buildS) = timed(Similarity.ensurePqIndex(spark, sfDir))
+      val codesMb = Option(new java.io.File(root, "codes").listFiles()).getOrElse(Array.empty)
+        .map(f => if (f.isFile) f.length else 0L).sum / 1e6
+      val (top, probeS) = timed(df("ivf_pq_probe").collect())
+      if (top.length != 10) {
+        failed += "pqindex_probe"
+        System.err.println(s"[bench] pqindex probe FLAG: ${top.length} rows")
       }
+      // Incremental-append datapoint (r19 verdict #6): the marginal cost of
+      // adding the newest 10% of vectors to the FROZEN index — encode +
+      // cell-assign + parquet write of only the new codes. Writes land in
+      // a throwaway dir so the durable index stays its fingerprinted build.
+      val maxId = Tables.t(spark, sfDir, "embeddings")
+        .agg(org.apache.spark.sql.functions.max("vec_id")).head().getLong(0)
+      val newVecs = Similarity.normedForTest(spark, sfDir)
+        .filter(col("vec_id") >= maxId - maxId / 10)
+      val aDir = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_bench_pqappend_${spark.sparkContext.applicationId}").toString
+      queries.TmpCleanup.register(aDir)
+      val appendS = once(Similarity.appendPqCodes(spark, root, newVecs, aDir))
+      Obj("pqindex" -> Obj("build_s" -> buildS, "reused" -> reused, "probe_s" -> probeS,
+        "codes_mb" -> codesMb, "append_s" -> appendS,
+        "append_rows" -> spark.read.parquet(aDir).count()))
     }
 
-    // ------------------- time-partitioned lake layout (the date twins)
-    // r17 (verdict #1): the time-axis analog of the bucketed leg — the
-    // month layout serves date_trunc's grouping key from directory
-    // metadata (no timestamp decode) and turns q1's shipdate cut into
-    // directory pruning. Build cost reported next to the probes, never
-    // hidden; the flat date_trunc_agg/q1 walls for comparison are in the
-    // headline group of the same artifact.
-    var partitionedJson = ""
-    if (sys.env.getOrElse("SPARK_GRAFT_PARTITIONED", "1") == "1") {
-      try {
-        def timed(f: => Unit): Double = {
-          val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-        }
-        def med3(f: => Unit): Double =
-          Seq(timed(f), timed(f), timed(f)).sorted.apply(1)
-        val reused = queries.Relational.monthLayoutExists(sfDir)
-        val b0 = System.nanoTime()
-        queries.Relational.monthLineitem(spark, sfDir)
-        val buildS = (System.nanoTime() - b0) / 1e9
-        val dDf = qs("date_trunc_agg_partitioned")(spark, sfDir)
-        val qDf = qs("q1_partitioned")(spark, sfDir)
-        val sDf = qs("time_slice_quarter")(spark, sfDir)
-        val dayDf = qs("time_slice_day")(spark, sfDir)
-        dDf.count(); qDf.count(); sDf.count(); dayDf.count() // warm
-        val dS = med3 { dDf.count(): Unit }
-        val q1S = med3 { qDf.count(): Unit }
-        val sS = med3 { sDf.count(): Unit }
-        val dayS = med3 { dayDf.count(): Unit }
-        // the events day layout rides the same leg
-        val eReused = queries.Relational.dayEventsLayoutExists(sfDir)
-        val e0 = System.nanoTime()
-        queries.Relational.dayEvents(spark, sfDir)
-        val eBuildS = (System.nanoTime() - e0) / 1e9
-        val sgDf = qs("session_gap_day")(spark, sfDir)
-        sgDf.count() // warm
-        val sgS = med3 { sgDf.count(): Unit }
-        // structural claim on the executed plan: the partitioned
-        // date_trunc scan must never decode the timestamp column
-        val noTs = !dDf.queryExecution.executedPlan.toString.contains("l_shipdate")
-        if (!noTs) System.err.println(
-          "[bench] date_trunc_agg_partitioned FLAG: timestamp column survived in the scan")
-        partitionedJson = s""","partitioned":{"build_s":$buildS,""" +
-          s""""reused":$reused,""" +
-          s""""date_trunc_agg_partitioned_s":$dS,"q1_partitioned_s":$q1S,""" +
-          s""""time_slice_quarter_s":$sS,"time_slice_day_s":$dayS,""" +
-          s""""events_build_s":$eBuildS,"events_reused":$eReused,""" +
-          s""""session_gap_day_s":$sgS,"no_ts_scan_ok":$noTs}"""
-      } catch {
-        case e: Throwable =>
-          failed += "partitioned_bench"
-          System.err.println(s"[bench] partitioned leg FAILED: ${e.getMessage}")
-      }
-    }
-
-    // ------------------------------------------------------ ANN group
-    // Wall + recall for the approximate top-k paths. Recall = overlap of
-    // the ANN top-10 vec_ids with the exact brute-force top-10 (the
-    // cosine_topk headline result) — 10 driver rows per key, no corpus
-    // collect. Same timing protocol as the main pass; rides its
-    // contention verdict like the LLM group.
-    val annOn = sys.env.getOrElse("SPARK_GRAFT_ANN", "1") == "1"
-    var annJson = ""
-    if (annOn && annHeadline.forall { case (n, _) => qs.contains(n) }) {
-      // recall collects are guarded like every other measurement path: a
-      // crashing ANN query must cost its own row (null recall + a failed
-      // entry), never the whole artifact
-      def topIds(name: String): Option[Set[Long]] =
-        try Some(qs(name)(spark, sfDir)
-          .select("vec_id").collect().map(_.getLong(0)).toSet)
-        catch {
-          case e: Throwable =>
-            failed += name
-            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-            None
-        }
-      val truth = topIds("cosine_topk")
-      val ann = annHeadline.map { case (name, _) =>
-        (1 to warmups).foreach(_ => queryOnce(name))
-        name -> queryMedian3(name)
-      }
-      // NO spike re-probe for this group: its walls are bimodal BY DESIGN
-      // (ivf's centroid pass is ~15× hyperplane's probe), so the
-      // group-median 5× test would fire on every healthy run and the
-      // detector would carry no signal. Per-key regressions are guarded
-      // by the BASELINE.md ann band (and the recall floors) instead.
-      val recalls: Seq[(String, Option[Double])] =
-        annHeadline.map { case (name, floor) =>
-          val r = for (t <- truth; ids <- topIds(name))
-            yield ids.intersect(t).size / math.max(t.size, 1).toDouble
-          r.filter(_ < floor).foreach { rv =>
-            failed += s"${name}_recall"
-            System.err.println(f"[bench] $name recall $rv%.2f below floor $floor%.2f")
-          }
-          name -> r
-        }
-      val aj = ann.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      val rj = recalls.map { case (k, v) =>
-        "\"" + k + "\":" + v.map(_.toString).getOrElse("null")
-      }.mkString("{", ",", "}")
-      annJson = s""","ann":$aj,"ann_total":${ann.map(_._2).sum},"ann_recall":$rj"""
-      compactTotals += s""","ann_total":${r4(ann.map(_._2).sum)}"""
-    }
-
-    // ---------------------------------------------- ingest (stage zero)
-    // WET decode throughput: the sf documents re-encoded ONCE (untimed
-    // fixture prep) as Common-Crawl-layout per-record-gzip shards, then
-    // the streamed WARC parse decodes every record — count + length-sum
-    // forces the full payload path. No DuckDB twin; the artifact rows
-    // are wall + raw MB + MB/s, band-tracked in BASELINE.md. At 100 TB
-    // this is the job's first stage, so its per-core throughput bounds
-    // the whole pipeline's admission rate.
-    val ingestOn = sys.env.getOrElse("SPARK_GRAFT_INGEST", "1") == "1"
-    var ingestJson = ""
-    if (ingestOn) {
-      try {
-        val docs = Tables.t(spark, sfDir, "documents")
-          .select("doc_id", "source", "text")
-          .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-        val nShards = 8
-        // One (write shards → median-of-3 timed decode) pass per record
-        // shape. Two shapes: the sf documents as-is (~300 B records —
-        // stresses per-member gzip setup, the Common Crawl worst case),
-        // and the same text tiled to ~5 KB records (the REAL crawl's
-        // median conversion-record size) — the honest parser-throughput
-        // number, separating per-member overhead from parse cost.
-        def wetLeg(tag: String, recs: Int => IndexedSeq[(String, String)]): String = {
-          val dir = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-            s"graft_bench_wet_${tag}_${math.abs(sfDir.hashCode)}")
-          if (java.nio.file.Files.exists(dir)) {
-            import scala.jdk.CollectionConverters._
-            java.nio.file.Files.walk(dir).iterator().asScala.toSeq.reverse
-              .foreach(java.nio.file.Files.delete)
-          }
-          java.nio.file.Files.createDirectories(dir)
-          var rawBytes = 0L
-          for (sh <- 0 until nShards) {
-            val rs = recs(sh)
-            rawBytes += rs.map(_._2.getBytes("UTF-8").length.toLong).sum
-            java.nio.file.Files.write(dir.resolve(f"wet_$sh%02d.warc.wet.gz"),
-              graft.sources.WarcSource.encodeWetGz(rs))
-          }
-          def once(): Double = {
-            val t0 = System.nanoTime()
-            graft.sources.WarcSource.readWet(spark, s"$dir/*.warc.wet.gz")
-              .filter(org.apache.spark.sql.functions.col("rec_type") === "conversion")
-              .agg(org.apache.spark.sql.functions.count(
-                  org.apache.spark.sql.functions.lit(1)),
-                org.apache.spark.sql.functions.sum(
-                  org.apache.spark.sql.functions.length(
-                    org.apache.spark.sql.functions.col("text"))))
-              .collect()
-            (System.nanoTime() - t0) / 1e9
-          }
-          once() // warm-up
-          val med = Seq(once(), once(), once()).sorted.apply(1)
-          val mb = rawBytes / 1e6
-          val prefix = if (tag == "sfdocs") "wet" else s"wet_$tag"
-          s""""${prefix}_decode_s":$med,"${prefix}_raw_mb":$mb,""" +
-            s""""${prefix}_mb_per_s":${mb / math.max(med, 1e-9)}"""
-        }
-        val sfLeg = wetLeg("sfdocs", sh =>
-          docs.filter(_._1 % nShards == sh).sortBy(_._1)
-            .map { case (id, src, text) => (s"https://example.com/$src/$id", text) }
-            .toIndexedSeq)
-        val leg5k = wetLeg("5k", sh =>
-          docs.filter(_._1 % nShards == sh).sortBy(_._1)
-            .map { case (id, src, text) =>
-              val b = new StringBuilder(5400)
-              var i = 0
-              while (b.length < 5000) { b.append(text).append(f"\nseg $id%d.$i%d\n"); i += 1 }
-              (s"https://example.com/$src/$id", b.toString)
-            }.toIndexedSeq)
-        ingestJson = s""","ingest":{$sfLeg,$leg5k}"""
-      } catch {
-        case e: Throwable =>
-          failed += "wet_ingest_bench"
-          System.err.println(s"[bench] wet ingest FAILED: ${e.getMessage}")
-      }
-    }
-
-    // ---------------------------------------------- tensor headline group
-    // (BASELINE.md "Tensor kernels"): four kernels over a deterministic
-    // 1024×1024 synthetic in 8 chunks (256×512) vs the SAME kernel over
-    // the single-block layout. No DuckDB twin exists for the tensor path,
-    // so the baseline is the no-halo single-block run: the multi/single
-    // ratio bounds the halo-exchange + merge tax (plus the win from 8-way
-    // parallelism — a ratio < 1 means the parallelism pays for the halo).
-    // Timing mirrors the relational group: one warm-up, median of 3,
-    // and — round 11 — the SAME floor/contention/spike machinery: floor
-    // probes interleave the kernel runs (tensor_floor / tensor_contended
-    // in the JSON), and a kernel whose multi/single ratio breaches the
-    // BASELINE.md ≤2 band gets ONE fresh re-measurement of BOTH layouts,
-    // kept unconditionally (a transient spike clears; a real regression
-    // reproduces and is reported at its re-run value). The round-10
-    // driver artifact recorded gaussian5 at ratio 3.35 with no way to
-    // tell contention from regression — this guard is the adjudicator.
-    // Shuffle width is lifted to the block count for this group — the
-    // relational width (1 at sf0.1) would serialize the 8-task exchange.
-    val tensorOn = sys.env.getOrElse("SPARK_GRAFT_TENSOR", "1") == "1"
-    var tensorJson = ""
-    if (tensorOn) {
+    /** Big-grid tensor smoke (round 11, merged into the one-pass artifact
+      * in r12): SPARK_GRAFT_TENSOR_SMOKE=<side> runs gaussian5 +
+      * label_stats + affine_u8 ONCE over a side² grid in 256×512 blocks
+      * (8192² default → 512 blocks), streaming from the Range-leaf synth.
+      * Nothing is persisted, so peak heap (re-reset here: its own
+      * section's figure) tracks per-kernel operator state (halo slabs, CC
+      * edge tables, gather needs rows), which must grow with the BLOCK,
+      * not the grid. Flat heap 1024² → 8192² is the pass bar. */
+    private def tensorSmoke(): Obj = withConf(spark.conf, shufflePartitions -> cpus.toString) {
       import graft.tensor._
-      val H = 1024; val W = 1024
-      def synth(chunk: Seq[Int], id: String) = synthBlocks(spark, H, W, chunk, id)
-      def force(ds: org.apache.spark.sql.Dataset[Block]): Unit = forceB(ds)
-      def forceT(ds: org.apache.spark.sql.Dataset[TBlock]): Unit = forceTB(ds)
-      def tOnce(f: => Unit): Double = {
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+      val side = sys.env("SPARK_GRAFT_TENSOR_SMOKE") match {
+        case "" | "1" => 8192
+        case v => v.toInt
       }
-      def tMed(f: => Unit): Double = {
-        f; Seq(tOnce(f), tOnce(f), tOnce(f)).sorted.apply(1)
-      }
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions",
-        math.min(cpus, 8).toString)
-      try {
-        val persistLvl = org.apache.spark.storage.StorageLevel.MEMORY_ONLY
-        def binarize(ds: org.apache.spark.sql.Dataset[Block]) = binarizeB(ds)
-        // Both layouts' inputs stay persisted for the whole group (≈25 MiB
-        // total) so a ratio-breach re-probe can re-run either side without
-        // rebuilding state.
-        val inputs = Seq("multi" -> Seq(256, 512), "single" -> Seq(1024, 1024))
-          .map { case (vname, chunk) =>
-            val base = synth(chunk, s"bench_$vname").persist(persistLvl)
-            force(base)
-            val u8 = TBlock.fromBlocks(base, DType.U8).persist(persistLvl)
-            forceT(u8)
-            val bin = binarize(base).persist(persistLvl)
-            force(bin)
-            vname -> ((base, u8, bin))
-          }.toMap
-        val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
-        val off = Array(0.5, -0.25)
-        val kernelNames = Seq(
-          "gaussian5", "uniform3_u8", "label_stats", "affine_shift", "affine_u8")
-        def runKernel(kname: String, vname: String): Unit = {
-          val (base, u8, bin) = inputs(vname)
-          kname match {
-            // σ=0.5, truncate=4 → radius 2: the 5×5 gaussian
-            case "gaussian5" =>
-              force(Filters.gaussianFilter(base, Seq(0.5, 0.5)))
-            case "uniform3_u8" =>
-              forceT(Filters.uniformFilterTyped(u8, Seq(3, 3), DType.F32))
-            case "label_stats" =>
-              val (lab, _) = Measure.label(bin, 2)
-              Measure.area(bin, lab, 2).count(); ()
-            case "affine_shift" =>
-              force(Interp.affineTransform(base, 2, m, off, order = 1))
-            // typed twin: the gather join ships 1 B/px uint8 instead of
-            // 8 B/px float64 — the r10 native-byte resampling path
-            case "affine_u8" =>
-              forceT(Interp.affineTransformTyped(u8, 2, m, off,
-                order = 1, outDtype = DType.F32))
-          }
-        }
-        // a crashing kernel must not discard the whole pass: record the
-        // failure into the CALLER's sink (same contract as queryOnce) and
-        // report None — a fast-failure elapsed is not kernel performance.
-        // The sink is per-pass, not the global `failed`, so a transient
-        // failure in a DISCARDED contended attempt doesn't permanently
-        // null the kernel in the kept pass; only the kept pass's sink
-        // (and the breach re-probes') merges into the artifact.
-        def measure(kname: String, vname: String,
-            sink: scala.collection.mutable.Set[String]): Option[Double] = {
-          val key = s"tensor_${kname}_$vname"
-          var ok = true
-          def once(): Unit = try runKernel(kname, vname) catch {
-            case e: Throwable =>
-              ok = false
-              System.err.println(s"[bench] $key FAILED: ${e.getMessage}")
-          }
-          val t = tMed(once())
-          if (ok) Some(t) else { sink += key; None }
-        }
-        // One guarded pass over the group: floor probes bracket each
-        // kernel pair so a load spike that inflates the kernels inflates
-        // the floor too (same rationale as runPass); whole-group retry on
-        // a contended floor, bounded by the shared attempt budget.
-        def tensorPass(): (Map[String, Option[Double]], Map[String, Option[Double]],
-            Seq[Double], Set[String]) = {
-          val floors = scala.collection.mutable.ArrayBuffer(floorOnce())
-          val passFailed = scala.collection.mutable.LinkedHashSet.empty[String]
-          val multi = scala.collection.mutable.LinkedHashMap.empty[String, Option[Double]]
-          val single = scala.collection.mutable.LinkedHashMap.empty[String, Option[Double]]
-          for (kname <- kernelNames) {
-            multi(kname) = measure(kname, "multi", passFailed)
-            single(kname) = measure(kname, "single", passFailed)
-            floors += floorOnce()
-          }
-          (scala.collection.immutable.ListMap(multi.toSeq: _*),
-            scala.collection.immutable.ListMap(single.toSeq: _*), floors.toSeq,
-            passFailed.toSet)
-        }
-        var tAttempt = 0
-        var tBest: (Map[String, Option[Double]], Map[String, Option[Double]],
-          Seq[Double], Set[String]) = null
-        var tBestFloor = Double.MaxValue
-        var tContended = true
-        while (tAttempt < maxAttempts && tContended) {
-          tAttempt += 1
-          val pass = tensorPass()
-          val fm = median(pass._3)
-          if (fm < tBestFloor) { tBestFloor = fm; tBest = pass }
-          tContended = tBestFloor > 3 * floorRef
-          if (tContended)
-            System.err.println(
-              f"[bench] tensor attempt $tAttempt contended: floor median $fm%.3f s > 3×$floorRef%.2f s")
-        }
-        var (tMulti, tSingle, tFloors) = (tBest._1, tBest._2, tBest._3)
-        failed ++= tBest._4
-        // Ratio-breach re-probe: BASELINE.md's band says multi/single ≤ 2
-        // for every kernel. A breach gets ONE fresh median-of-3 of BOTH
-        // layouts, kept unconditionally — mirrors reprobeSpikes' contract
-        // (no min(old,new) one-sided filter).
-        for (kname <- kernelNames) {
-          (tMulti(kname), tSingle(kname)) match {
-            case (Some(mt), Some(st)) if mt > 2 * math.max(st, 1e-9) =>
-              val m2 = measure(kname, "multi", failed)
-              val s2 = measure(kname, "single", failed)
-              System.err.println(
-                f"[bench] tensor $kname ratio ${mt / st}%.2f breach -> re-measured " +
-                  f"multi ${m2.getOrElse(-1.0)}%.3f s single ${s2.getOrElse(-1.0)}%.3f s (kept)")
-              tMulti = tMulti.updated(kname, m2)
-              tSingle = tSingle.updated(kname, s2)
-            case _ =>
-          }
-        }
-        inputs.values.foreach { case (b, u, n) =>
-          b.unpersist(); u.unpersist(); n.unpersist()
-        }
-        def grp(m: Map[String, Option[Double]]) =
-          m.map { case (k, v) => "\"" + k + "\":" + v.map(_.toString).getOrElse("null") }
-            .mkString("{", ",", "}")
-        val ratios: Map[String, Option[Double]] = tMulti.map { case (k, v) =>
-          k -> (for (mv <- v; sv <- tSingle(k)) yield mv / math.max(sv, 1e-9))
-        }
-        tensorJson = s""","tensor":${grp(tMulti)}""" +
-          s""","tensor_single":${grp(tSingle)}""" +
-          s""","tensor_ratio":${grp(ratios)}""" +
-          s""","tensor_floor":${median(tFloors)}""" +
-          s""","tensor_contended":$tContended,"tensor_attempts":$tAttempt"""
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      heapPools.foreach(_.resetPeakUsage())
+      val base = synthBlocks(spark, side, side, Seq(256, 512), "smoke")
+      val m = Array(Array(1.0, 0.0), Array(0.0, 1.0))
+      val off = Array(0.5, -0.25)
+      def kernel(name: String)(body: => Unit) =
+        name -> once(leg(s"tensor_smoke_$name")(body))
+      val (res, wall) = timed(Seq(
+        kernel("gaussian5")(forceB(Filters.gaussianFilter(base, Seq(0.5, 0.5)))),
+        kernel("label_stats") {
+          val bin = binarizeB(base)
+          val (lab, _) = Measure.label(bin, 2)
+          Measure.area(bin, lab, 2).count(); ()
+        },
+        kernel("affine_u8")(forceTB(Interp.affineTransformTyped(
+          TBlock.fromBlocks(base, DType.U8), 2, m, off, order = 1, outDtype = DType.F32)))))
+      Obj("tensor_smoke" -> Obj(res: _*), "tensor_smoke_wall" -> wall, "tensor_side" -> side,
+        "tensor_blocks" -> ((side + 255) / 256).toLong * ((side + 511) / 512),
+        "tensor_peak_heap_mb" -> peakHeapMb())
     }
-    val qjson = results.map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
-    val floorMed = median(floorSamples)
-    val fs = floorSamples.sorted
-    val floorIqr = fs((fs.length * 3) / 4) - fs(fs.length / 4)
-    val floorTotal = floorMed * results.size
-    // Floor-adjusted accounting (SURVEY §6): adjusted_total = total −
-    // floor_total estimates pure operator work, the quantity comparable to
-    // DuckDB's in-process total at toy scale. Both numbers are emitted;
-    // the raw total remains the headline "value" for continuity.
-    val adjusted = math.max(0.0, total - floorTotal)
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    val cq = results.map { case (k, v) => "\"" + k + "\":" + r4(v) }
-      .mkString("{", ",", "}")
-    val postDiskProbe = diskProbeDirect(sfDir)
-    if (postDiskProbe._1 >= 0)
-      System.err.println(f"[bench] disk probe (post, o_direct): " +
-        f"${postDiskProbe._1}%.1f MB/s")
-    val diskJson = diskJsonFor(preDiskProbe, postDiskProbe, "o_direct") +
-      cpuProbeJson(cpus)
-    emit(
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qjson,""" +
-        s""""failed":$failedJson,"floor_per_query":$floorMed,"floor_iqr":$floorIqr,""" +
-        s""""floor_total":$floorTotal,"adjusted_total":$adjusted,""" +
-        s""""contended":$contended,"attempts":$attempt$llmJson$curJson$hhJson$bucketedJson$partitionedJson$annJson$ingestJson$tensorJson$diskJson,"sf":"$sfDir"}""",
-      s"""{"metric":"total","value":${r4(total)},"unit":"sec","queries":$cq,""" +
-        s""""failed":$failedJson,"floor_per_query":${r4(floorMed)},""" +
-        s""""adjusted_total":${r4(adjusted)},""" +
-        s""""contended":$contended$compactTotals$diskJson,"sf":"$sfDir"}""")
-    spark.stop()
   }
 }

@@ -39,11 +39,8 @@ object Probe {
     val tag = s"${mode.toUpperCase}PROBE"
     def t(name: String)(f: => Unit): Unit = {
       spark.sparkContext.setJobDescription(s"${mode}probe: $name")
-      f // warm
-      val runs = (1 to 3).map { _ =>
-        val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-      }
-      println(f"$tag $name%-16s side=$side%5d median=${runs.sorted.apply(1)}%7.3f s")
+      val median = Timed.med3(f, warmups = 1)
+      println(f"$tag $name%-16s side=$side%5d median=$median%7.3f s")
     }
     if (mode == "stencil") {
       val bin = img.map(b => b.copy(data =

@@ -1,5 +1,4 @@
 package graft
-import java.util.concurrent.atomic.AtomicLong
 
 /** Per-query structural profiler (measurement tool, guide §1): runs named
   * query keys and reports wall seconds plus the DISPATCH/SHUFFLE shape —
@@ -11,34 +10,27 @@ import java.util.concurrent.atomic.AtomicLong
   * (`GraftSession.bench`) over Bench's warmed tables, so the shapes match
   * what Bench executes. */
 object Profile {
+  /** Untimed calls of each key before the timed rounds (C2 + layouts). */
+  private val warmups = 2
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val gs = GraftSession.bench(GraftSession.inputBytes(sfDir))
     val spark = gs.spark
-    val jobs = new AtomicLong; val stages = new AtomicLong
-    val tasks = new AtomicLong; val shuffleB = new AtomicLong
-    val jobDetail = sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")
-    val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet()
-        if (jobDetail) jobStartNs.put(e.jobId, System.nanoTime())
-      }
-      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-        if (jobDetail) {
+    val counter = new Timed.TaskCounter
+    spark.sparkContext.addSparkListener(counter)
+    if (sys.env.get("SPARK_GRAFT_PROFILE_JOBS").contains("1")) {
+      val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
+      spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobStartNs.put(e.jobId, System.nanoTime())
+        override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
           val t0 = jobStartNs.remove(e.jobId)
           if (t0 != 0L) System.err.println(
             f"  JOB ${e.jobId}%4d ${(System.nanoTime() - t0) / 1e9}%7.3f s")
         }
-      override def onStageCompleted(
-          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stages.incrementAndGet()
-      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        tasks.incrementAndGet()
-        val m = e.taskMetrics
-        if (m != null) shuffleB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      }
-    })
+      })
+    }
     // warm the tables like Bench does so scans hit the cache substitution
     gs.warmTables(sfDir)
     // one histogram sample per generated-class compile, driver and
@@ -46,26 +38,30 @@ object Profile {
     // missing the codegen cache on every call
     val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
     val qs = SparkEntry.queries
-    val warmups = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "2").toInt
-    for (name <- args) {
-      val fn = qs(name)
-      (1 to warmups).foreach(_ => fn(spark, sfDir).count()) // C2 + layouts
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
+    def run(name: String): Unit = { qs(name)(spark, sfDir).count(); () }
+    // Warm-ups and the three timed calls go round-robin over the keys, as
+    // an olap pass runs them: with several keys, the codegen cache (100
+    // entries) churns between a key's calls, which key-by-key runs hide.
+    // The counters bracket each key's second-round call; walls are the
+    // median of 3 (bench protocol).
+    (1 to warmups).foreach(_ => args.foreach(run))
+    val walls = args.map(_ => Array.fill(3)(0.0))
+    val counts = new Array[(Long, Long, Long, Long, Long)](args.length)
+    for (round <- 0 until 3; (name, i) <- args.zipWithIndex) {
+      if (round != 1) walls(i)(round) = Timed.once(run(name))
+      else {
+        var c0 = 0L
+        counter.around(spark) {
+          c0 = compiles.getCount
+          walls(i)(round) = Timed.once(run(name))
+        }
+        counts(i) = (counter.jobs.get, counter.stages.get, counter.tasks.get,
+          counter.shuffleBytes.get, compiles.getCount - c0)
       }
-      // counters bracket ONE run (the second timed); walls are the
-      // median of 3 (bench protocol)
-      val w0 = once()
-      GraftSession.drainListenerBus(spark)
-      jobs.set(0); stages.set(0); tasks.set(0); shuffleB.set(0)
-      val c0 = compiles.getCount
-      val w1 = once()
-      GraftSession.drainListenerBus(spark)
-      val (j, st, tk, sb) = (jobs.get(), stages.get(), tasks.get(), shuffleB.get())
-      val c = compiles.getCount - c0
-      val w = Seq(w0, w1, once()).sorted.apply(1)
+    }
+    for ((name, i) <- args.zipWithIndex) {
+      val (j, st, tk, sb, c) = counts(i)
+      val w = walls(i).sorted.apply(1)
       println(f"PROFILE $name%-28s wall=$w%7.3f s jobs=$j%3d " +
         f"stages=$st%3d tasks=$tk%5d shuffleMB=${sb / 1e6}%9.3f compiles=$c%3d")
     }

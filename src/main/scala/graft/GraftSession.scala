@@ -93,6 +93,7 @@ object GraftSession {
       "spark.sql.shuffle.partitions" -> shuffle.toString,
       "spark.sql.session.timeZone" -> "UTC",
       Tables.nanosAsLongConf,
+      codegenCache,
       "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       "spark.ui.enabled" -> "false") ++ (
     if (scale) Seq(
@@ -122,13 +123,21 @@ object GraftSession {
       "spark.shuffle.spill.compress" -> "false"))
 
   /** Verify's conf: Spark's defaults (AQE on) at `cpus` cores and as many
-    * shuffle partitions. */
+    * shuffle partitions, with the bench's codegen cache size. */
   def verifyConf(cpus: Int): Seq[(String, String)] = Seq(
     "spark.master" -> s"local[$cpus]",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.sql.session.timeZone" -> "UTC",
     Tables.nanosAsLongConf,
+    codegenCache,
     "spark.ui.enabled" -> "false")
+
+  /** The JVM-wide generated-class cache (a static conf, read once per JVM).
+    * Spark's 100 entries are fewer than the ~101 distinct classes one pass
+    * over the 12 perfbench olap keys compiles, so a round-robin pass
+    * evicted and recompiled about 50 of them every round; 2000 holds every
+    * key's classes. */
+  private val codegenCache: (String, String) = "spark.sql.codegen.cache.maxEntries" -> "2000"
 
   /** Bench's session for `inputBytes` of input at SPARK_GRAFT_CPUS cores.
     * The shuffle width is `shuffle` when given, else SPARK_GRAFT_SHUFFLE,

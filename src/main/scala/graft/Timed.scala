@@ -150,9 +150,11 @@ object Timed {
   }
 
   /** Runs `body` with each `kvs` conf set, then puts every key back: a key
-    * that was unset before stays unset. */
+    * that was unset before stays unset. (`getAll` holds only the keys that
+    * are set; `getOption` also answers a registered key's default.) */
   def withConf[T](conf: RuntimeConfig, kvs: (String, String)*)(body: => T): T = {
-    val prev = kvs.map { case (k, _) => k -> conf.getOption(k) }
+    val set = conf.getAll
+    val prev = kvs.map { case (k, _) => k -> set.get(k) }
     kvs.foreach { case (k, v) => conf.set(k, v) }
     try body finally prev.foreach {
       case (k, Some(v)) => conf.set(k, v)

@@ -37,9 +37,10 @@ object StreamOps {
   /** Drain a streaming frame into a memory sink and return the settled
     * result (detached from the temp view; the query is stopped). The
     * query starts, settles and stops through [[runStream]], so it is
-    * bounded by `spark.graft.drain.timeoutMs` and its tasks reuse the
+    * bounded by `spark.graft.drain.timeoutMs`, its tasks reuse the
     * executor's default class loader (codegen cache hits from the
-    * second call on). */
+    * second call on) and its throwaway checkpoint is written through the
+    * FileSystem checkpoint manager. */
   // Deliberately NOT lifting spark.sql.shuffle.partitions for the
   // drains (r22, measured): raising the state width to
   // defaultParallelism (32) at sf0.1 made every small-state key SLOWER
@@ -53,7 +54,7 @@ object StreamOps {
     val spark = df.sparkSession
     val name = "graft_stream_" + UUID.randomUUID().toString.replace("-", "")
     withEphemeralCkpt(spark, name) { ckpt =>
-      runStream(df) {
+      runStream(df, ephemeral = true) {
         _.format("memory")
           .queryName(name)
           .outputMode(mode)
@@ -71,38 +72,52 @@ object StreamOps {
     * [[awaitEnd]], waits for an AvailableNow query to terminate and
     * fails LOUDLY past the bound instead of spinning forever.
     *
-    * Loader reuse: `start()` clones the caller's session, and under
-    * Spark's default artifact isolation every clone's tasks run in a new
-    * executor class loader. The codegen cache is keyed by (loader,
-    * source), so each call recompiled byte-identical classes and pushed
-    * dead entries into the shared cache. The clone is therefore started
-    * with `spark.sql.artifact.isolation.enabled=false`: the key is set
-    * on the caller's conf only while `start()` copies it, under one
-    * lock, and restored in `finally`. The flip is skipped when the
-    * caller holds session artifacts or forces their loader
-    * (`alwaysApplyClassloader`): their classes load only through the
-    * isolated loader. */
+    * `start()` clones the caller's session, and the query runs in the
+    * clone. [[cloneConf]] names the keys the clone gets: they are set on
+    * the caller's conf only while `start()` copies it, under one lock,
+    * and then put back (an unset key stays unset). */
   private[graft] def runStream(df: DataFrame,
-      settle: (StreamingQuery, Long) => Unit = awaitEnd)(
+      settle: (StreamingQuery, Long) => Unit = awaitEnd,
+      ephemeral: Boolean = false)(
       writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
     val spark = df.sparkSession
     val limitMs = confLong(spark, "spark.graft.drain.timeoutMs", 600000L)
     val w = writer(df.writeStream)
-    val q =
-      if (GraftSessionAccess.sessionArtifactAdded(spark) ||
-        spark.conf.getOption(alwaysApplyLoaderKey).exists(_.trim.toBoolean)) w.start()
-      else startLock.synchronized {
-        val prev = spark.conf.getAll.get(isolationKey)
-        spark.conf.set(isolationKey, "false")
-        try w.start()
-        finally prev.fold(spark.conf.unset(isolationKey))(spark.conf.set(isolationKey, _))
-      }
+    val q = startLock.synchronized(
+      graft.Timed.withConf(spark.conf, cloneConf(spark, ephemeral): _*)(w.start()))
     try settle(q, limitMs) finally q.stop()
     q
   }
 
+  /** The conf a stream's cloned session starts with:
+    *  - Loader reuse: under Spark's default artifact isolation every
+    *    clone's tasks run in a new executor class loader, and the codegen
+    *    cache is keyed by (loader, source), so each call recompiled
+    *    byte-identical classes. The clone runs with isolation off, unless
+    *    the caller holds session artifacts or forces their loader
+    *    (`alwaysApplyClassloader`): their classes load only through the
+    *    isolated loader.
+    *  - `ephemeral` (the drains' throwaway checkpoints under
+    *    [[ckptRoot]]): the FileSystem checkpoint manager. Spark's default,
+    *    the FileContext manager, shells out to `stat` for every
+    *    checkpoint file on a local path without the native-hadoop
+    *    library: 30-45 ms a file against 6-8 ms, and a drain writes
+    *    about 14. The root is always local, where rename is atomic, so
+    *    the FileSystem manager keeps the same guarantee. Durable sinks
+    *    keep Spark's default manager: their checkpoints may live on
+    *    HDFS or an object store and carry a restart contract. */
+  private def cloneConf(spark: SparkSession, ephemeral: Boolean): Seq[(String, String)] = {
+    val keepIsolation = GraftSessionAccess.sessionArtifactAdded(spark) ||
+      spark.conf.getOption(alwaysApplyLoaderKey).exists(_.trim.toBoolean)
+    (if (keepIsolation) Nil else Seq(isolationKey -> "false")) ++
+      (if (ephemeral) Seq(checkpointManagerKey -> fileSystemCheckpointManager) else Nil)
+  }
+
   private val isolationKey = "spark.sql.artifact.isolation.enabled"
   private val alwaysApplyLoaderKey = "spark.sql.artifact.isolation.alwaysApplyClassloader"
+  private[graft] val checkpointManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+  private[graft] val fileSystemCheckpointManager =
+    "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
   private val startLock = new Object
 
   /** Default [[runStream]] settle: AvailableNow termination within the
@@ -125,13 +140,16 @@ object StreamOps {
     * (exactly Spark's temporary-checkpoint behavior it replaces), so it
     * goes to the fastest scratch available — conf
     * `spark.graft.stream.checkpointRoot` when set, else /dev/shm (tmpfs)
-    * when writable, else java.io.tmpdir. Offset/commit metadata logs and
-    * state-store delta files are the dominant per-batch I/O of the 17
-    * gate stream keys; on a rotating-disk /tmp they are the wall. The
-    * PRODUCTION file sinks (streamFileSink, streamPartitionedSink) keep
-    * their durable checkpoint dirs — this root only ever hosts
-    * per-invocation scratch, never cross-run state. Sessions are still
-    * one-per-key; nothing is pooled. */
+    * when writable, else java.io.tmpdir. The root is always a local
+    * path. A drain writes about 14 checkpoint files (offset and commit
+    * logs, metadata, state-store deltas); their per-file cost was the
+    * checkpoint manager, not the disk (moving the root to tmpfs did not
+    * change the wall), which is why the drains start with the FileSystem
+    * manager ([[cloneConf]]). The PRODUCTION file sinks (streamFileSink,
+    * streamPartitionedSink) keep their durable checkpoint dirs and
+    * Spark's default manager — this root only ever hosts per-invocation
+    * scratch, never cross-run state. Sessions are still one-per-key;
+    * nothing is pooled. */
   private def ckptRoot(s: SparkSession): String =
     s.conf.getOption("spark.graft.stream.checkpointRoot").getOrElse {
       val shm = java.nio.file.Paths.get("/dev/shm")
@@ -191,7 +209,7 @@ object StreamOps {
       }
     }
     withEphemeralCkpt(spark, name) { ckpt =>
-      runStream(df, settle) {
+      runStream(df, settle, ephemeral = true) {
         _.format("memory")
           .queryName(name)
           .outputMode(mode)
@@ -202,9 +220,13 @@ object StreamOps {
     }
   }
 
+  /** The drained rows, detached from the memory sink, as ONE partition:
+    * they are already on the driver, so a trailing sort plans
+    * `Sort <- Coalesce 1 <- LocalTableScan` instead of a range Exchange
+    * and its sampling job. */
   private def collectSettled(spark: SparkSession, name: String): DataFrame = {
     val out = spark.table(name)
-    val settled = spark.createDataFrame(out.collectAsList(), out.schema)
+    val settled = spark.createDataFrame(out.collectAsList(), out.schema).coalesce(1)
     spark.catalog.dropTempView(name)
     settled
   }

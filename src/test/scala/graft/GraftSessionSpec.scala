@@ -15,6 +15,7 @@ class GraftSessionSpec extends SparkSpec {
       "spark.locality.wait" -> "0",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.sql.inMemoryColumnarStorage.compressed" -> "false",
       "spark.ui.enabled" -> "false")
     assert(distinct(GraftSession.benchConf(4, 1, scale = false)) == common ++ Map(
@@ -39,6 +40,7 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "2000",
       "spark.ui.enabled" -> "false"))
     // the specs' own session is the verify profile, in a temp warehouse
     val conf = spark.sparkContext.getConf
@@ -65,8 +67,10 @@ class GraftSessionSpec extends SparkSpec {
       SparkEntry.queries("q1_pricing_summary")(s, sf0001).queryExecution
         .explainString(FormattedMode)
     val bench = spark.newSession()
+    // static keys (the codegen cache size) are the JVM's, not a session's
     GraftSession.benchConf(4, 1, scale = false)
-      .filter(_._1.startsWith("spark.sql.")).foreach { case (k, v) => bench.conf.set(k, v) }
+      .filter { case (k, _) => k.startsWith("spark.sql.") && bench.conf.isModifiable(k) }
+      .foreach { case (k, v) => bench.conf.set(k, v) }
     val p = explain(bench)
     assert(!p.contains("AdaptiveSparkPlan"), p)
     assert(explain(spark).contains("AdaptiveSparkPlan"))

@@ -123,6 +123,15 @@ class PlanShapeSpec extends SparkSpec {
       s"query vector must broadcast and top-k must stay partial:\n$p")
   }
 
+  test("stream_quality_gate: the drained rows sort in their one partition — no Exchange after the drain") {
+    // the settled rows are on the driver already: a range Exchange (and
+    // its sampling job) to sort 20 of them is pure dispatch
+    val p = plan("stream_quality_gate")
+    assert(!p.contains("Exchange"), s"the settled rows must not shuffle:\n$p")
+    assert(p.contains("Sort") && p.contains("Coalesce 1") && p.contains("LocalTableScan"),
+      s"expected Sort <- Coalesce 1 <- LocalTableScan:\n$p")
+  }
+
   test("dup_ngram_doc_filter: shared-set probe is a broadcast join, never a shuffle join on the raw ngram") {
     // BASELINE.md's skew story: a boilerplate shingle in millions of docs
     // must cost a hash-probe per gram row, not one reducer partition. The

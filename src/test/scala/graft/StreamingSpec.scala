@@ -201,31 +201,51 @@ class StreamingSpec extends SparkSpec {
   test("stream start: the clone drops loader isolation; the caller's conf and session artifacts are respected") {
     import graft.streaming.StreamOps
     import org.apache.spark.sql.{Dataset, Row, SparkSession}
-    val key = "spark.sql.artifact.isolation.enabled"
+    val iso = "spark.sql.artifact.isolation.enabled"
+    val mgr = StreamOps.checkpointManagerKey
+    val fsMgr = Some(StreamOps.fileSystemCheckpointManager)
     val tmp = java.nio.file.Files.createTempDirectory("graft_stream_start")
     queries.TmpCleanup.register(tmp)
-    // the isolation key as the stream's own session (the clone every
-    // micro-batch runs in) reads it
-    def streamIsolation(s: SparkSession, tag: String): String = {
-      @volatile var seen: String = null
+    // a drain's clone also takes the FileSystem checkpoint manager, a
+    // durable start keeps Spark's default. The two keys as the stream's
+    // own session (the clone every micro-batch runs in) reads them: a
+    // durable start, read on the driver
+    def durable(s: SparkSession, tag: String): (String, Option[String]) = {
+      @volatile var seen: (String, Option[String]) = null
       StreamOps.runStream(StreamOps.eventsStream(s, sf0001).select("user_id")) {
         _.option("checkpointLocation", tmp.resolve(tag).toString)
           .trigger(Trigger.AvailableNow())
           .foreachBatch { (b: Dataset[Row], _: Long) =>
-            seen = b.sparkSession.conf.get(key) }
+            seen = (b.sparkSession.conf.get(iso), b.sparkSession.conf.getOption(mgr)) }
       }
       assert(seen != null, s"$tag: no micro-batch ran")
       seen
     }
+    // ... and a drain, read in its tasks (the clone's SQL conf travels
+    // with every micro-batch job)
+    val probe = udf { () =>
+      val c = org.apache.spark.sql.internal.SQLConf.get
+      c.getConfString(iso) + "|" + c.getConfString(mgr, "") }
+    def drained(s: SparkSession): (String, Option[String]) = {
+      val seen = StreamOps.drain(StreamOps.eventsStream(s, sf0001).select(probe().as("c")),
+        OutputMode.Append()).distinct().collect().map(_.getString(0))
+      assert(seen.length == 1, seen.mkString(", "))
+      val Array(i, m) = seen.head.split("\\|", -1)
+      (i, Option(m).filter(_.nonEmpty))
+    }
+    def unset(s: SparkSession, k: String): Boolean = s.conf.getAll.get(k).isEmpty
     val caller = spark.newSession()
-    assert(streamIsolation(caller, "plain") == "false")
-    assert(caller.conf.getAll.get(key).isEmpty, "an unset caller key must stay unset")
-    caller.conf.set(key, "true")
+    assert(durable(caller, "plain") == ("false", None),
+      "a durable start keeps Spark's default checkpoint manager")
+    assert(drained(caller) == ("false", fsMgr))
+    assert(unset(caller, iso) && unset(caller, mgr), "an unset caller key must stay unset")
+    caller.conf.set(iso, "true")
     // a memory sink with no queryName fails inside start()
     intercept[org.apache.spark.sql.AnalysisException](StreamOps.runStream(
-      StreamOps.eventsStream(caller, sf0001))(_.format("memory")))
-    assert(caller.conf.getAll.get(key).contains("true"),
+      StreamOps.eventsStream(caller, sf0001), ephemeral = true)(_.format("memory")))
+    assert(caller.conf.getAll.get(iso).contains("true"),
       "a throwing start() must restore the caller's key")
+    assert(unset(caller, mgr), "a throwing start() must leave an unset key unset")
 
     val withJar = spark.newSession()
     val jar = tmp.resolve("graft_tiny.jar")
@@ -235,8 +255,11 @@ class StreamingSpec extends SparkSpec {
     out.close()
     withJar.addArtifact(jar.toString)
     assert(org.apache.spark.sql.GraftSessionAccess.sessionArtifactAdded(withJar))
-    assert(streamIsolation(withJar, "jar") == "true",
+    assert(durable(withJar, "jar") == ("true", None),
       "a session holding artifacts must keep its isolated loader")
+    assert(drained(withJar) == ("true", fsMgr),
+      "an artifact session's drain keeps isolation and takes the manager")
+    assert(unset(withJar, mgr))
   }
 
   test("streaming near-dedup is trigger-invariant and actually drops near-dups") {

@@ -885,7 +885,7 @@ object Bench {
       val (inDir, ckpt) = streamDirs("graft_bench_stream")
       docs.repartition(32).write.mode("overwrite").parquet(inDir)
       val batchS = once(queries.TextOps.gopherOver(queries.TextOps.augmentSymbols(
-        spark.read.parquet(inDir))).count())
+        Tables.parquet(spark, inDir))).count())
       // State width is sized to the STATE (20 groups), not the batch: each
       // stateful shuffle partition is one RocksDB instance paying
       // snapshot+commit EVERY micro-batch (a 32-wide shuffle measured
@@ -1076,7 +1076,7 @@ object Bench {
       val appendS = once(Similarity.appendPqCodes(spark, root, newVecs, aDir))
       Obj("pqindex" -> Obj("build_s" -> buildS, "reused" -> reused, "probe_s" -> probeS,
         "codes_mb" -> codesMb, "append_s" -> appendS,
-        "append_rows" -> spark.read.parquet(aDir).count()))
+        "append_rows" -> Tables.parquet(spark, aDir).count()))
     }
 
     /** Big-grid tensor smoke (round 11, merged into the one-pass artifact

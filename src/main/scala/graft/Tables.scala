@@ -1,15 +1,75 @@
 package graft
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.StructType
 
-/** Table loader for the driver-generated parquet testdata.
+/** Table loader for the driver-generated parquet testdata, and the one
+  * parquet open path of the engine.
   *
   * All queries read through here so that a future move to a real lake
   * layout (partitioned dirs, bucketed tables, a catalog) is a one-file
   * change. At 100 TB these would be catalog tables with partition pruning;
   * at test scale they are single parquet files.
+  *
+  * Every parquet read in the engine goes through [[parquet]], which reads
+  * the schema from one footer, once, on the driver. Spark's own schema
+  * inference launches a job to read that same footer, even for one file.
   */
 object Tables {
+
+  /** Spark's parquet read of `path` without its schema-inference job: the
+    * schema comes from the footer Spark's non-merging inference reads
+    * (`_common_metadata`, else `_metadata`, else the first data file in
+    * path order), read on the driver and converted by Spark's own
+    * footer-to-schema code, and Spark still discovers partition columns
+    * from the directory names. When the session asks for `mergeSchema`,
+    * or the path holds no data file (or does not exist), the read is
+    * Spark's unchanged, so its merge and its errors stay as they are. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.conf
+    if (conf.isParquetSchemaMergingEnabled) return None
+    val hconf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    // listStatus, not listFiles/listLocatedStatus: a LocatedFileStatus
+    // asks a local file for its permissions, which without native hadoop
+    // forks a shell per file
+    val root = try Some(fs.getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
+    val footer = root.flatMap { st =>
+      if (st.isFile) Some(st)
+      else {
+        val entries = fs.listStatus(p)
+        def named(n: String) = entries.find(_.getPath.getName == n)
+        named("_common_metadata").orElse(named("_metadata")).orElse(firstDataFile(fs, entries))
+      }
+    }
+    footer.map { st =>
+      val meta = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(st, hconf), ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, meta), new ParquetToSparkSchemaConverter(conf))
+    }
+  }
+
+  /** The first data file in full-path order, as Spark's file index sorts
+    * its leaves: a directory sorts as its name plus `/`. Hidden names are
+    * skipped as the file index skips them (`_` without `=`, and `.`). */
+  private def firstDataFile(fs: FileSystem, entries: Array[FileStatus]): Option[FileStatus] =
+    entries.filterNot { st =>
+      val n = st.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") || n.endsWith("._COPYING_")
+    }.sortBy(st => st.getPath.getName + (if (st.isDirectory) "/" else ""))
+      .iterator
+      .flatMap(st => if (st.isDirectory) firstDataFile(fs, fs.listStatus(st.getPath)) else Some(st))
+      .nextOption()
 
   /** Sessions must set this: Spark has no nanosecond timestamp type, so a
     * TIMESTAMP(NANOS) events parquet column is read as a raw nanosecond
@@ -49,8 +109,9 @@ object Tables {
   /** Plan cache: re-reading the same table re-lists files and re-reads
     * parquet footers on every call; reusing the analyzed DataFrame keeps
     * one shared FileIndex per (session, dir, table). On a cluster this is
-    * what a catalog table gives you for free. */
-  private val cache =
+    * what a catalog table gives you for free. [[t]] drops the entries of
+    * stopped sessions, so the map does not keep them reachable. */
+  private[graft] val cache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   /** Bench-only: the testdata files are single-row-group parquet, so every
@@ -108,11 +169,12 @@ object Tables {
     val bucketed = bucketedFor(spark, dir, name)
     val key = name + bucketed.fold("")(tab =>
       "@" + tab + "@" + tableGen(spark, tab))
+    cache.keySet.removeIf(_._1.sparkContext.isStopped)
     cache.computeIfAbsent((spark, dir, key), { _ =>
       bucketed match {
         case Some(tab) => spark.table(tab)
         case None =>
-          val raw = spark.read.parquet(s"$dir/$name.parquet")
+          val raw = parquet(spark, s"$dir/$name.parquet")
           val df = if (name == "events") normalizeEvents(raw) else raw
           if (benchParts > 0) df.repartition(benchParts) else df
       }

@@ -594,7 +594,7 @@ object Relational {
       graft.sources.Lake.datePartitionByMonth(
         t(s, dir, "lineitem"), tmp.toString, "l_shipdate", "ship_month")
     }
-    s.read.parquet(root.toString)
+    graft.Tables.parquet(s, root.toString)
   }
 
   /** Durable day-partitioned EVENTS layout — the time-axis lever
@@ -619,7 +619,7 @@ object Relational {
       graft.sources.Lake.datePartitionBy(
         t(s, dir, "events"), tmp.toString, "ts", "event_date", "day")
     }
-    s.read.parquet(root.toString)
+    graft.Tables.parquet(s, root.toString)
   }
 
   /** [[dateTruncAgg]] over the month-partitioned layout — same oracle

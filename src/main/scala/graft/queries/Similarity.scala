@@ -1174,9 +1174,9 @@ object Similarity {
     * payload fetches). */
   private def pqProbeFrom(s: SparkSession, dir: String,
       root: java.io.File): DataFrame = {
-    val cents = s.read.parquet(new java.io.File(root, "cents").toString)
-    val cb = s.read.parquet(new java.io.File(root, "cb").toString)
-    val codes = s.read.parquet(new java.io.File(root, "codes").toString)
+    val cents = graft.Tables.parquet(s, new java.io.File(root, "cents").toString)
+    val cb = graft.Tables.parquet(s, new java.io.File(root, "cb").toString)
+    val codes = graft.Tables.parquet(s, new java.io.File(root, "codes").toString)
     // the query vector: one corpus row, normalized exactly as the
     // in-query path normalizes it (per-row math, identical doubles)
     val q = normed(t(s, dir, "embeddings").filter(col("vec_id") === 0))
@@ -1219,8 +1219,8 @@ object Similarity {
   private[graft] def appendPqCodes(s: SparkSession, root: java.io.File,
       newVecs: DataFrame, codesPath: String = null): Unit = {
     graft.functions.GraftExtensions.install(s)
-    val cents = s.read.parquet(new java.io.File(root, "cents").toString)
-    val cb = s.read.parquet(new java.io.File(root, "cb").toString)
+    val cents = graft.Tables.parquet(s, new java.io.File(root, "cents").toString)
+    val cb = graft.Tables.parquet(s, new java.io.File(root, "cb").toString)
     val target =
       if (codesPath != null) codesPath // bench: measure the marginal
                                        // encode+write without mutating

@@ -143,7 +143,7 @@ object SourceQueries {
   /** The filtered read-back, factored un-aggregated so SourcesSpec can
     * assert the PartitionFilters plan shape. */
   private[graft] def prunedScan(s: SparkSession, out: String): DataFrame =
-    s.read.parquet(out).filter(col("o_orderstatus") === "F")
+    graft.Tables.parquet(s, out).filter(col("o_orderstatus") === "F")
 
   val partitionedPruneSql: String =
     """SELECT count(*) AS n_orders, round(sum(o_totalprice), 2) AS revenue
@@ -193,7 +193,7 @@ object SourceQueries {
     val out = tmp(s, dir, "compact_out")
     t(s, dir, "documents").repartition(32).write.mode("overwrite").parquet(in)
     graft.sources.Lake.compact(s, in, out, sortKey = "doc_id", targetMb = 4)
-    s.read.parquet(out)
+    graft.Tables.parquet(s, out)
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).as("sum_chars"),
@@ -226,7 +226,7 @@ object SourceQueries {
       .write.mode("overwrite").partitionBy("event_date").parquet(in)
     graft.sources.Lake.compactPartitioned(s, in, out,
       partitionCol = "event_date", sortKey = "user_id", targetMb = 4)
-    s.read.parquet(out)
+    graft.Tables.parquet(s, out)
       .groupBy(col("event_date"))
       .agg(count(lit(1)).as("n_events"),
         round(sum(col("value")), 4).as("sum_value"),

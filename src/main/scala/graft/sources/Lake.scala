@@ -270,7 +270,7 @@ object Lake {
     * covers a contiguous key range (query-time file pruning). */
   def compact(spark: SparkSession, inDir: String, outDir: String,
       sortKey: String, targetMb: Int = 128): Long = {
-    val df = spark.read.parquet(inDir)
+    val df = graft.Tables.parquet(spark, inDir)
     // size via the Hadoop FileSystem of whatever store the path lives on
     // (hdfs://, s3a://, file:, nested layouts) — a java.io.File listing
     // would silently see 0 bytes on any non-local URI and compact the
@@ -307,7 +307,7 @@ object Lake {
     * output is unchanged. */
   def compactPartitioned(spark: SparkSession, inDir: String, outDir: String,
       partitionCol: String, sortKey: String, targetMb: Int = 128): Long = {
-    val df = spark.read.parquet(inDir)
+    val df = graft.Tables.parquet(spark, inDir)
     val hconf = spark.sparkContext.hadoopConfiguration
     val bytes = df.inputFiles.map { f =>
       val p = new org.apache.hadoop.fs.Path(f)

@@ -43,7 +43,7 @@ object SigIndex {
 
   /** Full index scan (partition columns `band`/`part` come back as
     * columns; callers filter to prune). */
-  def read(s: SparkSession, path: String): DataFrame = s.read.parquet(path)
+  def read(s: SparkSession, path: String): DataFrame = graft.Tables.parquet(s, path)
 
   /** Index scan pruned to the (band, part) partitions named by the
     * probe side. `keys` are `band * BucketFanout + part` codes — at

@@ -90,7 +90,7 @@ object TensorStore {
   def readTyped(spark: SparkSession, dir: String, imageId: Option[String] = None,
       frameRange: Option[(Int, Int)] = None): Dataset[TBlock] = {
     import spark.implicits._
-    var df = spark.read.parquet(new Path(dir, "blocks").toString)
+    var df = graft.Tables.parquet(spark, new Path(dir, "blocks").toString)
     for (id <- imageId) df = df.filter(col("imageId") === id)
     for ((lo, hi) <- frameRange)
       df = df.filter(col("idx0") >= lo && col("idx0") <= hi)

@@ -27,7 +27,7 @@ object StreamOps {
   /** The events table as a file STREAM with the same µs `ts` derivation
     * as the batch Tables.t. */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.parquet(spark, s"$dir/events.parquet").schema
     graft.Tables.normalizeEvents(spark.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet") // file source needs a dir
@@ -345,7 +345,7 @@ object StreamOps {
         .outputMode(OutputMode.Append())
         .trigger(Trigger.AvailableNow())
     }
-    s.read.parquet(outDir).orderBy(col("bucket"))
+    graft.Tables.parquet(s, outDir).orderBy(col("bucket"))
   }
 
   val streamFileSinkSql: String =
@@ -385,7 +385,7 @@ object StreamOps {
   /** The one-day pruned read-back, factored un-aggregated-path so
     * StreamingSpec can assert the PartitionFilters plan shape. */
   private[graft] def partitionedSinkDaySlice(s: SparkSession, outDir: String): DataFrame =
-    s.read.parquet(outDir)
+    graft.Tables.parquet(s, outDir)
       .filter(col("event_date") === lit("2024-01-15").cast("date"))
 
   private def partitionedSinkDayRead(s: SparkSession, outDir: String): DataFrame =
@@ -431,7 +431,7 @@ object StreamOps {
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
           val sess = batch.sparkSession
           val prev =
-            if (latest >= 0) sess.read.parquet(s"$outDir/v=$latest")
+            if (latest >= 0) graft.Tables.parquet(sess, s"$outDir/v=$latest")
             else batch.limit(0)
           prev.join(batch, Seq("user_id"), "left_anti")
             .unionByName(batch)
@@ -440,7 +440,7 @@ object StreamOps {
         }
     }
     require(latest >= 0, "foreachBatch sink: no batch was processed")
-    s.read.parquet(s"$outDir/v=$latest").orderBy(col("user_id"))
+    graft.Tables.parquet(s, s"$outDir/v=$latest").orderBy(col("user_id"))
   }
 
   val streamForeachBatchSql: String =

@@ -13,5 +13,11 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = GraftSession.verify(4)
+  private var current: SparkSession = _
+
+  /** The shared session, started again if a spec stopped it. */
+  def session: SparkSession = synchronized {
+    if (current == null || current.sparkContext.isStopped) current = GraftSession.verify(4)
+    current
+  }
 }

@@ -1002,11 +1002,11 @@ object Bench {
       val docs = Tables.t(spark, sfDir, "documents")
       val (root, cut) = SigIndex.benchRoot(spark, sfDir)
       val (reused, buildS) = SigIndex.ensureBenchIndex(spark, sfDir)
-      // batch signatures once (localCheckpoint: banded keys + the verdict
+      // batch signatures once (Materialize: banded keys + the verdict
       // both consume them; recomputing the minhash fold per consumer
       // would double the timed work)
       def probe(batch: DataFrame) = {
-        val sigs = TextOps.nearDupSigs(batch).localCheckpoint(true)
+        val sigs = Materialize(TextOps.nearDupSigs(batch))
         val keys = SigIndex.probeKeys(TextOps.nearDupBand(sigs))
         val idx = SigIndex.prunedRead(spark, root.toString, keys)
           .withColumnRenamed("sig", "idx_sig")

@@ -49,7 +49,7 @@ object Profile {
     val qs = SparkEntry.queries
     def run(name: String): Unit = { qs(name)(spark, sfDir).count(); () }
     // Warm-ups and the three timed calls go round-robin over the keys, as
-    // an olap pass runs them: with several keys, the codegen cache (100
+    // an olap pass runs them: with several keys, the codegen cache (2000
     // entries) churns between a key's calls, which key-by-key runs hide.
     // The counters bracket each key's second-round call; walls are the
     // median of 3 (bench protocol).

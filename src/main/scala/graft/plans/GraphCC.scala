@@ -1,78 +1,30 @@
 package graft.plans
 
+import graft.Materialize
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Distributed connected components over an edge list.
-  *
-  * Two interchangeable kernels behind one contract (pick with the session
-  * conf `graft.cc.algorithm`):
-  *
-  *  - `minlabel` (default): min-label propagation with pointer doubling —
-  *    each round every node takes the min of its own component id, its
-  *    neighbors' ids, and its id's id (comp ∘ comp). Converges in
-  *    O(log diameter) rounds; each round is two shuffle joins on node
-  *    ids. Best when the edge list is modest and degrees are balanced.
-  *  - `stars`: alternating large-star/small-star contraction (Kiveris et
-  *    al., "Connected Components in MapReduce and Beyond", SoCC 2014) —
-  *    each round rewires every edge toward its neighborhood minimum via
-  *    a map-side-combined groupBy-min plus one join, then dedups. The
-  *    edge list SHRINKS toward a star forest as it converges, so a
-  *    high-degree hub costs one partial-aggregated min per round instead
-  *    of re-shuffling its full neighbor list every round — the extreme-
-  *    edge-count variant.
+/** Distributed connected components over an edge list: min-label
+  * propagation with pointer doubling. Each round every node takes the
+  * min of its own component id, its neighbors' ids, and its id's id
+  * (comp ∘ comp). Converges in O(log diameter) rounds; each round is two
+  * shuffle joins on node ids.
   *
   * The same idiom labels tensor components (`graft.tensor.Measure.label`
   * step 3) and collapses document near-duplicate clusters
   * (`TextOps.cc_dedup_groups`).
   *
-  * Picking a kernel at scale (measured — GraphCCSpec hub stress, 10⁶
+  * Scale posture: state is one row per edge endpoint — nodes untouched
+  * by any edge never enter the computation, so a 100 TB corpus with a
+  * few million duplicate pairs propagates over millions of rows, not the
+  * corpus. Measured on a hub-heavy graph (GraphCCSpec hub stress, 10⁶
   * edges, 1000 hubs of degree ~991 chained into one component, 32-way
-  * local): both kernels converged in 11 rounds; minlabel finished in
-  * roughly half stars' wall (27 s vs 50 s) because at |E| ≈ |V| stars
-  * pays two extra distincts per round over a barely-shrinking edge set.
-  * Moderate skew does NOT favor stars — its map-side hub folding only
-  * pays once a single neighbor list is itself shuffle-dominating. Rule
-  * of thumb for 100 TB corpora: default `minlabel` whenever |E| is
-  * within ~10× of |V| and max degree ≲ 10⁴ (near-dup pair graphs,
-  * tensor face graphs); switch to `stars` when degrees reach the 10⁵+
-  * regime or |E| ≫ |V| (celebrity-hub web/link graphs), where each
-  * minlabel round re-shuffles every hub's full neighbor list but stars
-  * contracts it to one row per task per round.
+  * local): 11 rounds, 27 s.
   *
-  * Scale posture: state is one row per edge (stars) or per edge endpoint
-  * (minlabel) — nodes untouched by any edge never enter the computation,
-  * so a 100 TB corpus with a few million duplicate pairs propagates over
-  * millions of rows, not the corpus.
-  *
-  * Checkpointing follows the session posture (same contract as
-  * `Measure.label`): reliable `checkpoint()` when
-  * `graft.checkpoint.reliable=true` and a checkpoint dir is set
-  * (cluster — survives executor loss), else `localCheckpoint`
-  * (single-machine speed).
+  * Each round's frame is truncated through [[graft.Materialize]], which
+  * owns the local-vs-reliable checkpoint choice.
   */
 object GraphCC {
-
-  private def cpFor(spark: org.apache.spark.sql.SparkSession): DataFrame => DataFrame = {
-    val reliable = spark.conf.getOption("graft.checkpoint.reliable").contains("true")
-    if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "graft.checkpoint.reliable=true requires SparkContext.setCheckpointDir")
-    df => if (reliable) df.checkpoint(eager = true) else df.localCheckpoint(eager = true)
-  }
-
-  /** LAZY lineage-truncation twin of [[cpFor]] (r21): the caller promises
-    * to run ONE full-pass action (count / full filter-count) right after,
-    * which materializes every partition and completes the truncation in
-    * that same job — instead of paying a dedicated eager-checkpoint job
-    * and then a second action. A partial action (limit/isEmpty) would NOT
-    * complete a local checkpoint, so callers must keep the follow-up
-    * action full-pass. */
-  private def cpLazyFor(spark: org.apache.spark.sql.SparkSession): DataFrame => DataFrame = {
-    val reliable = spark.conf.getOption("graft.checkpoint.reliable").contains("true")
-    if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "graft.checkpoint.reliable=true requires SparkContext.setCheckpointDir")
-    df => if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
-  }
 
   private def edgeCols(pairs: DataFrame): DataFrame = {
     val cols = pairs.columns
@@ -83,39 +35,27 @@ object GraphCC {
   /** Components of the undirected graph given by a 2-column edge list
     * (direction ignored; self-loops harmless). Returns (node, comp) with
     * one row per distinct endpoint; comp = min node id in the component.
-    * Kernel chosen by `graft.cc.algorithm` (`minlabel` | `stars`).
     */
   def components(pairs: DataFrame, maxRounds: Int = 60): DataFrame =
-    pairs.sparkSession.conf.getOption("graft.cc.algorithm") match {
-      case Some("stars")            => componentsStars(pairs, maxRounds)
-      case Some("minlabel") | None  => componentsMinLabel(pairs, maxRounds)
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft.cc.algorithm must be 'minlabel' or 'stars', got '$other'")
-    }
+    componentsCounted(pairs, maxRounds)._1
 
-  /** Min-label propagation + pointer doubling kernel. */
-  def componentsMinLabel(pairs: DataFrame, maxRounds: Int = 60): DataFrame =
-    componentsMinLabelCounted(pairs, maxRounds)._1
-
-  /** As [[componentsMinLabel]], also returning the round count (the
-    * GraphCCSpec hub-stress harness compares kernels on it). */
-  private[graft] def componentsMinLabelCounted(pairs: DataFrame,
+  /** As [[components]], also returning the round count (the GraphCCSpec
+    * hub-stress harness reports it). */
+  private[graft] def componentsCounted(pairs: DataFrame,
       maxRounds: Int = 60): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val cp = cpFor(spark)
-    val cpLazy = cpLazyFor(spark)
     val e = edgeCols(pairs)
     // und stays EAGER (r21, measured): folding its materialization into
     // comp.count()'s job read consistently ~0.6 s SLOWER on
     // cc_dedup_groups' expensive verify lineage than paying the
     // dedicated job — the union's two branches of a deep input plan
     // behave worse inside the downstream job than in their own.
-    val und = cp(e.union(e.select(col("b").as("a"), col("a").as("b"))))
-    var comp = cpLazy(und.select(col("a").as("node")).distinct()
-      .withColumn("comp", col("node")))
-    // full-pass count materializes the lazy checkpoint AND answers
-    // emptiness in the same job (isEmpty's limit(1) would leave the
-    // truncation incomplete)
+    val und = Materialize(e.union(e.select(col("b").as("a"), col("a").as("b"))))
+    // LAZY: the full-pass count right after materializes every partition
+    // AND answers emptiness in the same job, instead of a dedicated
+    // checkpoint job and then a second action (isEmpty's limit(1) would
+    // leave the truncation incomplete)
+    var comp = Materialize(und.select(col("a").as("node")).distinct()
+      .withColumn("comp", col("node")), eager = false)
     var converged = comp.count() == 0L
     var iter = 0
     while (!converged && iter < maxRounds) {
@@ -130,12 +70,13 @@ object GraphCC {
         .select(col("c.node").as("node"), col("c.comp").as("prev"),
           least(col("c.comp"), coalesce(col("nbr_min"), col("c.comp"))).as("comp"))
       // pointer doubling: comp(node) ← comp(comp(node))
-      val doubled = cpLazy(stepped.as("s")
+      val doubled = Materialize(stepped.as("s")
         .join(comp.as("t"), col("s.comp") === col("t.node"), "left")
         .select(col("s.node").as("node"), col("s.prev").as("prev"),
-          least(col("s.comp"), coalesce(col("t.comp"), col("s.comp"))).as("comp")))
+          least(col("s.comp"), coalesce(col("t.comp"), col("s.comp"))).as("comp")),
+        eager = false)
       // ONE job: the full-pass filter-count materializes the lazy
-      // checkpoint and detects convergence (no limit — see cpLazyFor)
+      // checkpoint and detects convergence (no limit — see above)
       val changed = doubled.filter(col("comp") =!= col("prev")).count()
       comp = doubled.select(col("node"), col("comp"))
       converged = changed == 0
@@ -147,79 +88,5 @@ object GraphCC {
     // not real inputs.
     require(converged, s"connected-components propagation did not converge in $iter rounds")
     (comp, iter)
-  }
-
-  /** Alternating large-star/small-star contraction kernel.
-    *
-    * Invariant maintained round to round: `edges` is a deduped set of
-    * (big, small) pairs, self-loop-free. Large-star points every
-    * above-u neighbor of u at u's neighborhood minimum; small-star
-    * points every below-u neighbor (and u itself) at that minimum. The
-    * fixed point is a star forest centered at each component's min id.
-    * Each half-round is one groupBy-min (partial-aggregated map-side —
-    * a hub contributes one partial per task, its neighbor list is never
-    * collected) and one join on the node id, then a dedup that SHRINKS
-    * the edge set as stars form.
-    */
-  def componentsStars(pairs: DataFrame, maxRounds: Int = 60): DataFrame =
-    componentsStarsCounted(pairs, maxRounds)._1
-
-  /** As [[componentsStars]], also returning the round count. */
-  private[graft] def componentsStarsCounted(pairs: DataFrame,
-      maxRounds: Int = 60): (DataFrame, Int) = {
-    val spark = pairs.sparkSession
-    val cp = cpFor(spark)
-    val cpLazy = cpLazyFor(spark)
-    val e0 = edgeCols(pairs)
-    // every endpoint must appear in the output even if its only edges are
-    // self-loops (the contraction drops those immediately). Lazily
-    // truncated — its single consumer (the final join) materializes it.
-    val allNodes = cpLazy(e0.select(col("a").as("node"))
-      .union(e0.select(col("b").as("node"))).distinct())
-    var edges = cpLazy(e0.filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      .distinct())
-    // full-pass count materializes the lazy checkpoint, answers emptiness,
-    // and seeds the per-round cardinality the loop reuses (r21 — the old
-    // loop re-counted the checkpointed `edges` every round)
-    var edgeCount = edges.count()
-    var converged = edgeCount == 0L
-    var iter = 0
-    while (!converged && iter < maxRounds) {
-      // large-star: for each u, m = min(Γ(u) ∪ {u}); emit (v, m) for v > u.
-      // Output rows satisfy v > u ≥ m, so they are already (big, small).
-      val und = edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      val mins = und.groupBy(col("a"))
-        .agg(min(col("b")).as("nm"))
-        .select(col("a").as("u"), least(col("a"), col("nm")).as("m"))
-      val ls = und.filter(col("b") > col("a"))
-        .join(mins, col("a") === col("u"))
-        .select(col("b").as("a"), col("m").as("b"))
-        .filter(col("a") =!= col("b"))
-        .distinct()
-      // small-star: edges are all (u, v) with v < u; m = min(Γ<(u) ∪ {u});
-      // emit (v, m) for each below neighbor plus (u, m). m ≤ v < u keeps
-      // the (big, small) orientation; (m, m) self-loops drop.
-      val joined = ls.join(
-          ls.groupBy(col("a")).agg(min(col("b")).as("m")).withColumnRenamed("a", "u"),
-          col("a") === col("u"))
-      val next = cpLazy(joined.select(col("b").as("a"), col("m").as("b"))
-        .union(joined.select(col("a"), col("m").as("b")))
-        .filter(col("a") =!= col("b"))
-        .distinct())
-      // full-pass count materializes next's lazy checkpoint (one job);
-      // the anti-join then runs over two checkpointed frames. converged ⇔
-      // identical edge sets (both sides deduped): equal counts plus an
-      // empty one-sided anti-join.
-      val nextCount = next.count()
-      val grew = next.join(edges, Seq("a", "b"), "left_anti").limit(1).count()
-      converged = grew == 0 && nextCount == edgeCount
-      edges = next
-      edgeCount = nextCount
-      iter += 1
-    }
-    require(converged, s"star-contraction did not converge in $iter rounds")
-    (allNodes.join(edges.select(col("a").as("node"), col("b").as("cmp")), Seq("node"), "left")
-      .select(col("node"), coalesce(col("cmp"), col("node")).as("comp")), iter)
   }
 }

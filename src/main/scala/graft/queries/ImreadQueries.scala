@@ -143,8 +143,8 @@ object ImreadQueries {
     // both count branches (raw fg + opened) hang off `bin`; checkpoint so
     // the file scan + decode + threshold run once, not once per branch
     // (at 100 TB: persist the mask, it is 1/8 the decoded image)
-    val bin = graft.tensor.TFilters.pointU8(typed)(v => if (v > 150) 1 else 0)
-      .localCheckpoint(true)
+    val bin = graft.Materialize(
+      graft.tensor.TFilters.pointU8(typed)(v => if (v > 150) 1 else 0))
     val st = graft.tensor.Nd.zeros(Array(1, 3, 3))
     for ((i, j) <- Seq((1, 1), (0, 1), (2, 1), (1, 0), (1, 2)))
       st(Array(0, i, j)) = 1.0

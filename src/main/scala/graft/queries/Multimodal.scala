@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.ImageSource
@@ -326,7 +327,7 @@ object Multimodal {
     * this IS the stored table and the checkpoint disappears. */
   private[graft] def avAssets(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    t(s, dir, "documents")
+    Materialize(t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
       .map { case (docId, nChars) =>
         val h = geoH(docId); val w = geoW(docId); val nf = geoF(docId)
@@ -341,7 +342,7 @@ object Multimodal {
         AvAsset(docId, ImageSource.encodeTiffPages(pages, lzw = true),
           graft.sources.AudioSource.encodeWavPcm16(audSr(docId), 1, samples),
           nf, n)
-      }.toDF().localCheckpoint(true)
+      }.toDF())
   }
 
   /** A/V SYNC: per-frame video features joined to the frame-aligned audio
@@ -471,10 +472,10 @@ object Multimodal {
 
   val multimodalAvContainer: Q = (s, dir) => {
     import s.implicits._
-    val assets = t(s, dir, "documents")
+    val assets = Materialize(t(s, dir, "documents")
       .select(col("doc_id"), col("n_chars")).as[(Long, Long)]
       .map { case (docId, nChars) => (docId, aviAssetBytes(docId, nChars)) }
-      .toDF("asset_id", "avi").localCheckpoint(true)
+      .toDF("asset_id", "avi"))
     assets.as[(Long, Array[Byte])]
       .flatMap { case (id, bytes) => avContainerFeatures(id, bytes) }
       .toDF("asset_id", "frame", "sum_p", "n_px", "n_samps", "energy")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -112,7 +113,7 @@ object Similarity {
       .select(explode(col("members")).as("vec_id"), col("rep"))
 
   private def vecRepMapping(e: DataFrame): DataFrame =
-    vecRepPlan(e).localCheckpoint(true)
+    Materialize(vecRepPlan(e))
 
   val embeddingNearDup: Q = (s, dir) => {
     graft.functions.GraftExtensions.install(s)
@@ -136,8 +137,7 @@ object Similarity {
     val repE = e.join(
       mapping.filter(col("vec_id") === col("rep")).select(col("vec_id")),
       Seq("vec_id"), "left_semi")
-    val cand = embeddingLshCandidates(repE)
-      .localCheckpoint(true) // tiny; eager so both verify joins reuse it
+    val cand = Materialize(embeddingLshCandidates(repE)) // tiny; eager so both verify joins reuse it
     val ve = repE.select(col("vec_id"), col("embedding"))
     val verified = cand
       .join(ve.as("ea"), col("va") === col("ea.vec_id"))
@@ -186,7 +186,7 @@ object Similarity {
     val repE = e.join(
       mapping.filter(col("vec_id") === col("rep")).select(col("vec_id")),
       Seq("vec_id"), "left_semi")
-    val cand = embeddingLshCandidates(repE).localCheckpoint(true)
+    val cand = Materialize(embeddingLshCandidates(repE))
     val ve = repE.select(col("vec_id"), col("embedding"))
     // verified (va < vb by construction): vb loses to the earlier va
     val droppedReps = cand
@@ -345,7 +345,7 @@ object Similarity {
     * from the input's split count — a single-row-group parquet otherwise
     * pins every corpus pass to ONE task, which the sf10 one-pass artifact
     * surfaced as semantic_dedup's ~190 s wall — and the eager
-    * localCheckpoint materializes the normalization once instead of once
+    * Materialize checkpoint holds the normalization once instead of once
     * per Lloyd job (kmeans alone re-executes the scan+norm lineage 2×,
     * each consumer once more). ~0.6 KB/row: at 100 TB you checkpoint this
     * narrow (id, v) projection, never the raw table. Values are
@@ -369,7 +369,7 @@ object Similarity {
     // sortBeforeRepartition binary order is led by the unique vec_id
     // either way), so the Lloyd partial-sum regrouping — and the
     // 6-dp-rounded centroids — are bit-stable across this change.
-    normed(e0, barrier = _.repartition(KMEANS_PARTS)).localCheckpoint(true)
+    Materialize(normed(e0, barrier = _.repartition(KMEANS_PARTS)))
 
   /** Seed centroids: the first k vectors, components rounded to 6 dp. */
   private def seedCents(vecs: DataFrame, k: Int = K): DataFrame =
@@ -458,7 +458,7 @@ object Similarity {
   }
 
   /** Two Lloyd passes from the deterministic seeds. Each iteration's
-    * centroid table (K rows) is truncated with localCheckpoint: without
+    * centroid table (K rows) is truncated with [[Materialize]]: without
     * truncation the final query tree re-executes the whole Lloyd prefix
     * once per consumer (assignment + probe ranking), i.e. extra full
     * scans of the corpus at 100 TB for a 10-row intermediate.
@@ -467,11 +467,12 @@ object Similarity {
     * INTERMEDIATE iteration's centroids have exactly one consumer — the
     * next iteration's [[assignCells]] broadcast build, a full pass over
     * the K rows — so a LAZY checkpoint folds its materialization into
-    * that job (one job per iteration instead of two, the GraphCC cpLazy
-    * idiom). The FINAL iteration's centroids feed SEVERAL consumers
-    * (assignment + explicit broadcast(cents) joins in the ivf keys)
-    * whose stages race: concurrent first-computes of a lazy checkpoint
-    * each re-run the corpus-sized Lloyd lineage before any partition
+    * that job (one job per iteration instead of two, the GraphCC lazy
+    * idiom; reliable mode is always eager). The FINAL iteration's
+    * centroids feed SEVERAL consumers (assignment + explicit
+    * broadcast(cents) joins in the ivf keys) whose stages race:
+    * concurrent first-computes of a lazy checkpoint each re-run the
+    * corpus-sized Lloyd lineage before any partition
     * persists — an all-lazy form measured semantic_dedup 8.7 s vs 6.8 s
     * eager at sf10 — so the final table stays EAGER. */
   private def kmeans(vecs: DataFrame, k: Int = K): DataFrame =
@@ -484,8 +485,8 @@ object Similarity {
     var cents = seedCents(vecs, k)
     for (i <- 1 to 2) {
       val assigned = assignCells(vecs, cents)
-      cents = (if (explodeForm) updateCentsExplode(assigned)
-               else updateCents(assigned)).localCheckpoint(eager = i == 2)
+      cents = Materialize(if (explodeForm) updateCentsExplode(assigned)
+                          else updateCents(assigned), eager = i == 2)
     }
     cents
   }
@@ -827,7 +828,7 @@ object Similarity {
     * cross-engine determinism anchor as the coarse k-means; PQ means
     * are NOT re-normalized, these are plain L2 centroids). Each
     * iteration's 128-row codebook is eagerly truncated with
-    * localCheckpoint exactly like [[kmeans]] — without it every
+    * [[Materialize]] exactly like [[kmeans]] — without it every
     * downstream consumer re-executes the Lloyd prefix over the corpus. */
   private[graft] def pqCodebooks(subs: DataFrame): DataFrame = {
     graft.functions.GraftExtensions.install(subs.sparkSession)
@@ -835,12 +836,11 @@ object Similarity {
       .select(col("m"), col("vec_id").as("code"),
         expr("transform(sv, x -> round(x, 6))").as("cb"))
     for (_ <- 1 to 2) {
-      cb = pqAssign(subs, cb)
+      cb = Materialize(pqAssign(subs, cb)
         .groupBy(col("m"), col("code"))
         .agg(expr("vec_mean(sv)").as("mv"))
         .select(col("m"), col("code"),
-          expr("transform(mv, x -> round(x, 6))").as("cb"))
-        .localCheckpoint(true)
+          expr("transform(mv, x -> round(x, 6))").as("cb")))
     }
     cb
   }
@@ -1330,7 +1330,7 @@ object Similarity {
     // assignment is pointwise in the vector, so only the collapsed reps
     // pay it (k-means itself still runs over the FULL corpus — Lloyd
     // means weight by multiplicity, so collapsing there would change the
-    // centroids); the localCheckpoint makes the tiny rep table a leaf so
+    // centroids); the checkpoint makes the tiny rep table a leaf so
     // the pairwise self-join and the anti-join below don't re-execute
     // the corpus pipeline once per use (r11 s3 — the sf10 artifact
     // showed 3 re-executions of the whole scan+assign tree). EAGER,
@@ -1338,12 +1338,11 @@ object Similarity {
     // — the self-join's two sort stages race to first-compute the lazy
     // checkpoint and each re-runs the corpus assignment lineage before
     // any partition persists (semantic_dedup 8.7 s lazy vs 6.8 s eager).
-    val repRows = assignCells(
+    val repRows = Materialize(assignCells(
         vecs.join(reps.select(col("rep").as("vec_id")), Seq("vec_id"), "left_semi"),
         kmeans(vecs, k))
       .select(col("vec_id"), col("cluster"))
-      .join(keyed, Seq("vec_id"))
-      .localCheckpoint(true)
+      .join(keyed, Seq("vec_id")))
     val removedReps = repRows.as("a").join(repRows.as("b"),
         col("a.cluster") === col("b.cluster") && col("a.vec_id") < col("b.vec_id"))
       .filter(clearsTau(round(expr("cosine_sim(a.embedding, b.embedding)"), 4)))

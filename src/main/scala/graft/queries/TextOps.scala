@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.Materialize
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -428,12 +429,13 @@ object TextOps {
     val nDocs = docs.select(countDistinct(col("doc_id")).as("n"))
     val base = docs.select(col("source"), col("text"), unhex(md5(col("text"))).as("tid"))
     // per-(source, distinct text) doc count: the tf-sum weight
-    val grouped = base.groupBy(col("source"), col("tid")).agg(count(lit(1)).as("ks"))
-      .localCheckpoint(true) // distinct (source, text)-sized; barrier
+    // (distinct (source, text)-sized; barrier)
+    val grouped = Materialize(
+      base.groupBy(col("source"), col("tid")).agg(count(lit(1)).as("ks")))
     // one representative text per tid + total doc count: the df weight
-    val texts = base.groupBy(col("tid"))
-      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext"))
-      .localCheckpoint(true) // distinct-content-sized; pushdown barrier
+    // (distinct-content-sized; pushdown barrier)
+    val texts = Materialize(base.groupBy(col("tid"))
+      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext")))
     val tfText = texts.select(col("tid"), col("ktext"), explode(toks).as("term"))
       .groupBy(col("tid"), col("term"))
       .agg(count(lit(1)).as("tf"), first(col("ktext")).as("ktext"))
@@ -591,11 +593,10 @@ object TextOps {
     val candDocs = broadcast(cand.select(col("da").as("doc_id"))
       .union(cand.select(col("db").as("doc_id")))
       .distinct())
-    val candShingles = docs.join(candDocs, Seq("doc_id"), "left_semi")
+    val candShingles = Materialize(docs.join(candDocs, Seq("doc_id"), "left_semi")
       .select(col("doc_id"), toks.as("t"))
       .filter(size(col("t")) >= 3)
-      .select(col("doc_id"), expr(shingleArrayExpr).as("sh"))
-      .localCheckpoint(true)
+      .select(col("doc_id"), expr(shingleArrayExpr).as("sh")))
     val shCand = candShingles.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val sizes = candShingles.select(col("doc_id"), size(col("sh")).cast("long").as("n"))
     val inter = cand
@@ -639,7 +640,7 @@ object TextOps {
     // r11: wrapped in the exact-dup collapse (see collapsedPairVerify —
     // losslessness makes the verified output transfer to member pairs);
     // cand stays tiny (one row per rep-level prefix collision) and is
-    // localCheckpoint-materialized inside the shared path
+    // materialized (graft.Materialize) inside the shared path
     collapsedPairVerify(t(s, dir, "documents"))(prefixJaccardCandidates)
 
   /** Lossless prefix-filter candidate pairs (da, db) — factored out
@@ -709,9 +710,9 @@ object TextOps {
     * costs |candidate docs containing it| join rows, not k² over the
     * corpus. `cand` seeds both the semi-join and the per-pair counts
     * (tiny: one row per confirmed LSH collision), so it is materialized
-    * once via an eager localCheckpoint — unlike persist(), checkpoint
-    * blocks are GC-reclaimed with the DataFrame, so repeated gate/spec
-    * runs don't accumulate session-lifetime cached copies.
+    * once via an eager graft.Materialize checkpoint — unlike persist(),
+    * checkpoint blocks are GC-reclaimed with the DataFrame, so repeated
+    * gate/spec runs don't accumulate session-lifetime cached copies.
     *
     * Permutation family (r10): DOUBLE HASHING — one md5 per shingle,
     * split into two 60-bit hex halves (h1, h2); permutation i is
@@ -772,20 +773,19 @@ object TextOps {
     // the executed plan). Checkpointing is the r11 normedPinned rule
     // applied here: a NARROW (16 B/row) corpus projection is exactly
     // what you materialize; at 10⁹ docs it is ~16 GB across the cluster.
-    val mapping = docs
+    val mapping = Materialize(docs
       .select(col("doc_id"),
-        min(col("doc_id")).over(Window.partitionBy(unhex(md5(col("text"))))).as("rep"))
-      .localCheckpoint(true)
+        min(col("doc_id")).over(Window.partitionBy(unhex(md5(col("text"))))).as("rep")))
     // repDocs is CHECKPOINTED like cand: it is distinct-texts-sized
     // (tiny by the collapse's own premise) but its lineage scans the
     // full corpus — its three consumers (candidates, verify,
     // eligibleReps) would otherwise each re-run that scan (measured at
     // sf100: two twin 63 s full-scan stages for 5 k rows of output —
     // 40% of the key's wall re-deriving the same frame)
-    val repDocs = docs.join(
+    val repDocs = Materialize(docs.join(
       mapping.filter(col("doc_id") === col("rep")).select(col("doc_id")),
-      Seq("doc_id"), "left_semi").localCheckpoint(true)
-    val cand = candGen(repDocs).localCheckpoint(true)
+      Seq("doc_id"), "left_semi"))
+    val cand = Materialize(candGen(repDocs))
     // exact verify on candidates ONLY (shared candidate-restricted path),
     // representatives only — the quadratic stage runs on distinct texts
     val verified = verifyJaccardPairs(repDocs, cand)
@@ -1634,9 +1634,9 @@ object TextOps {
     // the batch's own signatures land in the store (lazily-executed, it
     // would re-scan the post-append index and batch docs would
     // self-collide on their own appended sigs)
-    val collided = nearDupCollidedIds(
+    val collided = Materialize(nearDupCollidedIds(
       nearDupSigs(docs.filter(col("doc_id") >= 400)).select("doc_id", "sig"),
-      idx).localCheckpoint(true)
+      idx))
     graft.sources.SigIndex.write(batchBanded, path, "append")
     nearDupRollup(docs, collided)
   }
@@ -1748,8 +1748,8 @@ object TextOps {
     * [[lineDedupDocs]] ride: flag each `rows` row whose `key` is in
     * `shared` (a (key, is_dup=1) set produced by a full aggregation).
     *
-    * The shared set is materialized ONCE (eager localCheckpoint — memory
-    * + disk spill), so the budget check is a count over stored
+    * The shared set is materialized ONCE (eager graft.Materialize
+    * checkpoint), so the budget check is a count over stored
     * partitions, not a second aggregation pass. Within budget (default
     * 5M keys ≈ low hundreds of MB) it BROADCASTS — a boilerplate key
     * shared by millions of docs costs a hash-probe per row, never one
@@ -1768,7 +1768,7 @@ object TextOps {
     val s = rows.sparkSession
     val maxRows =
       s.conf.get(SHARED_BROADCAST_MAX_ROWS, 5000000L.toString).toLong
-    val sh = shared.localCheckpoint(true)
+    val sh = Materialize(shared)
     if (sh.count() <= maxRows)
       rows.join(broadcast(sh), Seq(key), "left_outer")
     else {
@@ -1862,7 +1862,7 @@ object TextOps {
     // measured at sf100 as twin 480 CPU-s stages re-augmenting the same
     // 5 M docs (a real corpus arrives newline-delimited; the augment is
     // fixture plumbing and must not be paid twice)
-    lineDedupOver(augmentLines(t(s, dir, "documents")).localCheckpoint(true))
+    lineDedupOver(Materialize(augmentLines(t(s, dir, "documents"))))
 
   /** The deterministic newline fixture for the gated key: re-join the
     * (newline-free) synthetic text as 3-token LINES — byte-identical
@@ -1914,16 +1914,14 @@ object TextOps {
     // tid rides as 16-byte BINARY (r21, guide §2.3 — the same narrowing
     // as exactSubstringDedup): it keys the corpus-sized base checkpoint,
     // the texts groupBy exchange, and both re-attach joins; never output.
-    val base = docs.select(col("doc_id"), unhex(md5(col("text"))).as("tid"))
-      .localCheckpoint(true)
+    val base = Materialize(docs.select(col("doc_id"), unhex(md5(col("text"))).as("tid")))
     // texts is DISTINCT-CONTENT-sized — materializing it is the
     // collapse's design point, and it stops the join's isnotnull(tid)
     // pushing the inlined augment+md5 below the repartition on this
     // side too (same single-split trap as base)
-    val texts = docs.select(unhex(md5(col("text"))).as("tid"), col("text"))
+    val texts = Materialize(docs.select(unhex(md5(col("text"))).as("tid"), col("text"))
       .groupBy(col("tid"))
-      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext"))
-      .localCheckpoint(true)
+      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext")))
     val segs = texts
       .select(col("tid"), col("ktext"), posexplode(split(col("text"), "\n"))
         .as(Seq("seg_idx", "seg")))
@@ -2070,12 +2068,11 @@ object TextOps {
     // and the probe broadcast — unhex halves those bytes at identical
     // 128-bit exactness. Values never reach the output.
     // materialized for the same pushdown reason as lineDedupOver's base
-    val base = aug.select(col("doc_id"), unhex(md5(col("text"))).as("tid"))
-      .localCheckpoint(true)
-    val texts = aug.select(unhex(md5(col("text"))).as("tid"), col("text"))
+    val base = Materialize(aug.select(col("doc_id"), unhex(md5(col("text"))).as("tid")))
+    // distinct-content-sized; pushdown barrier
+    val texts = Materialize(aug.select(unhex(md5(col("text"))).as("tid"), col("text"))
       .groupBy(col("tid"))
-      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext"))
-      .localCheckpoint(true) // distinct-content-sized; pushdown barrier
+      .agg(first(col("text")).as("text"), count(lit(1)).as("ktext")))
     val withT = texts.select(col("tid"), col("ktext"), toks.as("t"))
     val gramArr =
       s"transform(sequence(0, size(t)-$k), i -> unhex(md5(concat_ws(' ', slice(t, i+1, $k)))))"

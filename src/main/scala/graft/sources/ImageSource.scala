@@ -3,8 +3,9 @@ package graft.sources
 import java.io.ByteArrayInputStream
 import java.nio.charset.StandardCharsets
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Materialize
 import graft.tensor.{Block, DType, TBlock}
 
 /** Image file source — the reference's `imread` analog
@@ -50,14 +51,7 @@ object ImageSource {
     import spark.implicits._
     val files = spark.read.format("binaryFile").load(glob)
       .select(col("path"), col("content"))
-    // tiny (path, frame) rows; checkpointed so the count and the join
-    // below reuse one sort instead of re-running it
-    val indexed = files.select(col("path")).as[String].rdd
-      .sortBy(identity).zipWithIndex()
-      .map { case (p, i) => (p, i.toInt) }
-      .toDF("path", "frame")
-      .localCheckpoint(true)
-    val nFrames = indexed.count()
+    val (indexed, nFrames) = numberFrames(files)
     val withFrames = files.join(indexed, "path")
       .select(col("frame"), col("content"))
       .as[(Int, Array[Byte])]
@@ -69,7 +63,20 @@ object ImageSource {
       }
       (frame, h, w, dt, px)
     }
-    stackFramesTyped(frames, imageId, nFrames.toInt, nframes)
+    stackFramesTyped(frames, imageId, nFrames, nframes)
+  }
+
+  /** One frame per file: (path, frame) rows numbering `files` in sorted
+    * path order, and the frame count. Only the path column is read (no
+    * file content); the tiny rows are materialized so the count and the
+    * caller's decode join reuse one sort instead of re-running it. */
+  private def numberFrames(files: DataFrame): (DataFrame, Int) = {
+    import files.sparkSession.implicits._
+    val indexed = Materialize(files.select(col("path")).as[String].rdd
+      .sortBy(identity).zipWithIndex()
+      .map { case (p, i) => (p, i.toInt) }
+      .toDF("path", "frame"))
+    (indexed, indexed.count().toInt)
   }
 
   /** Assemble decoded frames into typed blocks with `nframes` frames per
@@ -163,9 +170,8 @@ object ImageSource {
     import spark.implicits._
     val files = spark.read.format("binaryFile").load(glob)
       .select(col("path"), col("content"))
-    val counts = files.as[(String, Array[Byte])]
-      .map { case (p, b) => (p, pageCount(b)) }.toDF("path", "np")
-      .localCheckpoint(true)
+    val counts = Materialize(files.as[(String, Array[Byte])]
+      .map { case (p, b) => (p, pageCount(b)) }.toDF("path", "np"))
     val sorted = counts.as[(String, Long)].rdd.sortBy(_._1)
     val partSums = sorted
       .mapPartitionsWithIndex { (i, it) => Iterator((i, it.map(_._2).sum)) }
@@ -979,12 +985,7 @@ object ImageSource {
     import spark.implicits._
     val files = spark.read.format("binaryFile").load(glob)
       .select(col("path"), col("content"))
-    val indexed = files.select(col("path")).as[String].rdd
-      .sortBy(identity).zipWithIndex()
-      .map { case (p, i) => (p, i.toInt) }
-      .toDF("path", "frame")
-      .localCheckpoint(true)
-    val nFrames = indexed.count().toInt
+    val (indexed, nFrames) = numberFrames(files)
     files.join(indexed, "path")
       .select(col("frame"), col("content"))
       .as[(Int, Array[Byte])]

@@ -1,5 +1,6 @@
 package graft.tensor
 
+import graft.Materialize
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -381,30 +382,15 @@ object Measure {
     *    and applied as one bounded map per block — no driver collect, no
     *    broadcast of O(#labels) state.
     *
-    * Checkpointing: lineage is truncated per round with
-    * `localCheckpoint(eager = true)` by default (fast, but not
-    * fault-tolerant — blocks live only in executor storage). Set
-    * `graft.checkpoint.reliable=true` in the session conf AND a
-    * `SparkContext.setCheckpointDir` to use reliable HDFS/FS checkpoints
-    * instead on a real cluster.
+    * Checkpointing: lineage is truncated per round and before the
+    * ranking through [[graft.Materialize]], which owns the local-vs-
+    * reliable choice.
     *
     * Returns (label blocks, num_labels).
     */
   def label(ds: Dataset[Block], ndim: Int, connectivity: Int = 1): (Dataset[Block], Long) = {
     val spark = ds.sparkSession
     import spark.implicits._
-
-    // Lineage truncation for the iterative steps: reliable checkpoint when
-    // configured (cluster posture — survives executor loss), local
-    // otherwise (single-machine speed).
-    val reliable = spark.conf.getOption("graft.checkpoint.reliable").contains("true")
-    if (reliable) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "graft.checkpoint.reliable=true requires SparkContext.setCheckpointDir")
-    // LAZY truncation: the one call site runs a full-pass count right
-    // after, which materializes every partition in that same job (see
-    // graft.plans.GraphCC.cpLazyFor for the contract)
-    def cp2(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint(eager = false) else df.localCheckpoint(eager = false)
 
     // ---- step 1: local label pass (labels = global linear index of the
     // component's root cell + 1; 0 = background)
@@ -443,10 +429,10 @@ object Measure {
 
     // ---- step 3: connected components on the label graph — the shared
     // min-label-propagation/pointer-doubling kernel (graft.plans.GraphCC;
-    // O(log diameter) rounds, two id-joins per round, checkpointed per the
-    // same reliable/local posture as this method). Non-convergence aborts
-    // inside GraphCC — duplicate `old` keys in the relabel relation would
-    // otherwise surface as a cryptic map_from_entries failure downstream.
+    // O(log diameter) rounds, two id-joins per round, checkpointed through
+    // graft.Materialize). Non-convergence aborts inside GraphCC —
+    // duplicate `old` keys in the relabel relation would otherwise
+    // surface as a cryptic map_from_entries failure downstream.
     val mapping = graft.plans.GraphCC.components(edges)
       .filter(col("node") =!= col("comp"))
       .select(col("node"), col("comp").as("root"))
@@ -480,9 +466,9 @@ object Measure {
     // pass completes this lazy truncation, so the anti-join lineage
     // (blockLabels distinct + anti-join against the CC mapping) executes
     // once instead of twice, at zero extra jobs.
-    val roots = cp2(allLabels
+    val roots = Materialize(allLabels
       .join(mapping, col("lbl") === col("node"), "left_anti")
-      .select(col("lbl").as("root")))
+      .select(col("lbl").as("root")), eager = false)
     // Lazy checkpoint + full count in ONE job (r21): dense ids are the
     // contiguous 1..n, so the count both materializes the truncated
     // ranking and IS n — the old eager checkpoint + agg(max(dense)) pair
@@ -496,9 +482,9 @@ object Measure {
     // subtrees) for zero shuffle saved, and at scale it sorts each of
     // its ~64 value buckets in ONE task where sortBy range-partitions
     // the sort across the cluster's full parallelism.
-    val ranked = cp2(roots.as[Long].rdd.sortBy(identity).zipWithIndex()
+    val ranked = Materialize(roots.as[Long].rdd.sortBy(identity).zipWithIndex()
       .map { case (r, i) => (r, i + 1L) }
-      .toDF("root", "dense")) // two consumers below; avoid recomputing the sort
+      .toDF("root", "dense"), eager = false) // two consumers below; avoid recomputing the sort
     val n = ranked.count()
     if (n == 0L) return (local, 0L)
     // old label → dense id: roots map via their own rank, interior nodes via

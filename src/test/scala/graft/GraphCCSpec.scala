@@ -33,8 +33,6 @@ class GraphCCSpec extends SparkSpec {
     assert(comps(Seq.empty).isEmpty)
   }
 
-  // ---------------- large-star/small-star kernel (graft.cc.algorithm=stars)
-
   private def sequentialCC(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map.empty[Long, Long]
     def find(x: Long): Long = {
@@ -46,91 +44,49 @@ class GraphCCSpec extends SparkSpec {
     parent.keys.map(k => k -> find(k)).toMap
   }
 
-  private def starComps(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val s = spark
-    import s.implicits._
-    GraphCC.componentsStars(edges.toDF("a", "b")).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-  }
-
-  test("stars kernel: path, triangle, reversed edge, self-loop") {
-    val edges = Seq(2L -> 1L, 2L -> 3L, 4L -> 3L,
-      10L -> 11L, 12L -> 10L, 11L -> 12L, 21L -> 20L, 30L -> 30L)
-    assert(starComps(edges) == comps(edges))
-  }
-
-  test("stars kernel: long chain (diameter 64)") {
-    val edges = (1L until 65L).map(i => i -> (i + 1))
-    val m = starComps(edges)
-    assert((1L to 65L).forall(m(_) == 1L))
-  }
-
-  test("stars kernel: high-degree hub star graph collapses in few rounds") {
-    // hub 1000 connected to 500 spokes — the shape min-label re-shuffles
-    // every round and star-contraction is built for
+  test("high-degree hub star graph collapses to the min spoke") {
+    // hub 1000 connected to 500 spokes: every round re-shuffles the hub's
+    // full neighbor list
     val edges = (1L to 500L).map(i => 1000L -> i)
-    val m = starComps(edges)
+    val m = comps(edges)
     assert(m.size == 501)
     assert(m.values.forall(_ == 1L))
   }
 
-  test("stars kernel: random graphs match sequential union-find") {
+  test("random graphs match sequential union-find") {
     val rnd = new scala.util.Random(20260812L)
     for (trial <- 1 to 3) {
       val n = 40 + trial * 20
       val edges = Seq.fill(n)((rnd.nextLong(50).abs, rnd.nextLong(50).abs))
       val expected = sequentialCC(edges)
-      val got = starComps(edges)
+      val got = comps(edges)
       assert(got == expected, s"trial $trial: $got vs $expected")
     }
   }
 
-  test("hub stress: hub-heavy graph — both kernels correct; rounds/wall compared") {
+  test("hub stress: hub-heavy graph — one component, rounds and wall reported") {
     // H hubs × 990 spokes (degree ~991) + a hub chain = one component
-    // rooted at node 0 — the skew shape that separates the kernels:
-    // minlabel re-shuffles each hub's full neighbor list every round,
-    // stars folds it into one map-side partial min per task. Default is
-    // 100 hubs (~1e5 edges, seconds); the full measured configuration —
-    // GRAFT_CC_HUBS=1000 → 1e6 edges, stars 11 rounds/50 s vs minlabel
-    // 11 rounds/27 s at 32-way local — is documented in the GraphCC
-    // scaladoc and re-runnable via the env var without taxing every
-    // sbt-test iteration with its ~80 s.
-    import spark.implicits._
+    // rooted at node 0: each round re-shuffles every hub's full neighbor
+    // list. Default is 100 hubs (~1e5 edges, seconds); the full measured
+    // configuration — GRAFT_CC_HUBS=1000 → 1e6 edges, 11 rounds/27 s at
+    // 32-way local — is documented in the GraphCC scaladoc and
+    // re-runnable via the env var without taxing every sbt-test
+    // iteration.
     val hubs = sys.env.getOrElse("GRAFT_CC_HUBS", "100").toLong
     val spokes = spark.range(hubs * 990L).select(
-      (org.apache.spark.sql.functions.col("id") / 990L).cast("long").as("a"),
-      (org.apache.spark.sql.functions.col("id") + hubs).as("b"))
-    val chain = spark.range(hubs - 1).select(
-      org.apache.spark.sql.functions.col("id").as("a"),
-      (org.apache.spark.sql.functions.col("id") + 1L).as("b"))
-    val edges = spokes.union(chain)
-    def run(label: String, f: => (org.apache.spark.sql.DataFrame, Int)): (Long, Int, Double) = {
-      val t0 = System.nanoTime()
-      val (comp, rounds) = f
-      val wrong = comp.filter(org.apache.spark.sql.functions.col("comp") =!= 0L).count()
-      val n = comp.count()
-      val wall = (System.nanoTime() - t0) / 1e9
-      assert(wrong == 0, s"$label: nodes outside component 0")
-      (n, rounds, wall)
-    }
-    val (nS, rS, wS) = run("stars", graft.plans.GraphCC.componentsStarsCounted(edges))
-    val (nM, rM, wM) = run("minlabel", graft.plans.GraphCC.componentsMinLabelCounted(edges))
-    assert(nS == hubs * 990L + hubs && nM == nS, s"node count $nS vs $nM")
+      (col("id") / 990L).cast("long").as("a"), (col("id") + hubs).as("b"))
+    val chain = spark.range(hubs - 1).select(col("id").as("a"), (col("id") + 1L).as("b"))
+    val t0 = System.nanoTime()
+    val (comp, rounds) = GraphCC.componentsCounted(spokes.union(chain))
+    val wrong = comp.filter(col("comp") =!= 0L).count()
+    val n = comp.count()
+    val wall = (System.nanoTime() - t0) / 1e9
+    assert(wrong == 0, "nodes outside component 0")
+    assert(n == hubs * 990L + hubs, s"node count $n")
     // the hub chain's diameter is `hubs` but pointer doubling halves it
-    // each round; stars contracts hubs immediately — both must stay well
-    // under the 60-round guard
-    assert(rS < 30 && rM < 30, s"rounds stars=$rS minlabel=$rM")
-    info(f"hub stress ${hubs * 990 + hubs - 1} edges: stars rounds=$rS wall=$wS%.1f s; " +
-      f"minlabel rounds=$rM wall=$wM%.1f s")
-  }
-
-  test("components() dispatches on graft.cc.algorithm") {
-    val edges = Seq(5L -> 6L, 6L -> 7L)
-    spark.conf.set("graft.cc.algorithm", "stars")
-    try {
-      val m = comps(edges)
-      assert(m == Map(5L -> 5L, 6L -> 5L, 7L -> 5L))
-    } finally spark.conf.unset("graft.cc.algorithm")
+    // each round — well under the 60-round guard
+    assert(rounds < 30, s"rounds=$rounds")
+    info(f"hub stress ${hubs * 990 + hubs - 1} edges: rounds=$rounds wall=$wall%.1f s")
   }
 
   test("cc_dedup_groups: rep-level CC + whole-group expansion under heavy duplication — transitive merge, no pair materialization needed") {

@@ -75,8 +75,6 @@ class LargeTensorSpec extends SparkSpec {
   test("label at 1e5+ components: reliable checkpoint mode") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt").toString
     spark.sparkContext.setCheckpointDir(dir)
-    spark.conf.set("graft.checkpoint.reliable", "true")
-    try labelStress()
-    finally spark.conf.set("graft.checkpoint.reliable", "false")
+    Timed.withConf(spark.conf, "graft.checkpoint.reliable" -> "true")(labelStress())
   }
 }

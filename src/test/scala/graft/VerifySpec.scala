@@ -20,13 +20,18 @@ class VerifySpec extends SparkSpec {
     assert(ok.get("status").asText == "ok")
     assert(!ok.has("error") && !ok.has("frame"))
     assert(ok.get("wall_s").asDouble > 0)
+    // at least the write's own job
+    assert(ok.get("jobs").asLong >= 1, ok)
     val bad = m.get("boom")
     assert(bad.get("status").asText == "error")
     assert(bad.get("error").asText == "java.lang.IllegalStateException")
     assert(bad.get("frame").asText.contains("VerifySpec"), bad)
     assert(bad.get("wall_s").asDouble >= 0)
-    assert(spark.read.parquet(s"$out/q1_pricing_summary").count() ==
-      q1(spark, sf0001).count())
+    assert(bad.get("jobs").asLong == 0 && !bad.has("rows"), bad)
+    val q1Rows = q1(spark, sf0001).count()
+    assert(q1Rows > 0)
+    assert(spark.read.parquet(s"$out/q1_pricing_summary").count() == q1Rows)
+    assert(ok.get("rows").asLong == q1Rows, ok)
     assert(!Files.exists(out.resolve("boom")))
 
     val oom = new OutOfMemoryError("fatal")

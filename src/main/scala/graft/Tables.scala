@@ -121,63 +121,12 @@ object Tables {
     * on a real lake, row groups already give scan parallelism. */
   @volatile var benchParts: Int = 0
 
-  /** Bucketed-layout preference (r17, verdict item: make the lake layout
-    * the DEFAULT read path, not an opt-in twin). With the session conf
-    * `graft.lake.preferBucketed=true`, a fact table whose bucketed build
-    * exists in the session catalog (`Relational.bucketedFacts` names) is
-    * served FROM that build — so every orderkey-joining query written
-    * against the flat files silently picks up the exchange-free layout,
-    * the way a catalog table's declared bucketing works on a cluster.
-    * Returns None when the conf is off or the build doesn't exist (the
-    * flat read stays the answer; correctness never depends on layout). */
-  private def bucketedFor(spark: SparkSession, dir: String, name: String): Option[String] = {
-    if (spark.conf.getOption("graft.lake.preferBucketed").getOrElse("false") != "true")
-      return None
-    val (lTab, oTab) = graft.queries.Relational.bucketedFactNames(dir)
-    val tab = name match {
-      case "lineitem" => lTab
-      case "orders" => oTab
-      case _ => return None
-    }
-    if (spark.catalog.tableExists(tab)) Some(tab) else None
-  }
-
-  /** The bucketed table's BUILD GENERATION — its catalog createTime.
-    * Part of the cache key (r17, per ADVICE): the name alone covers the
-    * None→Some transition but not rebuild-under-the-same-name (DROP +
-    * rebuild in one session), where a name-keyed cache would keep
-    * serving a frame whose analyzed plan pins the dropped build's file
-    * listing. */
-  private def tableGen(spark: SparkSession, tab: String): Long =
-    try spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(tab)).createTime
-    catch {
-      // only the expected dropped-between-check-and-read race collapses
-      // to generation 0; anything else (parse bug, catalog corruption)
-      // must not silently degrade the cache key to name-only — that
-      // would resurrect the stale-frame-after-rebuild bug this key
-      // exists to prevent (r18 ADVICE)
-      case _: org.apache.spark.sql.catalyst.analysis.NoSuchTableException
-           | _: org.apache.spark.sql.catalyst.analysis.NoSuchDatabaseException =>
-        0L
-    }
-
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // the bucketed choice — name AND build generation — is part of the
-    // cache key: flipping the conf, building, or REBUILDING the tables
-    // mid-session must not serve a stale frame
-    val bucketed = bucketedFor(spark, dir, name)
-    val key = name + bucketed.fold("")(tab =>
-      "@" + tab + "@" + tableGen(spark, tab))
     cache.keySet.removeIf(_._1.sparkContext.isStopped)
-    cache.computeIfAbsent((spark, dir, key), { _ =>
-      bucketed match {
-        case Some(tab) => spark.table(tab)
-        case None =>
-          val raw = parquet(spark, s"$dir/$name.parquet")
-          val df = if (name == "events") normalizeEvents(raw) else raw
-          if (benchParts > 0) df.repartition(benchParts) else df
-      }
+    cache.computeIfAbsent((spark, dir, name), { _ =>
+      val raw = parquet(spark, s"$dir/$name.parquet")
+      val df = if (name == "events") normalizeEvents(raw) else raw
+      if (benchParts > 0) df.repartition(benchParts) else df
     })
   }
 }

@@ -212,9 +212,9 @@ object ImreadQueries {
     val frames = (0 until FRAMES).map(f => base.map(p => (p + frameStep * f) % 256))
     val out = fixtureDir(s, dir, "tiff")
     java.nio.file.Files.write(out.resolve("frames_000_001.tiff"),
-      ImageSource.encodeTiffPages(frames.take(2).map(f => (H, W, f)), lzw = true))
+      ImageSource.encodeTiffPages(frames.take(2).map(f => (H, W, f)), comp = 5))
     java.nio.file.Files.write(out.resolve("frames_002.tiff"),
-      ImageSource.encodeTiff(H, W, frames(2)))
+      ImageSource.encodeTiffPages(Seq((H, W, frames(2)))))
     framesToDf(ImageSource.readTiff(s, s"$out/*.tiff")).orderBy("f", "i", "j")
   }
 
@@ -235,10 +235,10 @@ object ImreadQueries {
     val frame2 = fixtureBase16(s, dir).map(p => (p + 600) % 65536)
     val out = fixtureDir(s, dir, "btiff")
     java.nio.file.Files.write(out.resolve("frames_000_001.btiff"),
-      ImageSource.encodeTiffPages2(frames01.map((H, W, _)),
+      ImageSource.encodeTiffPages(frames01.map((H, W, _)),
         comp = 5, big = true, tile = Some((20, 20)), pred = 2))
     java.nio.file.Files.write(out.resolve("frames_002.btiff"),
-      ImageSource.encodeTiffPages2(Seq((H, W, frame2)),
+      ImageSource.encodeTiffPages(Seq((H, W, frame2)),
         comp = 8, big = false, tile = Some((16, 16)), bps = 16, pred = 2))
     framesToDf(ImageSource.readTiff(s, s"$out/*.btiff")).orderBy("f", "i", "j")
   }

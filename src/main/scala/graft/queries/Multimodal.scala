@@ -89,7 +89,7 @@ object Multimodal {
             px(i * w + j) = vidPx(nChars, docId, f, i, j).toDouble
           (h, w, px)
         }
-        Some(Asset(docId, "video", ImageSource.encodeTiffPages(pages, lzw = true),
+        Some(Asset(docId, "video", ImageSource.encodeTiffPages(pages, comp = 5),
           h, w, nf))
       }
       img.toSeq ++ vid.toSeq
@@ -339,7 +339,7 @@ object Multimodal {
         }
         val n = audN(docId)
         val samples = Array.tabulate(n)(i => audS(nChars, docId, i))
-        AvAsset(docId, ImageSource.encodeTiffPages(pages, lzw = true),
+        AvAsset(docId, ImageSource.encodeTiffPages(pages, comp = 5),
           graft.sources.AudioSource.encodeWavPcm16(audSr(docId), 1, samples),
           nf, n)
       }.toDF())

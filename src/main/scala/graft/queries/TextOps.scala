@@ -1739,10 +1739,8 @@ object TextOps {
       |FROM aug ORDER BY doc_id""".stripMargin
 
   // ------------------------------------------- shared-set probe idiom
-  /** Session conf capping the shared-set broadcast (rows). Above it the
-    * probe falls back to the SALTED shuffle join instead of failing the
-    * broadcast build. */
-  private[graft] val SHARED_BROADCAST_MAX_ROWS = "graft.sharedSet.broadcastMaxRows"
+  /** The [[sharedSetProbe]] broadcast budget, in shared-set rows. */
+  private val SharedSetBudget = 5000000L
 
   /** The de-skewed left-outer probe both [[dupNgramDocFilter]] and
     * [[lineDedupDocs]] ride: flag each `rows` row whose `key` is in
@@ -1750,10 +1748,10 @@ object TextOps {
     *
     * The shared set is materialized ONCE (eager graft.Materialize
     * checkpoint), so the budget check is a count over stored
-    * partitions, not a second aggregation pass. Within budget (default
-    * 5M keys ≈ low hundreds of MB) it BROADCASTS — a boilerplate key
-    * shared by millions of docs costs a hash-probe per row, never one
-    * reducer partition. Past budget (r12, judge item #3 — a
+    * partitions, not a second aggregation pass. Within `maxRows` keys
+    * (default 5M ≈ low hundreds of MB) it BROADCASTS — a boilerplate
+    * key shared by millions of docs costs a hash-probe per row, never
+    * one reducer partition. Past budget (r12, judge item #3 — a
     * boilerplate-heavy 100 TB corpus whose nd≥2 vocabulary outgrows any
     * broadcast) it falls back to the salted replica join: rows carry
     * salt = pmod(hash(all row cols), salt) (Lake.saltCol — retry-
@@ -1761,13 +1759,10 @@ object TextOps {
     * replicated ×salt, and the join keys on (key, __salt) so a hot key
     * spreads over `salt` reducers. Each row matches at most its own
     * (key, salt) replica, so the result is row-identical to the plain
-    * left-outer (TextOpsSpec pins equality under a forced-low budget,
+    * left-outer (TextOpsSpec pins equality with `maxRows = 0`,
     * PlanShapeSpec pins the salted shape). */
   private[graft] def sharedSetProbe(rows: DataFrame, shared: DataFrame,
-      key: String, salt: Int = 16): DataFrame = {
-    val s = rows.sparkSession
-    val maxRows =
-      s.conf.get(SHARED_BROADCAST_MAX_ROWS, 5000000L.toString).toLong
+      key: String, salt: Int = 16, maxRows: Long = SharedSetBudget): DataFrame = {
     val sh = Materialize(shared)
     if (sh.count() <= maxRows)
       rows.join(broadcast(sh), Seq(key), "left_outer")
@@ -1803,14 +1798,20 @@ object TextOps {
     * on the raw shingle (pinned by PlanShapeSpec). Shingling is shared
     * with the MinHash pipeline (`shingleRows`) by construction, not by
     * copy. */
-  val dupNgramDocFilter: Q = (s, dir) => {
-    val grams = shingleRows(t(s, dir, "documents"))
+  val dupNgramDocFilter: Q = (s, dir) => dupNgramDocFilterOver(t(s, dir, "documents"))
+
+  /** [[dupNgramDocFilter]] over an arbitrary (doc_id, text) frame, with
+    * the [[sharedSetProbe]] broadcast budget exposed for the fallback
+    * specs. */
+  private[graft] def dupNgramDocFilterOver(docs: DataFrame,
+      maxRows: Long = SharedSetBudget): DataFrame = {
+    val grams = shingleRows(docs)
       .withColumnRenamed("shingle", "ngram")
     val shared = grams.groupBy(col("ngram"))
       .agg(count(lit(1)).as("nd")) // grams are distinct per doc → count = doc count
       .filter(col("nd") >= 2)
       .select(col("ngram"), lit(1).as("is_dup"))
-    sharedSetProbe(grams, shared, "ngram")
+    sharedSetProbe(grams, shared, "ngram", maxRows = maxRows)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_grams"),
         sum(coalesce(col("is_dup").cast("long"), lit(0L))).as("n_dup"))
@@ -1904,7 +1905,8 @@ object TextOps {
     * and reassembles its distinct share only; verbatim-duplicate
     * clean_texts are computed once, not per copy. Equality with the
     * per-doc form is spec-pinned (TextOpsSpec) on duplicated fixtures. */
-  private[graft] def lineDedupOver(docs: DataFrame): DataFrame = {
+  private[graft] def lineDedupOver(docs: DataFrame,
+      maxRows: Long = SharedSetBudget): DataFrame = {
     // The (doc_id → tid) mapping is MATERIALIZED (narrow: 40 B/doc):
     // left lazy, the expansion join's isnotnull(tid) pushes below the
     // scan's repartition with the whole augment+md5 expression inlined
@@ -1941,7 +1943,7 @@ object TextOps {
     // map-side array_except over the line array — the old form shuffled
     // every (tid, seg_idx, seg) row into a collect_list groupBy, a
     // corpus-segment-level exchange carrying the segment text itself.
-    val covered = sharedSetProbe(segs, shared, "seg")
+    val covered = sharedSetProbe(segs, shared, "seg", maxRows = maxRows)
       .filter(col("is_dup").isNotNull)
       .select(col("tid"), col("seg_idx"))
       .groupBy(col("tid")).agg(collect_set(col("seg_idx")).as("cov"))
@@ -2622,14 +2624,14 @@ object TextOps {
     * only sort windows run per (lang, bucket) — each ~n/B docs, spread
     * over all reducers. Bucket cut precision never affects the answer
     * (any cuts yield correct ranks — only balance varies); B is
-    * `graft.tiers.rankBuckets` (default 64; size so n_docs/B fits a
+    * [[bucketedNtile]]'s `buckets` (default 64; size so n_docs/B fits a
     * reducer's sort budget at the target corpus). */
   val qualityTiers: Q = (s, dir) => {
     val (tok, lm) = unigramLm(s, dir)
     val perDoc = tok.join(broadcast(lm), "tok")
       .groupBy(col("lang"), col("doc_id"))
       .agg(round(avg(col("nll")), 6).as("doc_nll"), count(lit(1)).as("n_tok"))
-    bucketedNtile(s, perDoc, 3)
+    bucketedNtile(perDoc, 3)
       .groupBy(col("lang"), col("tier"))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_tok")).cast("long").as("token_budget"),
@@ -2642,15 +2644,11 @@ object TextOps {
     * without a per-lang full-partition sort. Input must carry
     * (lang, doc_id, doc_nll); output adds `tier`.
     *
-    * Mechanics — three tiny aggregates plus fine-grained windows:
-    *   1. per-lang cuts = percentile_approx(doc_nll, 1/B..(B-1)/B) and
-    *      per-lang doc count (one small row per language; broadcast);
-    *   2. map-side bucket = #cuts ≤ doc_nll (a flat fold over B-1
-    *      doubles — codegen-friendly, no nested HOF);
-    *   3. exact per-(lang,bucket) counts prefix-summed into rank
-    *      offsets (window over ≤B rows per lang — trivially small);
-    *   4. row_number per (lang, bucket) + offset = exact global rank;
-    *      ntile arithmetic from the per-lang count closes it.
+    * Mechanics — [[rankBuckets]] over (lang, doc_nll) with B =
+    * `buckets` (per-lang cuts plus the per-lang doc count, the map-side
+    * bucket, per-(lang, bucket) counts prefix-summed into rank offsets),
+    * then row_number per (lang, bucket) + offset = exact global rank;
+    * ntile arithmetic from the per-lang count closes it.
     * Ties on doc_nll land in one bucket by construction (bucket is a
     * function of doc_nll alone), so bucket-major + in-bucket
     * (doc_nll, doc_id) order IS the global (doc_nll, doc_id) order.
@@ -2662,26 +2660,10 @@ object TextOps {
     * are effectively unique per doc; a corpus pathological enough to
     * tie a whole language is one where the tercile is meaningless
     * anyway. */
-  private[graft] def bucketedNtile(s: SparkSession, perDoc: DataFrame, k: Int): DataFrame =
-    bucketedNtileDebug(s, perDoc, k).drop("bucket", "lr", "off", "rnk", "n_lang")
-
-  private[graft] def bucketedNtileDebug(s: SparkSession, perDoc: DataFrame, k: Int): DataFrame = {
-    val b = s.conf.get("graft.tiers.rankBuckets", "64").toInt
-    require(b >= 2, s"graft.tiers.rankBuckets must be >= 2, got $b")
-    val pcts = array((1 until b).map(i => lit(i.toDouble / b)): _*)
-    val cuts = perDoc.groupBy(col("lang"))
-      .agg(percentile_approx(col("doc_nll"), pcts, lit(10000)).as("cuts"),
-        count(lit(1)).as("n_lang"))
-    val bucketed = perDoc.join(broadcast(cuts), "lang")
-      .withColumn("bucket",
-        expr("aggregate(cuts, 0, (acc, c) -> acc + IF(doc_nll >= c, 1, 0))"))
-      .drop("cuts")
-    val offs = bucketed.groupBy(col("lang"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(
-        Window.partitionBy(col("lang")).orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("lang"), col("bucket"), col("off"))
+  private[graft] def bucketedNtile(perDoc: DataFrame, k: Int,
+      buckets: Int = 64): DataFrame = {
+    val (bucketed, offs) = rankBuckets(perDoc, "lang", "doc_nll",
+      count(lit(1)), buckets, count(lit(1)).as("n_lang"))
     val bw = Window.partitionBy(col("lang"), col("bucket"))
       .orderBy(col("doc_nll"), col("doc_id"))
     bucketed.withColumn("lr", row_number().over(bw))
@@ -2700,6 +2682,35 @@ object TextOps {
           .otherwise((when(r <= bigSpan, fdiv(r - 1, base + lit(1)) + 1)
             .otherwise(rem + fdiv(r - 1 - bigSpan, base) + 1)).cast("int"))
       })
+      .drop("bucket", "lr", "off", "rnk", "n_lang")
+  }
+
+  /** The steps [[bucketedNtile]] and [[bucketedPrefixSum]] share: per-`grp`
+    * cuts = percentile_approx(`ord`, 1/B..(B-1)/B) (plus `grpAggs`, one
+    * small row per group, broadcast); the map-side `bucket` = #cuts ≤
+    * `ord` (a flat fold over B-1 doubles — codegen-friendly, no nested
+    * HOF); and per-(grp, bucket) totals of `weight` prefix-summed into
+    * the exclusive offset `off` (a window over ≤B rows per group).
+    * Returns (`df` + `bucket` + the `grpAggs` columns, (grp, bucket,
+    * off)). Cut precision moves only bucket balance, never the answer. */
+  private def rankBuckets(df: DataFrame, grp: String, ord: String,
+      weight: Column, buckets: Int, grpAggs: Column*): (DataFrame, DataFrame) = {
+    require(buckets >= 2, s"rank buckets must be >= 2, got $buckets")
+    val pcts = array((1 until buckets).map(i => lit(i.toDouble / buckets)): _*)
+    val cuts = df.groupBy(col(grp))
+      .agg(percentile_approx(col(ord).cast("double"), pcts, lit(10000)).as("cuts"),
+        grpAggs: _*)
+    val bucketed = df.join(broadcast(cuts), Seq(grp))
+      .withColumn("bucket",
+        expr(s"aggregate(cuts, 0, (acc, c) -> acc + IF($ord >= c, 1, 0))"))
+      .drop("cuts")
+    val offs = bucketed.groupBy(col(grp), col("bucket"))
+      .agg(weight.as("bn"))
+      .withColumn("off", coalesce(sum(col("bn")).over(
+        Window.partitionBy(col(grp)).orderBy(col("bucket"))
+          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      .select(col(grp), col("bucket"), col("off"))
+    (bucketed, offs)
   }
 
   val qualityTiersSql: String =
@@ -2721,29 +2732,13 @@ object TextOps {
 
   /** Exact running sum of `value` over `PARTITION BY grp ORDER BY ord`
     * (ord UNIQUE within grp) without a per-grp full-partition sort —
-    * the prefix-sum twin of [[bucketedNtile]], same two-phase shape:
-    * approx per-grp histogram cuts on `ord` pre-bucket rows map-side
-    * (cut precision moves only bucket balance, never the answer), the
-    * running sum runs per (grp, bucket) (~n/B rows, all reducers), and
-    * exact per-bucket value totals prefix into broadcast offsets.
-    * Adds `cum`. B = `graft.tiers.rankBuckets` (shared conf). */
-  private[graft] def bucketedPrefixSum(s: SparkSession, df: DataFrame,
-      grp: String, ord: String, value: String): DataFrame = {
-    val b = s.conf.get("graft.tiers.rankBuckets", "64").toInt
-    require(b >= 2, s"graft.tiers.rankBuckets must be >= 2, got $b")
-    val pcts = array((1 until b).map(i => lit(i.toDouble / b)): _*)
-    val cuts = df.groupBy(col(grp))
-      .agg(percentile_approx(col(ord).cast("double"), pcts, lit(10000)).as("cuts"))
-    val bucketed = df.join(broadcast(cuts), Seq(grp))
-      .withColumn("bucket",
-        expr(s"aggregate(cuts, 0, (acc, c) -> acc + IF($ord >= c, 1, 0))"))
-      .drop("cuts")
-    val offs = bucketed.groupBy(col(grp), col("bucket"))
-      .agg(sum(col(value)).as("bn"))
-      .withColumn("off", coalesce(sum(col("bn")).over(
-        Window.partitionBy(col(grp)).orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col(grp), col("bucket"), col("off"))
+    * the prefix-sum twin of [[bucketedNtile]] over the same
+    * [[rankBuckets]]: the running sum runs per (grp, bucket) (~n/B
+    * rows, all reducers) and per-bucket `value` totals prefix into
+    * broadcast offsets. Adds `cum`. B = `buckets`. */
+  private[graft] def bucketedPrefixSum(df: DataFrame, grp: String, ord: String,
+      value: String, buckets: Int = 64): DataFrame = {
+    val (bucketed, offs) = rankBuckets(df, grp, ord, sum(col(value)), buckets)
     val bw = Window.partitionBy(col(grp), col("bucket")).orderBy(col(ord))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     bucketed.withColumn("lcum", sum(col(value)).over(bw))
@@ -2778,7 +2773,7 @@ object TextOps {
       .withColumn("rn", row_number().over(byHash))
       .filter(col("rn") === 1)
       .select(col("lang"), col("doc_id"), col("n"))
-    bucketedPrefixSum(s, deduped, "lang", "doc_id", "n")
+    bucketedPrefixSum(deduped, "lang", "doc_id", "n")
       .withColumn("pack", expr("(cum - n) div 2000"))
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),

@@ -735,76 +735,19 @@ object ImageSource {
     out.toByteArray
   }
 
-  /** Encode pages as a little-endian 8-bit grayscale TIFF — uncompressed,
-    * LZW, deflate, or PackBits — one strip and one chained IFD per page
-    * (test/round-trip support). */
-  private[graft] def encodeTiffPages(pages: Seq[(Int, Int, Array[Double])],
-      lzw: Boolean = false, compression: Int = 0): Array[Byte] = {
-    val comp = if (compression != 0) compression else if (lzw) 5 else 1
-    val bos = new java.io.ByteArrayOutputStream()
-    def u16(v: Int): Unit = { bos.write(v & 0xff); bos.write((v >> 8) & 0xff) }
-    def u32(v: Long): Unit = { u16((v & 0xffff).toInt); u16(((v >> 16) & 0xffff).toInt) }
-    def entry(tag: Int, typ: Int, cnt: Long, v: Long): Unit = {
-      u16(tag); u16(typ); u32(cnt); u32(v)
-    }
-    val strips = pages.map { case (_, _, px) =>
-      val raw = px.map(v => math.max(0, math.min(255, math.round(v))).toByte)
-      comp match {
-        case 1 => raw
-        case 5 => lzwEncode(raw)
-        case 8 =>
-          val d = new java.util.zip.Deflater()
-          d.setInput(raw); d.finish()
-          val buf = new Array[Byte](raw.length * 2 + 64)
-          val n = d.deflate(buf); d.end()
-          java.util.Arrays.copyOf(buf, n)
-        case 32773 => packBitsEncode(raw)
-        case other => throw new IllegalArgumentException(s"encodeTiffPages: compression $other")
-      }
-    }
-    val nEntries = 9
-    val ifdSize = 2 + nEntries * 12 + 4
-    var off = 8L
-    val pixOff = new Array[Long](pages.length)
-    val ifdOff = new Array[Long](pages.length)
-    for (i <- pages.indices) {
-      pixOff(i) = off; off += strips(i).length
-      ifdOff(i) = off; off += ifdSize
-    }
-    bos.write('I'); bos.write('I'); u16(42); u32(ifdOff(0))
-    for (i <- pages.indices) {
-      val (h, w, _) = pages(i)
-      bos.write(strips(i))
-      u16(nEntries)
-      entry(256, 4, 1, w)          // ImageWidth
-      entry(257, 4, 1, h)          // ImageLength
-      entry(258, 3, 1, 8)          // BitsPerSample
-      entry(259, 3, 1, comp)       // Compression
-      entry(262, 3, 1, 1)          // Photometric: BlackIsZero
-      entry(273, 4, 1, pixOff(i))  // StripOffsets
-      entry(277, 3, 1, 1)          // SamplesPerPixel
-      entry(278, 4, 1, h)          // RowsPerStrip
-      entry(279, 4, 1, strips(i).length) // StripByteCounts
-      u32(if (i + 1 < pages.length) ifdOff(i + 1) else 0L)
-    }
-    bos.toByteArray
-  }
-
-  private[graft] def encodeTiff(h: Int, w: Int, px: Array[Double]): Array[Byte] =
-    encodeTiffPages(Seq((h, w, px)))
-
-  /** Fixture encoder for the BigTIFF / tiled decode gates: little-endian
-    * grayscale pages, classic or BigTIFF header, strip- or tile-organized,
-    * 8- or 16-bit, uncompressed/LZW/deflate/PackBits. BigTIFF files carry
+  /** The TIFF fixture encoder (test/round-trip support): little-endian
+    * grayscale pages, one chained IFD per page, classic or BigTIFF
+    * header, strip- (one strip per page) or tile-organized, 8- or
+    * 16-bit, uncompressed/LZW/deflate/PackBits. BigTIFF files carry
     * 8-byte IFD counts, 20-byte entries, LONG8 (type 16) offset arrays and
     * 8-byte next-IFD pointers so the magic-43 layout is genuinely
     * exercised; tile arrays longer than the inline value field go to an
     * external value area, exercising the offset-indirection path too. */
-  private[graft] def encodeTiffPages2(pages: Seq[(Int, Int, Array[Double])],
+  private[graft] def encodeTiffPages(pages: Seq[(Int, Int, Array[Double])],
       comp: Int = 1, big: Boolean = false, tile: Option[(Int, Int)] = None,
       bps: Int = 8, pred: Int = 1): Array[Byte] = {
-    require(bps == 8 || bps == 16, s"encodeTiffPages2: bps $bps")
-    require(pred == 1 || pred == 2, s"encodeTiffPages2: predictor $pred")
+    require(bps == 8 || bps == 16, s"encodeTiffPages: bps $bps")
+    require(pred == 1 || pred == 2, s"encodeTiffPages: predictor $pred")
     val bpp = bps / 8
     val maxV = (1L << bps) - 1
     def rawOf(h: Int, w: Int, px: Array[Double], y0: Int, x0: Int,
@@ -849,7 +792,7 @@ object ImageSource {
         val n = d.deflate(buf); d.end()
         java.util.Arrays.copyOf(buf, n)
       case 32773 => packBitsEncode(raw)
-      case other => throw new IllegalArgumentException(s"encodeTiffPages2: compression $other")
+      case other => throw new IllegalArgumentException(s"encodeTiffPages: compression $other")
     }
     // per page: the compressed segments (1 strip, or the padded tile grid)
     val pageSegs: Seq[IndexedSeq[Array[Byte]]] = pages.map { case (h, w, px) =>
@@ -945,7 +888,7 @@ object ImageSource {
       uN(if (p + 1 < pages.length) ifdOff(p + 1) else 0L, nextSize)
     }
     val out = bos.toByteArray
-    assert(out.length.toLong == off, s"encodeTiffPages2 layout drift: ${out.length} vs $off")
+    assert(out.length.toLong == off, s"encodeTiffPages layout drift: ${out.length} vs $off")
     out
   }
 

@@ -37,7 +37,7 @@ object StreamOps {
   /** Drain a streaming frame into a memory sink and return the settled
     * result (detached from the temp view; the query is stopped). The
     * query starts, settles and stops through [[runStream]], so it is
-    * bounded by `spark.graft.drain.timeoutMs`, its tasks reuse the
+    * bounded by [[DrainTimeoutMs]], its tasks reuse the
     * executor's default class loader (codegen cache hits from the
     * second call on) and its throwaway checkpoint is written through the
     * FileSystem checkpoint manager. */
@@ -67,10 +67,10 @@ object StreamOps {
 
   /** The one start path of every streaming query here: builds the
     * writer on `df`, starts it, waits with `settle` and always stops it.
-    * `settle` gets the `spark.graft.drain.timeoutMs` bound (default
-    * 10 min; the suite's queries finish in seconds); the default,
-    * [[awaitEnd]], waits for an AvailableNow query to terminate and
-    * fails LOUDLY past the bound instead of spinning forever.
+    * `settle` gets the [[DrainTimeoutMs]] bound (10 min; the suite's
+    * queries finish in seconds); the default, [[awaitEnd]], waits for an
+    * AvailableNow query to terminate and fails LOUDLY past the bound
+    * instead of spinning forever.
     *
     * `start()` clones the caller's session, and the query runs in the
     * clone. [[cloneConf]] names the keys the clone gets: they are set on
@@ -81,11 +81,10 @@ object StreamOps {
       ephemeral: Boolean = false)(
       writer: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
     val spark = df.sparkSession
-    val limitMs = confLong(spark, "spark.graft.drain.timeoutMs", 600000L)
     val w = writer(df.writeStream)
     val q = startLock.synchronized(
       graft.Timed.withConf(spark.conf, cloneConf(spark, ephemeral): _*)(w.start()))
-    try settle(q, limitMs) finally q.stop()
+    try settle(q, DrainTimeoutMs) finally q.stop()
     q
   }
 
@@ -120,6 +119,18 @@ object StreamOps {
     "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"
   private val startLock = new Object
 
+  /** How long [[runStream]] waits for a query to settle before failing
+    * it. */
+  private val DrainTimeoutMs = 600000L
+
+  /** Distinct entries one streaming-dedup state bucket keeps before LRU
+    * eviction (both modalities): 2¹⁴ MinHash signatures ≈ 4.7 MB/bucket
+    * worst case, a production-shaped bound for the heap-backed state
+    * store.
+    * The gate corpus never exceeds ONE collapsed entry per bucket, so
+    * any cap ≥ 1 yields the same artifact. */
+  private[graft] val BucketStateCap = 1 << 14
+
   /** Default [[runStream]] settle: AvailableNow termination within the
     * bound (a failed query rethrows here). The known way to miss it is
     * a stateful operator with ProcessingTimeTimeout: Spark's
@@ -130,7 +141,7 @@ object StreamOps {
     if (!q.awaitTermination(limitMs))
       throw new IllegalStateException(
         s"graft stream: AvailableNow query '${Option(q.name).getOrElse(q.id)}' " +
-          s"did not settle within $limitMs ms (spark.graft.drain.timeoutMs). " +
+          s"did not settle within $limitMs ms. " +
           "If the plan holds ProcessingTimeTimeout state, AvailableNow can " +
           "NEVER terminate — use drainProcessingTime for that query.")
 
@@ -185,7 +196,7 @@ object StreamOps {
     * after its sink commit, so the memory sink then holds every row the
     * data batches emitted; timer-only batches add nothing until a TTL
     * actually expires, and the specs' TTLs are hours), then stop the
-    * query. Bounded by `spark.graft.drain.timeoutMs` — a shortfall
+    * query. Bounded by [[DrainTimeoutMs]] — a shortfall
     * fails LOUDLY with the rows seen. */
   private[graft] def drainProcessingTime(df: DataFrame, mode: OutputMode,
       expectedInputRows: Long, intervalMs: Long = 100L): DataFrame = {
@@ -204,7 +215,7 @@ object StreamOps {
           throw new IllegalStateException(
             s"graft drainProcessingTime: query '$name' processed " +
               s"${seen.valuesIterator.sum} of $expectedInputRows source rows " +
-              s"within $limitMs ms (spark.graft.drain.timeoutMs)")
+              s"within $limitMs ms")
         else Thread.sleep(intervalMs / 2 + 1)
       }
     }
@@ -230,20 +241,6 @@ object StreamOps {
     spark.catalog.dropTempView(name)
     settled
   }
-
-  /** Conf getter with a descriptive failure naming the key — a
-    * malformed `spark.graft.*` value must not surface as a bare
-    * NumberFormatException deep in a stream closure. */
-  private def confLong(s: SparkSession, key: String, default: Long,
-      min: Long = 0L): Long =
-    s.conf.getOption(key).map { v =>
-      val n = try v.trim.toLong catch {
-        case _: NumberFormatException => throw new IllegalArgumentException(
-          s"$key must be an integer, got '$v'")
-      }
-      require(n >= min, s"$key must be >= $min, got $n")
-      n
-    }.getOrElse(default)
 
   // ------------------------------------------------------ windowed aggs
 
@@ -696,41 +693,31 @@ object StreamOps {
     *    exact-dup collapse — the duplicated-corpus hot bucket (100
     *    verbatim copies share every band) holds 1 entry, and each
     *    verbatim arrival's scan is O(distinct sigs), not O(arrivals);
-    *  - LRU CAP: `spark.graft.streamNearDedup.maxSigsPerBucket`
-    *    (default 2²⁰ ≈ 300 MB/bucket worst case) evicts the
-    *    least-recently-hit DISTINCT signature once a bucket exceeds it
+    *  - LRU CAP: [[BucketStateCap]] (2¹⁴ ≈ 4.7 MB/bucket worst case)
+    *    evicts the least-recently-hit DISTINCT signature once a bucket
+    *    exceeds it
     *    — a deliberately approximate trade (an evicted near-dup
     *    stops being detected) that turns worst-case state from
     *    O(corpus) into a constant; the gate never reaches the cap;
-    *  - TTL: `spark.graft.streamNearDedup.ttlMs` > 0 switches the
+    *  - TTL: [[streamNearDedupWith]]'s `ttlMs` > 0 switches the
     *    group to ProcessingTimeTimeout and drops buckets idle past the
     *    TTL (the live-crawl "old crawl frontier ages out" policy);
-    *    0 (the gate default) keeps NoTimeout so the artifact is
+    *    0 (the key's value) keeps NoTimeout so the artifact is
     *    deterministic.
     *
     * Shingle-less docs (< 3 tokens) ride a per-doc sentinel bucket:
     * group of one, never collides, still counted. Per-bucket verdicts
     * drain append-mode; the final per-source roll-up is batch
     * post-processing. */
-  val streamNearDedup: Q = (s, dir) => {
-    // cap default 2¹⁴ distinct sigs ≈ 4.7 MB/bucket worst case — a
-    // production-shaped bound for the heap-backed state store (the gate
-    // corpus never exceeds ONE collapsed entry per bucket, so any
-    // cap ≥ 1 yields the same artifact). Malformed / non-positive conf
-    // values fail loudly with the key named; a ttlMs > 0 run is driven
-    // through drainProcessingTime (AvailableNow would never terminate).
-    val cap = confLong(s, "spark.graft.streamNearDedup.maxSigsPerBucket",
-      1L << 14, min = 1L).min(Int.MaxValue.toLong).toInt
-    val ttl = confLong(s, "spark.graft.streamNearDedup.ttlMs", 0L)
-    streamNearDedupWith(s, dir, 1, cap, ttl)
-  }
+  val streamNearDedup: Q = (s, dir) =>
+    streamNearDedupWith(s, dir, 1, BucketStateCap, ttlMs = 0L)
 
   /** `filesPerTrigger` parameterized for the trigger-invariance spec
     * (1 = four micro-batches, 4 = one batch — results must be equal);
     * `maxSigsPerBucket`/`ttlMs` parameterized for the bounded-state
     * specs. */
   private[graft] def streamNearDedupWith(s: SparkSession, dir: String,
-      filesPerTrigger: Int, maxSigsPerBucket: Int = 1 << 14,
+      filesPerTrigger: Int, maxSigsPerBucket: Int = BucketStateCap,
       ttlMs: Long = 0L): DataFrame =
     streamNearDedupVerdicts(s, dir, filesPerTrigger, maxSigsPerBucket, ttlMs)
       .groupBy(col("doc_id"), col("source"))
@@ -976,20 +963,19 @@ object StreamOps {
     * round4(cos(u, v)) ≥ 0.40 — which the oracle replays ALL-PAIRS
     * (banding is a complete candidate generator on this corpus, the
     * same premise the batch key gates every round). */
-  val streamEmbeddingDedup: Q = (s, dir) => {
-    val cap = confLong(s, "spark.graft.streamEmbDedup.maxVecsPerBucket",
-      1L << 14, min = 1L).min(Int.MaxValue.toLong).toInt
-    streamEmbeddingDedupWith(s, dir, 1, cap)
-  }
+  val streamEmbeddingDedup: Q = (s, dir) =>
+    streamEmbeddingDedupWith(s, dir, 1, BucketStateCap)
 
   /** `filesPerTrigger` parameterized for the trigger-invariance spec;
     * `cap` for the bounded-state spec; `mtimeRank` for the
     * arrival-order-independence spec (permutes the shard mtimes so the
     * file stream REPLAYS the r19 gate failure mode: later vec_ids
-    * arriving in earlier triggers). */
+    * arriving in earlier triggers); `forensicsCap` (verdict rows, see
+    * [[embDedupForensics]]) for the bounded-forensics spec. */
   private[graft] def streamEmbeddingDedupWith(s: SparkSession, dir: String,
-      filesPerTrigger: Int, cap: Int = 1 << 14,
-      mtimeRank: Int => Int = identity): DataFrame = {
+      filesPerTrigger: Int, cap: Int = BucketStateCap,
+      mtimeRank: Int => Int = identity,
+      forensicsCap: Int = 1 << 17): DataFrame = {
     val (v, inDir, progress) =
       streamEmbeddingVerdictsTraced(s, dir, filesPerTrigger, cap, mtimeRank)
     val rollup = v
@@ -1007,10 +993,10 @@ object StreamOps {
     // (agreement or divergent vectors + trigger composition + shard
     // mtimes + tmpdir fs) into `graft.forensics.dir` — Verify's output
     // dump, which ships with the parquet the oracle hashes — plus stderr.
-    // Collects are bounded (spark.graft.embDedup.forensicsCap). Output
-    // schema/rows are untouched (the rollup above is returned as-is); a
+    // Collects are bounded (forensicsCap rows). Output schema/rows are
+    // untouched (the rollup above is returned as-is); a
     // forensic crash is swallowed so it can never fail the key.
-    try embDedupForensics(s, dir, v, inDir, progress)
+    try embDedupForensics(s, dir, v, inDir, progress, forensicsCap)
     catch {
       case scala.util.control.NonFatal(e) => System.err.println(
         s"[graft] stream_embedding_dedup forensics crashed (ignored): $e")
@@ -1033,21 +1019,19 @@ object StreamOps {
     * fault OUTSIDE this key's computation (oracle side / harness).
     *
     * BOUNDED (r22, verdict #2 "scale caveat"): both collects are capped
-    * at `spark.graft.embDedup.forensicsCap` rows (default 2¹⁷ ≈ a few
-    * MB of verdicts) — past the cap the compare is skipped with a note,
-    * so the gated key's plan never carries an unbounded corpus-sized
-    * collect at scale while forensics still fire at every gate SF. */
+    * at `cap` rows (the key's 2¹⁷ ≈ a few MB of verdicts) — past the
+    * cap the compare is skipped with a note, so the gated key's plan
+    * never carries an unbounded corpus-sized collect at scale while
+    * forensics still fire at every gate SF. */
   private[graft] def embDedupForensics(s: SparkSession, dir: String, v: DataFrame,
-      inDir: String, progress: Seq[(Long, Long)]): Unit = {
-    val cap = confLong(s, "spark.graft.embDedup.forensicsCap",
-      1L << 17, min = 1L).min(Int.MaxValue.toLong).toInt
+      inDir: String, progress: Seq[(Long, Long)], cap: Int): Unit = {
     val streamRows = v.groupBy(col("vec_id"), col("label"))
       .agg(max(col("collide")).as("sdrop")).limit(cap + 1).collect()
     val batchRows = graft.queries.Similarity.embeddingNearDupVerdict(s, dir)
       .limit(cap + 1).collect()
     if (streamRows.length > cap || batchRows.length > cap) {
       System.err.println(s"[graft] stream_embedding_dedup forensics skipped: " +
-        s"> $cap verdict rows (spark.graft.embDedup.forensicsCap)")
+        s"> $cap verdict rows")
       return
     }
     val streamDrop = streamRows
@@ -1450,17 +1434,14 @@ object StreamOps {
     * local[32] gate differs only in paths (provider portability,
     * including this seeding path, is spec-pinned: the RocksDB run is
     * verdict-identical to the heap default). */
-  val streamNearDedupBootstrap: Q = (s, dir) => {
-    val cap = confLong(s, "spark.graft.streamNearDedup.maxSigsPerBucket",
-      1L << 14, min = 1L).min(Int.MaxValue.toLong).toInt
-    streamNearDedupBootstrapVerdicts(s, dir, 1, cap)
+  val streamNearDedupBootstrap: Q = (s, dir) =>
+    streamNearDedupBootstrapVerdicts(s, dir, 1, BucketStateCap)
       .groupBy(col("doc_id"), col("source"))
       .agg(max(col("collide")).as("dropped"))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("dropped"), 1L).otherwise(0L)).as("n_dropped"))
       .orderBy(col("source"))
-  }
 
   /** Index-build + seeded stream, returning per-(doc, bucket) verdict
     * rows for the batch half ONLY (seeded buckets with no arrivals emit
@@ -1573,7 +1554,7 @@ case class SessionAcc(sessions: Long, events: Long, lastTsNs: Long)
 case class SigEntry(firstId: Long, lastHit: Long, sig: Array[Long])
 
 /** Per-bucket near-dedup state: entries are distinct signatures only,
-  * capped by `spark.graft.streamNearDedup.maxSigsPerBucket` (LRU). */
+  * capped by `StreamOps.BucketStateCap` (LRU). */
 case class BucketState(entries: List[SigEntry])
 
 /** One DISTINCT-vector frontier entry of the streaming EMBEDDING dedup
@@ -1582,5 +1563,5 @@ case class BucketState(entries: List[SigEntry])
 case class VecEntry(firstId: Long, lastHit: Long, vec: Array[Float])
 
 /** Per-(label, band-bucket) embedding-dedup state: distinct vectors
-  * only, capped by `spark.graft.streamEmbDedup.maxVecsPerBucket` (LRU). */
+  * only, capped by `StreamOps.BucketStateCap` (LRU). */
 case class VecBucketState(entries: List[VecEntry])

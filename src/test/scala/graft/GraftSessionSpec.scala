@@ -10,6 +10,23 @@ class GraftSessionSpec extends SparkSpec {
     conf.toMap
   }
 
+  test("the engine reads exactly three graft conf keys") {
+    // every other value is a constant or a private parameter the specs
+    // pass: a new key needs two callers that want different values
+    val keyLit = "\"((spark\\.)?graft\\.[A-Za-z.]+)\"".r
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root), s"run from the project root: $root")
+    val files = java.nio.file.Files.walk(root)
+    val keys = try {
+      import scala.jdk.CollectionConverters._
+      files.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { f =>
+        keyLit.findAllMatchIn(java.nio.file.Files.readString(f)).map(_.group(1))
+      }.toSet
+    } finally files.close()
+    assert(keys == Set("graft.checkpoint.reliable", "graft.forensics.dir",
+      "spark.graft.stream.checkpointRoot"), s"graft conf keys in src/main: $keys")
+  }
+
   test("bench latency/scale and verify conf maps, key by key") {
     val common = Map(
       "spark.locality.wait" -> "0",

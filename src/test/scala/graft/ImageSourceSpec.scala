@@ -57,9 +57,9 @@ class ImageSourceSpec extends SparkSpec {
     Files.write(Paths.get(dir.getPath, "a_000_002.tiff"),
       ImageSource.encodeTiffPages(frames.take(3).map(p => (6, 5, p))))
     Files.write(Paths.get(dir.getPath, "b_003.tiff"),
-      ImageSource.encodeTiff(6, 5, frames(3)))
+      ImageSource.encodeTiffPages(Seq((6, 5, frames(3)))))
     Files.write(Paths.get(dir.getPath, "c_004.tiff"),
-      ImageSource.encodeTiff(6, 5, frames(4)))
+      ImageSource.encodeTiffPages(Seq((6, 5, frames(4)))))
     val ds = ImageSource.readTiff(spark, dir.getPath + "/*.tiff")
     val blocks = ds.collect().sortBy(_.idx.head)
     assert(blocks.length == 5)
@@ -113,7 +113,7 @@ class ImageSourceSpec extends SparkSpec {
       Array.tabulate(16 * 24)(i => ((i * 13 + f * 41) % 256).toDouble)
     }
     Files.write(Paths.get(dir.getPath, "z.tiff"),
-      ImageSource.encodeTiffPages(frames.map(p => (16, 24, p)), lzw = true))
+      ImageSource.encodeTiffPages(frames.map(p => (16, 24, p)), comp = 5))
     val pages = ImageSource.decodeTiff(Files.readAllBytes(Paths.get(dir.getPath, "z.tiff")))
     assert(pages.length == 3)
     for ((p, f) <- pages.zipWithIndex)
@@ -154,7 +154,7 @@ class ImageSourceSpec extends SparkSpec {
     }
     for ((comp, f) <- Seq(1, 5, 8, 32773).zipWithIndex)
       Files.write(Paths.get(dir.getPath, f"c_$f%03d.tiff"),
-        ImageSource.encodeTiffPages(Seq((12, 10, frames(f))), compression = comp))
+        ImageSource.encodeTiffPages(Seq((12, 10, frames(f))), comp = comp))
     val blocks = ImageSource.readTiff(spark, dir.getPath + "/*.tiff")
       .collect().sortBy(_.idx.head)
     assert(blocks.length == 4)
@@ -165,6 +165,30 @@ class ImageSourceSpec extends SparkSpec {
       (if (i % 37 < 20) 42 else i % 251).toByte)
     val dec = ImageSource.packBitsDecode(ImageSource.packBitsEncode(pb), pb.length)
     assert(dec.sameElements(pb), "PackBits round-trip mismatch")
+  }
+
+  test("classic 8-bit strip TIFF fixture bytes are pinned for every codec, 1 and 3 pages") {
+    // the digests of the retired classic-only encoder's output: the one
+    // encoder must keep writing byte-identical fixtures (same 9 entries,
+    // [strip][IFD] per page, same clamp and codecs); pixels cover the
+    // clamp at both ends and half-way rounding
+    val pages = Seq((12, 10), (7, 9), (5, 16)).zipWithIndex.map { case ((h, w), f) =>
+      (h, w, Array.tabulate(h * w)(i => ((i * 7 + f * 23) % 300 - 20) + 0.5 * (i % 2)))
+    }
+    def sha256(b: Array[Byte]): String = java.security.MessageDigest
+      .getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    val pinned = Map(
+      (1, 1) -> "9c8fbf28bc2b4d76e381190df69bf5771366ae1ff6deb9c883eb6d1e2b029a02",
+      (1, 3) -> "ecdcc6bd74b3850dafa39414976e21d0af76c95b5d91312c885c76edbeb800eb",
+      (5, 1) -> "5397c0656169affababe659ca1ca26aebb6f72411c4da269da00e75c9f5c589d",
+      (5, 3) -> "549df0332492a7292932366896ea36b3d006b2e4b04410d2a8fba5161a324a28",
+      (8, 1) -> "d1ba756990c9b9638d7ef154b61549aaa0e94b4dc88ae70048329021c4d53a40",
+      (8, 3) -> "9a5326b5115edeafea0905b7a5050fd4f67131b4593e789bcc3859f8042cc318",
+      (32773, 1) -> "40315d8c040f9438604b58226127871aa70fec7a4186565dd3dbc66f9eb1942e",
+      (32773, 3) -> "9cac9d9aad17af03b96526a1b0aea907b2750588069dd566f55082f79f37f8bb")
+    for (((comp, n), digest) <- pinned)
+      assert(sha256(ImageSource.encodeTiffPages(pages.take(n), comp = comp)) == digest,
+        s"compression $comp, $n page(s): fixture bytes changed")
   }
 
   test("TIFF decoder: big-endian (MM) 16-bit strips") {
@@ -205,9 +229,9 @@ class ImageSourceSpec extends SparkSpec {
     val pages = frames.map(p => (11, 13, p))
     for (comp <- Seq(1, 5, 8, 32773)) {
       val classic = ImageSource.decodeTiffTyped(
-        ImageSource.encodeTiffPages2(pages, comp = comp, big = false))
+        ImageSource.encodeTiffPages(pages, comp = comp, big = false))
       val big = ImageSource.decodeTiffTyped(
-        ImageSource.encodeTiffPages2(pages, comp = comp, big = true))
+        ImageSource.encodeTiffPages(pages, comp = comp, big = true))
       assert(big.length == 3 && classic.length == 3, s"comp=$comp page count")
       for (f <- 0 until 3) {
         assert(big(f)._1 == 11 && big(f)._2 == 13 && big(f)._3 == "uint8")
@@ -219,7 +243,7 @@ class ImageSourceSpec extends SparkSpec {
     }
     // page-count walk handles the 8-byte IFD chain too
     assert(ImageSource.tiffPageCount(
-      ImageSource.encodeTiffPages2(pages, big = true)) == 3L)
+      ImageSource.encodeTiffPages(pages, big = true)) == 3L)
   }
 
   test("tiled TIFF: padded edge tiles reassemble byte-exactly, 8- and 16-bit") {
@@ -228,21 +252,21 @@ class ImageSourceSpec extends SparkSpec {
     val px16 = Array.tabulate(h * w)(i => ((i * 523) % 65536).toDouble)
     for (comp <- Seq(1, 5, 8, 32773); big <- Seq(false, true)) {
       val Seq((th, tw, dt, pay)) = ImageSource.decodeTiffTyped(
-        ImageSource.encodeTiffPages2(Seq((h, w, px8)), comp = comp,
+        ImageSource.encodeTiffPages(Seq((h, w, px8)), comp = comp,
           big = big, tile = Some((8, 10))))
       assert(th == h && tw == w && dt == "uint8", s"comp=$comp big=$big")
       assert(DType.U8.decode(pay).toSeq == px8.toSeq,
         s"comp=$comp big=$big: tiled uint8 reassembly mismatch")
     }
     val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiffTyped(
-      ImageSource.encodeTiffPages2(Seq((h, w, px16)), comp = 8,
+      ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 8,
         big = true, tile = Some((8, 10)), bps = 16))
     assert(dt16 == "uint16")
     assert(DType.U16.decode(pay16).toSeq == px16.toSeq,
       "tiled uint16 reassembly mismatch")
     // tile grid that divides exactly (no padding) also round-trips
     val Seq((_, _, _, payEx)) = ImageSource.decodeTiffTyped(
-      ImageSource.encodeTiffPages2(Seq((24, 16, px8.take(24 * 16))),
+      ImageSource.encodeTiffPages(Seq((24, 16, px8.take(24 * 16))),
         comp = 5, big = false, tile = Some((8, 8))))
     assert(DType.U8.decode(payEx).toSeq == px8.take(24 * 16).toSeq)
   }
@@ -254,12 +278,12 @@ class ImageSourceSpec extends SparkSpec {
     val px16 = Array.tabulate(h * w)(i => ((i % w) * 700 + (i * 523) % 997).toDouble % 65536)
     for (tile <- Seq(None, Some((8, 6))); big <- Seq(false, true)) {
       val Seq((_, _, dt8, pay8)) = ImageSource.decodeTiffTyped(
-        ImageSource.encodeTiffPages2(Seq((h, w, px8)), comp = 5, big = big,
+        ImageSource.encodeTiffPages(Seq((h, w, px8)), comp = 5, big = big,
           tile = tile, bps = 8, pred = 2))
       assert(dt8 == "uint8" && DType.U8.decode(pay8).toSeq == px8.toSeq,
         s"pred2 uint8 tile=$tile big=$big")
       val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiffTyped(
-        ImageSource.encodeTiffPages2(Seq((h, w, px16)), comp = 5, big = big,
+        ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 5, big = big,
           tile = tile, bps = 16, pred = 2))
       assert(dt16 == "uint16" && DType.U16.decode(pay16).toSeq == px16.toSeq,
         s"pred2 uint16 tile=$tile big=$big")
@@ -267,8 +291,8 @@ class ImageSourceSpec extends SparkSpec {
     // differencing does change the compressed stream (i.e. tag 317 is
     // honored, not ignored): decoding the pred=2 file as if pred=1 would
     // not reproduce the pixels, so byte streams must differ
-    val plain = ImageSource.encodeTiffPages2(Seq((h, w, px16)), comp = 1, bps = 16)
-    val diffd = ImageSource.encodeTiffPages2(Seq((h, w, px16)), comp = 1, bps = 16, pred = 2)
+    val plain = ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 1, bps = 16)
+    val diffd = ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 1, bps = 16, pred = 2)
     assert(!plain.sameElements(diffd), "pred=2 must alter the sample stream")
   }
 
@@ -293,7 +317,7 @@ class ImageSourceSpec extends SparkSpec {
       }
       val pred = if (rnd.nextBoolean()) 2 else 1
       val cfg = s"trial=$trial h=$h w=$w bps=$bps comp=$comp big=$big tile=$tile pred=$pred"
-      val pages = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages2(
+      val pages = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages(
         Seq((h, w, px)), comp = comp, big = big, tile = tile, bps = bps, pred = pred))
       assert(pages.length == 1, cfg)
       val (dh, dw, dt, pay) = pages.head
@@ -304,7 +328,7 @@ class ImageSourceSpec extends SparkSpec {
     // multi-page chain under one random config
     val frames = (0 until 4).map(f =>
       Array.fill(9 * 7)(rnd.nextInt(65536).toDouble))
-    val multi = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages2(
+    val multi = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages(
       frames.map((9, 7, _)), comp = 5, big = true, tile = Some((3, 4)),
       bps = 16, pred = 2))
     assert(multi.length == 4)

@@ -256,7 +256,7 @@ class LakeSpec extends SparkSpec {
       .iterator().asScala.foreach(p => p.toFile.delete())
   }
 
-  test("bucketedFacts: durable external layout — DROP TABLE is DDL-only, re-register reuses the files, rebuild can't serve a stale cached frame") {
+  test("bucketedFacts: durable external layout — DROP TABLE is DDL-only, re-register reuses the files") {
     val flat = SparkEntry.queries("q3_top_orders")(spark, sf001)
       .collect().map(_.toSeq).toSeq
     val (lTab, oTab) = queries.Relational.bucketedFactNames(sf001)
@@ -280,21 +280,6 @@ class LakeSpec extends SparkSpec {
     val p = df.queryExecution.executedPlan.toString
     assert(!p.contains("Exchange hashpartitioning"),
       s"re-registered layout lost the zero-exchange property:\n$p")
-    // rebuild-under-the-same-name (r17 ADVICE, medium): with
-    // preferBucketed on, a frame cached against build N must not be
-    // served after build N+1 replaces the files — the cache key carries
-    // the catalog createTime as the build generation
-    try {
-      spark.conf.set("graft.lake.preferBucketed", "true")
-      val n1 = Tables.t(spark, sf001, "lineitem").count()
-      spark.sql(s"DROP TABLE $lTab"); spark.sql(s"DROP TABLE $oTab")
-      Lake.deleteTree(queries.Relational.bucketedLayoutDir(sf001, "lineitem"))
-      Lake.deleteTree(queries.Relational.bucketedLayoutDir(sf001, "orders"))
-      queries.Relational.bucketedFacts(spark, sf001)
-      // with a name-only cache key this count reads build-1's deleted
-      // files and throws (or returns stale rows)
-      assert(Tables.t(spark, sf001, "lineitem").count() == n1)
-    } finally spark.conf.unset("graft.lake.preferBucketed")
   }
 
   test("dirSuffix: identifier-safe hex, canonicalization-stable, distinct per dir") {
@@ -304,29 +289,5 @@ class LakeSpec extends SparkSpec {
     // math.abs(hashCode) differed here and could also go negative)
     assert(a == Lake.dirSuffix("/root/testdata/../testdata/sf0.01"))
     assert(a != Lake.dirSuffix("/root/testdata/sf0.001"))
-  }
-
-  test("preferBucketed conf: the FLAT q3 key silently rides the bucketed layout — zero hash exchanges, same answer") {
-    // verdict item (r16 #6): the layout must be the default read path
-    // once built, not an opt-in twin key
-    val flat = SparkEntry.queries("q3_top_orders")(spark, sf001)
-      .collect().map(_.toSeq).toSeq
-    queries.Relational.bucketedFacts(spark, sf001) // build (or reuse)
-    try {
-      spark.conf.set("graft.lake.preferBucketed", "true")
-      val df = SparkEntry.queries("q3_top_orders")(spark, sf001)
-      val p = df.queryExecution.executedPlan.toString
-      assert("Exchange hashpartitioning".r.findAllIn(p).isEmpty,
-        s"flat q3 under preferBucketed must need no hash shuffle:\n$p")
-      assert(p.contains("Bucketed: true") || p.contains("SelectedBucketsCount"),
-        s"flat q3 under preferBucketed does not read the bucketed tables:\n$p")
-      assert(df.collect().map(_.toSeq).toSeq == flat,
-        "layout changed the answer")
-    } finally spark.conf.unset("graft.lake.preferBucketed")
-    // conf off again: the flat key is back on the flat files
-    val p2 = SparkEntry.queries("q3_top_orders")(spark, sf001)
-      .queryExecution.executedPlan.toString
-    assert(!p2.contains("Bucketed: true"),
-      s"conf unset must restore the flat read:\n$p2")
   }
 }

@@ -162,21 +162,18 @@ class PlanShapeSpec extends SparkSpec {
     // otherwise still broadcast the tiny replicated set, hiding the
     // shuffle shape), the probe must join on (key, __salt) — the hot-key
     // spread — and the raw key must never be the sole join key.
-    val conf = spark.conf
-    conf.set(queries.TextOps.SHARED_BROADCAST_MAX_ROWS, "0")
-    val prevThresh = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      for (name <- Seq("dup_ngram_doc_filter", "line_dedup_docs")) {
-        val p = plan(name)
+    val docs = Tables.t(spark, sf001, "documents")
+    Timed.withConf(spark.conf, "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      for ((name, df) <- Seq(
+          "dup_ngram_doc_filter" -> queries.TextOps.dupNgramDocFilterOver(docs, maxRows = 0L),
+          "line_dedup_docs" -> queries.TextOps.lineDedupOver(
+            queries.TextOps.augmentLines(docs), maxRows = 0L))) {
+        val p = df.queryExecution.executedPlan.toString
         assert(p.contains("__salt"),
           s"$name fallback lost the salt join key:\n$p")
         assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
           s"$name fallback degenerated:\n$p")
       }
-    } finally {
-      conf.unset(queries.TextOps.SHARED_BROADCAST_MAX_ROWS)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
     }
   }
 

@@ -243,18 +243,15 @@ class PropertySpec extends SparkSpec {
       val expS = df.withColumn("cum", sum($"n").over(wS))
         .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(4)).toMap
       val b = Seq(2, 7, 33, 500)(rnd.nextInt(4))
-      spark.conf.set("graft.tiers.rankBuckets", b.toString)
-      try {
-        val gotN = graft.queries.TextOps.bucketedNtile(spark, df, 3)
-          .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
-            -> r.getAs[Int]("tier")).toMap
-        assert(gotN == expN, s"trial $trial (B=$b): ntile diverged")
-        val gotS = graft.queries.TextOps.bucketedPrefixSum(
-            spark, df.drop("doc_nll"), "lang", "doc_id", "n")
-          .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
-            -> r.getAs[Long]("cum")).toMap
-        assert(gotS == expS, s"trial $trial (B=$b): prefix sum diverged")
-      } finally spark.conf.unset("graft.tiers.rankBuckets")
+      val gotN = graft.queries.TextOps.bucketedNtile(df, 3, buckets = b)
+        .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
+          -> r.getAs[Int]("tier")).toMap
+      assert(gotN == expN, s"trial $trial (B=$b): ntile diverged")
+      val gotS = graft.queries.TextOps.bucketedPrefixSum(
+          df.drop("doc_nll"), "lang", "doc_id", "n", buckets = b)
+        .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
+          -> r.getAs[Long]("cum")).toMap
+      assert(gotS == expS, s"trial $trial (B=$b): prefix sum diverged")
     }
   }
 

@@ -632,7 +632,7 @@ class StreamingSpec extends SparkSpec {
     val doctored = v.withColumn("collide",
       when(col("vec_id") === 0L, lit(true)).otherwise(col("collide")))
     graft.streaming.StreamOps.embDedupForensics(
-      spark, sf0001, doctored, inDir, progress)
+      spark, sf0001, doctored, inDir, progress, cap = 1 << 17)
     assert(java.nio.file.Files.exists(sidecar),
       "a stream-vs-batch disagreement must write the forensic sidecar")
     val report = java.nio.file.Files.readString(sidecar)
@@ -655,9 +655,8 @@ class StreamingSpec extends SparkSpec {
       java.nio.file.Files.deleteIfExists(routed)
       // bounded path: past the cap the compare (and its collects) is
       // skipped — no report, no corpus-sized driver materialization
-      spark.conf.set("spark.graft.embDedup.forensicsCap", "1")
-      try graft.streaming.StreamOps.streamEmbeddingDedupWith(spark, sf0001, 1).collect()
-      finally spark.conf.unset("spark.graft.embDedup.forensicsCap")
+      graft.streaming.StreamOps.streamEmbeddingDedupWith(spark, sf0001, 1,
+        forensicsCap = 1).collect()
       assert(!java.nio.file.Files.exists(routed),
         "forensics past the row cap must skip the compare entirely")
     } finally {

@@ -96,14 +96,14 @@ class TextOpsSpec extends SparkSpec {
       f(docs).collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     val aug0 = TextOps.augmentLines(Tables.t(spark, sf0001, "documents"))
-    assert(rows(aug0, TextOps.lineDedupOver) == rows(aug0, TextOps.lineDedupOverNaive))
+    assert(rows(aug0, TextOps.lineDedupOver(_)) == rows(aug0, TextOps.lineDedupOverNaive))
     val docs = Tables.t(spark, sf0001, "documents")
     val shift = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
     val dup = (0 until 3).map(k =>
         docs.withColumn("doc_id", col("doc_id") + lit(k * shift)))
       .reduce(_ unionByName _)
     val aug = TextOps.augmentLines(dup)
-    val got = rows(aug, TextOps.lineDedupOver)
+    val got = rows(aug, TextOps.lineDedupOver(_))
     assert(got == rows(aug, TextOps.lineDedupOverNaive))
     assert(got.exists(_._3 > 0), "fixture removed zero segments — shared path untested")
   }
@@ -417,17 +417,17 @@ class TextOpsSpec extends SparkSpec {
     // r12 (judge item #3): when the nd>=2 vocabulary outgrows the
     // broadcast budget, sharedSetProbe must switch to the salted replica
     // join and produce EXACTLY the broadcast path's rows — for both
-    // riders of the idiom.
-    def collectRows(name: String): Set[Vector[Any]] =
-      SparkEntry.queries(name)(spark, sf0001).collect().map(_.toSeq.toVector).toSet
-    val keys = Seq("dup_ngram_doc_filter", "line_dedup_docs")
-    val viaBroadcast = keys.map(k => k -> collectRows(k)).toMap
-    spark.conf.set(graft.queries.TextOps.SHARED_BROADCAST_MAX_ROWS, "0")
-    try {
-      for (k <- keys)
-        assert(collectRows(k) == viaBroadcast(k),
-          s"$k diverged between broadcast and salted fallback")
-    } finally spark.conf.unset(graft.queries.TextOps.SHARED_BROADCAST_MAX_ROWS)
+    // riders of the idiom (each key vs its *Over form at budget 0).
+    def rowSet(df: org.apache.spark.sql.DataFrame): Set[Vector[Any]] =
+      df.collect().map(_.toSeq.toVector).toSet
+    val docs = Tables.t(spark, sf0001, "documents")
+    val salted = Map(
+      "dup_ngram_doc_filter" -> TextOps.dupNgramDocFilterOver(docs, maxRows = 0L),
+      "line_dedup_docs" ->
+        TextOps.lineDedupOver(TextOps.augmentLines(docs), maxRows = 0L))
+    for ((k, df) <- salted)
+      assert(rowSet(df) == rowSet(SparkEntry.queries(k)(spark, sf0001)),
+        s"$k diverged between broadcast and salted fallback")
   }
 
   test("mixture_weighted_repeat: per-source copy counts follow the weight table") {
@@ -754,14 +754,11 @@ class TextOpsSpec extends SparkSpec {
     val expected = df.withColumn("cum", sum($"n").over(w))
       .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
     for (b <- Seq(2, 16, 64, 1000)) {
-      spark.conf.set("graft.tiers.rankBuckets", b.toString)
-      try {
-        val got = TextOps.bucketedPrefixSum(spark, df, "lang", "doc_id", "n")
-          .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
-            -> r.getAs[Long]("cum")).toMap
-        assert(got == expected,
-          s"bucketedPrefixSum(B=$b) diverged: ${(got.toSet diff expected.toSet).take(5)}")
-      } finally spark.conf.unset("graft.tiers.rankBuckets")
+      val got = TextOps.bucketedPrefixSum(df, "lang", "doc_id", "n", buckets = b)
+        .collect().map(r => (r.getAs[String]("lang"), r.getAs[Long]("doc_id"))
+          -> r.getAs[Long]("cum")).toMap
+      assert(got == expected,
+        s"bucketedPrefixSum(B=$b) diverged: ${(got.toSet diff expected.toSet).take(5)}")
     }
   }
 
@@ -788,15 +785,12 @@ class TextOpsSpec extends SparkSpec {
       .select("lang", "doc_id", "tier").collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
     for (b <- Seq(2, 8, 64, 1000)) {
-      spark.conf.set("graft.tiers.rankBuckets", b.toString)
-      try {
-        val got = TextOps.bucketedNtile(spark, perDoc, 3)
-          .select("lang", "doc_id", "tier").collect()
-          .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
-        assert(got == expected,
-          s"bucketedNtile(B=$b) diverged from the NTILE twin: " +
-            s"${(got.toSet diff expected.toSet).take(5)} vs ${(expected.toSet diff got.toSet).take(5)}")
-      } finally spark.conf.unset("graft.tiers.rankBuckets")
+      val got = TextOps.bucketedNtile(perDoc, 3, buckets = b)
+        .select("lang", "doc_id", "tier").collect()
+        .map(r => (r.getString(0), r.getLong(1)) -> r.getInt(2)).toMap
+      assert(got == expected,
+        s"bucketedNtile(B=$b) diverged from the NTILE twin: " +
+          s"${(got.toSet diff expected.toSet).take(5)} vs ${(expected.toSet diff got.toSet).take(5)}")
     }
   }
 

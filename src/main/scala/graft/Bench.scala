@@ -533,7 +533,6 @@ object Bench {
       * intermittently stays in memory); at 32M the bounded-vs-full-shuffle
       * gap is robust in any JVM state. */
     private def heavyHitters(): Obj = {
-      graft.functions.GraftExtensions.install(spark)
       val n = sys.env.getOrElse("SPARK_GRAFT_HH_ROWS", "32000000").toLong
       def tokens = spark.range(n).selectExpr(
         // (id div 4) % 16 is uniform over the id % 4 < 2 subset (the

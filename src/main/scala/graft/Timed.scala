@@ -162,34 +162,54 @@ object Timed {
     }
   }
 
-  /** Counts jobs, stages, tasks and shuffle bytes written while installed.
-    * Shuffle BYTES are the portable figure for a plan's exchange cost: on
-    * one box the OS absorbs an in-memory shuffle and wall-clock is
-    * bistable, while at 100 TB the exchange crosses a network. */
+  /** Counts the jobs, stages, tasks and shuffle bytes written of the jobs
+    * an [[around]] scope starts. Shuffle BYTES are the portable figure for
+    * a plan's exchange cost: on one box the OS absorbs an in-memory
+    * shuffle and wall-clock is bistable, while at 100 TB the exchange
+    * crosses a network. */
   final class TaskCounter extends SparkListener {
     val jobs, stages, tasks, shuffleBytes = new AtomicLong
-    override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    @volatile private var scope: String = _
+    private val scopeStages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+
+    override def onJobStart(e: SparkListenerJobStart): Unit =
+      if (scope != null && e.properties != null &&
+          scope == e.properties.getProperty(TaskCounter.ScopeProperty)) {
+        jobs.incrementAndGet()
+        e.stageIds.foreach(scopeStages.add)
+      }
     override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = e.taskMetrics
-      if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    }
+      if (scopeStages.contains(e.stageInfo.stageId)) stages.incrementAndGet()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+      if (scopeStages.contains(e.stageId)) {
+        tasks.incrementAndGet()
+        val m = e.taskMetrics
+        if (m != null) shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      }
 
     /** Zeroes the counters, runs `body`, and leaves its counts readable.
-      * The listener bus is async: it is drained before the reset and
-      * before the counts are read. */
+      * `body`'s jobs carry a fresh local property, which threads started
+      * inside it inherit (stream execution, broadcast and subquery
+      * threads); jobs of threads started before it do not count. The
+      * listener bus is async: it is drained before the reset and before
+      * the counts are read. */
     def around(spark: SparkSession)(body: => Unit): this.type = {
+      val sc = spark.sparkContext
       GraftSession.drainListenerBus(spark)
       Seq(jobs, stages, tasks, shuffleBytes).foreach(_.set(0))
-      body
+      scopeStages.clear()
+      scope = java.util.UUID.randomUUID().toString
+      val prev = sc.getLocalProperty(TaskCounter.ScopeProperty)
+      sc.setLocalProperty(TaskCounter.ScopeProperty, scope)
+      try body finally sc.setLocalProperty(TaskCounter.ScopeProperty, prev)
       GraftSession.drainListenerBus(spark)
       this
     }
   }
 
   object TaskCounter {
+    private val ScopeProperty = classOf[TaskCounter].getName + ".scope"
+
     /** A counter installed on `spark` for the duration of `f`. */
     def using[T](spark: SparkSession)(f: TaskCounter => T): T = {
       val c = new TaskCounter

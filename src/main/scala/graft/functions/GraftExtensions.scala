@@ -1,29 +1,20 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point registering the engine's native
-  * functions (`spark.sql.extensions=graft.functions.GraftExtensions`),
-  * plus an imperative registrar for sessions created without the config
-  * (both paths are idempotent). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+/** Registers the engine's native functions and the [[ReplaceHofCosine]]
+  * optimizer rule. Listed under
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * so Spark's session builder applies it to every session it creates
+  * (and their `newSession()`s) with no configuration or engine call.
+  * Spark logs a provider failure as a warning and goes on, so a broken
+  * services entry shows only as an undefined function at query time
+  * (FunctionsSpec resolves every name in a fresh session). */
+class GraftExtensions extends SparkSessionExtensionsProvider {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.cosineSim)
-    ext.injectFunction(GraftExtensions.minhashSig)
-    ext.injectFunction(GraftExtensions.signLshSig)
-    ext.injectFunction(GraftExtensions.hyperplaneSig)
-    ext.injectFunction(GraftExtensions.argmaxDot)
-    ext.injectFunction(GraftExtensions.pqAdc)
-    ext.injectFunction(GraftExtensions.vecMean)
-    ext.injectFunction(GraftExtensions.countIn)
-    ext.injectFunction(GraftExtensions.misraGries)
-    ext.injectFunction(GraftExtensions.bloomFilterAgg)
-    ext.injectFunction(GraftExtensions.mightContain)
-    ext.injectFunction(GraftExtensions.topkRows)
-    ext.injectFunction(GraftExtensions.top2By)
+    GraftExtensions.functions.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ => ReplaceHofCosine)
   }
 }
@@ -33,42 +24,42 @@ object GraftExtensions {
   private type FnDesc =
     (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)
 
-  val cosineSim: FnDesc = (
+  private val cosineSim: FnDesc = (
     FunctionIdentifier("cosine_sim"),
     new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
     (es: Seq[Expression]) => CosineSimilarity(es(0), es(1)))
 
-  val minhashSig: FnDesc = (
+  private val minhashSig: FnDesc = (
     FunctionIdentifier("minhash_sig"),
     new ExpressionInfo(classOf[MinHashSig].getName, "minhash_sig"),
     (es: Seq[Expression]) => MinHashSig(es.head))
 
-  val signLshSig: FnDesc = (
+  private val signLshSig: FnDesc = (
     FunctionIdentifier("sign_lsh_sig"),
     new ExpressionInfo(classOf[SignLshSig].getName, "sign_lsh_sig"),
     (es: Seq[Expression]) => SignLshSig(es.head))
 
-  val hyperplaneSig: FnDesc = (
+  private val hyperplaneSig: FnDesc = (
     FunctionIdentifier("hyperplane_sig"),
     new ExpressionInfo(classOf[HyperplaneSig].getName, "hyperplane_sig"),
     (es: Seq[Expression]) => HyperplaneSig(es.head))
 
-  val argmaxDot: FnDesc = (
+  private val argmaxDot: FnDesc = (
     FunctionIdentifier("argmax_dot"),
     new ExpressionInfo(classOf[ArgmaxDot].getName, "argmax_dot"),
     (es: Seq[Expression]) => ArgmaxDot(es(0), es(1)))
 
-  val pqAdc: FnDesc = (
+  private val pqAdc: FnDesc = (
     FunctionIdentifier("pq_adc"),
     new ExpressionInfo(classOf[PqAdc].getName, "pq_adc"),
     (es: Seq[Expression]) => PqAdc(es(0), es(1)))
 
-  val vecMean: FnDesc = (
+  private val vecMean: FnDesc = (
     FunctionIdentifier("vec_mean"),
     new ExpressionInfo(classOf[VecMeanAgg].getName, "vec_mean"),
     (es: Seq[Expression]) => VecMeanAgg(es.head).toAggregateExpression())
 
-  val countIn: FnDesc = (
+  private val countIn: FnDesc = (
     FunctionIdentifier("count_in"),
     new ExpressionInfo(classOf[CountIn].getName, "count_in"),
     (es: Seq[Expression]) => {
@@ -84,7 +75,7 @@ object GraftExtensions {
       CountIn(es.head, words)
     })
 
-  val misraGries: FnDesc = (
+  private val misraGries: FnDesc = (
     FunctionIdentifier("misra_gries"),
     new ExpressionInfo(classOf[MisraGries].getName, "misra_gries"),
     (es: Seq[Expression]) => MisraGries(es.head).toAggregateExpression())
@@ -95,7 +86,7 @@ object GraftExtensions {
   // bloom_prune_join probes natively: BloomFilterMightContain has
   // doGenCode, so the probe stays inside whole-stage codegen instead of
   // a black-box Scala UDF over a driver-built sketch (r16, verdict #5).
-  val bloomFilterAgg: FnDesc = (
+  private val bloomFilterAgg: FnDesc = (
     FunctionIdentifier("bloom_filter_agg"),
     new ExpressionInfo(
       classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
@@ -112,7 +103,7 @@ object GraftExtensions {
       agg.toAggregateExpression()
     })
 
-  val mightContain: FnDesc = (
+  private val mightContain: FnDesc = (
     FunctionIdentifier("might_contain"),
     new ExpressionInfo(
       classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
@@ -120,7 +111,7 @@ object GraftExtensions {
     (es: Seq[Expression]) =>
       org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(es(0), es(1)))
 
-  val top2By: FnDesc = (
+  private val top2By: FnDesc = (
     FunctionIdentifier("top2_by"),
     // the sentinel restriction lives in the USAGE string (r17, per
     // ADVICE): a SQL user sees it in DESCRIBE FUNCTION instead of only
@@ -134,7 +125,7 @@ object GraftExtensions {
         "generic topk aggregate when -Infinity is a live value.", ""),
     (es: Seq[Expression]) => Top2By(es(0), es(1)).toAggregateExpression())
 
-  val topkRows: FnDesc = (
+  private val topkRows: FnDesc = (
     FunctionIdentifier("topk"),
     new ExpressionInfo(classOf[TopKRows].getName, "topk"),
     (es: Seq[Expression]) => {
@@ -143,13 +134,9 @@ object GraftExtensions {
       TopKRows(es(0), es(1))
     })
 
-  /** Register on an existing session (no-op if already present). */
-  def install(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    for ((id, info, builder) <- Seq(cosineSim, minhashSig, signLshSig, hyperplaneSig, argmaxDot, pqAdc, vecMean, countIn, misraGries, bloomFilterAgg, mightContain, topkRows, top2By))
-      if (!reg.functionExists(id)) reg.registerFunction(id, info, builder)
-    if (!spark.experimental.extraOptimizations.contains(ReplaceHofCosine))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ ReplaceHofCosine
-  }
+  /** The 13 native functions, each injected into every session. None
+    * shadows a Spark builtin (FunctionsSpec checks the names). */
+  val functions: Seq[FnDesc] = Seq(cosineSim, minhashSig, signLshSig,
+    hyperplaneSig, argmaxDot, pqAdc, vecMean, countIn, misraGries,
+    bloomFilterAgg, mightContain, topkRows, top2By)
 }

@@ -3,6 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.catalyst.trees.TreePattern.HIGH_ORDER_FUNCTION
 
 /** Optimizer rule (SURVEY.md §4.2 custom piece): rewrite the higher-order
   * -function cosine-similarity pattern
@@ -15,13 +16,14 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * chains; the native form is one fused loop inside whole-stage codegen.
   * Semantics are identical (same accumulation order, double arithmetic).
   *
-  * Injected via GraftExtensions (spark.sql.extensions) or imperatively
-  * through spark.experimental.extraOptimizations (GraftExtensions.install).
+  * [[GraftExtensions]] injects it into the operator-optimization batches
+  * of every session; it visits only plans that hold a higher-order
+  * function.
   */
 object ReplaceHofCosine extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressionsWithPruning(_ => true) {
+    plan.transformAllExpressionsWithPruning(_.containsPattern(HIGH_ORDER_FUNCTION)) {
       case Divide(
             DotAgg(a1, b1),
             Multiply(SqrtOf(DotAgg(a2, a3)), SqrtOf(DotAgg(b2, b3)), _), _)

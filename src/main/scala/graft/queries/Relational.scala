@@ -28,9 +28,14 @@ object Relational {
   /** TPC-H Q1 shape: scan → filter → arithmetic exprs → 8 aggs → sort.
     * Filter and the two projected expressions stay inside one
     * WholeStageCodegen span; only one shuffle (the final group-by). */
-  val q1PricingSummary: Q = (s, dir) => {
-    t(s, dir, "lineitem")
-      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp"))
+  val q1PricingSummary: Q = (s, dir) =>
+    q1Over(t(s, dir, "lineitem")
+      .filter(col("l_shipdate") <= lit("1998-09-02").cast("timestamp")))
+
+  /** Q1's 8 aggregates per (returnflag, linestatus), sorted, over lineitem
+    * rows already cut at the ship date (flat or month-partitioned). */
+  private def q1Over(lineitem: DataFrame): DataFrame =
+    lineitem
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
         round(sum(col("l_quantity")), 2).as("sum_qty"),
@@ -42,7 +47,6 @@ object Relational {
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
       .orderBy(col("l_returnflag"), col("l_linestatus"))
-  }
 
   val q1PricingSummarySql: String =
     """SELECT l_returnflag, l_linestatus,
@@ -71,11 +75,17 @@ object Relational {
     * can filter them, and pre-joining orders⋈customer before the orderkey
     * exchange breaks the scan→join codegen pipeline for no net row
     * savings at this selectivity. */
-  val q3TopOrders: Q = (s, dir) => {
+  val q3TopOrders: Q = (s, dir) =>
+    q3Over(s, dir, t(s, dir, "lineitem"), t(s, dir, "orders"))
+
+  /** Q3's joins, aggregate and top 10 over the given fact tables (flat or
+    * bucketed) and the flat customer dim. */
+  private def q3Over(s: SparkSession, dir: String, lineitem: DataFrame,
+      orders: DataFrame): DataFrame = {
     val cut = lit("1997-06-01").cast("timestamp")
     val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = t(s, dir, "orders").filter(col("o_orderdate") < cut)
-    val l = t(s, dir, "lineitem").filter(col("l_shipdate") > cut)
+    val o = orders.filter(col("o_orderdate") < cut)
+    val l = lineitem.filter(col("l_shipdate") > cut)
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(c), col("o_custkey") === col("c_custkey"))
       .groupBy(col("l_orderkey"), col("o_orderdate"))
@@ -113,17 +123,7 @@ object Relational {
     * storage layout never changes answers. */
   val q3Bucketed: Q = (s, dir) => {
     val (lTab, oTab) = bucketedFacts(s, dir)
-    val cut = lit("1997-06-01").cast("timestamp")
-    val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = s.table(oTab).filter(col("o_orderdate") < cut)
-    val l = s.table(lTab).filter(col("l_shipdate") > cut)
-    l.join(o, col("l_orderkey") === col("o_orderkey"))
-      .join(broadcast(c), col("o_custkey") === col("c_custkey"))
-      .groupBy(col("l_orderkey"), col("o_orderdate"))
-      .agg(round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("revenue").desc, col("l_orderkey").asc)
-      .limit(10)
-      .select(col("l_orderkey"), col("revenue"), to_date(col("o_orderdate")).as("o_orderdate"))
+    q3Over(s, dir, s.table(lTab), s.table(oTab))
   }
 
   /** The per-dir bucketed fact table names — factored so Bench's
@@ -308,7 +308,6 @@ object Relational {
     * keys per task, which on 15M customers re-creates the full fact
     * sort this key exists to delete (measured: 35 GB spill at sf100). */
   val windowRank: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val winners = t(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(expr("top2_by(o_totalprice, o_orderkey)").as("top"))
@@ -339,7 +338,6 @@ object Relational {
     * (no per-group sort of the whole fact). Shares window_rank's oracle
     * (the unique orderkey tiebreak makes rank == row_number). */
   val windowRankTopk: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     t(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(expr("topk(struct(-o_totalprice AS np, o_orderkey AS ok), 2)").as("top"))
@@ -647,19 +645,8 @@ object Relational {
     * 100 TB time-series fact. */
   val q1Partitioned: Q = (s, dir) => {
     val cut = lit("1998-09-02").cast("timestamp")
-    monthLineitem(s, dir)
-      .filter(col("ship_month") <= to_date(cut) && col("l_shipdate") <= cut)
-      .groupBy(col("l_returnflag"), col("l_linestatus"))
-      .agg(
-        round(sum(col("l_quantity")), 2).as("sum_qty"),
-        round(sum(col("l_extendedprice")), 2).as("sum_base_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))), 2).as("sum_disc_price"),
-        round(sum(col("l_extendedprice") * (lit(1.0) - col("l_discount")) * (lit(1.0) + col("l_tax"))), 2).as("sum_charge"),
-        round(avg(col("l_quantity")), 4).as("avg_qty"),
-        round(avg(col("l_extendedprice")), 4).as("avg_price"),
-        round(avg(col("l_discount")), 4).as("avg_disc"),
-        count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
+    q1Over(monthLineitem(s, dir)
+      .filter(col("ship_month") <= to_date(cut) && col("l_shipdate") <= cut))
   }
 
   /** Narrow time-slice over the month layout — THE dominant query class
@@ -791,9 +778,12 @@ object Relational {
   // ------------------------------------------------------ sessionization
   /** 30-min-gap sessionization via the lag + conditional-sum idiom (batch
     * twin of Structured Streaming's session_window — see graft.streaming). */
-  val sessionGap: Q = (s, dir) => {
+  val sessionGap: Q = (s, dir) => sessionsOver(t(s, dir, "events"))
+
+  /** Per user: sessions (a gap over 30 min starts one) and events. */
+  private def sessionsOver(events: DataFrame): DataFrame = {
     val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    t(s, dir, "events")
+    events
       .withColumn("prev_ts", lag(col("ts"), 1).over(wOrd))
       .withColumn("new_sess",
         when(col("prev_ts").isNull ||
@@ -825,19 +815,9 @@ object Relational {
     * definition here (the lag window sees only the day's events); the
     * oracle applies the identical cut to the flat table, so the answers
     * agree exactly. */
-  val sessionGapDay: Q = (s, dir) => {
-    val wOrd = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    dayEvents(s, dir)
-      .filter(col("event_date") === lit("2024-01-15").cast("date"))
-      .withColumn("prev_ts", lag(col("ts"), 1).over(wOrd))
-      .withColumn("new_sess",
-        when(col("prev_ts").isNull ||
-          col("ts").cast("double") - col("prev_ts").cast("double") > 1800.0, 1L)
-          .otherwise(0L))
-      .groupBy(col("user_id"))
-      .agg(sum(col("new_sess")).as("n_sessions"), count(lit(1)).as("n_events"))
-      .orderBy(col("user_id"))
-  }
+  val sessionGapDay: Q = (s, dir) =>
+    sessionsOver(dayEvents(s, dir)
+      .filter(col("event_date") === lit("2024-01-15").cast("date")))
 
   val sessionGapDaySql: String =
     """WITH g AS (
@@ -924,19 +904,7 @@ object Relational {
   val sqlRevenueByNation: Q = (s, dir) => {
     for (name <- Seq("region", "nation", "customer", "supplier", "orders", "lineitem"))
       t(s, dir, name).createOrReplaceTempView(name)
-    s.sql(
-      """SELECT n_name,
-        |  round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
-        |  count(*) AS n_items
-        |FROM customer
-        |JOIN orders   ON c_custkey = o_custkey
-        |JOIN lineitem ON l_orderkey = o_orderkey
-        |JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-        |JOIN nation   ON s_nationkey = n_nationkey
-        |JOIN region   ON n_regionkey = r_regionkey
-        |WHERE r_name = 'ASIA'
-        |GROUP BY n_name
-        |ORDER BY n_name""".stripMargin)
+    s.sql(sqlRevenueByNationSql)
   }
 
   val sqlRevenueByNationSql: String =
@@ -1279,7 +1247,6 @@ object Relational {
     // InjectRuntimeFilter plants, here placed explicitly. The exact
     // join after the probe keeps the result FP-free, so the oracle is
     // the plain join.
-    graft.functions.GraftExtensions.install(s)
     t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey")).createOrReplaceTempView("bloom_dim_keys")
     t(s, dir, "orders").createOrReplaceTempView("bloom_orders")

@@ -116,7 +116,6 @@ object Similarity {
     Materialize(vecRepPlan(e))
 
   val embeddingNearDup: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val e = t(s, dir, "embeddings")
     // EXACT-DUP COLLAPSE before the fuzzy stage (r11, same design as
     // minhash_near_dup): verbatim vector copies have identical sign-LSH
@@ -179,7 +178,6 @@ object Similarity {
     * semantics match the pair list exactly: drop(v) ⇔ ∃ u < v with
     * cos(u, v) ≥ 0.40 — which the oracle replays all-pairs. */
   val embeddingNearDupVerdict: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val e = t(s, dir, "embeddings")
     // same map-side-collapsed mapping as [[embeddingNearDup]] (r22)
     val mapping = vecRepMapping(e)
@@ -247,9 +245,7 @@ object Similarity {
     // codegen expression (r10) — bit-identical to the interpreted
     // HOF-over-literal-matrix form it replaced (SimilaritySpec pins
     // native == HOF == inline-sin), without the per-(row, plane)
-    // zip_with allocation. Register here, not at the call sites: this
-    // helper must analyze standalone (spec plan assertions).
-    graft.functions.GraftExtensions.install(emb.sparkSession)
+    // zip_with allocation.
     val banded = emb
       .select(col("vec_id"), col("label"), expr("sign_lsh_sig(embedding)").as("sig"))
       .select(col("vec_id"), col("label"), explode(expr(
@@ -266,7 +262,6 @@ object Similarity {
     * [[embeddingNearDup]] (SimilaritySpec asserts pair-set equality);
     * never registered as a gated key. */
   private[graft] val embeddingNearDupAllPairs: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val e = t(s, dir, "embeddings").select(col("vec_id"), col("label"), col("embedding"))
     e.as("a").join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") < col("b.vec_id"))
@@ -386,7 +381,6 @@ object Similarity {
     * strict `>` keeping the earliest (lowest c) on ties, mirroring the
     * oracle's ORDER BY dp DESC, c; FunctionsSpec pins native == HOF. */
   private[graft] def assignCells(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(vecs.sparkSession)
     val carr = cents.agg(array_sort(collect_list(struct(col("c"), col("cv")))).as("cs"))
     vecs.crossJoin(broadcast(carr))
       .withColumn("cluster", expr("argmax_dot(v, cs)"))
@@ -419,7 +413,6 @@ object Similarity {
     * partial-sum regrouping between the two forms, which
     * SimilaritySpec pins equal on real data). */
   private def updateCents(assigned: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(assigned.sparkSession)
     assigned.groupBy(col("cluster").as("c"))
       .agg(expr("vec_mean(v)").as("mv"))
       .withColumn("cnrm", sqrt(dot(col("mv"), col("mv"))))
@@ -622,7 +615,6 @@ object Similarity {
     * size, and the DuckDB oracle derives the SAME radius from count(*),
     * so the gate compares the adaptive plan exactly. */
   val annHyperplaneTopk: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     // 6-bit sign bucket via the native codegen expression
     // (graft.functions.HyperplaneSig) — the interpreted
     // aggregate(sequence(0,5), … aggregate(zip_with(…))) twin it replaced
@@ -701,7 +693,6 @@ object Similarity {
     * (graft.functions.CosineSimilarity) instead of the HOF pipeline —
     * same semantics, same oracle, no per-row intermediate arrays. */
   val cosineTopkNative: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val e = t(s, dir, "embeddings")
     val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qv"))
     e.filter(col("vec_id") =!= 0)
@@ -808,7 +799,6 @@ object Similarity {
     * Codebooks collapse to one 16-entry array per subspace, broadcast;
     * zero shuffle on the corpus side. */
   private[graft] def pqAssign(subs: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(subs.sparkSession)
     val cba = cb.select(col("m"), struct(col("code").as("c"),
         concat(col("cb"), array(lit(-0.5) *
           expr("aggregate(zip_with(cb, cb, (x, y) -> x * y), 0D, (a, x) -> a + x)")))
@@ -831,7 +821,6 @@ object Similarity {
     * [[Materialize]] exactly like [[kmeans]] — without it every
     * downstream consumer re-executes the Lloyd prefix over the corpus. */
   private[graft] def pqCodebooks(subs: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(subs.sparkSession)
     var cb = subs.filter(col("vec_id") < 16)
       .select(col("m"), col("vec_id").as("code"),
         expr("transform(sv, x -> round(x, 6))").as("cb"))
@@ -861,14 +850,17 @@ object Similarity {
     * tails. Results are bit-identical to the sequential form — each
     * checkpoint job is the same plan over the same checkpointed
     * partitioning; only the wall-clock interleaving changes (FIFO
-    * scheduling back-fills, it never re-partitions). */
+    * scheduling back-fills, it never re-partitions). Both futures carry
+    * the caller's local properties, so their jobs keep its job group and
+    * count in its [[graft.Timed.TaskCounter]] scope. */
   private def trainCoarseAndPq(vecs: DataFrame, k: Int = K)
       : (DataFrame, DataFrame) = {
-    import scala.concurrent.{Await, Future}
+    import org.apache.spark.sql.GraftSessionAccess.future
+    import scala.concurrent.Await
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val cf = Future(kmeans(vecs, k))
-    val pf = Future(pqCodebooks(pqSubs(vecs)))
+    val cf = future(vecs.sparkSession)(kmeans(vecs, k))
+    val pf = future(vecs.sparkSession)(pqCodebooks(pqSubs(vecs)))
     (Await.result(cf, Duration.Inf), Await.result(pf, Duration.Inf))
   }
 
@@ -889,7 +881,6 @@ object Similarity {
     * twin); training keeps the exploded pqAssign form, whose
     * groupBy(m, code) Lloyd means genuinely need subvector rows. */
   private[graft] def pqEncode(vecs: DataFrame, cb: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(vecs.sparkSession)
     val spark = vecs.sparkSession
     import spark.implicits._
     val cba8 = cb.select(col("m"), struct(col("code").as("c"),
@@ -993,7 +984,6 @@ object Similarity {
     * top-10 is asserted in SimilaritySpec and floored in the bench ANN
     * group. */
   val ivfPqTopk: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val spark = s
     import spark.implicits._
     val vecs = normedPinned(t(s, dir, "embeddings"))
@@ -1163,10 +1153,8 @@ object Similarity {
     *
     * First call builds the durable index ([[ensurePqIndex]]); every
     * later call — across JVMs — probes at reused cost. */
-  val ivfPqProbe: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
+  val ivfPqProbe: Q = (s, dir) =>
     pqProbeFrom(s, dir, ensurePqIndex(s, dir))
-  }
 
   /** The serving-path probe against a stored index root — shared by
     * [[ivfPqProbe]] and [[ivfPqAppendProbe]] (identical reads: index
@@ -1218,7 +1206,6 @@ object Similarity {
     * existing ones. */
   private[graft] def appendPqCodes(s: SparkSession, root: java.io.File,
       newVecs: DataFrame, codesPath: String = null): Unit = {
-    graft.functions.GraftExtensions.install(s)
     val cents = graft.Tables.parquet(s, new java.io.File(root, "cents").toString)
     val cb = graft.Tables.parquet(s, new java.io.File(root, "cb").toString)
     val target =
@@ -1268,10 +1255,8 @@ object Similarity {
     * appended rows land in the SAME `codes/` relation with correct
     * cell routing and nibble packing, and the serving probe reads the
     * union transparently. */
-  val ivfPqAppendProbe: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
+  val ivfPqAppendProbe: Q = (s, dir) =>
     pqProbeFrom(s, dir, ensurePqAppendIndex(s, dir))
-  }
 
   // --------------------------------------------------- semantic dedup
   /** SemDeDup-style semantic dedup (Abbas et al. 2023): cluster the
@@ -1320,10 +1305,7 @@ object Similarity {
     * (BENCH sf10 `semantic_dedup_scaledK` row; SimilaritySpec pins
     * K-independence of the collapse≡naive equivalence and the cluster
     * bound on a 10×-distinct corpus). */
-  private[graft] def semanticDedupWith(e0: DataFrame, k: Int): DataFrame = {
-    val s = e0.sparkSession
-    graft.functions.GraftExtensions.install(s)
-    val e = e0
+  private[graft] def semanticDedupWith(e: DataFrame, k: Int): DataFrame = {
     val vecs = normedPinned(e)
     val keyed = e.select(col("vec_id"), col("embedding"))
     val reps = keyed.groupBy(col("embedding")).agg(min(col("vec_id")).as("rep"))
@@ -1359,7 +1341,6 @@ object Similarity {
     semanticDedupNaiveWith(t(s, dir, "embeddings"), K)
 
   private[graft] def semanticDedupNaiveWith(e: DataFrame, k: Int): DataFrame = {
-    graft.functions.GraftExtensions.install(e.sparkSession)
     val vecs = normedPinned(e)
     val av = assignCells(vecs, kmeans(vecs, k))
       .select(col("vec_id"), col("cluster"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.tensor._
 
@@ -146,13 +146,14 @@ object TensorQueries {
     pixelsOut(TBlock.toBlocks(
       Filters.uniformFilterTyped(u16Raster(s, dir), Seq(3, 3))))
 
-  /** The events raster quantized to a native uint16 TBlock image
-    * (×1000 mod 65536 — provably exercises the high byte, same formula
-    * as the uint16 store fixture). */
-  private[graft] def u16Raster(s: SparkSession, dir: String) = {
+  /** The events raster (in `ch`×`cw` chunks) quantized to a native
+    * uint16 TBlock image (×1000 mod 65536 — provably exercises the high
+    * byte); also the fixture of the three u16 store keys. */
+  private[graft] def u16Raster(s: SparkSession, dir: String, ch: Int = 16,
+      cw: Int = 16): Dataset[TBlock] = {
     import s.implicits._
     TBlock.fromBlocks(
-      Images.eventsRaster(s, dir).map { b =>
+      Images.eventsRaster(s, dir, ch = ch, cw = cw).map { b =>
         b.copy(data = b.data.map(v =>
           (((math.round(v * 1000) % 65536) + 65536) % 65536).toDouble))
       }, DType.U16)
@@ -457,6 +458,31 @@ object TensorQueries {
        |       (SELECT CAST(sum(b) AS BIGINT) FROM clo) AS n_closed""".stripMargin
 
   // ------------------------------------------------------ label + measure
+  /** Shared oracle prelude for all labeled-measurement queries:
+    * recursive-CTE connected components over the >150 threshold
+    * (`lab`: each pixel's scan-order label). */
+  private val labelCte: String =
+    s"""$gridCte,
+       |bin AS (SELECT i, j FROM grid WHERE v > 150),
+       |reach(i, j, ri, rj) AS (
+       |  SELECT i, j, i, j FROM bin
+       |  UNION
+       |  SELECT r.i, r.j, n.i, n.j
+       |  FROM reach r JOIN bin n
+       |    ON abs(n.i - r.ri) + abs(n.j - r.rj) = 1),
+       |comp AS (
+       |  SELECT i, j, min(ri * 64 + rj) AS root FROM reach GROUP BY i, j),
+       |lab AS (
+       |  SELECT i, j, dense_rank() OVER (ORDER BY root) AS label FROM comp)""".stripMargin
+
+  /** [[labelCte]] plus the labeled pixels with the C-order ravel index. */
+  private val labelPixelsCte: String =
+    s"""$labelCte,
+       |lpx AS (
+       |  SELECT CAST(lab.label AS BIGINT) AS label, lab.i, lab.j, g.v,
+       |    lab.i * 64 + lab.j AS ridx
+       |  FROM lab JOIN grid g ON lab.i = g.i AND lab.j = g.j)""".stripMargin
+
   /** Distributed connected components + labeled measurements in one
     * result: per component (scan-order label), area, center of mass, and
     * mean raster value. The oracle recomputes CC with a recursive CTE. */
@@ -464,14 +490,18 @@ object TensorQueries {
     val raster = Images.eventsRaster(s, dir)
     val bin = Filters.mapBlocks(raster)(b => b.data.map(v => if (v > 150.0) 1.0 else 0.0))
     val (labels, _) = Measure.label(bin, 2, connectivity = 1)
-    // raster values are exact 2-decimal sums, so rounding each label sum
-    // to 2 decimals makes it bit-identical across engines BEFORE the
-    // divisions — otherwise avg() of order-dependent float sums lands on
-    // .5 round boundaries (events values have 2 decimals) and the 4th
-    // decimal flips between engines. Block-partial fold (r22): the sums
-    // arrive as ≤ #labels·#blocks partials instead of one Spark row per
-    // pixel; the 2-dp rounding absorbs the regrouped summation order the
-    // same way it absorbs the engines' orders.
+    labelStats(raster, labels)
+  }
+
+  /** Per label: area, center of mass and mean raster value, from
+    * [[Measure.labelWeightedSums]] (a block-partial fold: the sums arrive
+    * as ≤ #labels·#blocks partials instead of one Spark row per pixel).
+    * Raster values are exact 2-decimal sums, so rounding each label sum
+    * to 2 decimals makes it bit-identical across engines BEFORE the
+    * divisions; otherwise avg() of order-dependent float sums lands on .5
+    * round boundaries and the 4th decimal flips between engines. The
+    * same rounding absorbs the partials' regrouped summation order. */
+  private def labelStats(raster: Dataset[Block], labels: Dataset[Block]): DataFrame =
     Measure.labelWeightedSums(raster, labels, 2)
       .select(col("label"), col("area"),
         round(col("sv"), 2).as("sv"),
@@ -482,7 +512,6 @@ object TensorQueries {
         round(col("s1") / col("sv"), 4).as("com_j"),
         round(col("sv") / col("area"), 4).as("mean_v"))
       .orderBy(col("label"))
-  }
 
   /** Typed-label twin of [[tensorLabelStats]]: the CC label image — an
     * INTEGER image by nature — is packed to native int32 TBlocks (4
@@ -498,18 +527,7 @@ object TensorQueries {
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_lab_${math.abs(dir.hashCode)}").toString
     graft.sources.TensorStore.writeTyped(TBlock.fromBlocks(labels, DType.I32), store)
-    val back = graft.sources.TensorStore.read(s, store)
-    // block-partial fold, as tensorLabelStats (r22)
-    Measure.labelWeightedSums(raster, back, 2)
-      .select(col("label"), col("area"),
-        round(col("sv"), 2).as("sv"),
-        round(col("s0"), 2).as("s0"),
-        round(col("s1"), 2).as("s1"))
-      .select(col("label"), col("area"),
-        round(col("s0") / col("sv"), 4).as("com_i"),
-        round(col("s1") / col("sv"), 4).as("com_j"),
-        round(col("sv") / col("area"), 4).as("mean_v"))
-      .orderBy(col("label"))
+    labelStats(raster, graft.sources.TensorStore.read(s, store))
   }
 
   /** find_objects gate: per-label bounding boxes over the standard CC
@@ -523,36 +541,14 @@ object TensorQueries {
   }
 
   val tensorFindObjectsSql: String =
-    s"""WITH RECURSIVE $gridCte,
-       |bin AS (SELECT i, j FROM grid WHERE v > 150),
-       |reach(i, j, ri, rj) AS (
-       |  SELECT i, j, i, j FROM bin
-       |  UNION
-       |  SELECT r.i, r.j, n.i, n.j
-       |  FROM reach r JOIN bin n
-       |    ON abs(n.i - r.ri) + abs(n.j - r.rj) = 1),
-       |comp AS (
-       |  SELECT i, j, min(ri * 64 + rj) AS root FROM reach GROUP BY i, j),
-       |lab AS (
-       |  SELECT i, j, dense_rank() OVER (ORDER BY root) AS label FROM comp)
+    s"""WITH RECURSIVE $labelCte
        |SELECT CAST(label AS BIGINT) AS label,
        |  CAST(min(i) AS BIGINT) AS min_0, CAST(max(i) AS BIGINT) AS max_0,
        |  CAST(min(j) AS BIGINT) AS min_1, CAST(max(j) AS BIGINT) AS max_1
        |FROM lab GROUP BY label ORDER BY label""".stripMargin
 
   val tensorLabelStatsSql: String =
-    s"""WITH RECURSIVE $gridCte,
-       |bin AS (SELECT i, j FROM grid WHERE v > 150),
-       |reach(i, j, ri, rj) AS (
-       |  SELECT i, j, i, j FROM bin
-       |  UNION
-       |  SELECT r.i, r.j, n.i, n.j
-       |  FROM reach r JOIN bin n
-       |    ON abs(n.i - r.ri) + abs(n.j - r.rj) = 1),
-       |comp AS (
-       |  SELECT i, j, min(ri * 64 + rj) AS root FROM reach GROUP BY i, j),
-       |lab AS (
-       |  SELECT i, j, dense_rank() OVER (ORDER BY root) AS label FROM comp),
+    s"""WITH RECURSIVE $labelCte,
        |sums AS (
        |  SELECT CAST(lab.label AS BIGINT) AS label, count(*) AS area,
        |    round(sum(g.v), 2) AS sv,
@@ -950,27 +946,6 @@ object TensorQueries {
       .orderBy(col("label"))
   }
 
-  /** Shared oracle prelude for all labeled-measurement queries: recursive
-    * -CTE connected components over the >150 threshold, labeled pixels
-    * with the C-order ravel index. */
-  private val labelPixelsCte: String =
-    s"""$gridCte,
-       |bin AS (SELECT i, j FROM grid WHERE v > 150),
-       |reach(i, j, ri, rj) AS (
-       |  SELECT i, j, i, j FROM bin
-       |  UNION
-       |  SELECT r.i, r.j, n.i, n.j
-       |  FROM reach r JOIN bin n
-       |    ON abs(n.i - r.ri) + abs(n.j - r.rj) = 1),
-       |comp AS (
-       |  SELECT i, j, min(ri * 64 + rj) AS root FROM reach GROUP BY i, j),
-       |lab AS (
-       |  SELECT i, j, dense_rank() OVER (ORDER BY root) AS label FROM comp),
-       |lpx AS (
-       |  SELECT CAST(lab.label AS BIGINT) AS label, lab.i, lab.j, g.v,
-       |    lab.i * 64 + lab.j AS ridx
-       |  FROM lab JOIN grid g ON lab.i = g.i AND lab.j = g.j)""".stripMargin
-
   val tensorMeasureExtendedSql: String =
     s"""WITH RECURSIVE $labelPixelsCte
        |SELECT label,
@@ -1110,6 +1085,21 @@ object TensorQueries {
        |  (CAST(round(v * 100) AS BIGINT) % 256 + 256) % 256 AS u
        |FROM grid WHERE i >= 16 ORDER BY i, j""".stripMargin
 
+  /** One (i, j, u) row per pixel of little-endian uint16 blocks. */
+  private def u16Pixels(blocks: Dataset[TBlock]): DataFrame = {
+    val spark = blocks.sparkSession
+    import spark.implicits._
+    blocks.flatMap { b =>
+      val h = b.shape(0); val w = b.shape(1)
+      for (i <- 0 until h; j <- 0 until w) yield {
+        val lo = b.data(2 * (i * w + j)) & 0xff
+        val hi = b.data(2 * (i * w + j) + 1) & 0xff
+        (b.origin(0) + i, b.origin(1) + j, (lo | (hi << 8)).toLong)
+      }
+    }.toDF("i", "j", "u")
+      .orderBy(col("i"), col("j"))
+  }
+
   /** uint16 twin — the microscopy dtype (SURVEY §1.1: 16-bit TIFF is the
     * dominant scientific-imaging format). Quantizes at ×1000 mod 65536 so
     * values actually exercise the high byte, stores at 2 bytes/pixel
@@ -1118,24 +1108,8 @@ object TensorQueries {
   val tensorStoreUint16Roundtrip: Q = (s, dir) => {
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_u16_${math.abs(dir.hashCode)}").toString
-    val spark = s
-    import spark.implicits._
-    val u16 = TBlock.fromBlocks(
-      Images.eventsRaster(s, dir).map { b =>
-        b.copy(data = b.data.map(v =>
-          (((math.round(v * 1000) % 65536) + 65536) % 65536).toDouble))
-      }, DType.U16)
-    graft.sources.TensorStore.writeTyped(u16, store)
-    graft.sources.TensorStore.readTyped(s, store, frameRange = Some((1, 2)))
-      .flatMap { b =>
-        val h = b.shape(0); val w = b.shape(1)
-        for (i <- 0 until h; j <- 0 until w) yield {
-          val lo = b.data(2 * (i * w + j)) & 0xff
-          val hi = b.data(2 * (i * w + j) + 1) & 0xff
-          (b.origin(0) + i, b.origin(1) + j, (lo | (hi << 8)).toLong)
-        }
-      }.toDF("i", "j", "u")
-      .orderBy(col("i"), col("j"))
+    graft.sources.TensorStore.writeTyped(u16Raster(s, dir), store)
+    u16Pixels(graft.sources.TensorStore.readTyped(s, store, frameRange = Some((1, 2))))
   }
 
   val tensorStoreUint16RoundtripSql: String =
@@ -1190,24 +1164,9 @@ object TensorQueries {
     // gate keys never share (and can never race on) one store
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_zarr_rt_${math.abs(dir.hashCode)}").toString
-    val spark = s
-    import spark.implicits._
-    val u16 = TBlock.fromBlocks(
-      Images.eventsRaster(s, dir, ch = 20, cw = 24).map { b =>
-        b.copy(data = b.data.map(v =>
-          (((math.round(v * 1000) % 65536) + 65536) % 65536).toDouble))
-      }, DType.U16)
-    graft.sources.ZarrStore.writeTyped(u16, store, gzipLevel = Some(1))
-    graft.sources.ZarrStore.readTyped(s, store)
-      .flatMap { b =>
-        val h = b.shape(0); val w = b.shape(1)
-        for (i <- 0 until h; j <- 0 until w) yield {
-          val lo = b.data(2 * (i * w + j)) & 0xff
-          val hi = b.data(2 * (i * w + j) + 1) & 0xff
-          (b.origin(0) + i, b.origin(1) + j, (lo | (hi << 8)).toLong)
-        }
-      }.toDF("i", "j", "u")
-      .orderBy(col("i"), col("j"))
+    graft.sources.ZarrStore.writeTyped(u16Raster(s, dir, ch = 20, cw = 24), store,
+      gzipLevel = Some(1))
+    u16Pixels(graft.sources.ZarrStore.readTyped(s, store))
   }
 
   val tensorStoreZarrRoundtripSql: String =
@@ -1226,24 +1185,9 @@ object TensorQueries {
     // own store dir (see tensorStoreZarrRoundtrip's keying note)
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_zarr_pr_${math.abs(dir.hashCode)}").toString
-    val spark = s
-    import spark.implicits._
-    val u16 = TBlock.fromBlocks(
-      Images.eventsRaster(s, dir, ch = 20, cw = 24).map { b =>
-        b.copy(data = b.data.map(v =>
-          (((math.round(v * 1000) % 65536) + 65536) % 65536).toDouble))
-      }, DType.U16)
-    graft.sources.ZarrStore.writeTyped(u16, store, gzipLevel = Some(1))
-    graft.sources.ZarrStore.readTyped(s, store, frameRange = Some((1, 2)))
-      .flatMap { b =>
-        val h = b.shape(0); val w = b.shape(1)
-        for (i <- 0 until h; j <- 0 until w) yield {
-          val lo = b.data(2 * (i * w + j)) & 0xff
-          val hi = b.data(2 * (i * w + j) + 1) & 0xff
-          (b.origin(0) + i, b.origin(1) + j, (lo | (hi << 8)).toLong)
-        }
-      }.toDF("i", "j", "u")
-      .orderBy(col("i"), col("j"))
+    graft.sources.ZarrStore.writeTyped(u16Raster(s, dir, ch = 20, cw = 24), store,
+      gzipLevel = Some(1))
+    u16Pixels(graft.sources.ZarrStore.readTyped(s, store, frameRange = Some((1, 2))))
   }
 
   val tensorStoreZarrPrunedSql: String =

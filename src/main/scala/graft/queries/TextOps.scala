@@ -39,10 +39,28 @@ object TextOps {
           .as("shingle"))
 
   /** DuckDB twin of shingleRows (1-based list indexing). */
-  private val shingleCte: String =
+  private[graft] val shingleCte: String =
     """toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
       |idx AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i FROM toks WHERE len(t) >= 3),
       |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle FROM idx)""".stripMargin
+
+  /** DuckDB twin of [[minhashCandidates]]' signature and band keys over
+    * [[shingleCte]]'s `sh`: `hashed` holds the (h1 + i·h2) mod p MinHash
+    * per (doc_id, i), `bands` the 8 band buckets of 4 rows each. Every
+    * MinHash oracle shares it, so none can drift from the others. */
+  private[graft] val minhashBandsCte: String =
+    """hashed AS (
+      |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
+      |  FROM (SELECT doc_id,
+      |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
+      |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
+      |        FROM sh)
+      |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
+      |  GROUP BY doc_id, i),
+      |bands AS (
+      |  SELECT doc_id, i // 4 AS band,
+      |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
+      |  FROM hashed GROUP BY doc_id, i // 4)""".stripMargin
 
   // ------------------------------------------------------ exact dedup
   /** Exact dedup accounting per source: hash-groupBy on md5(text).
@@ -161,7 +179,6 @@ object TextOps {
   def bm25TopKTerms(s: SparkSession, dir: String, terms: Seq[String],
       k: Int): DataFrame = {
     require(terms.nonEmpty, "bm25TopKTerms: empty query")
-    graft.functions.GraftExtensions.install(s)
     val k1 = 1.2
     val b = 0.75
     // each term literal rides a Column-level lit(), never string
@@ -524,7 +541,6 @@ object TextOps {
     * reports per-source mean ratio and the share of docs the heuristic
     * calls English. (Real n-gram models plug into the same shape.) */
   val langIdHeuristic: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     t(s, dir, "documents")
       .select(col("source"), col("lang"), toks.as("t"))
       .select(col("source"), col("lang"),
@@ -904,18 +920,7 @@ object TextOps {
 
   val minhashNearDupSql: String =
     s"""WITH $shingleCte,
-       |hashed AS (
-       |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
-       |  FROM (SELECT doc_id,
-       |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-       |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
-       |        FROM sh)
-       |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-       |  GROUP BY doc_id, i),
-       |bands AS (
-       |  SELECT doc_id, i // 4 AS band,
-       |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
-       |  FROM hashed GROUP BY doc_id, i // 4),
+       |$minhashBandsCte,
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
        |  FROM bands x JOIN bands y
@@ -984,18 +989,7 @@ object TextOps {
     * reachability CTE (min reachable id = component id). */
   val ccDedupGroupsSql: String =
     s"""WITH RECURSIVE $shingleCte,
-       |hashed AS (
-       |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
-       |  FROM (SELECT doc_id,
-       |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-       |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
-       |        FROM sh)
-       |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-       |  GROUP BY doc_id, i),
-       |bands AS (
-       |  SELECT doc_id, i // 4 AS band,
-       |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
-       |  FROM hashed GROUP BY doc_id, i // 4),
+       |$minhashBandsCte,
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
        |  FROM bands x JOIN bands y
@@ -1419,7 +1413,6 @@ object TextOps {
     * minhash_near_dup's double-hash family — see MinHashSig scaladoc).
     * Oracle reproduces the md5 permutation hashes in SQL. */
   val minhashSignatures: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     shingleRows(t(s, dir, "documents"))
       .groupBy(col("doc_id"))
       .agg(concat_ws("|", expr("minhash_sig(shingle)")).as("sig"))
@@ -1652,18 +1645,7 @@ object TextOps {
     * 32 permutation values. */
   val incrementalNearDedupSql: String =
     s"""WITH $shingleCte,
-       |hashed AS (
-       |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
-       |  FROM (SELECT doc_id,
-       |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-       |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
-       |        FROM sh)
-       |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-       |  GROUP BY doc_id, i),
-       |bands AS (
-       |  SELECT doc_id, i // 4 AS band,
-       |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
-       |  FROM hashed GROUP BY doc_id, i // 4),
+       |$minhashBandsCte,
        |cand AS (
        |  SELECT DISTINCT b.doc_id AS bd, x.doc_id AS xd
        |  FROM bands b JOIN bands x
@@ -2359,7 +2341,6 @@ object TextOps {
     * and sorts once after its drain, so no micro-batch pays a range
     * exchange, its sampling job and a sort. */
   private[graft] def gopherOver(docs: DataFrame): DataFrame = {
-    graft.functions.GraftExtensions.install(docs.sparkSession)
     docs
       .select(col("source"),
         size(toks).as("n"),
@@ -2760,7 +2741,6 @@ object TextOps {
     * the gated single-op twin's logic verbatim, so the oracle is the
     * same CTEs chained. */
   val pipelineCurationV2: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val byHash = Window.partitionBy(col("h")).orderBy(col("doc_id"))
     val deduped = t(s, dir, "documents")
       .withColumn("n", size(toks))
@@ -2856,18 +2836,7 @@ object TextOps {
 
   val contaminationFuzzySql: String =
     s"""WITH $shingleCte,
-       |hashed AS (
-       |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
-       |  FROM (SELECT doc_id,
-       |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-       |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
-       |        FROM sh)
-       |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-       |  GROUP BY doc_id, i),
-       |bands AS (
-       |  SELECT doc_id, i // 4 AS band,
-       |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
-       |  FROM hashed GROUP BY doc_id, i // 4),
+       |$minhashBandsCte,
        |cand AS (
        |  SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
        |  FROM bands x JOIN bands y
@@ -2921,7 +2890,6 @@ object TextOps {
     * The threshold comparison is `cnt ≥ N · 0.02` with integer cnt/N —
     * one IEEE multiply, identical in both engines. */
   val heavyHitters: Q = (s, dir) => {
-    graft.functions.GraftExtensions.install(s)
     val tok = t(s, dir, "documents").select(explode(toks).as("tok"))
     val mg = tok.agg(expr("misra_gries(tok)").as("s"))
       .select(col("s.n").as("n"), explode(col("s.terms")).as("tok"))

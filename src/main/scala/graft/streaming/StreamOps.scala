@@ -1252,7 +1252,6 @@ object StreamOps {
       mtimeRank: Int => Int = identity): (DataFrame, String, Seq[(Long, Long)]) = {
     val spark = s
     import spark.implicits._
-    graft.functions.GraftExtensions.install(s)
     val inDir = freshDir(dir, "embdedup_stream")
     writeEmbShards(s, dir, inDir, mtimeRank)
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1322,21 +1321,8 @@ object StreamOps {
     * bucket-collision candidates → per-pair signature agreement ≥ 26 —
     * a doc is dropped iff some earlier (smaller doc_id) doc collides. */
   val streamNearDedupSql: String =
-    """WITH toks AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
-      |idx AS (SELECT doc_id, t, unnest(range(1, len(t)-1)) AS i FROM toks WHERE len(t) >= 3),
-      |sh AS (SELECT DISTINCT doc_id, t[i] || ' ' || t[i+1] || ' ' || t[i+2] AS shingle FROM idx),
-      |hashed AS (
-      |  SELECT doc_id, i, min((h1 + i * h2) % 4294967291) AS h
-      |  FROM (SELECT doc_id,
-      |          ('0x' || substr(md5(shingle), 1, 15))::BIGINT AS h1,
-      |          ('0x' || substr(md5(shingle), 17, 15))::BIGINT % 1000000007 AS h2
-      |        FROM sh)
-      |  CROSS JOIN (SELECT unnest(range(0, 32)) AS i)
-      |  GROUP BY doc_id, i),
-      |bands AS (
-      |  SELECT doc_id, i // 4 AS band,
-      |    (i // 4)::VARCHAR || '|' || string_agg(h::VARCHAR, '|' ORDER BY i) AS bucket
-      |  FROM hashed GROUP BY doc_id, i // 4),
+    s"""WITH ${graft.queries.TextOps.shingleCte},
+      |${graft.queries.TextOps.minhashBandsCte},
       |cand AS (
       |  SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
       |  FROM bands x JOIN bands y

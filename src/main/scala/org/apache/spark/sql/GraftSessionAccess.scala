@@ -1,7 +1,9 @@
 package org.apache.spark.sql
 
-/** Reads the one piece of package-private session state that graft's stream
-  * start path (`graft.streaming.StreamOps.runStream`) needs. */
+/** The package-private Spark state graft reads or carries across threads:
+  * the session's artifact flag, which the stream start path
+  * (`graft.streaming.StreamOps.runStream`) needs, and the SparkContext's
+  * thread-local properties. */
 object GraftSessionAccess {
 
   /** True once `s` has added a session-scoped artifact (jar, class file or
@@ -12,5 +14,20 @@ object GraftSessionAccess {
     val am = s.asInstanceOf[classic.SparkSession].artifactManager
     am.getClass.getMethod("sessionArtifactAdded").invoke(am)
       .asInstanceOf[java.util.concurrent.atomic.AtomicBoolean].get()
+  }
+
+  /** `body` as a Future on `ec` that runs with the calling thread's
+    * SparkContext local properties, as Spark's
+    * `SQLExecution.withThreadLocalCaptured` does: a pool thread otherwise
+    * keeps the properties of the thread that created it. */
+  def future[T](s: SparkSession)(body: => T)(
+      implicit ec: scala.concurrent.ExecutionContext): scala.concurrent.Future[T] = {
+    val sc = s.sparkContext
+    val props = org.apache.spark.util.Utils.cloneProperties(sc.getLocalProperties)
+    scala.concurrent.Future {
+      val prev = sc.getLocalProperties
+      sc.setLocalProperties(props)
+      try body finally sc.setLocalProperties(prev)
+    }
   }
 }

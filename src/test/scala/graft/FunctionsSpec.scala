@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 class FunctionsSpec extends SparkSpec {
 
   test("cosine_sim native expression equals the HOF formulation and stays in codegen") {
-    graft.functions.GraftExtensions.install(spark)
     val e = Tables.t(spark, sf001, "embeddings").limit(200)
     val hof = e.select(col("vec_id"), expr(
       """aggregate(zip_with(transform(embedding, x -> CAST(x AS DOUBLE)),
@@ -24,7 +23,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("argmax_dot native assignment is bit-identical to the HOF fold, incl. NaN/tie edges") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     // real corpus: every sf0.01 vector against the real k-means
@@ -72,7 +70,6 @@ class FunctionsSpec extends SparkSpec {
     // degenerate inputs must not mis-sum (r12 advisor item: a null
     // element previously contributed 0.0 silently, diverging from the
     // explode twin's per-dimension null-skipping avg)
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val ragged = Seq((1L, Seq[java.lang.Double](1.0, 2.0)),
@@ -98,28 +95,43 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("cosine_sim rejects wrong argument types with a clear error") {
-    graft.functions.GraftExtensions.install(spark)
     val err = intercept[Exception] {
       Tables.t(spark, sf001, "documents").select(expr("cosine_sim(text, text)")).collect()
     }
     assert(err.getMessage.contains("ARRAY<FLOAT>") || err.getMessage.contains("DATATYPE"))
   }
 
+  private val names = graft.functions.GraftExtensions.functions.map(_._1.funcName)
+
+  test("every native function resolves in a new session with no engine call") {
+    assert(names.size == 13)
+    val s = spark.newSession()
+    names.foreach(n => assert(s.catalog.functionExists(n), s"$n not registered"))
+    assert(s.sql("SELECT cosine_sim(array(1f, 0f), array(1f, 0f)), " +
+      "count_in(array('a', 'b', 'a'), 'a')").head().toSeq == Seq(1.0, 2))
+  }
+
+  test("no native function name shadows a Spark builtin") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    names.foreach(n =>
+      assert(!FunctionRegistry.builtin.functionExists(FunctionIdentifier(n)), n))
+  }
+
   test("ReplaceHofCosine rule rewrites the HOF pattern into the native expression") {
-    graft.functions.GraftExtensions.install(spark)
-    val hofCos = graft.queries.Similarity.cosineTopk(spark, sf001)
+    val s = spark.newSession()
+    val hofCos = graft.queries.Similarity.cosineTopk(s, sf001)
     val optimized = hofCos.queryExecution.optimizedPlan.toString
     assert(optimized.contains("cosine_sim"),
       s"HOF cosine not rewritten to native expression:\n$optimized")
     // semantics preserved: rewritten HOF query == native query
     val a = hofCos.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val b = graft.queries.Similarity.cosineTopkNative(spark, sf001)
+    val b = graft.queries.Similarity.cosineTopkNative(s, sf001)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(a == b)
   }
 
   test("minhash_sig aggregate matches the HOF transform signatures") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val docs = Seq((1L, Seq("a b c", "b c d", "c d e")), (2L, Seq("x y z")))
@@ -136,7 +148,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("count_in native expression equals the HOF filter form, incl. null elements and literals-only args") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val df = Seq(
@@ -165,7 +176,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("misra_gries summary keeps every true heavy hitter under adversarial cardinality") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     // 500 distinct light tokens (1 occurrence each) decrement-pressure a
@@ -203,7 +213,6 @@ class FunctionsSpec extends SparkSpec {
     // (so entries don't die in batches and the lazy bookkeeping is live),
     // interleaved with unique-miss pressure. Single partition ⇒ the
     // aggregate sees the exact stream order the simulation replays.
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(13)
@@ -234,7 +243,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("misra_gries survives newline/tab-bearing terms across the shuffle and rejects non-strings") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     // terms containing the bytes a separator-framed serialization would
@@ -256,7 +264,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("topk aggregate: bounded per-group top-k equals sort-and-take, across partitions") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
@@ -280,7 +287,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("top2_by: declarative top-2 equals sort-and-take-2 across partitions; plans as HashAggregate") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
@@ -313,7 +319,6 @@ class FunctionsSpec extends SparkSpec {
   test("top2_by DESCRIBE FUNCTION surfaces the -Infinity sentinel restriction") {
     // r17, per ADVICE: the restriction must be visible to SQL users, not
     // only in a Scaladoc they never read
-    graft.functions.GraftExtensions.install(spark)
     val desc = spark.sql("DESCRIBE FUNCTION EXTENDED top2_by")
       .collect().map(_.getString(0)).mkString("\n")
     assert(desc.contains("RESTRICTION") && desc.contains("-Infinity"),
@@ -321,7 +326,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("pq_adc equals the HOF table-lookup fold, nibble layout and null algebra pinned") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     // two subspaces (one byte): high nibble = subspace 0, low = subspace 1.

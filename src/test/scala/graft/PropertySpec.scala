@@ -142,7 +142,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("minhash signature entries only decrease as shingles are added (monotone merge)") {
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.functions._
@@ -186,7 +185,6 @@ class PropertySpec extends SparkSpec {
     // the mergeable-summaries property (Agarwal et al.): for ANY stream
     // and ANY partition/merge tree, every term with true count >
     // N/(k+1) (k = 64) is present in the final summary, and N is exact
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(4242)
@@ -257,7 +255,6 @@ class PropertySpec extends SparkSpec {
 
   test("pq_adc equals the hex-unpack HOF fold over random code words and tables") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftExtensions.install(spark)
     val s = spark
     import s.implicits._
     val rnd = new scala.util.Random(7)

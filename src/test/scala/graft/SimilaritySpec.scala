@@ -356,7 +356,6 @@ class SimilaritySpec extends SparkSpec {
     assert(viaPlanes == inlineSig, "hoisted signatures diverge from inline sin()")
     // the NATIVE codegen expression (the r10 production path) must match
     // both interpreted forms bit-for-bit
-    graft.functions.GraftExtensions.install(spark)
     val native = emb.select(col("vec_id"), expr("sign_lsh_sig(embedding)").as("sig"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(native == inlineSig, "native sign_lsh_sig diverges from the HOF forms")
@@ -369,7 +368,6 @@ class SimilaritySpec extends SparkSpec {
     // NaN element (Spark's > orders NaN above 0 → bit SET), null element /
     // wrong length / empty (all-null dots → bucket 0, not null).
     import org.apache.spark.sql.functions.{col, expr, typedLit}
-    graft.functions.GraftExtensions.install(spark)
     val planes: Seq[Seq[Double]] = graft.functions.HyperplaneSig.planes.map(_.toSeq).toSeq
     val hof =
       """aggregate(sequence(0, 5), 0L, (acc, p) -> acc +

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.ImageSource
-import graft.tensor.{Block, Images}
+import graft.tensor.{Images, TBlock}
 
 /** Driver-gated imread queries (dask_image/imread — SURVEY.md §2A.1).
   *
@@ -11,7 +11,7 @@ import graft.tensor.{Block, Images}
   * deterministically from the events raster (pixel = round(100·v) mod 256,
   * shifted per frame), encoded to PGM/PNG on local disk, then read back
   * through the DISTRIBUTED imread path (binaryFile scan → per-file decode
-  * → frame-indexed Blocks). The oracle recomputes the expected bytes from
+  * → frame-indexed TBlocks in the file's dtype). The oracle recomputes the expected bytes from
   * the events table — any decode, frame-order, or indexing defect breaks
   * the hash. All values are integers, so the compare is exact.
   */
@@ -67,27 +67,10 @@ object ImreadQueries {
     s"$out/*.$codec"
   }
 
-  /** (frame, i, j, pixel) rows from the stacked frame Blocks. */
-  private def framesToDf(ds: Dataset[Block]): DataFrame = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.flatMap { b =>
-      val h = b.shape(1); val w = b.shape(2)
-      val f = b.origin.head
-      for (i <- 0 until h; j <- 0 until w)
-        yield (f, i, j, b.data(i * w + j).toLong)
-    }.toDF("f", "i", "j", "p")
-  }
-
-  val imreadPgm: Q = (s, dir) => {
-    val glob = writeFixture(s, dir, "pgm", frameStep = 7)
-    framesToDf(ImageSource.readPgm(s, glob)).orderBy("f", "i", "j")
-  }
-
   /** (f, i, j, p) rows straight from TYPED grayscale frames — the dtype
     * codec widens each sample to BIGINT only here, at the relational
     * edge; upstream of this the payload is native bytes end to end. */
-  private def typedFramesToDf(ds: Dataset[graft.tensor.TBlock]): DataFrame = {
+  private def typedFramesToDf(ds: Dataset[TBlock]): DataFrame = {
     val spark = ds.sparkSession
     import spark.implicits._
     ds.flatMap { b =>
@@ -100,14 +83,19 @@ object ImreadQueries {
     }.toDF("f", "i", "j", "p")
   }
 
+  val imreadPgm: Q = (s, dir) => {
+    val glob = writeFixture(s, dir, "pgm", frameStep = 7)
+    typedFramesToDf(ImageSource.readPgm(s, glob)).orderBy("f", "i", "j")
+  }
+
   /** Typed grayscale imread gate: the SAME pgm fixture as `imread_pgm`,
     * read through the native-uint8 path with nframes=3 — so the
     * frame-stacking SHUFFLE carries 1-byte/pixel payloads (byte width
     * pinned in ImageSourceSpec) and the oracle must still be hash-exact
-    * against the float-path SQL. */
+    * against the `imread_pgm` SQL. */
   val imreadPgmTyped: Q = (s, dir) => {
     val glob = writeFixture(s, dir, "pgm", frameStep = 7)
-    typedFramesToDf(ImageSource.readPgmTyped(s, glob, nframes = 3))
+    typedFramesToDf(ImageSource.readPgm(s, glob, nframes = 3))
       .orderBy("f", "i", "j")
   }
 
@@ -123,7 +111,7 @@ object ImreadQueries {
       java.nio.file.Files.write(out.resolve(f"frame_$f%03d.pgm16"),
         ImageSource.encodePgm16(H, W, frame))
     }
-    typedFramesToDf(ImageSource.readPgmTyped(s, s"$out/*.pgm16"))
+    typedFramesToDf(ImageSource.readPgm(s, s"$out/*.pgm16"))
       .orderBy("f", "i", "j")
   }
 
@@ -139,7 +127,7 @@ object ImreadQueries {
     val spark = s
     import spark.implicits._
     val glob = writeFixture(s, dir, "pgm", frameStep = 7)
-    val typed = ImageSource.readPgmTyped(s, glob)
+    val typed = ImageSource.readPgm(s, glob)
     // both count branches (raw fg + opened) hang off `bin`; checkpoint so
     // the file scan + decode + threshold run once, not once per branch
     // (at 100 TB: persist the mask, it is 1/8 the decoded image)
@@ -199,7 +187,7 @@ object ImreadQueries {
 
   val imreadPng: Q = (s, dir) => {
     val glob = writeFixture(s, dir, "png", frameStep = 13)
-    framesToDf(ImageSource.readPng(s, glob)).orderBy("f", "i", "j")
+    typedFramesToDf(ImageSource.readPng(s, glob)).orderBy("f", "i", "j")
   }
 
   /** TIFF gate additionally exercises MULTI-PAGE frame indexing and LZW:
@@ -215,7 +203,7 @@ object ImreadQueries {
       ImageSource.encodeTiffPages(frames.take(2).map(f => (H, W, f)), comp = 5))
     java.nio.file.Files.write(out.resolve("frames_002.tiff"),
       ImageSource.encodeTiffPages(Seq((H, W, frames(2)))))
-    framesToDf(ImageSource.readTiff(s, s"$out/*.tiff")).orderBy("f", "i", "j")
+    typedFramesToDf(ImageSource.readTiff(s, s"$out/*.tiff")).orderBy("f", "i", "j")
   }
 
   /** BigTIFF + tiled-TIFF gate — the layout 100 TB microscopy actually
@@ -240,7 +228,7 @@ object ImreadQueries {
     java.nio.file.Files.write(out.resolve("frames_002.btiff"),
       ImageSource.encodeTiffPages(Seq((H, W, frame2)),
         comp = 8, big = false, tile = Some((16, 16)), bps = 16, pred = 2))
-    framesToDf(ImageSource.readTiff(s, s"$out/*.btiff")).orderBy("f", "i", "j")
+    typedFramesToDf(ImageSource.readTiff(s, s"$out/*.btiff")).orderBy("f", "i", "j")
   }
 
   private val bigTiffSql: String =
@@ -266,7 +254,7 @@ object ImreadQueries {
     val glob = writeFixture(s, dir, "pgm", frameStep = 7)
     val df = graft.sources.v2.ImageBlockSource.read(s, glob, "pgm")
       .filter(col("frame") >= 1)
-    framesToDf(graft.sources.v2.ImageBlockSource.blocks(df)).orderBy("f", "i", "j")
+    typedFramesToDf(graft.sources.v2.ImageBlockSource.blocks(df)).orderBy("f", "i", "j")
   }
 
   // ------------------------------------------------------ RGB / JPEG

@@ -139,6 +139,17 @@ object Multimodal {
       |  CAST(sum(CASE WHEN c = 2 THEN p END) AS BIGINT) AS sum_b
       |FROM px GROUP BY doc_id, h, w ORDER BY asset_id""".stripMargin
 
+  /** (frame, pixel sum, pixel count) per page of a multi-page TIFF
+    * payload, summed over the decoder's own-dtype samples. */
+  private def tiffFrameSums(payload: Array[Byte]): Seq[(Int, Long, Long)] =
+    ImageSource.decodeTiff(payload).zipWithIndex.map { case ((h, w, dtype, px), f) =>
+      val dt = graft.tensor.DType.of(dtype)
+      var sum = 0L
+      var p = 0
+      while (p < h * w) { sum += dt.read(px, p).toLong; p += 1 }
+      (f, sum, h.toLong * w)
+    }
+
   /** Frame sampling through the REAL multi-page TIFF decode: keep every
     * 2nd frame of each video payload, one (sum, count) row per sampled
     * frame — the video keyframe-extraction plumbing with the LZW strip
@@ -148,12 +159,8 @@ object Multimodal {
     assets(s, dir, only = Some("video"))
       .select(col("asset_id"), col("payload")).as[(Long, Array[Byte])]
       .flatMap { case (assetId, payload) =>
-        ImageSource.decodeTiff(payload).zipWithIndex.collect {
-          case ((h, w, px), f) if f % 2 == 0 =>
-            var sum = 0L
-            var p = 0
-            while (p < px.length) { sum += px(p).toLong; p += 1 }
-            (assetId, f, sum, h.toLong * w)
+        tiffFrameSums(payload).collect {
+          case (f, sum, nPx) if f % 2 == 0 => (assetId, f, sum, nPx)
         }
       }.toDF("asset_id", "frame", "sum_p", "n_px")
       .orderBy(col("asset_id"), col("frame"))
@@ -360,12 +367,7 @@ object Multimodal {
     val av = avAssets(s, dir)
     val frames = av.select(col("asset_id"), col("video")).as[(Long, Array[Byte])]
       .flatMap { case (id, payload) =>
-        ImageSource.decodeTiff(payload).zipWithIndex.map { case ((h, w, px), f) =>
-          var sum = 0L
-          var p = 0
-          while (p < px.length) { sum += px(p).toLong; p += 1 }
-          (id, f, sum, h.toLong * w)
-        }
+        tiffFrameSums(payload).map { case (f, sum, nPx) => (id, f, sum, nPx) }
       }.toDF("asset_id", "frame", "sum_p", "n_px")
     val windows = av.select(col("asset_id"), col("audio"), col("n_frames"))
       .as[(Long, Array[Byte], Int)]

@@ -568,16 +568,13 @@ object Relational {
     * fingerprints of the same source dir are swept before building —
     * disk is bounded at one live layout per source file. */
   private[graft] def monthLayoutDir(dir: String): java.io.File = {
-    val src = new java.io.File(s"$dir/lineitem.parquet")
-    val canonical =
-      try src.getCanonicalPath catch { case _: java.io.IOException => src.getPath }
-    // the trailing tag is the LAYOUT VERSION — bump it when the write
-    // format changes (v2: ts-sorted within month files; v3: timestamps
-    // as INT64 micros, because INT96 — the Spark session default — has
-    // no min/max stats and silently voided v2's row-group pruning), so
-    // stale-format builds are swept like stale-source ones
-    val fp = graft.sources.Lake.keySuffix(
-      s"$canonical:${src.length}:${src.lastModified}:month-v3")
+    // the tag is the LAYOUT VERSION — bump it when the write format
+    // changes (v2: ts-sorted within month files; v3: timestamps as INT64
+    // micros, because INT96 — the Spark session default — has no min/max
+    // stats and silently voided v2's row-group pruning), so stale-format
+    // builds are swept like stale-source ones
+    val fp = graft.sources.Lake.layoutFingerprint(
+      new java.io.File(s"$dir/lineitem.parquet"), "month-v3")
     new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_month_lineitem_${graft.sources.Lake.dirSuffix(dir)}_$fp")
   }

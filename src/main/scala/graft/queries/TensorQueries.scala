@@ -526,8 +526,8 @@ object TensorQueries {
     val (labels, _) = Measure.label(bin, 2, connectivity = 1)
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_lab_${math.abs(dir.hashCode)}").toString
-    graft.sources.TensorStore.writeTyped(TBlock.fromBlocks(labels, DType.I32), store)
-    labelStats(raster, graft.sources.TensorStore.read(s, store))
+    graft.sources.TensorStore.write(TBlock.fromBlocks(labels, DType.I32), store)
+    labelStats(raster, TBlock.toBlocks(graft.sources.TensorStore.read(s, store)))
   }
 
   /** find_objects gate: per-label bounding boxes over the standard CC
@@ -569,13 +569,12 @@ object TensorQueries {
 
   /** fourier_gaussian over the raster treated as an (already-FFT'd)
     * spectrum — elementwise transfer function of global frequencies;
-    * real input ⇒ real output. Runs the TYPED complex128 path (native
-    * f64-pair payloads, dtype recorded — r10): the kernel math is
-    * bit-identical to the float64 Block path, so the oracle is
-    * unchanged; InterpFourierSpec pins the two paths equal. */
+    * real input ⇒ real output. Runs at complex128 (native f64-pair
+    * payloads, dtype recorded); InterpFourierSpec pins the kernel
+    * bit-exactly against a naive whole-array reference. */
   val tensorFourierGaussian: Q = (s, dir) => {
-    val cx = graft.tensor.TBlock.toBlocks(Fourier.fourierGaussianTyped(
-      Fourier.toComplexTyped(Images.eventsRaster(s, dir), graft.tensor.DType.C128),
+    val cx = TBlock.toBlocks(Fourier.fourierGaussian(
+      Fourier.toComplex(Images.eventsRaster(s, dir)),
       Seq(2.0, 2.0)))
     Images.toPixels(cx)
       .filter(col("j") % 2 === 0)
@@ -591,10 +590,10 @@ object TensorQueries {
        |FROM grid ORDER BY i, j""".stripMargin
 
   /** fourier_shift — complex phase ramp; emits (re, im) per pixel.
-    * Typed complex128 path (see tensorFourierGaussian). */
+    * Runs at complex128 (see tensorFourierGaussian). */
   val tensorFourierShift: Q = (s, dir) => {
-    val cx = graft.tensor.TBlock.toBlocks(Fourier.fourierShiftTyped(
-      Fourier.toComplexTyped(Images.eventsRaster(s, dir), graft.tensor.DType.C128),
+    val cx = TBlock.toBlocks(Fourier.fourierShift(
+      Fourier.toComplex(Images.eventsRaster(s, dir)),
       Seq(1.5, -0.5)))
     val px = Images.toPixels(cx)
     val re = px.filter(col("j") % 2 === 0)
@@ -617,10 +616,10 @@ object TensorQueries {
 
   // ------------------------------------------------------ fourier_uniform
   /** fourier_uniform(size=(3,3)) — Π sinc(size·f) box spectrum.
-    * Typed complex128 path (see tensorFourierGaussian). */
+    * Runs at complex128 (see tensorFourierGaussian). */
   val tensorFourierUniform: Q = (s, dir) => {
-    val cx = graft.tensor.TBlock.toBlocks(Fourier.fourierUniformTyped(
-      Fourier.toComplexTyped(Images.eventsRaster(s, dir), graft.tensor.DType.C128),
+    val cx = TBlock.toBlocks(Fourier.fourierUniform(
+      Fourier.toComplex(Images.eventsRaster(s, dir)),
       Seq(3.0, 3.0)))
     Images.toPixels(cx)
       .filter(col("j") % 2 === 0)
@@ -652,8 +651,8 @@ object TensorQueries {
     * 3072-pixel run. Every decimal-rounding alternative has a LARGER
     * boundary-straddle probability, so this is the robust form. */
   val tensorFourierC64: Q = (s, dir) => {
-    val cx = graft.tensor.TBlock.toBlocks(Fourier.fourierGaussianTyped(
-      Fourier.toComplexTyped(Images.eventsRaster(s, dir), graft.tensor.DType.C64),
+    val cx = TBlock.toBlocks(Fourier.fourierGaussian(
+      Fourier.toComplex(Images.eventsRaster(s, dir), DType.C64),
       Seq(2.0, 2.0)))
     Images.toPixels(cx)
       .filter(col("j") % 2 === 0)
@@ -1051,8 +1050,10 @@ object TensorQueries {
   val tensorStoreRoundtrip: Q = (s, dir) => {
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_${math.abs(dir.hashCode)}").toString
-    graft.sources.TensorStore.write(Images.eventsRaster(s, dir), store)
-    pixelsOut(graft.sources.TensorStore.read(s, store, frameRange = Some((1, 2))))
+    graft.sources.TensorStore.write(
+      TBlock.fromBlocks(Images.eventsRaster(s, dir), DType.F64), store)
+    pixelsOut(TBlock.toBlocks(
+      graft.sources.TensorStore.read(s, store, frameRange = Some((1, 2)))))
   }
 
   val tensorStoreRoundtripSql: String =
@@ -1067,10 +1068,10 @@ object TensorQueries {
   val tensorStoreUint8Roundtrip: Q = (s, dir) => {
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_u8_${math.abs(dir.hashCode)}").toString
-    graft.sources.TensorStore.writeTyped(u8Raster(s, dir), store)
+    graft.sources.TensorStore.write(u8Raster(s, dir), store)
     val spark = s
     import spark.implicits._
-    graft.sources.TensorStore.readTyped(s, store, frameRange = Some((1, 2)))
+    graft.sources.TensorStore.read(s, store, frameRange = Some((1, 2)))
       .flatMap { b =>
         val h = b.shape(0); val w = b.shape(1)
         for (i <- 0 until h; j <- 0 until w)
@@ -1108,8 +1109,8 @@ object TensorQueries {
   val tensorStoreUint16Roundtrip: Q = (s, dir) => {
     val store = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_tensor_store_u16_${math.abs(dir.hashCode)}").toString
-    graft.sources.TensorStore.writeTyped(u16Raster(s, dir), store)
-    u16Pixels(graft.sources.TensorStore.readTyped(s, store, frameRange = Some((1, 2))))
+    graft.sources.TensorStore.write(u16Raster(s, dir), store)
+    u16Pixels(graft.sources.TensorStore.read(s, store, frameRange = Some((1, 2))))
   }
 
   val tensorStoreUint16RoundtripSql: String =
@@ -1134,8 +1135,8 @@ object TensorQueries {
         b.copy(data = b.data.map(v =>
           ((math.round(v * 100) % 256 + 384) % 256 - 128).toDouble))
       }, DType.I8)
-    graft.sources.TensorStore.writeTyped(i8, store)
-    graft.sources.TensorStore.readTyped(s, store, frameRange = Some((1, 2)))
+    graft.sources.TensorStore.write(i8, store)
+    graft.sources.TensorStore.read(s, store, frameRange = Some((1, 2)))
       .flatMap { b =>
         val h = b.shape(0); val w = b.shape(1)
         for (i <- 0 until h; j <- 0 until w)

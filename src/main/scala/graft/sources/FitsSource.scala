@@ -131,7 +131,7 @@ object FitsSource {
   }
 
   /** Read a glob of FITS files as one stacked typed grayscale image —
-    * same surface as [[ImageSource.readTiffTyped]] (a 3-axis cube is a
+    * same surface as [[ImageSource.readTiff]] (a 3-axis cube is a
     * multi-frame file; frame bases from the distributed metadata pass). */
   def readFits(spark: SparkSession, glob: String, imageId: String = "imread_fits",
       nframes: Int = 1): Dataset[TBlock] = {
@@ -142,7 +142,7 @@ object FitsSource {
         ((base + pg).toInt, h, w, dt, px)
       }
     }
-    ImageSource.stackFramesTyped(frames, imageId, total, nframes)
+    ImageSource.stackFrames(frames, imageId, total, nframes)
   }
 
   /** Encode frames (float64 values in [0, 2^bitpix)) as one primary HDU

@@ -6,7 +6,7 @@ import javax.imageio.ImageIO
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Materialize
-import graft.tensor.{Block, DType, TBlock}
+import graft.tensor.{DType, TBlock}
 
 /** Image file source — the reference's `imread` analog
   * (dask_image/imread/__init__.py::imread ≈ L15–95: lazily expose a
@@ -14,7 +14,8 @@ import graft.tensor.{Block, DType, TBlock}
   *
   * Spark-native shape: `spark.read.format("binaryFile")` scans the glob
   * (distributed, one task per file), a per-file decoder turns each frame
-  * into one Block row keyed by frame index. Frames stack on a leading
+  * into one TBlock row keyed by frame index, its payload in the file's
+  * own dtype (uint8 or uint16). Frames stack on a leading
   * axis exactly like the reference's nframes chunking. Codecs: binary
   * PGM (P5), PNG (grayscale, via the JDK's javax.imageio — no extra
   * dependency), and baseline TIFF (uncompressed grayscale 8/16-bit, II/MM,
@@ -23,9 +24,13 @@ import graft.tensor.{Block, DType, TBlock}
   */
 object ImageSource {
 
-  /** Read a glob of image files as one stacked Block image: block idx =
-    * (frame, 0, 0), one chunk per frame (the imread contract). Frame
-    * order is the sorted file path order, matching glob-sorted imread.
+  /** Read a glob of grayscale image files as one stacked image in the
+    * files' own dtype: block idx = (frame, 0, 0), one chunk per frame
+    * (the imread contract). Frame order is the sorted file path order,
+    * matching glob-sorted imread. Every decoder emits packed uint8/uint16
+    * payloads (the file's own sample width), frames stack in the byte
+    * domain, and the `nframes` grouping shuffle moves 1–2 bytes/pixel
+    * (SURVEY §1.1; byte widths pinned in ImageSourceSpec).
     *
     * Frame indexing is fully distributed: paths (metadata only — column
     * pruning keeps file CONTENT out of this pass entirely) are
@@ -37,16 +42,6 @@ object ImageSource {
     * when the file list is small — AQE picks).
     */
   def readFrames(spark: SparkSession, glob: String, codec: String,
-      imageId: String = "imread", nframes: Int = 1): Dataset[Block] =
-    TBlock.toBlocks(readFramesTyped(spark, glob, codec, imageId, nframes))
-
-  /** NATIVE-dtype imread — the primary grayscale ingest path. Every
-    * decoder emits packed uint8/uint16 payloads (the file's own sample
-    * width), frames stack in the byte domain, and the `nframes` grouping
-    * shuffle moves 1–2 bytes/pixel — never the 8-byte float64 the old
-    * path paid (SURVEY §1.1; byte widths pinned in ImageSourceSpec). The
-    * float64 [[readFrames]] is a decode-at-the-edge view of this. */
-  def readFramesTyped(spark: SparkSession, glob: String, codec: String,
       imageId: String = "imread", nframes: Int = 1): Dataset[TBlock] = {
     import spark.implicits._
     val files = spark.read.format("binaryFile").load(glob)
@@ -57,13 +52,13 @@ object ImageSource {
       .as[(Int, Array[Byte])]
     val frames = withFrames.map { case (frame, bytes) =>
       val (h, w, dt, px) = codec match {
-        case "pgm" => decodePgmTyped(bytes)
-        case "png" => decodePngTyped(bytes)
+        case "pgm" => decodePgm(bytes)
+        case "png" => decodePng(bytes)
         case other => throw new IllegalArgumentException(s"imread codec: $other")
       }
       (frame, h, w, dt, px)
     }
-    stackFramesTyped(frames, imageId, nFrames, nframes)
+    stackFrames(frames, imageId, nFrames, nframes)
   }
 
   /** One frame per file: (path, frame) rows numbering `files` in sorted
@@ -84,7 +79,7 @@ object ImageSource {
     * parameter (chunking knob for tiny-frame stacks). nframes=1 is a
     * narrow map; larger values shuffle each group of frames (as native
     * bytes) to one assembling task. */
-  private[sources] def stackFramesTyped(frames: Dataset[(Int, Int, Int, String, Array[Byte])],
+  private[sources] def stackFrames(frames: Dataset[(Int, Int, Int, String, Array[Byte])],
       imageId: String, total: Int, nframes: Int): Dataset[TBlock] = {
     val spark = frames.sparkSession
     import spark.implicits._
@@ -113,46 +108,29 @@ object ImageSource {
   }
 
   def readPgm(spark: SparkSession, glob: String, imageId: String = "imread",
-      nframes: Int = 1): Dataset[Block] =
+      nframes: Int = 1): Dataset[TBlock] =
     readFrames(spark, glob, "pgm", imageId, nframes)
 
   def readPng(spark: SparkSession, glob: String, imageId: String = "imread",
-      nframes: Int = 1): Dataset[Block] =
+      nframes: Int = 1): Dataset[TBlock] =
     readFrames(spark, glob, "png", imageId, nframes)
 
-  def readPgmTyped(spark: SparkSession, glob: String, imageId: String = "imread",
-      nframes: Int = 1): Dataset[TBlock] =
-    readFramesTyped(spark, glob, "pgm", imageId, nframes)
-
-  def readPngTyped(spark: SparkSession, glob: String, imageId: String = "imread",
-      nframes: Int = 1): Dataset[TBlock] =
-    readFramesTyped(spark, glob, "png", imageId, nframes)
-
-  /** TIFF imread — the reference's primary format. Unlike PGM/PNG, one
-    * TIFF file can hold many frames (multi-IFD), so frame indexing runs in
-    * two passes: a metadata-only pass counts pages per file (only
+  /** TIFF imread — the reference's primary format: u8 files yield uint8
+    * blocks, 16-bit files yield uint16. Unlike PGM/PNG, one TIFF file
+    * can hold many frames (multi-IFD), so frame indexing runs in two
+    * passes: a metadata-only pass counts pages per file (only
     * (path, count) rows enter the distributed prefix sum — never
-    * pixels), then the decode pass emits `base + page` frame ids.
-    * Baseline codec:
-    * uncompressed grayscale, 8/16-bit, both byte orders, strip layout. */
+    * pixels), then the decode pass emits `base + page` frame ids. */
   def readTiff(spark: SparkSession, glob: String, imageId: String = "imread",
-      nframes: Int = 1): Dataset[Block] =
-    TBlock.toBlocks(readTiffTyped(spark, glob, imageId, nframes))
-
-  /** NATIVE-dtype TIFF imread: u8 files yield uint8 blocks, 16-bit files
-    * yield uint16 — the microscopy path stops paying the 8× float64 tax
-    * at the source. Same two-pass distributed frame numbering as the
-    * float64 view. */
-  def readTiffTyped(spark: SparkSession, glob: String, imageId: String = "imread",
       nframes: Int = 1): Dataset[TBlock] = {
     import spark.implicits._
     val (paged, total) = pagedFiles(spark, glob, b => tiffPageCount(b))
     val frames = paged.flatMap { case (base, bytes) =>
-      decodeTiffTyped(bytes).zipWithIndex.map { case ((h, w, dt, px), pg) =>
+      decodeTiff(bytes).zipWithIndex.map { case ((h, w, dt, px), pg) =>
         ((base + pg).toInt, h, w, dt, px)
       }
     }
-    stackFramesTyped(frames, imageId, total, nframes)
+    stackFrames(frames, imageId, total, nframes)
   }
 
   /** Distributed frame numbering for MULTI-PAGE formats (TIFF, animated
@@ -186,8 +164,10 @@ object ImageSource {
       .as[(Long, Array[Byte])], total)
   }
 
-  /** Header-only PGM probe: (h, w) without touching pixel bytes — lets a
-    * column-pruned V2 scan answer metadata queries decode-free.
+  /** PGM (P5) header parse: (h, w, dtype, payload offset) without
+    * touching pixel bytes — maxval < 256 means uint8 samples, otherwise
+    * uint16. Lets a column-pruned V2 scan answer metadata queries (dims
+    * and dtype) decode-free, and is the header half of [[decodePgm]].
     *
     * PREFIX-SAFE (r13, advisor item): callers may hand a truncated
     * header prefix (the V2 pruned path reads 64 KiB). A numeric token
@@ -196,10 +176,11 @@ object ImageSource {
     * TERMINATED by a whitespace byte inside the buffer, else this
     * throws IllegalArgumentException and the caller's full-read
     * fallback engages. (On a whole file the terminator always exists:
-    * maxval and the payload follow.) An empty token (`"".toInt`) throws
+    * the payload follows maxval.) An empty token (`"".toInt`) throws
     * NumberFormatException, which IS an IllegalArgumentException, so it
     * reaches the same fallback. */
-  private[graft] def pgmDims(bytes: Array[Byte]): (Int, Int) = {
+  private[graft] def pgmHeader(bytes: Array[Byte]): (Int, Int, DType, Int) = {
+    // ASCII header tokens, skipping comment lines
     var pos = 0
     def token(): String = {
       val sb = new StringBuilder
@@ -215,38 +196,24 @@ object ImageSource {
         "pgm header token hit the buffer boundary (possibly truncated)")
       sb.toString
     }
-    require(token() == "P5", "not a binary PGM")
-    val w = token().toInt; val h = token().toInt
-    require(w > 0 && h > 0, s"pgm dims out of range: $w x $h")
-    (h, w)
-  }
-
-  /** Binary PGM (P5) decoder, typed: header "P5 <w> <h> <maxval>" then
-    * raw samples. maxval < 256 → the pixel run IS the uint8 payload
-    * (zero-copy slice); otherwise the file's big-endian 16-bit samples
-    * repack to the engine's little-endian uint16. */
-  private[graft] def decodePgmTyped(bytes: Array[Byte]): (Int, Int, String, Array[Byte]) = {
-    // parse ASCII header tokens, skipping comment lines
-    var pos = 0
-    def token(): String = {
-      val sb = new StringBuilder
-      while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-      while (pos < bytes.length && bytes(pos).toChar == '#') {
-        while (pos < bytes.length && bytes(pos).toChar != '\n') pos += 1
-        while (pos < bytes.length && bytes(pos).toChar.isWhitespace) pos += 1
-      }
-      while (pos < bytes.length && !bytes(pos).toChar.isWhitespace) {
-        sb.append(bytes(pos).toChar); pos += 1
-      }
-      sb.toString
-    }
     val magic = token()
     require(magic == "P5", s"not a binary PGM: $magic")
-    val w = token().toInt; val h = token().toInt; val maxval = token().toInt
+    val w = token().toInt; val h = token().toInt
+    require(w > 0 && h > 0, s"pgm dims out of range: $w x $h")
+    val maxval = token().toInt
     require(maxval > 0 && maxval < 65536, "PGM maxval out of range")
-    pos += 1 // single whitespace after maxval
-    if (maxval < 256)
-      (h, w, DType.U8.name, java.util.Arrays.copyOfRange(bytes, pos, pos + h * w))
+    // a single whitespace byte separates maxval from the samples
+    (h, w, if (maxval < 256) DType.U8 else DType.U16, pos + 1)
+  }
+
+  /** Binary PGM (P5) decoder: header "P5 <w> <h> <maxval>" then raw
+    * samples. uint8 → the pixel run IS the payload (one slice copy);
+    * uint16 → the file's big-endian samples repack to the engine's
+    * little-endian uint16. */
+  private[graft] def decodePgm(bytes: Array[Byte]): (Int, Int, String, Array[Byte]) = {
+    val (h, w, dt, pos) = pgmHeader(bytes)
+    if (dt == DType.U8)
+      (h, w, dt.name, java.util.Arrays.copyOfRange(bytes, pos, pos + h * w))
     else {
       val out = new Array[Byte](h * w * 2)
       var i = 0
@@ -255,19 +222,14 @@ object ImageSource {
         out(2 * i + 1) = bytes(pos + 2 * i)
         i += 1
       }
-      (h, w, DType.U16.name, out)
+      (h, w, dt.name, out)
     }
   }
 
-  private[graft] def decodePgm(bytes: Array[Byte]): (Int, Int, Array[Double]) = {
-    val (h, w, dt, px) = decodePgmTyped(bytes)
-    (h, w, DType.of(dt).decode(px))
-  }
-
-  /** PNG decoder via the JDK's ImageIO, typed — first band (grayscale
+  /** PNG decoder via the JDK's ImageIO — first band (grayscale
     * sample) per pixel, at the file's own sample width (8-bit → uint8,
     * 16-bit → uint16 LE). */
-  private[graft] def decodePngTyped(bytes: Array[Byte]): (Int, Int, String, Array[Byte]) = {
+  private[graft] def decodePng(bytes: Array[Byte]): (Int, Int, String, Array[Byte]) = {
     val img = ImageIO.read(new ByteArrayInputStream(bytes))
     require(img != null, "not a decodable image")
     val h = img.getHeight; val w = img.getWidth
@@ -297,11 +259,6 @@ object ImageSource {
       }
       (h, w, DType.U16.name, out)
     }
-  }
-
-  private[graft] def decodePng(bytes: Array[Byte]): (Int, Int, Array[Double]) = {
-    val (h, w, dt, px) = decodePngTyped(bytes)
-    (h, w, DType.of(dt).decode(px))
   }
 
   // ------------------------------------------------------------------ TIFF
@@ -366,7 +323,7 @@ object ImageSource {
     n
   }
 
-  /** Baseline TIFF decoder, typed: uncompressed (Compression=1), LZW
+  /** Baseline TIFF decoder: uncompressed (Compression=1), LZW
     * (Compression=5, incl. horizontal-differencing Predictor=2), deflate
     * or PackBits grayscale (SamplesPerPixel=1), 8- or 16-bit unsigned,
     * STRIP- or TILE-organized, classic or BigTIFF, II or MM byte order,
@@ -375,7 +332,7 @@ object ImageSource {
     * normalize the file byte order to uint16 LE. Tiles are padded to the
     * full tile geometry in the file (TIFF 6.0 §15); only the valid
     * region is copied out. */
-  private[graft] def decodeTiffTyped(bytes: Array[Byte]): Seq[(Int, Int, String, Array[Byte])] = {
+  private[graft] def decodeTiff(bytes: Array[Byte]): Seq[(Int, Int, String, Array[Byte])] = {
     val (le, big, first) = tiffHeader(bytes)
     var ifd = asIdx(first, "IFD")
     val entrySize = if (big) 20 else 12
@@ -563,9 +520,6 @@ object ImageSource {
     }
     frames.toSeq
   }
-
-  private[graft] def decodeTiff(bytes: Array[Byte]): Seq[(Int, Int, Array[Double])] =
-    decodeTiffTyped(bytes).map { case (h, w, dt, px) => (h, w, DType.of(dt).decode(px)) }
 
   /** Deflate (zlib) strip — TIFF Compression 8 (and legacy 32946). */
   private[graft] def inflate(in: Array[Byte], expected: Int): Array[Byte] = {

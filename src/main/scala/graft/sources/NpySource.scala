@@ -34,7 +34,7 @@ import graft.tensor.{DType, TBlock}
   *
   * Distributed read mirrors FITS: [[ImageSource.pagedFiles]] numbers
   * frames with a metadata-only header parse, decode is one task per
-  * file, and [[ImageSource.stackFramesTyped]] regroups into nframes
+  * file, and [[ImageSource.stackFrames]] regroups into nframes
   * chunks carrying native-width payloads.
   */
 object NpySource {
@@ -290,6 +290,6 @@ object NpySource {
         ((base + pg).toInt, h, w, dt, px)
       }
     }
-    ImageSource.stackFramesTyped(frames, imageId, total, nframes)
+    ImageSource.stackFrames(frames, imageId, total, nframes)
   }
 }

@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.tensor.{Block, DType, TBlock}
+import graft.tensor.TBlock
 
 /** Block-tensor sink/source — the engine's `to_zarr`/`from_zarr` analog
   * (the reference ecosystem persists chunked arrays with an explicit
@@ -31,13 +31,9 @@ import graft.tensor.{Block, DType, TBlock}
   */
 object TensorStore {
 
-  /** Write a float64 working-set tensor (packs to the typed layout with
-    * dtype float64 — bit-exact round-trip). */
-  def write(blocks: Dataset[Block], dir: String): Unit =
-    writeTyped(TBlock.fromBlocks(blocks, DType.F64), dir)
-
-  /** Write a NATIVE-dtype block tensor. Overwrites any prior store. */
-  def writeTyped(blocks: Dataset[TBlock], dir: String): Unit = {
+  /** Write a block tensor in its own dtype (float64 stays bit-exact).
+    * Overwrites any prior store. */
+  def write(blocks: Dataset[TBlock], dir: String): Unit = {
     val spark = blocks.sparkSession
     blocks.toDF()
       .withColumn("idx0", element_at(col("idx"), 1))
@@ -75,19 +71,11 @@ object TensorStore {
     try out.write(json.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** Read a store back as float64 working Blocks (decodes whatever dtype
-    * is stored — kernels downstream see the usual Array[Double]). */
-  def read(spark: SparkSession, dir: String, imageId: Option[String] = None,
-      frameRange: Option[(Int, Int)] = None): Dataset[Block] = {
-    import spark.implicits._
-    readTyped(spark, dir, imageId, frameRange).map(_.toBlock)
-  }
-
-  /** Read a store back as NATIVE-dtype TBlock rows. `frameRange`
+  /** Read a store back as TBlock rows in the stored dtype. `frameRange`
     * restricts the leading grid index [lo, hi] and lands as a
     * PartitionFilter on the scan — only the matching chunk files are
     * opened. */
-  def readTyped(spark: SparkSession, dir: String, imageId: Option[String] = None,
+  def read(spark: SparkSession, dir: String, imageId: Option[String] = None,
       frameRange: Option[(Int, Int)] = None): Dataset[TBlock] = {
     import spark.implicits._
     var df = graft.Tables.parquet(spark, new Path(dir, "blocks").toString)

@@ -8,7 +8,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.SerializableConfiguration
-import graft.tensor.{BNd, Block, DType, TBlock}
+import graft.tensor.{BNd, DType, TBlock}
 
 /** Zarr v2 store — the PUBLIC chunked-array interchange format the
   * reference ecosystem's `to_zarr`/`from_zarr` speaks (dask/xarray/numpy
@@ -68,10 +68,6 @@ object ZarrStore {
     def componentChunks: Seq[Int] =
       if (isComplex(dtype)) chunks.init :+ (chunks.last * 2) else chunks
   }
-
-  /** Write a float64 working-set tensor (stored `<f8`). */
-  def write(blocks: Dataset[Block], dir: String, gzipLevel: Option[Int] = None): Unit =
-    writeTyped(TBlock.fromBlocks(blocks, DType.F64), dir, gzipLevel)
 
   /** Write a NATIVE-dtype block tensor as one zarr v2 group: one array
     * per imageId. `gzipLevel` Some(1..9) stores numcodecs-gzip chunks;
@@ -408,13 +404,5 @@ object ZarrStore {
         } else None
       }
       .toDS()
-  }
-
-  /** Read back as float64 working Blocks. */
-  def read(spark: SparkSession, dir: String,
-      imageId: Option[String] = None,
-      frameRange: Option[(Int, Int)] = None): Dataset[Block] = {
-    import spark.implicits._
-    readTyped(spark, dir, imageId, frameRange).map(_.toBlock)
   }
 }

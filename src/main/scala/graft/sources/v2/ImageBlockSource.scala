@@ -17,10 +17,11 @@ import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
 import graft.sources.{ImageSource, NpySource}
-import graft.tensor.Block
+import graft.tensor.TBlock
 
 /** DataSource V2 imread — `spark.read.format("graft-image")` exposes an
-  * image-file glob as Block rows with a top-level `frame` column
+  * image-file glob as TBlock rows (`dtype STRING, data BINARY`, the
+  * file's own dtype — SURVEY §1.2) with a top-level `frame` column
   * (SURVEY.md §2A.1's eventual imread shape).
   *
   * What V2 buys over the binaryFile + decode helpers in
@@ -30,7 +31,7 @@ import graft.tensor.Block
   * opened, never read, never decoded (binaryFile must read every file
   * and filter afterwards). Column pruning reaches the reader too: a
   * metadata query that never asks for `data` decodes headers only on the
-  * PGM path.
+  * PGM and npy paths, and still reports `dtype` (PGM maxval, npy descr).
   *
   * Frame numbering is plan-time: the driver lists and sorts the glob's
   * paths (names only — no file content), so frame i = i-th path, the
@@ -52,7 +53,7 @@ class ImageBlockSource extends TableProvider with DataSourceRegister {
 }
 
 object ImageBlockSource {
-  /** Block fields plus a leading flat `frame` column (= idx(0)) that
+  /** TBlock fields plus a leading flat `frame` column (= idx(0)) that
     * filters can push against (arrays can't carry source filters). */
   val schema: StructType = StructType(Seq(
     StructField("frame", IntegerType, nullable = false),
@@ -62,7 +63,8 @@ object ImageBlockSource {
     StructField("shape", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("chunk", ArrayType(IntegerType, containsNull = false), nullable = false),
     StructField("arrayShape", ArrayType(IntegerType, containsNull = false), nullable = false),
-    StructField("data", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    StructField("dtype", StringType, nullable = false),
+    StructField("data", BinaryType, nullable = false)))
 
   /** Convenience: the V2 scan as a DataFrame. */
   def read(spark: SparkSession, glob: String, codec: String,
@@ -71,11 +73,11 @@ object ImageBlockSource {
       .option("codec", codec).option("imageId", imageId)
       .load(glob)
 
-  /** Strip the pushdown column back to the engine's Block rows. */
-  def blocks(df: DataFrame): Dataset[Block] = {
+  /** Strip the pushdown column back to the engine's TBlock rows. */
+  def blocks(df: DataFrame): Dataset[TBlock] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.drop("frame").as[Block]
+    df.drop("frame").as[TBlock]
   }
 }
 
@@ -189,48 +191,43 @@ private[v2] class ImageBlockReaderFactory(codec: String, imageId: String,
           try in.readFully(0, b) finally in.close()
           b
         }
-        // a pruned metadata scan on a header-bearing codec reads a
-        // HEADER PREFIX, not the payload — that is the point of
-        // header-only decode on a big .npy; the rare over-64KiB header
-        // falls back to the full read (png has no header-only branch:
-        // it always decodes, so it always needs the full file)
-        val headerOnly = !needData && (codec == "pgm" || codec == "npy")
-        val bytes: Array[Byte] =
-          if (!headerOnly) readPrefix(len)
-          else try {
-            val p = readPrefix(64 << 10)
-            codec match {
-              case "pgm" => ImageSource.pgmDims(p)
-              case "npy" => NpySource.npyMeta(p)
-              case _ => ()
-            }
-            p
-          } catch {
-            case _: IllegalArgumentException if len > (64 << 10) => readPrefix(len)
-          }
-        val (h, w, px): (Int, Int, Array[Double]) = codec match {
-          // column pruning reaches the decode: header-only when `data`
-          // was pruned away (PGM headers carry the dims)
-          case "pgm" if !needData =>
-            val (hh, ww) = ImageSource.pgmDims(bytes); (hh, ww, null)
-          case "pgm" => ImageSource.decodePgm(bytes)
-          case "png" => ImageSource.decodePng(bytes)
-          // npy headers carry the dims too — header-only when pruned
-          case "npy" if !needData =>
-            NpySource.npyMeta(bytes) match {
-              case (_, _, _, Seq(hh, ww)) => (hh, ww, null: Array[Double])
-              case (_, _, _, s) => throw new IllegalArgumentException(
-                s"graft-image npy: one 2-d array per file, got ${s.length}-d")
-            }
-          case "npy" =>
-            val (shape, dt, le) = NpySource.decodeNpy(bytes)
-            shape match {
-              case Seq(hh, ww) =>
-                (hh, ww, Array.tabulate(hh * ww)(i => dt.read(le, i)))
-              case s => throw new IllegalArgumentException(
-                s"graft-image npy: one 2-d array per file, got ${s.length}-d")
-            }
+        def plane(shape: Seq[Int]): (Int, Int) = shape match {
+          case Seq(hh, ww) => (hh, ww)
+          case s => throw new IllegalArgumentException(
+            s"graft-image npy: one 2-d array per file, got ${s.length}-d")
         }
+        // (h, w, dtype) from a pgm or npy header
+        def header(b: Array[Byte]): (Int, Int, String) = codec match {
+          case "pgm" =>
+            val (hh, ww, dt, _) = ImageSource.pgmHeader(b); (hh, ww, dt.name)
+          case _ =>
+            val (_, dt, _, shape) = NpySource.npyMeta(b)
+            val (hh, ww) = plane(shape); (hh, ww, dt.name)
+        }
+        val (h, w, dtype, px): (Int, Int, String, Array[Byte]) =
+          // column pruning reaches the decode: a metadata scan on a
+          // header-bearing codec reads a HEADER PREFIX, not the payload —
+          // that is the point of header-only decode on a big .npy; the
+          // rare over-64KiB header falls back to the full read (png has
+          // no header-only branch: it always decodes the full file)
+          if (!needData && codec != "png") {
+            val (hh, ww, dt) =
+              try header(readPrefix(64 << 10))
+              catch {
+                case _: IllegalArgumentException if len > (64 << 10) =>
+                  header(readPrefix(len))
+              }
+            (hh, ww, dt, null)
+          } else {
+            val bytes = readPrefix(len)
+            codec match {
+              case "pgm" => ImageSource.decodePgm(bytes)
+              case "png" => ImageSource.decodePng(bytes)
+              case _ =>
+                val (shape, dt, le) = NpySource.decodeNpy(bytes)
+                val (hh, ww) = plane(shape); (hh, ww, dt.name, le)
+            }
+          }
         val f = part.frame
         def arr(xs: Seq[Int]) = new GenericArrayData(xs.map(Int.box).toArray[Any])
         val values: Map[String, Any] = Map(
@@ -241,7 +238,8 @@ private[v2] class ImageBlockReaderFactory(codec: String, imageId: String,
           "shape" -> arr(Seq(1, h, w)),
           "chunk" -> arr(Seq(1, h, w)),
           "arrayShape" -> arr(Seq(part.total, h, w)),
-          "data" -> (if (needData) new GenericArrayData(px.map(Double.box).toArray[Any]) else null))
+          "dtype" -> UTF8String.fromString(dtype),
+          "data" -> px)
         row = InternalRow.fromSeq(fields.toSeq.map(values))
         true
       }

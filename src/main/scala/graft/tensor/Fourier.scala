@@ -9,20 +9,14 @@ import org.apache.spark.sql.Dataset
   * a pure per-block map (no halo): each block derives its frequencies
   * from origin/arrayShape.
   *
-  * Complex arrays are interleaved [re, im] pairs in the Block payload
-  * (Spark has no complex type); real inputs use the Real variants which
-  * produce interleaved complex output where the transfer function does.
-  * Like the reference, the FFT itself is out of scope — these operate on
-  * spectra.
-  *
-  * TWO storage paths share one set of transfer functions:
-  *   - float64 [[Block]]s (interleaved f64 pairs, 16 B/px) — the
-  *     original working representation;
-  *   - TYPED [[TBlock]]s with dtype complex64/complex128 — native
-  *     component payloads (8 B/px for c64), so a spectrum persisted via
-  *     TensorStore or moved through a shuffle carries half (c64) or the
-  *     same (c128) bytes with the dtype recorded. Kernels decode
-  *     components at the edge and compute in double either way.
+  * Complex arrays are [[TBlock]]s of dtype complex64/complex128 whose
+  * payload interleaves [re, im] components along a doubled last axis
+  * (Spark has no complex type): 8 B per complex pixel for c64, 16 B for
+  * c128, so a spectrum persisted via TensorStore or moved through a
+  * shuffle carries the bytes its dtype records. [[toComplex]] lifts a
+  * real image; kernels decode components at the edge and compute in
+  * double. Like the reference, the FFT itself is out of scope — these
+  * operate on spectra.
   */
 object Fourier {
 
@@ -31,8 +25,7 @@ object Fourier {
     if (i < (n + 1) / 2) i.toDouble / n else (i - n).toDouble / n
 
   // ----------------------------------------------- transfer functions
-  // (re, im, freqs) → (re', im'); shared verbatim by the float64 and
-  // typed paths so the two compute bit-identical doubles pre-encode.
+  // (re, im, freqs) → (re', im')
 
   private def gaussXfer(sigma: Seq[Double]): (Double, Double, Array[Double]) => (Double, Double) =
     (re, im, f) => {
@@ -65,26 +58,9 @@ object Fourier {
       (re * g, im * g)
     }
 
-  // ------------------------------------------------- float64 Block path
-
-  /** Map over complex (interleaved) blocks with the global frequency
-    * vector of each element: f(re, im, freqs) → (re', im'). */
-  private def mapComplex(ds: Dataset[Block])(
-      f: (Double, Double, Array[Double]) => (Double, Double)): Dataset[Block] =
-    Filters.mapBlocks(ds) { b =>
-      val out = new Array[Double](b.data.length)
-      complexForeach(b.ndim, b.shape, b.origin, b.arrayShape) { (off, freqs) =>
-        val (re, im) = f(b.data(off), b.data(off + 1), freqs)
-        out(off) = re
-        out(off + 1) = im
-      }
-      out
-    }
-
-  /** Per-complex-element walk shared by both paths: invokes `g` with the
-    * interleaved COMPONENT offset of re (im is off+1) and the global
-    * frequency vector. `shape` is the component shape (last axis
-    * doubled). */
+  /** Per-complex-element walk: invokes `g` with the interleaved
+    * COMPONENT offset of re (im is off+1) and the global frequency
+    * vector. `shape` is the component shape (last axis doubled). */
   private def complexForeach(d: Int, shape: Seq[Int], origin: Seq[Int],
       arrayShape: Seq[Int])(g: (Int, Array[Double]) => Unit): Unit = {
     val logical = shape.toArray; logical(d - 1) /= 2
@@ -101,48 +77,15 @@ object Fourier {
     }
   }
 
-  /** Lift a real block Dataset to interleaved complex (im = 0). */
-  def toComplex(ds: Dataset[Block]): Dataset[Block] = {
-    val spark = ds.sparkSession
-    import spark.implicits._
-    ds.map { b =>
-      val out = new Array[Double](b.data.length * 2)
-      var i = 0
-      while (i < b.data.length) { out(2 * i) = b.data(i); i += 1 }
-      val d = b.ndim
-      def dbl(s: Seq[Int]): Seq[Int] = s.zipWithIndex.map { case (v, k) =>
-        if (k == d - 1) v * 2 else v
-      }
-      Block(b.imageId, b.idx, dbl(b.origin), dbl(b.shape), dbl(b.chunk),
-        dbl(b.arrayShape), out)
-    }
-  }
-
-  /** fourier_gaussian(image, sigma) — multiply the spectrum by
-    * exp(−2π²·Σ σ_k² f_k²) (scipy's transfer function). */
-  def fourierGaussian(ds: Dataset[Block], sigma: Seq[Double]): Dataset[Block] =
-    mapComplex(ds)(gaussXfer(sigma))
-
-  /** fourier_shift(image, shift) — multiply by exp(−2πi·Σ f_k s_k). */
-  def fourierShift(ds: Dataset[Block], shift: Seq[Double]): Dataset[Block] =
-    mapComplex(ds)(shiftXfer(shift))
-
-  /** fourier_uniform(image, size) — multiply by Π sinc(size_k · f_k)
-    * (the spectrum of a centered box of `size`). */
-  def fourierUniform(ds: Dataset[Block], size: Seq[Double]): Dataset[Block] =
-    mapComplex(ds)(uniformXfer(size))
-
-  // ------------------------------------------------- typed TBlock path
-
   private def requireComplex(dt: DType): Unit =
     require(dt == DType.C64 || dt == DType.C128,
       s"expected a complex dtype, got ${dt.name}")
 
-  /** Lift a real float64 Block Dataset to TYPED interleaved complex
-    * (im = 0): complex64 → 8 B per complex pixel in the payload,
-    * complex128 → 16 B. The c64 encode rounds each component to f32
-    * (round-to-nearest-even), exactly NumPy's astype(complex64). */
-  def toComplexTyped(ds: Dataset[Block], cdt: DType): Dataset[TBlock] = {
+  /** Lift a real float64 Block Dataset to interleaved complex (im = 0):
+    * complex64 → 8 B per complex pixel in the payload, complex128 → 16 B.
+    * The c64 encode rounds each component to f32 (round-to-nearest-even),
+    * exactly NumPy's astype(complex64). */
+  def toComplex(ds: Dataset[Block], cdt: DType = DType.C128): Dataset[TBlock] = {
     requireComplex(cdt)
     val spark = ds.sparkSession
     import spark.implicits._
@@ -159,11 +102,11 @@ object Fourier {
     }
   }
 
-  /** Map a transfer function over typed complex blocks: components
-    * decode at the kernel edge, the math runs in double (identical to
-    * the float64 path), and the result re-encodes to the SAME complex
-    * dtype — the payload never widens on the wire or in a store. */
-  private def mapComplexTyped(ds: Dataset[TBlock])(
+  /** Map a transfer function over complex blocks: components decode at
+    * the kernel edge, the math runs in double, and the result re-encodes
+    * to the SAME complex dtype — the payload never widens on the wire or
+    * in a store. */
+  private def mapComplex(ds: Dataset[TBlock])(
       f: (Double, Double, Array[Double]) => (Double, Double)): Dataset[TBlock] = {
     val spark = ds.sparkSession
     import spark.implicits._
@@ -180,12 +123,17 @@ object Fourier {
     }
   }
 
-  def fourierGaussianTyped(ds: Dataset[TBlock], sigma: Seq[Double]): Dataset[TBlock] =
-    mapComplexTyped(ds)(gaussXfer(sigma))
+  /** fourier_gaussian(image, sigma) — multiply the spectrum by
+    * exp(−2π²·Σ σ_k² f_k²) (scipy's transfer function). */
+  def fourierGaussian(ds: Dataset[TBlock], sigma: Seq[Double]): Dataset[TBlock] =
+    mapComplex(ds)(gaussXfer(sigma))
 
-  def fourierShiftTyped(ds: Dataset[TBlock], shift: Seq[Double]): Dataset[TBlock] =
-    mapComplexTyped(ds)(shiftXfer(shift))
+  /** fourier_shift(image, shift) — multiply by exp(−2πi·Σ f_k s_k). */
+  def fourierShift(ds: Dataset[TBlock], shift: Seq[Double]): Dataset[TBlock] =
+    mapComplex(ds)(shiftXfer(shift))
 
-  def fourierUniformTyped(ds: Dataset[TBlock], size: Seq[Double]): Dataset[TBlock] =
-    mapComplexTyped(ds)(uniformXfer(size))
+  /** fourier_uniform(image, size) — multiply by Π sinc(size_k · f_k)
+    * (the spectrum of a centered box of `size`). */
+  def fourierUniform(ds: Dataset[TBlock], size: Seq[Double]): Dataset[TBlock] =
+    mapComplex(ds)(uniformXfer(size))
 }

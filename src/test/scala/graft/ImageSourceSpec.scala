@@ -20,11 +20,11 @@ class ImageSourceSpec extends SparkSpec {
     assert(blocks.length == 3)
     assert(blocks.forall(_.arrayShape == Seq(3, 6, 5)))
     for ((b, f) <- blocks.zipWithIndex) {
-      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 6, 5))
-      assert(b.data.sameElements(frames(f)), s"frame $f bytes differ")
+      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 6, 5) && b.dtype == "uint8")
+      assert(b.data.sameElements(frames(f).map(_.toByte)), s"frame $f bytes differ")
     }
     // the stacked image is a normal tensor: a 3-d filter runs on it
-    val sm = Filters.uniformFilter(ds, Seq(1, 3, 3))
+    val sm = Filters.uniformFilter(TBlock.toBlocks(ds), Seq(1, 3, 3))
     assert(Grid.unblockify(sm).shape.toSeq == Seq(3, 6, 5))
   }
 
@@ -42,8 +42,8 @@ class ImageSourceSpec extends SparkSpec {
     assert(blocks.length == 4)
     assert(blocks.forall(_.arrayShape == Seq(4, 5, 7)))
     for ((b, f) <- blocks.zipWithIndex) {
-      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 5, 7))
-      assert(b.data.sameElements(frames(f)), s"frame $f pixels differ")
+      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 5, 7) && b.dtype == "uint8")
+      assert(b.toBlock.data.sameElements(frames(f)), s"frame $f pixels differ")
     }
   }
 
@@ -65,8 +65,8 @@ class ImageSourceSpec extends SparkSpec {
     assert(blocks.length == 5)
     assert(blocks.forall(_.arrayShape == Seq(5, 6, 5)))
     for ((b, f) <- blocks.zipWithIndex) {
-      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 6, 5))
-      assert(b.data.sameElements(frames(f)), s"frame $f pixels differ")
+      assert(b.idx == Seq(f, 0, 0) && b.shape == Seq(1, 6, 5) && b.dtype == "uint8")
+      assert(b.toBlock.data.sameElements(frames(f)), s"frame $f pixels differ")
     }
   }
 
@@ -85,12 +85,12 @@ class ImageSourceSpec extends SparkSpec {
     assert(blocks.forall(b => b.chunk == Seq(2, 4, 6) && b.arrayShape == Seq(5, 4, 6)))
     for ((b, ci) <- blocks.zipWithIndex; k <- 0 until b.shape.head) {
       val want = frames(ci * 2 + k)
-      val got = b.data.slice(k * 24, (k + 1) * 24)
+      val got = b.toBlock.data.slice(k * 24, (k + 1) * 24)
       assert(got.sameElements(want), s"chunk $ci frame $k mismatch")
     }
     // the stacked image behaves as a normal 3-d tensor, incl. a filter
     // with a temporal (cross-chunk) extent
-    val sm = Filters.uniformFilter(ds, Seq(3, 1, 1))
+    val sm = Filters.uniformFilter(TBlock.toBlocks(ds), Seq(3, 1, 1))
     assert(Grid.unblockify(sm).shape.toSeq == Seq(5, 4, 6))
   }
 
@@ -117,7 +117,7 @@ class ImageSourceSpec extends SparkSpec {
     val pages = ImageSource.decodeTiff(Files.readAllBytes(Paths.get(dir.getPath, "z.tiff")))
     assert(pages.length == 3)
     for ((p, f) <- pages.zipWithIndex)
-      assert(p._3.sameElements(frames(f)), s"LZW page $f mismatch")
+      assert(DType.U8.decode(p._4).sameElements(frames(f)), s"LZW page $f mismatch")
 
     // predictor=2 (horizontal differencing): hand-assemble one LE page
     val h = 4; val w = 8
@@ -141,7 +141,7 @@ class ImageSourceSpec extends SparkSpec {
     entry(279, 4, 1, strip.length); entry(317, 3, 1, 2) // Predictor: horizontal
     u32(0)
     val decoded = ImageSource.decodeTiff(bos.toByteArray)
-    assert(decoded.length == 1 && decoded.head._3.sameElements(px.map(_.toDouble)),
+    assert(decoded.length == 1 && DType.U8.decode(decoded.head._4).sameElements(px.map(_.toDouble)),
       "predictor=2 decode mismatch")
   }
 
@@ -159,7 +159,7 @@ class ImageSourceSpec extends SparkSpec {
       .collect().sortBy(_.idx.head)
     assert(blocks.length == 4)
     for ((b, f) <- blocks.zipWithIndex)
-      assert(b.data.sameElements(frames(f)), s"compression mix frame $f mismatch")
+      assert(b.toBlock.data.sameElements(frames(f)), s"compression mix frame $f mismatch")
     // PackBits codec unit round-trip incl. long runs and literals
     val pb = Array.tabulate(1000)(i =>
       (if (i % 37 < 20) 42 else i % 251).toByte)
@@ -211,13 +211,8 @@ class ImageSourceSpec extends SparkSpec {
     entry(277, 3, 1, 1); entry(278, 4, 1, 2)   // 1 sample, 2 rows/strip
     entry(279, 4, 1, 12)
     u32(0) // no next IFD
-    val pages = ImageSource.decodeTiff(bos.toByteArray)
-    assert(pages.length == 1)
-    val (h, w, data) = pages.head
-    assert(h == 2 && w == 3)
-    assert(data.toSeq == px.map(_.toDouble))
-    // typed decode: 16-bit MM page lands as uint16 (2 bytes/px, LE-packed)
-    val Seq((th, tw, dt, payload)) = ImageSource.decodeTiffTyped(bos.toByteArray)
+    // the 16-bit MM page lands as uint16 (2 bytes/px, LE-packed)
+    val Seq((th, tw, dt, payload)) = ImageSource.decodeTiff(bos.toByteArray)
     assert(th == 2 && tw == 3 && dt == "uint16")
     assert(payload.length == 2 * 3 * 2, "uint16 page must pack 2 bytes/px")
     assert(graft.tensor.DType.U16.decode(payload).toSeq == px.map(_.toDouble))
@@ -228,9 +223,9 @@ class ImageSourceSpec extends SparkSpec {
       Array.tabulate(11 * 13)(i => ((i * 31 + f * 97) % 256).toDouble))
     val pages = frames.map(p => (11, 13, p))
     for (comp <- Seq(1, 5, 8, 32773)) {
-      val classic = ImageSource.decodeTiffTyped(
+      val classic = ImageSource.decodeTiff(
         ImageSource.encodeTiffPages(pages, comp = comp, big = false))
-      val big = ImageSource.decodeTiffTyped(
+      val big = ImageSource.decodeTiff(
         ImageSource.encodeTiffPages(pages, comp = comp, big = true))
       assert(big.length == 3 && classic.length == 3, s"comp=$comp page count")
       for (f <- 0 until 3) {
@@ -251,21 +246,21 @@ class ImageSourceSpec extends SparkSpec {
     val px8 = Array.tabulate(h * w)(i => ((i * 7) % 256).toDouble)
     val px16 = Array.tabulate(h * w)(i => ((i * 523) % 65536).toDouble)
     for (comp <- Seq(1, 5, 8, 32773); big <- Seq(false, true)) {
-      val Seq((th, tw, dt, pay)) = ImageSource.decodeTiffTyped(
+      val Seq((th, tw, dt, pay)) = ImageSource.decodeTiff(
         ImageSource.encodeTiffPages(Seq((h, w, px8)), comp = comp,
           big = big, tile = Some((8, 10))))
       assert(th == h && tw == w && dt == "uint8", s"comp=$comp big=$big")
       assert(DType.U8.decode(pay).toSeq == px8.toSeq,
         s"comp=$comp big=$big: tiled uint8 reassembly mismatch")
     }
-    val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiffTyped(
+    val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiff(
       ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 8,
         big = true, tile = Some((8, 10)), bps = 16))
     assert(dt16 == "uint16")
     assert(DType.U16.decode(pay16).toSeq == px16.toSeq,
       "tiled uint16 reassembly mismatch")
     // tile grid that divides exactly (no padding) also round-trips
-    val Seq((_, _, _, payEx)) = ImageSource.decodeTiffTyped(
+    val Seq((_, _, _, payEx)) = ImageSource.decodeTiff(
       ImageSource.encodeTiffPages(Seq((24, 16, px8.take(24 * 16))),
         comp = 5, big = false, tile = Some((8, 8))))
     assert(DType.U8.decode(payEx).toSeq == px8.take(24 * 16).toSeq)
@@ -277,12 +272,12 @@ class ImageSourceSpec extends SparkSpec {
     val px8 = Array.tabulate(h * w)(i => ((i % w) * 3 + (i * 17) % 31).toDouble % 256)
     val px16 = Array.tabulate(h * w)(i => ((i % w) * 700 + (i * 523) % 997).toDouble % 65536)
     for (tile <- Seq(None, Some((8, 6))); big <- Seq(false, true)) {
-      val Seq((_, _, dt8, pay8)) = ImageSource.decodeTiffTyped(
+      val Seq((_, _, dt8, pay8)) = ImageSource.decodeTiff(
         ImageSource.encodeTiffPages(Seq((h, w, px8)), comp = 5, big = big,
           tile = tile, bps = 8, pred = 2))
       assert(dt8 == "uint8" && DType.U8.decode(pay8).toSeq == px8.toSeq,
         s"pred2 uint8 tile=$tile big=$big")
-      val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiffTyped(
+      val Seq((_, _, dt16, pay16)) = ImageSource.decodeTiff(
         ImageSource.encodeTiffPages(Seq((h, w, px16)), comp = 5, big = big,
           tile = tile, bps = 16, pred = 2))
       assert(dt16 == "uint16" && DType.U16.decode(pay16).toSeq == px16.toSeq,
@@ -317,7 +312,7 @@ class ImageSourceSpec extends SparkSpec {
       }
       val pred = if (rnd.nextBoolean()) 2 else 1
       val cfg = s"trial=$trial h=$h w=$w bps=$bps comp=$comp big=$big tile=$tile pred=$pred"
-      val pages = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages(
+      val pages = ImageSource.decodeTiff(ImageSource.encodeTiffPages(
         Seq((h, w, px)), comp = comp, big = big, tile = tile, bps = bps, pred = pred))
       assert(pages.length == 1, cfg)
       val (dh, dw, dt, pay) = pages.head
@@ -328,7 +323,7 @@ class ImageSourceSpec extends SparkSpec {
     // multi-page chain under one random config
     val frames = (0 until 4).map(f =>
       Array.fill(9 * 7)(rnd.nextInt(65536).toDouble))
-    val multi = ImageSource.decodeTiffTyped(ImageSource.encodeTiffPages(
+    val multi = ImageSource.decodeTiff(ImageSource.encodeTiffPages(
       frames.map((9, 7, _)), comp = 5, big = true, tile = Some((3, 4)),
       bps = 16, pred = 2))
     assert(multi.length == 4)
@@ -349,24 +344,21 @@ class ImageSourceSpec extends SparkSpec {
         ImageSource.encodePgm(h, w, frames(f)))
     // nframes=2 exercises the byte-domain frame-stacking shuffle: each
     // chunk is ONE block of 2·h·w uint8 bytes — the 1-byte/pixel pin
-    val typed = ImageSource.readPgmTyped(spark, dir.getPath + "/*.pgm", nframes = 2)
+    val typed = ImageSource.readPgm(spark, dir.getPath + "/*.pgm", nframes = 2)
       .collect().sortBy(_.idx.head)
     assert(typed.length == 2)
-    for (b <- typed) {
+    for ((b, ci) <- typed.zipWithIndex) {
       assert(b.dtype == "uint8", s"grayscale PGM must ingest as uint8, got ${b.dtype}")
       assert(b.data.length == 2 * h * w, "payload must stay 1 byte/pixel")
+      assert(b.toBlock.data.sameElements(frames(2 * ci) ++ frames(2 * ci + 1)),
+        s"chunk $ci pixels differ from the source frames")
     }
-    // float view decodes to the same pixels
-    val viaFloat = ImageSource.readPgm(spark, dir.getPath + "/*.pgm", nframes = 2)
-      .collect().sortBy(_.idx.head)
-    for ((tb, fb) <- typed.zip(viaFloat))
-      assert(tb.toBlock.data.sameElements(fb.data), "typed/float paths diverge")
 
     // 16-bit PGM → native uint16, values above the low byte intact
     val big = Array.tabulate(h * w)(i => ((i * 523 + 300) % 65536).toDouble)
     Files.write(Paths.get(dir.getPath, "big.pgm16"),
       ImageSource.encodePgm16(h, w, big))
-    val Array(b16) = ImageSource.readPgmTyped(spark, dir.getPath + "/*.pgm16").collect()
+    val Array(b16) = ImageSource.readPgm(spark, dir.getPath + "/*.pgm16").collect()
     assert(b16.dtype == "uint16" && b16.data.length == 2 * h * w)
     assert(b16.toBlock.data.sameElements(big), "uint16 PGM round-trip mismatch")
     assert(big.exists(_ > 255.0), "fixture must exercise the high byte")
@@ -375,9 +367,9 @@ class ImageSourceSpec extends SparkSpec {
   test("PGM decoder: comments and 16-bit maxval") {
     val ascii = "P5\n# a comment line\n2 2\n65535\n".getBytes("US-ASCII")
     val body = Array[Byte](0x01, 0x00, 0x00, 0xff.toByte, 0x10, 0x00, 0x00, 0x2a)
-    val (h, w, px) = ImageSource.decodePgm(ascii ++ body)
-    assert(h == 2 && w == 2)
-    assert(px.toSeq == Seq(256.0, 255.0, 4096.0, 42.0))
+    val (h, w, dt, px) = ImageSource.decodePgm(ascii ++ body)
+    assert(h == 2 && w == 2 && dt == "uint16")
+    assert(DType.U16.decode(px).toSeq == Seq(256.0, 255.0, 4096.0, 42.0))
   }
 
   // -------------------------------------------- DataSource V2 image scan
@@ -439,7 +431,8 @@ class ImageSourceSpec extends SparkSpec {
     for ((a, b) <- v2.zip(v1)) {
       assert(a.idx == b.idx && a.origin == b.origin && a.shape == b.shape
         && a.arrayShape == b.arrayShape)
-      assert(a.data.sameElements(b.data))
+      assert(a.dtype == "uint8" && a.dtype == b.dtype)
+      assert(a.data.sameElements(b.data), "V2 payload differs from the binaryFile path")
     }
   }
 
@@ -471,9 +464,23 @@ class ImageSourceSpec extends SparkSpec {
     assert(!scan.contains("data"), s"data column not pruned from scan:\n$scan")
   }
 
+  test("V2 metadata scan with data pruned reports each PGM's dtype from its header") {
+    import graft.sources.v2.ImageBlockSource
+    val dir = Files.createTempDirectory("graft_v2_dtype").toFile
+    dir.deleteOnExit()
+    val px = Array.tabulate(4 * 5)(i => (i * 3001 % 65536).toDouble)
+    Files.write(Paths.get(dir.getPath, "a.pgm"), ImageSource.encodePgm(4, 5, px.map(_ % 256)))
+    Files.write(Paths.get(dir.getPath, "b.pgm"), ImageSource.encodePgm16(4, 5, px))
+    val meta = ImageBlockSource.read(spark, dir.getPath + "/*.pgm", "pgm").select("frame", "dtype")
+    val scan = meta.queryExecution.executedPlan.collectLeaves().head.toString
+    assert(!scan.contains("data"), s"data column not pruned from scan:\n$scan")
+    assert(meta.collect().map(r => r.getInt(0) -> r.getString(1)).sorted.toSeq ==
+      Seq(0 -> "uint8", 1 -> "uint16"))
+  }
+
   test("V2 header-only path: comment header past the 64 KiB prefix falls back, never mis-parses") {
     // r12 advisor item: a truncated prefix could cut a dim token
-    // mid-digits and silently parse wrong dims. pgmDims now requires an
+    // mid-digits and silently parse wrong dims. pgmHeader now requires an
     // in-buffer whitespace terminator per token, so the prefix parse
     // THROWS and the reader's full-read fallback engages.
     import graft.sources.v2.ImageBlockSource
@@ -495,8 +502,8 @@ class ImageSourceSpec extends SparkSpec {
     // must throw (IllegalArgumentException), never return truncated dims
     val full = ("P5\n1024 768\n255\n").getBytes("US-ASCII")
     val cut = full.take(6) // "P5\n102"
-    val e = intercept[IllegalArgumentException](ImageSource.pgmDims(cut))
+    val e = intercept[IllegalArgumentException](ImageSource.pgmHeader(cut))
     assert(e.getMessage.contains("buffer boundary"), e.getMessage)
-    assert(ImageSource.pgmDims(full) == (768, 1024))
+    assert(ImageSource.pgmHeader(full) == ((768, 1024, DType.U8, full.length)))
   }
 }

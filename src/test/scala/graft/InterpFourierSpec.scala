@@ -199,23 +199,82 @@ class InterpFourierSpec extends SparkSpec {
     assert(worst < 1e-6, s"order-5 chunking divergence $worst")
   }
 
+  // ---------------------------------------------------------- fourier
+
+  private type CxOp = org.apache.spark.sql.Dataset[TBlock] => org.apache.spark.sql.Dataset[TBlock]
+
+  /** np.fft.fftfreq(n)[i], written out here rather than taken from
+    * Fourier. */
+  private def fftfreq(i: Int, n: Int): Double =
+    if (i < (n + 1) / 2) i.toDouble / n else (i - n).toDouble / n
+
+  /** scipy.ndimage's closed-form transfer functions at one frequency
+    * vector, as a complex factor (re, im). */
+  private def gaussH(sigma: Seq[Double])(f: Array[Double]): (Double, Double) = {
+    var e = 0.0
+    for (k <- f.indices) e += sigma(k) * sigma(k) * f(k) * f(k)
+    (math.exp(-2.0 * math.Pi * math.Pi * e), 0.0)
+  }
+  private def shiftH(shift: Seq[Double])(f: Array[Double]): (Double, Double) = {
+    var ph = 0.0
+    for (k <- f.indices) ph += f(k) * shift(k)
+    val theta = -2.0 * math.Pi * ph
+    (math.cos(theta), math.sin(theta))
+  }
+  private def uniformH(size: Seq[Double])(f: Array[Double]): (Double, Double) = {
+    var g = 1.0
+    for (k <- f.indices) {
+      val x = math.Pi * size(k) * f(k)
+      g *= (if (x == 0.0) 1.0 else math.sin(x) / x)
+    }
+    (g, 0.0)
+  }
+
+  /** Naive whole-array reference: every element x of the unblocked REAL
+    * image times the transfer function at its fftfreq frequencies,
+    * emitted as interleaved (re, im) components. The gaussian and
+    * uniform factors are real, so their products are taken as x·g and
+    * 0 (what scipy's real-factor multiply gives); the shift factor is
+    * the full complex product with im = 0. `round` models a narrower
+    * component dtype (input and output rounding). */
+  private def naiveFourier(in: Nd, h: Array[Double] => (Double, Double),
+      round: Double => Double = identity): Array[Double] = {
+    val d = in.shape.length
+    val out = new Array[Double](2 * in.data.length)
+    val f = new Array[Double](d)
+    for (i <- in.data.indices) {
+      var rem = i
+      for (k <- d - 1 to 0 by -1) {
+        f(k) = fftfreq(rem % in.shape(k), in.shape(k))
+        rem /= in.shape(k)
+      }
+      val x = round(in.data(i))
+      val (hr, hi) = h(f)
+      out(2 * i) = round(if (hi == 0.0) x * hr else x * hr - 0.0 * hi)
+      out(2 * i + 1) = round(if (hi == 0.0) 0.0 * hr else x * hi + 0.0 * hr)
+    }
+    out
+  }
+
+  private def runFourier(op: CxOp, in: Nd, id: String, chunks: Seq[Int],
+      cdt: DType = DType.C128): Nd =
+    Grid.unblockify(TBlock.toBlocks(
+      op(Fourier.toComplex(Grid.blockify(spark, id, in, chunks), cdt))))
+
   test("fourier ops: gaussian/uniform attenuate, shift is exact in phase, all chunk-invariant") {
-    def run(op: org.apache.spark.sql.Dataset[Block] => org.apache.spark.sql.Dataset[Block],
-        chunks: Seq[Int]): Nd =
-      Grid.unblockify(op(Fourier.toComplex(Grid.blockify(spark, "t", img, chunks))))
-    for (op <- Seq[org.apache.spark.sql.Dataset[Block] => org.apache.spark.sql.Dataset[Block]](
+    for (op <- Seq[CxOp](
         Fourier.fourierGaussian(_, Seq(2.0, 2.0)),
         Fourier.fourierShift(_, Seq(1.5, -0.5)),
         Fourier.fourierUniform(_, Seq(3.0, 3.0)))) {
-      val single = run(op, img.shape.toSeq)
-      val multi = run(op, Seq(5, 6))
+      val single = runFourier(op, img, "t", img.shape.toSeq)
+      val multi = runFourier(op, img, "t", Seq(5, 6))
       assert(maxAbsDiff(single, multi) < 1e-12, "fourier op not chunk-invariant")
     }
     // DC component (freq 0) passes through unchanged for gaussian/uniform
-    val g = run(Fourier.fourierGaussian(_, Seq(2.0, 2.0)), Seq(5, 6))
+    val g = runFourier(Fourier.fourierGaussian(_, Seq(2.0, 2.0)), img, "t", Seq(5, 6))
     assert(g.data(0) == img.data(0) && g.data(1) == 0.0, "DC must be preserved")
     // shift preserves magnitude everywhere
-    val sh = run(Fourier.fourierShift(_, Seq(1.5, -0.5)), Seq(5, 6))
+    val sh = runFourier(Fourier.fourierShift(_, Seq(1.5, -0.5)), img, "t", Seq(5, 6))
     for (i <- 0 until img.data.length) {
       val mag2 = sh.data(2 * i) * sh.data(2 * i) + sh.data(2 * i + 1) * sh.data(2 * i + 1)
       assert(math.abs(math.sqrt(mag2) - math.abs(img.data(i))) < 1e-9)
@@ -226,56 +285,50 @@ class InterpFourierSpec extends SparkSpec {
     val vol = Nd.zeros(Array(8, 10, 6))
     for (i <- vol.data.indices)
       vol.data(i) = math.cos(i * 0.23) + (i * 2654435761L % 89) * 0.01
-    def run(op: org.apache.spark.sql.Dataset[Block] => org.apache.spark.sql.Dataset[Block],
-        chunks: Seq[Int]): Nd =
-      Grid.unblockify(op(Fourier.toComplex(Grid.blockify(spark, "t3f", vol, chunks))))
-    for (op <- Seq[org.apache.spark.sql.Dataset[Block] => org.apache.spark.sql.Dataset[Block]](
-        Fourier.fourierGaussian(_, Seq(1.5, 2.0, 1.0)),
-        Fourier.fourierShift(_, Seq(0.5, -1.0, 0.25)),
-        Fourier.fourierUniform(_, Seq(3.0, 3.0, 3.0)))) {
-      val single = run(op, vol.shape.toSeq)
-      val multi = run(op, Seq(3, 4, 5))
+    for ((op, h) <- Seq[(CxOp, Array[Double] => (Double, Double))](
+        (Fourier.fourierGaussian(_, Seq(1.5, 2.0, 1.0)), gaussH(Seq(1.5, 2.0, 1.0))),
+        (Fourier.fourierShift(_, Seq(0.5, -1.0, 0.25)), shiftH(Seq(0.5, -1.0, 0.25))),
+        (Fourier.fourierUniform(_, Seq(3.0, 3.0, 3.0)), uniformH(Seq(3.0, 3.0, 3.0))))) {
+      val single = runFourier(op, vol, "t3f", vol.shape.toSeq)
+      val multi = runFourier(op, vol, "t3f", Seq(3, 4, 5))
       assert(maxAbsDiff(single, multi) < 1e-12, "3-d fourier op not chunk-invariant")
+      assert(multi.data.sameElements(naiveFourier(vol, h)),
+        "3-d fourier op diverges from the naive reference")
     }
   }
 
   test("typed complex spectra: c128 equals the float path exactly, c64 is 8 B/px and stores round-trip") {
     val ds = Grid.blockify(spark, "cx", img, Seq(7, 12))
-    // c128 path: identical double math → bit-exact vs the float64 path
-    for ((label, f64Op, typedOp) <- Seq[(String,
-        org.apache.spark.sql.Dataset[Block] => org.apache.spark.sql.Dataset[Block],
-        org.apache.spark.sql.Dataset[TBlock] => org.apache.spark.sql.Dataset[TBlock])](
-      ("gaussian", Fourier.fourierGaussian(_, Seq(1.5, 0.8)),
-        Fourier.fourierGaussianTyped(_, Seq(1.5, 0.8))),
-      ("shift", Fourier.fourierShift(_, Seq(0.5, -1.25)),
-        Fourier.fourierShiftTyped(_, Seq(0.5, -1.25))),
-      ("uniform", Fourier.fourierUniform(_, Seq(3.0, 2.0)),
-        Fourier.fourierUniformTyped(_, Seq(3.0, 2.0))))) {
-      val want = Grid.unblockify(f64Op(Fourier.toComplex(ds)))
-      val got = Grid.unblockify(TBlock.toBlocks(
-        typedOp(Fourier.toComplexTyped(ds, DType.C128))))
-      assert(got.data.sameElements(want.data), s"c128 $label diverges from float64 path")
+    // c128: the blocked kernel and the naive whole-array reference run
+    // the same double arithmetic in the same order → bit-exact
+    for ((label, op, h) <- Seq[(String, CxOp, Array[Double] => (Double, Double))](
+      ("gaussian", Fourier.fourierGaussian(_, Seq(1.5, 0.8)), gaussH(Seq(1.5, 0.8))),
+      ("shift", Fourier.fourierShift(_, Seq(0.5, -1.25)), shiftH(Seq(0.5, -1.25))),
+      ("uniform", Fourier.fourierUniform(_, Seq(3.0, 2.0)), uniformH(Seq(3.0, 2.0))))) {
+      val got = Grid.unblockify(TBlock.toBlocks(op(Fourier.toComplex(ds))))
+      assert(got.data.sameElements(naiveFourier(img, h)),
+        s"c128 $label diverges from the naive reference")
     }
     // byte-width pin: c64 payload carries 8 B per complex pixel, c128 16
-    val c64Blocks = Fourier.fourierGaussianTyped(
-      Fourier.toComplexTyped(ds, DType.C64), Seq(1.5, 0.8)).collect()
+    val c64Blocks = Fourier.fourierGaussian(
+      Fourier.toComplex(ds, DType.C64), Seq(1.5, 0.8)).collect()
     for (b <- c64Blocks) {
       val complexPx = b.shape.product / 2
       assert(b.dtype == "complex64" && b.data.length == 8 * complexPx,
         s"c64 block must pack 8 B/px: ${b.data.length} for $complexPx px")
     }
-    // c64 == float path rounded through f32 components (astype semantics)
-    val wantC64 = Grid.unblockify(Fourier.fourierGaussian(
-      Fourier.toComplex(TBlock.toBlocks(TBlock.fromBlocks(ds, DType.F32))),
-      Seq(1.5, 0.8))).data.map(_.toFloat.toDouble)
-    val gotC64 = Grid.unblockify(TBlock.toBlocks(Fourier.fourierGaussianTyped(
-      Fourier.toComplexTyped(ds, DType.C64), Seq(1.5, 0.8)))).data
-    assert(gotC64.sameElements(wantC64), "c64 != f32-quantized float path")
+    // c64 == the reference on f32-rounded input, rounded back to f32
+    // (NumPy astype(complex64) semantics)
+    val f32 = (v: Double) => v.toFloat.toDouble
+    val gotC64 = runFourier(Fourier.fourierGaussian(_, Seq(1.5, 0.8)), img, "cx", Seq(7, 12),
+      DType.C64).data
+    assert(gotC64.sameElements(naiveFourier(img, gaussH(Seq(1.5, 0.8)), f32)),
+      "c64 != f32-quantized naive reference")
     // TensorStore round-trips the complex dtype tag and payload
     val dir = java.nio.file.Files.createTempDirectory("graft_c64_store").toString
-    val spec = Fourier.toComplexTyped(ds, DType.C64)
-    graft.sources.TensorStore.writeTyped(spec, dir)
-    val back = graft.sources.TensorStore.readTyped(spark, dir).collect()
+    val spec = Fourier.toComplex(ds, DType.C64)
+    graft.sources.TensorStore.write(spec, dir)
+    val back = graft.sources.TensorStore.read(spark, dir).collect()
       .map(b => (b.idx, b)).toMap
     for (b <- spec.collect()) {
       val r = back(b.idx)

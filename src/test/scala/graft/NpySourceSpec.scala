@@ -190,9 +190,10 @@ class NpySourceSpec extends SparkSpec {
     assert(full.rdd.getNumPartitions == 4)
     val rows = full.collect().sortBy(_.getInt(0))
     assert(rows.length == 4)
-    // value check against the formula (DType.read widens u16 exactly)
-    val d0 = rows(0).getSeq[Double](7)
-    assert(d0(3) == 21.0 && d0.length == h * w)
+    // value check against the formula on the native uint16 payload
+    assert(rows.forall(_.getString(7) == "uint16"))
+    val d0 = rows(0).getAs[Array[Byte]](8)
+    assert(DType.U16.read(d0, 3) == 21.0 && d0.length == h * w * 2)
     val pruned = full.filter(col("frame") >= 3)
     assert(pruned.rdd.getNumPartitions == 1, "frame filter must prune files")
     // column-pruned metadata read works on a TRUNCATED file: only the
@@ -203,9 +204,27 @@ class NpySourceSpec extends SparkSpec {
     val mdir = java.nio.file.Files.createTempDirectory("graft_npy_v2_meta")
     java.nio.file.Files.write(mdir.resolve("only.npy"), cut)
     val meta = ImageBlockSource.read(spark, s"$mdir/*.npy", "npy")
-      .select("frame", "shape").collect()
+      .select("frame", "shape", "dtype").collect()
     assert(meta.length == 1 && meta.head.getSeq[Int](1) == Seq(1, h, w),
       "header-only decode must not need the data bytes")
+    assert(meta.head.getString(2) == "uint16", "header-only decode must still report the dtype")
+  }
+
+  test("V2 npy codec keeps int64 payloads native: 2^53 + 1 reads back exactly") {
+    import graft.sources.v2.ImageBlockSource
+    import java.nio.{ByteBuffer, ByteOrder}
+    val dir = java.nio.file.Files.createTempDirectory("graft_npy_v2_i64")
+    // 2^53 + 1 is the first integer a float64 cannot hold
+    val vals = Array((1L << 53) + 1, -((1L << 53) + 1), Long.MaxValue, 0L, 7L, Long.MinValue)
+    val buf = ByteBuffer.allocate(8 * vals.length).order(ByteOrder.LITTLE_ENDIAN)
+    vals.foreach(buf.putLong)
+    java.nio.file.Files.write(dir.resolve("big.npy"),
+      NpySource.encodeNpy(Seq(2, 3), DType.I64, buf.array))
+    val Array(b) = ImageBlockSource.blocks(
+      ImageBlockSource.read(spark, s"$dir/*.npy", "npy")).collect()
+    assert(b.dtype == "int64" && b.shape == Seq(1, 2, 3))
+    val back = ByteBuffer.wrap(b.data).order(ByteOrder.LITTLE_ENDIAN).asLongBuffer()
+    assert(vals.indices.map(back.get) == vals.toSeq, "int64 values changed through graft-image")
   }
 
   test("readNpy stacks npy and npz files across a glob with typed payloads") {

@@ -14,8 +14,8 @@ class TensorStoreSpec extends SparkSpec {
 
   test("round-trip preserves every pixel and the manifest geometry") {
     val raster = Images.eventsRaster(spark, sf0001)
-    TensorStore.write(raster, dir)
-    val back = TensorStore.read(spark, dir)
+    TensorStore.write(TBlock.fromBlocks(raster, DType.F64), dir)
+    val back = TBlock.toBlocks(TensorStore.read(spark, dir))
     val a = Images.toPixels(raster).collect()
       .map(r => (r.getInt(0), r.getInt(1)) -> r.getDouble(2)).toMap
     val b = Images.toPixels(back).collect()
@@ -27,8 +27,8 @@ class TensorStoreSpec extends SparkSpec {
   }
 
   test("frame-range read prunes partitions at the scan") {
-    TensorStore.write(Images.eventsRaster(spark, sf0001), dir)
-    val sliced = TensorStore.read(spark, dir, frameRange = Some((1, 1)))
+    TensorStore.write(TBlock.fromBlocks(Images.eventsRaster(spark, sf0001), DType.F64), dir)
+    val sliced = TBlock.toBlocks(TensorStore.read(spark, dir, frameRange = Some((1, 1))))
     val plan = sliced.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("idx0"),
       s"frame range did not land as a partition filter:\n$plan")
@@ -49,8 +49,8 @@ class TensorStoreSpec extends SparkSpec {
           (((math.round(v * 100) % 256) + 256) % 256).toDouble))
       }, DType.U8)
     val before = u8.collect().map(b => b.idx -> b.data.toSeq).toMap
-    TensorStore.writeTyped(u8, dir8)
-    val back = TensorStore.readTyped(spark, dir8).collect()
+    TensorStore.write(u8, dir8)
+    val back = TensorStore.read(spark, dir8).collect()
     assert(back.map(b => b.idx -> b.data.toSeq).toMap == before,
       "u8 payload changed across the store round-trip")
     assert(back.forall(b => b.dtype == "uint8" &&
@@ -61,7 +61,7 @@ class TensorStoreSpec extends SparkSpec {
     // mixed dtypes under one imageId must fail loudly
     val mixed = u8.map(b => if (b.idx.head == 0) b.copy(dtype = "int16") else b)
     val err = intercept[IllegalArgumentException] {
-      TensorStore.writeTyped(mixed, dir8 + "_mixed")
+      TensorStore.write(mixed, dir8 + "_mixed")
     }
     assert(err.getMessage.contains("share one dtype"))
   }
@@ -80,8 +80,8 @@ class TensorStoreSpec extends SparkSpec {
     // high byte is untested
     assert(u16.collect().exists(_.toBlock.data.exists(_ > 255.0)),
       "fixture never exercises the high byte")
-    TensorStore.writeTyped(u16, dir16)
-    val back = TensorStore.readTyped(spark, dir16).collect()
+    TensorStore.write(u16, dir16)
+    val back = TensorStore.read(spark, dir16).collect()
     assert(back.map(b => b.idx -> b.data.toSeq).toMap == before,
       "u16 payload changed across the store round-trip")
     assert(back.forall(b => b.dtype == "uint16" &&
@@ -99,8 +99,8 @@ class TensorStoreSpec extends SparkSpec {
         b.copy(data = b.data.map(v => math.floor(v * 7 % 1000)))
       }, DType.I32)
     val before = labels.collect().map(b => b.idx -> b.toBlock.data.toSeq).toMap
-    TensorStore.writeTyped(labels, dir32)
-    val back = TensorStore.readTyped(spark, dir32).collect()
+    TensorStore.write(labels, dir32)
+    val back = TensorStore.read(spark, dir32).collect()
     assert(back.forall(b => b.dtype == "int32" &&
       b.data.length == b.shape.product * 4), "label payload not 4 bytes/elem")
     assert(back.map(b => b.idx -> b.toBlock.data.toSeq).toMap == before,
@@ -120,8 +120,8 @@ class TensorStoreSpec extends SparkSpec {
     assert(i8.collect().exists(_.toBlock.data.exists(_ < 0.0)),
       "fixture never exercises negative int8 values")
     val beforeI8 = i8.collect().map(b => b.idx -> b.data.toSeq).toMap
-    TensorStore.writeTyped(i8, dirI8)
-    val backI8 = TensorStore.readTyped(spark, dirI8).collect()
+    TensorStore.write(i8, dirI8)
+    val backI8 = TensorStore.read(spark, dirI8).collect()
     assert(backI8.map(b => b.idx -> b.data.toSeq).toMap == beforeI8,
       "i8 payload changed across the store round-trip")
     assert(backI8.forall(b => b.dtype == "int8" &&
@@ -137,8 +137,8 @@ class TensorStoreSpec extends SparkSpec {
         })
       }, DType.U64)
     val beforeU64 = u64.collect().map(b => b.idx -> b.data.toSeq).toMap
-    TensorStore.writeTyped(u64, dirU64)
-    val backU64 = TensorStore.readTyped(spark, dirU64).collect()
+    TensorStore.write(u64, dirU64)
+    val backU64 = TensorStore.read(spark, dirU64).collect()
     assert(backU64.map(b => b.idx -> b.data.toSeq).toMap == beforeU64,
       "u64 payload changed across the store round-trip")
     assert(backU64.forall(b => b.dtype == "uint64" &&
@@ -153,7 +153,7 @@ class TensorStoreSpec extends SparkSpec {
     val broken = raster.map(b =>
       if (b.idx.head == 0) b.copy(chunk = Seq(8, 8)) else b)
     val err = intercept[IllegalArgumentException] {
-      TensorStore.write(broken, dir + "_broken")
+      TensorStore.write(TBlock.fromBlocks(broken, DType.F64), dir + "_broken")
     }
     assert(err.getMessage.contains("share arrayShape+chunk"))
   }

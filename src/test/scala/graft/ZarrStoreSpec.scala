@@ -70,7 +70,7 @@ class ZarrStoreSpec extends SparkSpec {
     // chunks over 64 cols -> grid 3 with a 16-col edge
     val raster = Images.eventsRaster(spark, sf0001, ch = 20, cw = 24)
     val before = raster.collect().map(b => b.idx -> b.data.toSeq).toMap
-    ZarrStore.write(raster, dir)
+    ZarrStore.writeTyped(TBlock.fromBlocks(raster, DType.F64), dir)
     // the spec: EVERY stored chunk is full chunk-shape (edge padded)
     val all = new java.io.File(dir, "events_raster").list().toSet - ".zarray"
     assert(all == (for (i <- 0 to 2; j <- 0 to 2) yield s"$i.$j").toSet)
@@ -83,7 +83,7 @@ class ZarrStoreSpec extends SparkSpec {
     // row 0 cols 16..23 are beyond the 64-col array bound -> zero fill
     for (jc <- 16 until 24)
       assert(bb.getDouble(jc * 8) == 0.0, s"edge pad at col $jc not fill_value")
-    val back = ZarrStore.read(spark, dir).collect()
+    val back = TBlock.toBlocks(ZarrStore.readTyped(spark, dir)).collect()
     assert(back.map(b => b.idx -> b.data.toSeq).toMap == before,
       "edge-chunked image changed across the zarr round-trip")
     // read-back blocks carry TRIMMED edge shapes (engine convention)
